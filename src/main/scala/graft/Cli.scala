@@ -48,34 +48,6 @@ object Cli {
         |  generate [--size N] [--out DIR]                 synthetic instance from the demo schema
         |  cache-clear <dir>                               remove a corpus parse cache
         |  ui [--port P] [--bind-all]                      browser workbench (loopback unless --bind-all)
-        |  ann build <emb.parquet> --index DIR [--id C] [--vec C]
-        |            [--lists N] [--subspaces M] [--codebook K] [--iters I] [--residual] [--opq T]
-        |                                                  persist an IVFADC index (train once;
-        |                                                  --residual = codes over v - centroid)
-        |  ann append <emb.parquet> --index DIR [--id C] [--vec C]
-        |                                                  encode new vectors with the frozen model
-        |  ann compact --index DIR                        fold append fragments to one file per list
-        |  ann stats --index DIR                          per-list occupancy histogram
-        |  ann fsck --index DIR [--deep true]             health report (manifest, artifacts,
-        |                                                 orphans, fragmentation; read-only)
-        |  ann clone --index SRC --dst DST                consistent snapshot copy (backup/DR)
-        |  ann split <emb.parquet> --index DIR [--cid N] [--k K]   split a hot list in place
-        |  ann merge --index DIR [--cids A,B] [--emb P]   fold cold lists into one
-        |  ann rebalance <emb.parquet> --index DIR [--hi X] [--lo Y]
-        |                [--policy nearest|occupancy] [--dry-run] [--recall-ids A,B,...]
-        |                [--recall-probe P] [--recall-rerank R] [--recall-loss PPM]
-        |                                                 split-hot + merge-cold pass (nearest-
-        |                                                 neighbor cold pairing; optional recall gate)
-        |  ann vacuum --index DIR [--grace MS]            reclaim retained generations older than
-        |                                                 the grace window (default 10 min; 0 = all)
-        |  ann delete --index DIR [--ids A,B,...| --parquet P --id C]
-        |                                                 tombstone ids (folded by the next compact)
-        |  ann recall <emb.parquet> --index DIR [--probes 1,4,16] [--ids ...] [--rerank R]
-        |                                                 recall-vs-nProbe curve vs brute force
-        |  ann query <emb.parquet> --index DIR --ids 0,1,2 [--id C] [--vec C]
-        |            [--k K] [--probe P] [--rerank R] [--allow-ids A,B,...] [--out DIR]
-        |                                                  top-k over a persisted index (no retrain;
-        |                                                  --allow-ids = filtered search candidates)
         |  pipeline profile|dedup|sample|pack|rank|quantiles <docs.parquet>
         |           [--id C] [--text C] [--out DIR]
         |           [--method exact|lines|ngram|minhash|simhash]   (dedup)
@@ -131,196 +103,6 @@ object Cli {
     // corpus-pipeline lane: the training-data operators over a plain
     // documents parquet (doc_id, text[, lang, …]) — the surface a data
     // engineer drives without touching the metamodel
-    // ANN index maintenance: no embeddings positional, just the index
-    case "ann" :: "compact" :: rest =>
-      val opts = parseOpts(rest)
-      val idx = opts.getOrElse("index", {
-        System.err.println("ann compact needs --index DIR"); sys.exit(2)
-      })
-      val spark = session()
-      val n = graft.operators.AnnIndex.compact(spark, idx)
-      println(s"compacted $idx to $n files")
-      spark.stop()
-
-    case "ann" :: "vacuum" :: rest =>
-      val opts = parseOpts(rest)
-      val idx = opts.getOrElse("index", {
-        System.err.println("ann vacuum needs --index DIR"); sys.exit(2)
-      })
-      val spark = session()
-      val grace = opts.get("grace").map(_.toLong).getOrElse(-1L)
-      println(s"removed ${graft.operators.AnnIndex.vacuum(spark, idx, grace)} retained directories")
-      spark.stop()
-
-    case "ann" :: "delete" :: rest =>
-      val opts = parseOpts(rest)
-      val idx = opts.getOrElse("index", {
-        System.err.println("ann delete needs --index DIR"); sys.exit(2)
-      })
-      val spark = session()
-      val total = opts.get("ids") match {
-        case Some(csv) =>
-          graft.operators.AnnIndex.delete(spark, idx,
-            csv.split(",").map(_.trim.toLong).toSeq)
-        case None =>
-          val p = opts.getOrElse("parquet", {
-            System.err.println("ann delete needs --ids A,B,... or --parquet P"); sys.exit(2)
-          })
-          graft.operators.AnnIndex.delete(spark, idx,
-            spark.read.parquet(p), opts.getOrElse("id", "vec_id"))
-      }
-      println(s"index now tombstones $total ids (next compact folds them)")
-      spark.stop()
-
-    case "ann" :: "stats" :: rest =>
-      val opts = parseOpts(rest)
-      val idx = opts.getOrElse("index", {
-        System.err.println("ann stats needs --index DIR"); sys.exit(2)
-      })
-      val spark = session()
-      graft.operators.AnnIndex.stats(spark, idx).orderBy("cid").show(1000, truncate = false)
-      spark.stop()
-
-    case "ann" :: "clone" :: rest =>
-      val opts = parseOpts(rest)
-      val (src, dst) = (opts.getOrElse("index", {
-        System.err.println("ann clone needs --index SRC --dst DST"); sys.exit(2)
-      }), opts.getOrElse("dst", {
-        System.err.println("ann clone needs --index SRC --dst DST"); sys.exit(2)
-      }))
-      val spark = session()
-      graft.operators.AnnIndex.clone(spark, src, dst)
-      println(s"cloned $src -> $dst (one consistent manifest snapshot)")
-      spark.stop()
-
-    case "ann" :: "fsck" :: rest =>
-      val opts = parseOpts(rest)
-      val idx = opts.getOrElse("index", {
-        System.err.println("ann fsck needs --index DIR [--deep true]"); sys.exit(2)
-      })
-      val spark = session()
-      val report = graft.operators.AnnIndex.fsck(spark, idx,
-        deep = opts.get("deep").exists(_.toBoolean)).collect()
-      report.foreach(r =>
-        println(f"${r.getString(1)}%-5s ${r.getString(0)}%s: ${r.getString(2)}%s"))
-      val worst = report.map(_.getString(1)).foldLeft("OK") {
-        case (acc, "ERROR") => "ERROR"
-        case ("OK", "WARN") => "WARN"
-        case (acc, _) => acc
-      }
-      println(s"fsck: $worst")
-      spark.stop()
-      if (worst == "ERROR") sys.exit(1)
-
-    case "ann" :: "merge" :: rest =>
-      val opts = parseOpts(rest)
-      val idx = opts.getOrElse("index", {
-        System.err.println("ann merge needs --index DIR"); sys.exit(2)
-      })
-      val spark = session()
-      // --cids a,b,… or default: the two coldest lists; --emb supplies
-      // raw vectors (required for a residual-layout index)
-      val cids = opts.get("cids").map(_.split(",").map(_.trim.toInt).toSeq)
-        .getOrElse(graft.operators.AnnIndex.coldestLists(spark, idx, 2))
-      graft.operators.AnnIndex.merge(spark, idx, cids,
-        corpus = opts.get("emb").map(spark.read.parquet),
-        idCol = opts.getOrElse("id", "vec_id"),
-        vecCol = opts.getOrElse("vec", "embedding"))
-      println(s"merged lists ${cids.mkString(",")}; occupancy now:")
-      graft.operators.AnnIndex.stats(spark, idx).orderBy("cid").show(1000, truncate = false)
-      spark.stop()
-
-    // ANN index lane: build persists the IVFADC layout once; query
-    // serves top-k batches against it without retraining anything
-    case "ann" :: verb :: path :: rest =>
-      val opts = parseOpts(rest)
-      val idx = opts.getOrElse("index", {
-        System.err.println(s"ann $verb needs --index DIR"); sys.exit(2)
-      })
-      val spark = session()
-      val emb = spark.read.parquet(path)
-      verb match {
-        case "build" =>
-          graft.operators.AnnIndex.build(
-            emb, opts.getOrElse("id", "vec_id"), opts.getOrElse("vec", "embedding"), idx,
-            nLists = opts.getOrElse("lists", "16").toInt,
-            subspaces = opts.getOrElse("subspaces", "4").toInt,
-            codebook = opts.getOrElse("codebook", "16").toInt,
-            iters = opts.getOrElse("iters", "2").toInt,
-            residual = opts.contains("residual"),
-            opqIters = opts.getOrElse("opq", "0").toInt)
-          println(s"indexed ${spark.read.parquet(graft.operators.AnnIndex.codesPath(spark, idx)).count()} vectors into $idx")
-        case "append" =>
-          graft.operators.AnnIndex.append(
-            emb, opts.getOrElse("id", "vec_id"), opts.getOrElse("vec", "embedding"), idx)
-          println(s"index now holds ${spark.read.parquet(graft.operators.AnnIndex.codesPath(spark, idx)).count()} vectors")
-        case "query" =>
-          val out = annQueryFrame(emb, idx, opts)
-          opts.get("out") match {
-            case Some(o) =>
-              out.write.mode("overwrite").parquet(o)
-              println(s"wrote ${spark.read.parquet(o).count()} rows to $o")
-            case None => out.show(50, truncate = false)
-          }
-        case "rebalance" =>
-          val idc = opts.getOrElse("id", "vec_id")
-          // --recall-ids a,b,… arms the recall gate: the pass measures
-          // recall@--recall-probe before/after and fails loudly on a
-          // degradation beyond --recall-loss ppm
-          val recallQ = opts.get("recall-ids").map { csv =>
-            val ids = csv.split(",").map(_.trim.toLong).toSeq
-            emb.filter(org.apache.spark.sql.functions.col(idc).isInCollection(ids))
-          }
-          val log = graft.operators.AnnIndex.rebalance(
-            spark, idx, emb,
-            idc, opts.getOrElse("vec", "embedding"),
-            hi = opts.getOrElse("hi", "2.0").toDouble,
-            lo = opts.getOrElse("lo", "0.5").toDouble,
-            mergePolicy = opts.getOrElse("policy", "nearest"),
-            recallQueries = recallQ,
-            recallProbe = opts.getOrElse("recall-probe", "4").toInt,
-            recallRerank = opts.getOrElse("recall-rerank", "0").toInt,
-            maxRecallLossPpm = opts.getOrElse("recall-loss", "0").toLong,
-            dryRun = opts.contains("dry-run"))
-          log.show(100, truncate = false)
-          println("occupancy now:")
-          graft.operators.AnnIndex.stats(spark, idx)
-            .orderBy("cid").show(1000, truncate = false)
-        case "recall" =>
-          // quality/cost curve for choosing --probe: measure recall at
-          // each width against a brute pass over the positional parquet
-          val probes = opts.getOrElse("probes", "1,2,4,8,16")
-            .split(",").map(_.trim.toInt).toSeq
-          val ids = opts.getOrElse("ids", "0,1,2,3,4,5,6,7,8,9")
-            .split(",").map(_.trim.toLong).toSeq
-          val idc = opts.getOrElse("id", "vec_id")
-          graft.operators.AnnIndex.recallCurve(
-            spark, idx,
-            emb.filter(org.apache.spark.sql.functions.col(idc).isInCollection(ids)),
-            idc, opts.getOrElse("vec", "embedding"),
-            emb, idc, opts.getOrElse("vec", "embedding"),
-            probes,
-            k = opts.getOrElse("k", "5").toInt,
-            rerank = opts.getOrElse("rerank", "0").toInt)
-            .show(100, truncate = false)
-        case "split" =>
-          // hot-list maintenance: --cid picks the list (default: the
-          // hottest by occupancy, ties to the larger cid), --k the
-          // number of sub-lists; the positional parquet supplies the
-          // raw vectors (codes are lossy)
-          val cid = opts.get("cid").map(_.toInt)
-            .getOrElse(graft.operators.AnnIndex.hottestList(spark, idx))
-          graft.operators.AnnIndex.split(
-            spark, idx, cid, opts.getOrElse("k", "4").toInt,
-            emb, opts.getOrElse("id", "vec_id"), opts.getOrElse("vec", "embedding"))
-          println(s"split list $cid; occupancy now:")
-          graft.operators.AnnIndex.stats(spark, idx)
-            .orderBy("cid").show(1000, truncate = false)
-        case other =>
-          System.err.println(s"unknown ann verb $other (build|append|compact|stats|fsck|clone|split|merge|rebalance|vacuum|recall|query|delete)"); sys.exit(2)
-      }
-      spark.stop()
-
     case "pipeline" :: op :: path :: rest =>
       val opts = parseOpts(rest)
       val spark = session()
@@ -698,40 +480,6 @@ object Cli {
     graft.ui.UiServer.start(spark,
       port = opts.getOrElse("port", "8501").toInt,
       bindAll = opts.contains("bind-all"))
-
-  /** The `ann query` frame builder, factored out like [[pipelineFrame]]
-    * so the dispatch is unit-testable. `--ids` selects the query rows
-    * from the embeddings frame; `--rerank` re-ranks the compressed
-    * shortlist by exact cosine over the same frame's raw vectors.
-    */
-  private[graft] def annQueryFrame(
-      emb: org.apache.spark.sql.DataFrame,
-      indexPath: String,
-      opts: Map[String, String],
-  ): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val idCol = opts.getOrElse("id", "vec_id")
-    val vecCol = opts.getOrElse("vec", "embedding")
-    val ids = opts.getOrElse("ids",
-      throw new IllegalArgumentException("ann query needs --ids N,N,...")
-    ).split(",").map(_.trim.toLong).toSeq
-    val rerank = opts.getOrElse("rerank", "0").toInt
-    // --allow-ids restricts CANDIDATES (filtered search); queries are
-    // always the --ids set
-    val allow = opts.get("allow-ids").map { csv =>
-      val a = csv.split(",").map(_.trim.toLong).toSeq
-      emb.filter(col(idCol).isInCollection(a))
-    }
-    graft.operators.AnnIndex.topK(
-      emb.sparkSession, indexPath,
-      emb.filter(col(idCol).isInCollection(ids)), idCol, vecCol,
-      k = opts.getOrElse("k", "5").toInt,
-      nProbe = opts.getOrElse("probe", "4").toInt,
-      rerank = rerank,
-      exact = if (rerank > 0) Some(emb) else None,
-      exactIdCol = idCol, exactVecCol = vecCol,
-      allow = allow, allowIdCol = idCol)
-  }
 
   /** The `pipeline` subcommand's frame builder, factored out so the
     * dispatch is unit-testable against the shared test session (main

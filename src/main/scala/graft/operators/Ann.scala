@@ -143,21 +143,6 @@ object Ann {
     centroids
   }
 
-  /** Squared-L2 argmin assignment over a centroid literal (the PQ
-    * machinery's metric and tie-break: distance ASC, larger cid on
-    * ties) — the native codegen'd graft_pq_assign over the FULL vector
-    * instead of a subspace slice. The coarse quantizer for the residual
-    * index layout, where ADC distances are L2 and the coarse metric
-    * must agree with them.
-    */
-  private[operators] def assignL2(
-      corpus: DataFrame,
-      cents: Array[(Int, Seq[Double])]): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val cbLit = typedLit(cents.toSeq).cast("array<struct<cid:int,cv:array<double>>>")
-    corpus.withColumn("cid", graft.functions.GraftFunctions.pqAssign(col("v"), cbLit))
-  }
-
   /** The shared order-independent integer centroid means: nano-quantized
     * coordinate sums as longs, then the one fixed double expression
     * sumNanos/count/1e9 — partial-aggregation order cannot shift the
@@ -188,26 +173,6 @@ object Ann {
         (r.getInt(0), (0 until dim).map(i =>
           r.getDecimal(i + 1).toBigInteger.doubleValue / cnt / 1e9): Seq[Double])
       }
-  }
-
-  /** Deterministic Lloyd under squared L2: same protocol as
-    * [[lloydCentroids]] (init = first `k` vectors by id, integer-nano
-    * means, dropped empty clusters) but assignment is [[assignL2]] —
-    * used by the residual index layout.
-    */
-  private[operators] def lloydCentroidsL2(
-      corpus: DataFrame,
-      k: Int,
-      iters: Int): Array[(Int, Seq[Double])] = {
-    var centroids: Array[(Int, Seq[Double])] = corpus
-      .orderBy("id").limit(k).collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1)) }
-    (1 to iters).foreach { _ =>
-      val assigned = assignL2(corpus, centroids).filter(col("cid").isNotNull)
-      val means = nanoMeans(assigned, centroids.head._2.size)
-      if (means.nonEmpty) centroids = means
-    }
-    centroids
   }
 
   private[operators] def maxUnrolled(spark: org.apache.spark.sql.SparkSession): Int =
@@ -560,28 +525,6 @@ object Ann {
     } finally corpus.unpersist()
   }
 
-  /** PQ-compressed exhaustive ANN (asymmetric distance computation):
-    * encode every corpus vector as `subspaces` small codes — 4 bytes
-    * replacing a 256-byte float vector at the defaults, a 64× index
-    * compression — then rank neighbors by the sum of per-subspace
-    * query-to-centroid distances looked up by code.
-    *
-    * Scale design: the `codes` column is the stored index (at 100 TB
-    * the compressed index fits where raw vectors cannot — that is the
-    * operator's point); encoding and scoring are pure map-side
-    * expressions (zero shuffle, plan size O(1) in corpus and codebook),
-    * queries are collected driver-side bounded by `queryIds` and ship
-    * back as ONE broadcast (qid, distance-table) frame — a single
-    * corpus × queries plan branch at any batch size — and the only
-    * shuffle is the top-k window per query.
-    * Distance tables are rounded to integer nano-units so the ADC sort
-    * is exact-integer — deterministic under any summation order and
-    * replayable by a relational oracle. Combine with the IVF probe
-    * (ivfTopK) for the IVFADC layout when exhaustive code scans are too
-    * slow; here the exhaustive scan IS the oracle-checkable contract.
-    * Approximate by construction — recall vs bruteForceTopK is the
-    * quality gate, measured in AnnSpec and pinned by the recall lane.
-    */
   /** One integer nano-unit ADC distance table: dt(m)(cid) =
     * round(1e9 · ||q_m − c_m,cid||²), Long.MaxValue for dropped codes
     * (never referenced — no row encodes to a vanished code). Shared by
@@ -669,22 +612,6 @@ object Ann {
         c => struct(cosine(vCol, c.getField("cv")).as("s"), c.getField("cid").as("cid"))))),
       1, nProbe)("cid")
 
-  /** [[probeOrderL2]] as a column: distance ASC, ties to the larger cid
-    * (encoded as ascending sort on (dist, -cid)).
-    */
-  private[operators] def probeColExprL2(
-      centroids: Array[(Int, Seq[Double])],
-      nProbe: Int,
-      vCol: Column): Column = {
-    graft.functions.GraftFunctions // touch: callers must have registered
-    val scored = transform(
-      centroidsLit(centroids),
-      c => struct(
-        graft.functions.GraftFunctions.l2sq(vCol, c.getField("cv")).as("d"),
-        (-c.getField("cid")).as("negcid")))
-    transform(slice(array_sort(scored), 1, nProbe), s => -s.getField("negcid"))
-  }
-
   /** Loud in-plan dim guard for a distributed query frame: any vector
     * whose length differs from the trained dim fails the job before a
     * null cosine/l2sq could silently mis-probe (the distributed
@@ -697,6 +624,28 @@ object Ann {
         lit(" has dim "), size(vCol).cast("string"),
         lit(s", index expects $dim"))))
 
+  /** PQ-compressed exhaustive ANN (asymmetric distance computation):
+    * encode every corpus vector as `subspaces` small codes — 4 bytes
+    * replacing a 256-byte float vector at the defaults, a 64× index
+    * compression — then rank neighbors by the sum of per-subspace
+    * query-to-centroid distances looked up by code.
+    *
+    * Scale design: the `codes` column is the stored index (at 100 TB
+    * the compressed index fits where raw vectors cannot — that is the
+    * operator's point); encoding and scoring are pure map-side
+    * expressions (zero shuffle, plan size O(1) in corpus and codebook),
+    * queries are collected driver-side bounded by `queryIds` and ship
+    * back as ONE broadcast (qid, distance-table) frame — a single
+    * corpus × queries plan branch at any batch size — and the only
+    * shuffle is the top-k window per query.
+    * Distance tables are rounded to integer nano-units so the ADC sort
+    * is exact-integer — deterministic under any summation order and
+    * replayable by a relational oracle. Combine with the IVF probe
+    * (ivfTopK) for the IVFADC layout when exhaustive code scans are too
+    * slow; here the exhaustive scan IS the oracle-checkable contract.
+    * Approximate by construction — recall vs bruteForceTopK is the
+    * quality gate, measured in AnnSpec and pinned by the recall lane.
+    */
   def pqTopK(
       emb: DataFrame,
       idCol: String,
@@ -811,39 +760,11 @@ object Ann {
     out
   }
 
-  /** IVFADC — the production compressed-index layout (Jégou/Douze/
-    * Schmid, TPAMI 2011, §IV): the IVF coarse quantizer partitions the
-    * corpus into `nLists` inverted lists AND every vector is
-    * PQ-encoded; a query probes only its `nProbe` closest lists and
-    * ADC-scores the compressed codes found there — the scan touches
-    * `nProbe/nLists` of the corpus and reads codes, not vectors.
-    *
-    * This is the non-residual variant: codes quantize the RAW vectors
-    * with one global codebook set (the paper's residual encoding —
-    * codes over `v − centroid` with per-list distance tables — is
-    * implemented by the persisted layout, [[AnnIndex.build]] with
-    * `residual = true`). Non-residual keeps an exact
-    * equivalence oracle: probing every list makes the candidate set
-    * exhaustive, so `nProbe = nLists` must reproduce [[pqTopK]]'s
-    * integer-ADC ranking bit-for-bit — which is what lets a relational
-    * oracle check the full index machinery (coarse training,
-    * assignment, probe, encode, ADC) end to end, while the approximate
-    * config carries the standard recall gate.
-    *
-    * Scale design: everything [[pqTopK]] says, plus the coarse
-    * assignment is the native codegen'd graft_cosine_argmax over ONE
-    * centroid literal, the per-query probe set is computed driver-side
-    * from the (model-sized) centroid array with the same (sim, cid)
-    * descending order as [[ivfTopK]]'s probe expression, and the list
-    * filter is a scan-level `cid IN (...)` predicate — at 100 TB with
-    * the index stored cid-partitioned, that predicate is partition
-    * pruning, and the scan reads `nProbe` directories of codes.
-    */
   /** Driver-side probe selection, ordered exactly like ivfTopK's
     * slice(reverse(array_sort(scored))): cosine similarity descending
     * with Spark's double ordering (NaN above all), ties to the larger
-    * cid. Shared by the inline IVFADC path and the persisted index
-    * ([[AnnIndex]]) so both probe the same lists for the same query.
+    * cid. The driver-side twin of [[probeColExpr]], so the local and
+    * distributed IVFADC paths probe the same lists for the same query.
     */
   private[operators] def probeOrder(
       centroids: Array[(Int, Seq[Double])],
@@ -868,29 +789,33 @@ object Ann {
     }.take(nProbe).map(_._2)
   }
 
-  /** Probe selection under squared L2 (the residual layout's metric):
-    * distance ascending, ties to the larger cid — the same ordering
-    * [[assignL2]]'s argmin uses, so a query's own list is always its
-    * first probe.
+  /** IVFADC — the production compressed-index layout (Jégou/Douze/
+    * Schmid, TPAMI 2011, §IV): the IVF coarse quantizer partitions the
+    * corpus into `nLists` inverted lists AND every vector is
+    * PQ-encoded; a query probes only its `nProbe` closest lists and
+    * ADC-scores the compressed codes found there — the scan touches
+    * `nProbe/nLists` of the corpus and reads codes, not vectors.
+    *
+    * This is the non-residual variant: codes quantize the RAW vectors
+    * with one global codebook set (the paper's residual encoding —
+    * codes over `v − centroid` with per-list distance tables — is not
+    * implemented). Non-residual keeps an exact
+    * equivalence oracle: probing every list makes the candidate set
+    * exhaustive, so `nProbe = nLists` must reproduce [[pqTopK]]'s
+    * integer-ADC ranking bit-for-bit — which is what lets a relational
+    * oracle check the full index machinery (coarse training,
+    * assignment, probe, encode, ADC) end to end, while the approximate
+    * config carries the standard recall gate.
+    *
+    * Scale design: everything [[pqTopK]] says, plus the coarse
+    * assignment is the native codegen'd graft_cosine_argmax over ONE
+    * centroid literal, the per-query probe set is computed driver-side
+    * from the (model-sized) centroid array with the same (sim, cid)
+    * descending order as [[ivfTopK]]'s probe expression, and the list
+    * filter is a scan-level `cid IN (...)` predicate — at 100 TB with
+    * the index stored cid-partitioned, that predicate is partition
+    * pruning, and the scan reads `nProbe` directories of codes.
     */
-  private[operators] def probeOrderL2(
-      centroids: Array[(Int, Seq[Double])],
-      qv: Seq[Double],
-      nProbe: Int): Seq[Int] = {
-    centroids.toSeq.map { case (cid, cv) =>
-      require(qv.size == cv.size,
-        s"query dim ${qv.size} != centroid dim ${cv.size} (cid=$cid)")
-      var s = 0.0
-      var i = 0
-      val n = cv.size
-      while (i < n) { val d = qv(i) - cv(i); s += d * d; i += 1 }
-      (s, cid)
-    }.sortWith { case ((s1, c1), (s2, c2)) =>
-      val c = java.lang.Double.compare(s1, s2)
-      c < 0 || (c == 0 && c1 > c2)
-    }.take(nProbe).map(_._2)
-  }
-
   def ivfAdcTopK(
       emb: DataFrame,
       idCol: String,

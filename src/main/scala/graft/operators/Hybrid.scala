@@ -13,20 +13,11 @@ import org.apache.spark.sql.functions._
   * is deterministic integer arithmetic and a relational oracle replays
   * it end to end.
   *
-  * Two dense backends share the sparse side and the fusion (they only
-  * exchange `(qid, id, rank)` rows):
-  *
-  *  - [[retrieve]] ranks the dense side EXACTLY — one broadcast of the
-  *    query batch against the full corpus. This is the oracle-replayable
-  *    baseline and the recall reference; its dense cost is a full corpus
-  *    scan per batch, so it is the WRONG shape for a 100 TB serving
-  *    path.
-  *  - [[retrieveIndexed]] ranks the dense side through a persisted
-  *    [[AnnIndex]] (probe-limited partition-pruned scan + exact re-rank
-  *    of a bounded shortlist) — the production composition. Its dense
-  *    cost tracks `nProbe/nLists` of the codes scan, not the corpus,
-  *    and it is recall-gated against [[retrieve]] the same way the
-  *    `ann_topk_ivf` lane gates against brute force.
+  * [[retrieve]] ranks the dense side EXACTLY — one broadcast of the
+  * query batch against the full corpus. This is the oracle-replayable
+  * baseline and the recall reference; its dense cost is a full corpus
+  * scan per batch. The dense side only meets the sparse side as
+  * `(qid, id, rank)` rows in the fusion.
   *
   * The sparse ranking is the dedup family's inverted 3-gram shingle
   * join (only nonzero-overlap candidates are ever materialized — a
@@ -95,59 +86,6 @@ object Hybrid {
         Window.partitionBy("qid").orderBy(col("sim").desc, col("id").asc)))
       .filter(col("rnk") <= topN)
       .select(col("qid"), col("id"), col("rnk").as("dense_rank"))
-
-    fuse(dense,
-      sparseRanks(docs, queryIds, topN, maxShingleDf, sparseSystem,
-        docIdCol, textCol),
-      k, k0, denseWeightMilli, sparseWeightMilli)
-  }
-
-  /** Per-query top-`k` over the fused ranking, dense side served by the
-    * persisted [[AnnIndex]] at `indexPath` (built over the same id
-    * space as `emb`): probe-limited compressed scan shortlists, exact
-    * cosine re-ranks `rerank` candidates from `emb`, and only the
-    * resulting `(qid, id, rank)` rows meet the sparse side in the
-    * fusion — the dense cost tracks `nProbe/nLists`, never the corpus.
-    * Same output contract as [[retrieve]]; gate the composition against
-    * it on a query sample (fused top-k overlap), the `ann_topk_ivf`
-    * recall-gate pattern.
-    */
-  def retrieveIndexed(
-      docs: DataFrame,
-      emb: DataFrame,
-      indexPath: String,
-      queryIds: Seq[Long],
-      k: Int = 5,
-      topN: Int = 20,
-      k0: Int = 60,
-      nProbe: Int = 4,
-      rerank: Int = 200,
-      maxShingleDf: Long = 0L,
-      sparseSystem: String = "jaccard",
-      denseWeightMilli: Int = 1000,
-      sparseWeightMilli: Int = 1000,
-      docIdCol: String = "doc_id",
-      textCol: String = "text",
-      vecIdCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    require(queryIds.nonEmpty, "hybrid retrieval needs at least one query id")
-    require(topN >= k, s"per-system depth topN=$topN must cover the fused k=$k")
-    require(rerank <= 0 || rerank >= topN,
-      s"rerank=$rerank must cover the dense depth topN=$topN (or be <= 0 for pure ADC)")
-    val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-
-    val queries = emb.filter(col(vecIdCol).isInCollection(queryIds))
-    // topKRetrying, not topK: this is the production serving composition,
-    // so a maintenance flip reclaiming a versioned dir mid-query retries
-    // like the other serving paths instead of failing the fused query
-    val dense = AnnIndex.topKRetrying(spark, indexPath, queries, vecIdCol, vecCol,
-      k = topN, nProbe = nProbe, rerank = rerank,
-      exact = if (rerank > 0) Some(emb) else None,
-      exactIdCol = vecIdCol, exactVecCol = vecCol,
-      withRank = true)
-      .select(col("query_id").as("qid"), col("neighbor_id").as("id"),
-        col("rank").as("dense_rank"))
 
     fuse(dense,
       sparseRanks(docs, queryIds, topN, maxShingleDf, sparseSystem,

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.metrics.{FdMetrics, ForestInspector}
 import graft.model.{Forest, NodeRow, Schema}
-import graft.operators.{Ann, AnnIndex, Bm25, Decontaminate, Dedup, Events, Graph, Hybrid, LmScore, Mixture, Multimodal, Pii, RiffAvi, TextAnalysis, Tokenizer}
+import graft.operators.{Ann, Bm25, Decontaminate, Dedup, Events, Graph, Hybrid, LmScore, Mixture, Multimodal, Pii, RiffAvi, TextAnalysis, Tokenizer}
 import graft.sources.{DbConfig, RelationalLoader, Testdata}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -131,46 +131,6 @@ object GraftQueries {
       Dedup.ngramJaccardPairs(
         s.read.parquet(s"$d/documents.parquet"), "doc_id", "text", n = 3, threshold = 0.8))
 
-  /** Memoized READ-ONLY persisted-index builds: a real serving
-    * deployment builds an index once and many consumers query it, so
-    * the registry does too (the loader-memo discipline; each variant
-    * is one deterministic build over the same embeddings, so which
-    * lane triggers it cannot change any result). Only lanes that never
-    * mutate the index share one — delete/readd/split/merge/rebalance
-    * always build their own.
-    */
-  private val annIndexCache = scala.collection.concurrent.TrieMap.empty[(String, String), String]
-  private def sharedAnnIndex(s: SparkSession, d: String, variant: String)(
-      build: String => Unit): String =
-    annIndexCache.getOrElseUpdate((d, variant), {
-      val p = java.nio.file.Files
-        .createTempDirectory(s"graft_annshared_$variant").toString + "/idx"
-      build(p)
-      p
-    })
-
-  /** Recursively delete one shared-index temp tree (the createTempDirectory
-    * parent of the cached `<tmp>/idx` path). Best-effort: a failed delete
-    * must never fail a reset or the shutdown hook.
-    */
-  private def deleteSharedIndexDir(idxPath: String): Unit =
-    try {
-      val root = java.nio.file.Paths.get(idxPath).getParent
-      if (root != null && java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-    } catch { case _: Throwable => () }
-
-  // the LAST generation of shared indexes would otherwise outlive the JVM
-  // (resetMemos only runs at pass boundaries) — sweep it on exit
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      annIndexCache.values.foreach(deleteSharedIndexDir)))
-  }
-
   /** Drop every registry memo above, releasing the localCheckpoint/
     * cache storage behind them. The memos model a real session (derive
     * once, consume many times) — but a benchmark measuring the SAME
@@ -182,11 +142,6 @@ object GraftQueries {
     cache.clear(); treeCache.clear(); extractCache.clear()
     schemaCache.clear(); bpeCache.clear(); metricsCache.clear()
     mlTagCache.clear(); pairsCache.clear()
-    // the shared index builds live under java.io.tmpdir — delete the
-    // trees, not just the map entries, or every reset leaks a full
-    // index on disk (and the next pass rebuilds beside the orphan)
-    annIndexCache.values.foreach(deleteSharedIndexDir)
-    annIndexCache.clear()
     spark.catalog.clearCache()
   }
 
@@ -683,60 +638,12 @@ object GraftQueries {
     // nonzero-overlap candidates exist). Only RANKS cross systems and
     // the fusion is integer micro-units, so DuckDB replays the whole
     // chain — both rankings, truncation, fusion, final top-5 — exactly.
-    // This is the EXACT-fusion baseline (dense = corpus crossJoin); the
-    // production serving shape is hybrid_retrieval_indexed below, which
-    // gates against this lane
+    // This is the EXACT-fusion baseline (dense = corpus crossJoin)
     "hybrid_retrieval_documents" -> ((s, d) =>
       Hybrid.retrieve(
         s.read.parquet(s"$d/documents.parquet"),
         s.read.parquet(s"$d/embeddings.parquet"),
         0L to 9L, k = 5, topN = 20)),
-    // the PRODUCTION hybrid composition: the dense system is the
-    // persisted ANN index (probe-limited partition-pruned scan + exact
-    // rerank of a bounded shortlist — cost tracks nProbe/nLists, never
-    // the corpus) fused with the df-capped sparse ranking. Approximate
-    // by design, so the query RETURNS the recall gate (fused top-k
-    // overlap vs the exact-fusion lane ≥ 0.8 — the ann_topk_ivf
-    // contract) and the oracle pins it
-    "hybrid_retrieval_indexed" -> ((s, d) => {
-      import s.implicits._
-      val docs = s.read.parquet(s"$d/documents.parquet")
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "sub8")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p, subspaces = 8))
-      val indexed = Hybrid.retrieveIndexed(docs, emb, idx, 0L to 9L,
-        k = 5, topN = 20, nProbe = 8, rerank = 200, maxShingleDf = 100000L)
-      val exact = Hybrid.retrieve(docs, emb, 0L to 9L, k = 5, topN = 20,
-        maxShingleDf = 100000L)
-      val overlap = indexed.join(exact, Seq("query_id", "neighbor_id")).count()
-      val total = exact.count()
-      Seq(total > 0 && overlap.toDouble / total >= 0.8).toDF("fused_recall_ge_080")
-    }),
-    // the backup/DR copy path under the relational oracle: a clone of a
-    // one-snapshot copy must serve the SAME exhaustive ADC ranking as
-    // the source — the same DuckDB replay as ann_topk_pq certifies
-    // build→clone→pruned-scan→ADC end to end
-    "ann_index_clone" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val base = java.nio.file.Files.createTempDirectory("graft_annclone_q").toString
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "default")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p))
-      AnnIndex.clone(s, idx, s"$base/copy")
-      AnnIndex.topK(s, s"$base/copy",
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        k = 5, nProbe = 16)
-    }),
-    // the operational health report on a freshly built index: every
-    // check must read OK (details vary by wall-clock, so the lane pins
-    // the (check, status) pairs — the deterministic health contract)
-    "ann_index_fsck" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "default")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p))
-      AnnIndex.fsck(s, idx, deep = true).select(col("check"), col("status"))
-    }),
     // BM25 term relevance (Robertson/Zaragoza) — the standard sparse
     // system of production hybrid retrieval. Every arithmetic step is
     // IEEE double over exact integer corpus statistics except the IDF
@@ -804,237 +711,6 @@ object GraftQueries {
       Ann.ivfAdcTopK(
         s.read.parquet(s"$d/embeddings.parquet"), "vec_id", "embedding", 0L to 9L,
         k = 5, nLists = 16, nProbe = 16)),
-    // persisted IVFADC index: build→save→load→query across the durable
-    // parquet layout (codes partitioned by the coarse cid). Training is
-    // bit-identical to the inline path and full probing makes the
-    // candidate set exhaustive, so the persisted machinery — write,
-    // reload, partition-pruned scan, integer ADC — must reproduce the
-    // exhaustive ADC ranking; the oracle is the SAME DuckDB replay as
-    // ann_topk_pq
-    // residual persisted index (Jégou et al. §IV's actual layout: codes
-    // quantize v − centroid under an L2 coarse quantizer, queries use
-    // per-(query, probed-list) distance tables). Full probing keeps it
-    // exhaustive and the whole chain integer-deterministic, so the
-    // oracle replays coarse Lloyd + residuals + per-subspace Lloyd +
-    // per-list integer ADC bit-for-bit
-    "ann_index_residual" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "residual")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p, residual = true))
-      AnnIndex.topK(s, idx,
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        k = 5, nProbe = 16)
-    }),
-    // per-list occupancy of a residual index — the serving-health
-    // histogram. Oracled by replaying ONLY the coarse L2 Lloyd chain and
-    // counting the final assignment per cid, which pins the stored cid
-    // partition values themselves (not just query results) against SQL
-    "ann_index_stats" -> ((s, d) => {
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "residual")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p, residual = true))
-      AnnIndex.stats(s, idx)
-    }),
-    // the one-call maintenance policy over the two oracled primitives:
-    // gates pin conservation, the policy's occupancy bound, and plain-
-    // layout exhaustive-probe bit-equality through the whole pass
-    "ann_index_rebalance" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions.{col, sum => sqlSum}
-      val base = java.nio.file.Files.createTempDirectory("graft_annreb_q").toString
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      AnnIndex.build(emb, "vec_id", "embedding", s"$base/idx")
-      val before = AnnIndex.stats(s, s"$base/idx")
-        .agg(sqlSum(col("n_vectors"))).head.getLong(0)
-      // materialize BEFORE the maintenance pass: split/merge reclaim
-      // superseded list directories, so a plan resolved against the old
-      // layout must not execute after it (readers re-resolve per batch)
-      val probe0 = AnnIndex.topK(s, s"$base/idx",
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        k = 5, nProbe = 16)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val log = AnnIndex.rebalance(s, s"$base/idx", emb, "vec_id", "embedding",
-        hi = 1.2, lo = 0.9)
-      val acted = log.count() > 0
-      val m = AnnIndex.loadModel(s, s"$base/idx")
-      val after = AnnIndex.stats(s, s"$base/idx")
-        .agg(sqlSum(col("n_vectors"))).head.getLong(0)
-      val probe1 = AnnIndex.topK(s, s"$base/idx",
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        k = 5, nProbe = m.centroids.length)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      Seq((acted, after == before, probe0.nonEmpty && probe1 == probe0))
-        .toDF("acted", "count_conserved", "full_probe_bit_equal")
-    }),
-    // hot-list maintenance: split the hottest list (max occupancy, ties
-    // to the larger cid) of a residual index into 4 sub-lists and return
-    // the occupancy after. Oracled by extending the coarse-Lloyd replay
-    // with the deterministic within-list re-Lloyd (same first-k-by-id
-    // init, L2 argmin with larger-cid ties, integer-nano means), so the
-    // oracle pins the split membership itself, not just row counts
-    "ann_index_split" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_annsplit_q").toString
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      AnnIndex.build(emb, "vec_id", "embedding", s"$base/idx", residual = true)
-      val hot = AnnIndex.hottestList(s, s"$base/idx")
-      AnnIndex.split(s, s"$base/idx", hot, k = 4, emb, "vec_id", "embedding")
-      AnnIndex.stats(s, s"$base/idx")
-    }),
-    // the inverse maintenance move: fold the two coldest lists (min
-    // occupancy, ties to the smaller cid) into one and return the
-    // occupancy after. The residual layout re-encodes members against
-    // the merged centroid, so the raw corpus rides along; the oracle
-    // replays the coldest-list selection + union counts from the
-    // coarse-Lloyd chain
-    "ann_index_merge" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_annmerge_q").toString
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      AnnIndex.build(emb, "vec_id", "embedding", s"$base/idx", residual = true)
-      val cold = AnnIndex.coldestLists(s, s"$base/idx", 2)
-      AnnIndex.merge(s, s"$base/idx", cold, corpus = Some(emb),
-        idCol = "vec_id", vecCol = "embedding")
-      AnnIndex.stats(s, s"$base/idx")
-    }),
-    // the removal third of the index lifecycle: tombstone every 7th id
-    // and read the occupancy back. The oracle replays the coarse-Lloyd
-    // chain and drops the SAME ids before counting, so the lane pins
-    // that a manifest-snapshot reader sees exactly the survivors — the
-    // codes on disk still hold the deleted rows until a compact folds
-    // them (spec'd separately), which is the point: the delete itself
-    // is one model-sized write, never a data-sized rewrite
-    "ann_index_delete" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val base = java.nio.file.Files.createTempDirectory("graft_anndel_q").toString
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      AnnIndex.build(emb, "vec_id", "embedding", s"$base/idx", residual = true)
-      AnnIndex.delete(s, s"$base/idx",
-        emb.filter(col("vec_id") % 7 === 0), "vec_id")
-      AnnIndex.stats(s, s"$base/idx")
-    }),
-    // delete-then-readd WITHOUT a manual compact: append folds re-added
-    // ids out of the tombstone set and their stale rows out of the
-    // affected lists in its own pass. Every 7th id is deleted, the %14
-    // subset re-added with its ORIGINAL vector (so the frozen coarse
-    // assignment is unchanged and the SQL replay stays valid); the
-    // oracle counts the coarse chain minus exactly the net-deleted ids —
-    // a duplicate-resurrected row or a stuck tombstone both break it
-    "ann_index_readd" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val base = java.nio.file.Files.createTempDirectory("graft_annreadd_q").toString
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      AnnIndex.build(emb, "vec_id", "embedding", s"$base/idx", residual = true)
-      AnnIndex.delete(s, s"$base/idx",
-        emb.filter(col("vec_id") % 7 === 0), "vec_id")
-      AnnIndex.append(emb.filter(col("vec_id") % 14 === 0),
-        "vec_id", "embedding", s"$base/idx")
-      AnnIndex.stats(s, s"$base/idx")
-    }),
-    // the serving-quality diagnostic as a gated lane. The gates are
-    // MACHINERY theorems, not fixture properties, because the shortlist
-    // never truncates (rerank = corpus size): widening the probe can
-    // then only ADD candidates, and exact scoring over a candidate
-    // superset cannot lose a true top-k member — so recall is monotone
-    // non-decreasing in nProbe and exactly 1.0 at full probe, at ANY
-    // scale. (A production-sized rerank (~200) trades this guarantee
-    // for cost: the ADC top-R shortlist of a WIDER candidate set is not
-    // a superset of the narrower one's, so monotonicity can break — the
-    // ADC quality itself is what the ann_topk_* recall lanes gate.)
-    "ann_index_recall_curve" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions.col
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "sub8")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p, subspaces = 8))
-      // both curves in ONE diagnostic call: the exact brute baseline is
-      // identical across rerank depths, so it is computed once
-      val fullRerank = emb.count().toInt
-      val curves = AnnIndex.recallCurves(s, idx,
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        emb, "vec_id", "embedding",
-        probes = Seq(1, 2, 4, 8, 16), k = 5, reranks = Seq(fullRerank, 200))
-      val curve = curves.collect { case (r, p, v) if r == fullRerank => (p, v) }
-        .sortBy(_._1)
-      val monotone = curve.sliding(2)
-        .forall(p => p.length < 2 || p(0)._2 <= p(1)._2)
-      val full = curve.last._2 == 1000000L
-      // the PRODUCTION config's curve (rerank = 200) as tracked VALUES:
-      // the theorems above gate the machinery (they hold only with a
-      // corpus-sized rerank — see the registry comment), these numbers
-      // make SERVING-quality drift visible round-over-round. They are
-      // fully deterministic (integer-nano Lloyd, integer ADC, exact
-      // rerank with id tie-breaks), so the oracle pins them exactly at
-      // the driver's correctness scale, the cluster_subtrees pattern.
-      val prod = curves.collect { case (r, p, v) if r == 200 => p -> v }.toMap
-      Seq((monotone, full, prod(1), prod(2), prod(4), prod(8), prod(16)))
-        .toDF("monotone_in_probes", "full_probe_recall_1",
-          "r200_p1_ppm", "r200_p2_ppm", "r200_p4_ppm", "r200_p8_ppm",
-          "r200_p16_ppm")
-    }),
-    "ann_index_persisted" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "default")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p))
-      AnnIndex.topK(s, idx,
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        k = 5, nProbe = 16)
-    }),
-    // the LARGE-BATCH serving path under the relational oracle: force
-    // the executor-side distance-table branch (localDtMaxQueries = -1)
-    // and replay the same exhaustive ADC chain — the bit-equality the
-    // AnnDistributedDtSpec pins per-suite, here driver-checked per
-    // round like every other lane
-    "ann_index_distributed" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "default")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p))
-      s.conf.set("spark.graft.ann.localDtMaxQueries", "-1")
-      try AnnIndex.topK(s, idx,
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        k = 5, nProbe = 16)
-      finally s.conf.unset("spark.graft.ann.localDtMaxQueries")
-    }),
-    // FILTERED search — "nearest neighbors among documents passing this
-    // predicate": the allow set joins the scan side (left-semi, the
-    // tombstone deny-list's twin), restricting CANDIDATES, never
-    // queries. At full probe on the plain layout the result is the
-    // exhaustive ADC ranking restricted to the allowed ids, so the
-    // oracle is the same DuckDB replay as ann_topk_pq with the one
-    // extra candidate predicate
-    "ann_index_filtered" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      val idx = sharedAnnIndex(s, d, "default")(p =>
-        AnnIndex.build(emb, "vec_id", "embedding", p))
-      AnnIndex.topK(s, idx,
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        k = 5, nProbe = 16,
-        allow = Some(emb.filter(col("vec_id") % 3 === 0)),
-        allowIdCol = "vec_id")
-    }),
-    // the persisted OPQ pipeline (rotation stored beside the codebooks,
-    // everything downstream in the rotated space): an exhaustive probe
-    // must reproduce the inline opqTopK operator EXACTLY — a Spark-side
-    // set-equality gate, since the LAPACK-fitted rotation cannot be
-    // replayed by a SQL oracle the way the unrotated layouts are
-    "ann_index_opq" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions.col
-      val base = java.nio.file.Files.createTempDirectory("graft_annopq_q").toString
-      val emb = s.read.parquet(s"$d/embeddings.parquet")
-      AnnIndex.build(emb, "vec_id", "embedding", s"$base/idx", opqIters = 3)
-      val persisted = AnnIndex.topK(s, s"$base/idx",
-        emb.filter(col("vec_id").between(0, 9)), "vec_id", "embedding",
-        k = 5, nProbe = 16)
-      val inline = Ann.opqTopK(emb, "vec_id", "embedding", 0L to 9L,
-        k = 5, opqIters = 3)
-      val n = inline.count()
-      val overlap = persisted.join(inline, Seq("query_id", "neighbor_id")).count()
-      Seq((n > 0 && persisted.count() == n && overlap == n))
-        .toDF("persisted_eq_inline")
-    }),
     // the production IVFADC config: probe half the lists, ADC-shortlist
     // the compressed codes found there, exact re-rank the candidates —
     // approximate vs brute force by design, so the query RETURNS the
@@ -3064,60 +2740,8 @@ object GraftQueries {
     "ann_topk_pq" -> pqAdcOracle,
     // exhaustive probing ≡ the exhaustive ADC scan — same replay
     "ann_topk_ivfadc_full" -> pqAdcOracle,
-    "ann_index_persisted" -> pqAdcOracle,
-    "ann_index_clone" -> pqAdcOracle,
-    "ann_index_filtered" -> pqAdcOracleWith(" AND d0.vec_id % 3 = 0"),
-    "ann_index_distributed" -> pqAdcOracle,
-    "ann_index_residual" -> residualAdcOracle,
-    "ann_index_stats" -> (annCoarseL2Ctes(16, 64).mkString("WITH ", ",\n", "\n") +
-      "SELECT cid, count(*) AS n_vectors FROM ka2 GROUP BY cid"),
-    // same coarse replay, minus the tombstoned ids — pins that the
-    // delete is visible to every manifest-snapshot reader
-    "ann_index_delete" -> (annCoarseL2Ctes(16, 64).mkString("WITH ", ",\n", "\n") +
-      "SELECT cid, count(*) AS n_vectors FROM ka2 WHERE vec_id % 7 <> 0 GROUP BY cid"),
-    // same coarse replay minus only the NET-deleted ids (deleted %7 set
-    // minus the re-added %14 subset) — pins that the re-add both
-    // un-tombstones and does not duplicate
-    "ann_index_readd" -> (annCoarseL2Ctes(16, 64).mkString("WITH ", ",\n", "\n") +
-      "SELECT cid, count(*) AS n_vectors FROM ka2 " +
-      "WHERE NOT (vec_id % 7 = 0 AND vec_id % 14 <> 0) GROUP BY cid"),
-    // theorems pinned as booleans; the production (rerank=200) curve is
-    // pinned as exact ppm VALUES at the driver's correctness scale
-    // (sf0.01) — deterministic golden, the cluster_subtrees pattern, so
-    // any serving-quality drift turns the lane red instead of hiding
-    "ann_index_recall_curve" ->
-      """SELECT true AS monotone_in_probes, true AS full_probe_recall_1,
-        |  CAST(820000 AS BIGINT) AS r200_p1_ppm,
-        |  CAST(840000 AS BIGINT) AS r200_p2_ppm,
-        |  CAST(920000 AS BIGINT) AS r200_p4_ppm,
-        |  CAST(960000 AS BIGINT) AS r200_p8_ppm,
-        |  CAST(1000000 AS BIGINT) AS r200_p16_ppm""".stripMargin,
-    "ann_index_split" -> annSplitOracle,
-    "ann_index_merge" -> (
-      (annCoarseL2Ctes(16, 64) ++ Seq(
-        "occ AS MATERIALIZED (SELECT cid, count(*) AS n FROM ka2 GROUP BY cid)",
-        "cold AS MATERIALIZED (SELECT cid FROM occ ORDER BY n ASC, cid ASC LIMIT 2)",
-        "b AS MATERIALIZED (SELECT max(cid) + 1 AS base FROM cc2)"))
-        .mkString("WITH ", ",\n", "\n") +
-        """SELECT cid, n_vectors FROM (
-          |  SELECT o.cid AS cid, o.n AS n_vectors FROM occ o
-          |  WHERE o.cid NOT IN (SELECT cid FROM cold)
-          |  UNION ALL
-          |  SELECT (SELECT base FROM b) AS cid, CAST(sum(o.n) AS BIGINT) AS n_vectors
-          |  FROM occ o WHERE o.cid IN (SELECT cid FROM cold))""".stripMargin),
     "ann_topk_ivfadc" -> "SELECT true AS recall_ge_080",
-    // the query computes the fused-overlap gate itself (index-backed
-    // dense + df-capped sparse vs exact fusion); the oracle pins it
-    "hybrid_retrieval_indexed" -> "SELECT true AS fused_recall_ge_080",
-    // a fresh index is healthy on every check, deep included
-    "ann_index_fsck" ->
-      """SELECT * FROM (VALUES ('manifest','OK'), ('artifacts','OK'),
-        |  ('model','OK'), ('lists','OK'), ('fragmentation','OK'),
-        |  ('tombstones','OK')) AS t("check", status)""".stripMargin,
     "ann_topk_opq" -> "SELECT true AS opq_err_le_pq, true AS recall_ge_080",
-    "ann_index_opq" -> "SELECT true AS persisted_eq_inline",
-    "ann_index_rebalance" ->
-      "SELECT true AS acted, true AS count_conserved, true AS full_probe_bit_equal",
     "ann_topk_pq_rerank" -> "SELECT true AS recall_ge_080",
     // the query computes the recall gate itself (IVF@nProbe=4 vs brute
     // top-5, both Spark-side); the oracle pins the gate
@@ -4039,14 +3663,7 @@ object GraftQueries {
     * the nano-unit rounding lands on the same integers, and the
     * integer-ADC top-k is exact, not merely similar.
     */
-  private lazy val pqAdcOracle: String = pqAdcOracleWith("")
-
-  /** The exhaustive-ADC replay with an optional extra CANDIDATE
-    * predicate — the filtered-search lane (`allow` = an id set)
-    * restricts neighbors, never queries, exactly like the Spark side's
-    * scan-side semi join.
-    */
-  private def pqAdcOracleWith(candidatePred: String): String = {
+  private lazy val pqAdcOracle: String = {
     val subspaces = 4; val sub = 16; val cb = 16
     def dist(a: String, b: String): String =
       (1 to sub).map(i => s"($a[$i]-$b[$i])*($a[$i]-$b[$i])").mkString(" + ")
@@ -4094,132 +3711,6 @@ object GraftQueries {
     (Seq("e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)") ++ perSub)
       .mkString("WITH ", ",\n", ",\n") +
       s"""adc AS (SELECT d0.qid AS query_id, d0.vec_id AS neighbor_id, $adcSum AS adc
-         |        FROM d0 $adcJoins WHERE d0.vec_id <> d0.qid$candidatePred),
-         |r AS (SELECT query_id, neighbor_id,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY adc ASC, neighbor_id ASC) AS rk
-         |      FROM adc)
-         |SELECT query_id, neighbor_id FROM r WHERE rk <= 5""".stripMargin
-  }
-
-  /** DuckDB replay of the RESIDUAL persisted-index query at full probe
-    * (AnnIndex.build(residual = true) + topK, defaults 16×4×16):
-    * L2 coarse Lloyd with the Spark side's exact protocol (init = first
-    * 16 vectors by id, argmin with ties to the larger cid, integer-nano
-    * means), residuals v − centroid(cid) as explicit per-coordinate
-    * subtractions, per-subspace Lloyd over the residuals, and the
-    * per-(query, probed-list) integer ADC — every distance the same
-    * left-to-right summation the Spark kernels use, so the nano-unit
-    * rounding lands on identical integers and the top-k is exact.
-    */
-  // ---- shared generators for the residual-index oracles ----
-  private def annDistN(a: String, b: String, n: Int): String =
-    (1 to n).map(i => s"($a[$i]-$b[$i])*($a[$i]-$b[$i])").mkString(" + ")
-  private def annAssign(from: String, cents: String, vcol: String, n: Int): String =
-    s"""SELECT vec_id, $vcol, cid FROM (
-       |  SELECT s.vec_id, s.$vcol, c.cid,
-       |         row_number() OVER (PARTITION BY s.vec_id
-       |           ORDER BY ${annDistN(s"s.$vcol", "c.cv", n)} ASC, c.cid DESC) AS rn
-       |  FROM $from s, $cents c) t WHERE rn = 1""".stripMargin
-  private def annMeans(a: String, vcol: String): String =
-    s"""SELECT cid, list(mv ORDER BY pos) AS cv FROM (
-       |  SELECT cid, pos,
-       |         CAST(sum(CAST(round(val * 1e9) AS BIGINT)) AS DOUBLE) / count(*) / 1e9 AS mv
-       |  FROM (
-       |    SELECT cid, unnest($vcol) AS val, unnest(range(1, len($vcol) + 1)) AS pos
-       |    FROM $a) u
-       |  GROUP BY cid, pos) g GROUP BY cid""".stripMargin
-  private def annInit(from: String, vcol: String, k: Int): String =
-    s"""SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
-       |       $vcol AS cv
-       |  FROM (SELECT vec_id, $vcol FROM $from ORDER BY vec_id LIMIT $k)""".stripMargin
-  /** The L2 coarse Lloyd replay (two rounds over full vectors) ending
-    * in `ka2` = the final (vec_id, v, cid) assignment. Every CTE
-    * MATERIALIZED — DuckDB's inliner otherwise re-expands the shared
-    * chain per downstream reference and OOMs the planner.
-    */
-  private def annCoarseL2Ctes(nLists: Int, dim: Int): Seq[String] = Seq(
-    "e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
-    s"cc0 AS MATERIALIZED (${annInit("e", "v", nLists)})",
-    s"ka0 AS MATERIALIZED (${annAssign("e", "cc0", "v", dim)})",
-    s"cc1 AS MATERIALIZED (${annMeans("ka0", "v")})",
-    s"ka1 AS MATERIALIZED (${annAssign("e", "cc1", "v", dim)})",
-    s"cc2 AS MATERIALIZED (${annMeans("ka1", "v")})",
-    s"ka2 AS MATERIALIZED (${annAssign("e", "cc2", "v", dim)})")
-
-  /** Occupancy after AnnIndex.split of the hottest list (k = 4) on a
-    * residual index: the coarse replay's final assignment ka2 minus the
-    * hottest list (max n, ties larger cid), plus a within-list L2 Lloyd
-    * replay of its members re-based at max(cid)+1 — the same
-    * deterministic protocol (first-k-by-id init, dist-asc/cid-desc
-    * argmin, integer-nano means) as the coarse chain, one level down.
-    */
-  private lazy val annSplitOracle: String = {
-    val ctes = annCoarseL2Ctes(16, 64) ++ Seq(
-      "occ AS MATERIALIZED (SELECT cid, count(*) AS n FROM ka2 GROUP BY cid)",
-      "hot AS MATERIALIZED (SELECT cid FROM occ ORDER BY n DESC, cid DESC LIMIT 1)",
-      """mem AS MATERIALIZED (SELECT e.vec_id, e.v FROM e
-        |  JOIN ka2 k ON k.vec_id = e.vec_id
-        |  WHERE k.cid = (SELECT cid FROM hot))""".stripMargin,
-      s"sc0 AS MATERIALIZED (${annInit("mem", "v", 4)})",
-      s"sa0 AS MATERIALIZED (${annAssign("mem", "sc0", "v", 64)})",
-      s"sc1 AS MATERIALIZED (${annMeans("sa0", "v")})",
-      s"sa1 AS MATERIALIZED (${annAssign("mem", "sc1", "v", 64)})",
-      s"sc2 AS MATERIALIZED (${annMeans("sa1", "v")})",
-      s"sa2 AS MATERIALIZED (${annAssign("mem", "sc2", "v", 64)})",
-      "b AS MATERIALIZED (SELECT max(cid) + 1 AS base FROM cc2)")
-    ctes.mkString("WITH ", ",\n", "\n") +
-      """SELECT cid, n_vectors FROM (
-        |  SELECT o.cid AS cid, o.n AS n_vectors FROM occ o
-        |  WHERE o.cid <> (SELECT cid FROM hot)
-        |  UNION ALL
-        |  SELECT (SELECT base FROM b) + s.cid AS cid, count(*) AS n_vectors
-        |  FROM sa2 s GROUP BY s.cid)""".stripMargin
-  }
-
-  private lazy val residualAdcOracle: String = {
-    val nLists = 16; val dim = 64; val subspaces = 4; val sub = 16; val cb = 16
-    def assign(from: String, cents: String, vcol: String, n: Int): String =
-      annAssign(from, cents, vcol, n)
-    def means(a: String, vcol: String): String = annMeans(a, vcol)
-    def init(from: String, vcol: String, k: Int): String = annInit(from, vcol, k)
-    // coarse: two Lloyd rounds under L2 over the full 64-dim vectors
-    val coarse = annCoarseL2Ctes(nLists, dim) :+
-      s"q AS MATERIALIZED (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10)"
-    val perSub = (0 until subspaces).flatMap { m =>
-      val lo = m * sub
-      // residual sub-vector as EXPLICIT per-coordinate subtractions
-      // (a.v[j] − c.cv[j], the double op zip_with performs)
-      val svTerms = (1 to sub).map(i => s"a.v[${lo + i}] - c.cv[${lo + i}]").mkString(", ")
-      // per-(query, vec) ADC distance at this subspace: the vec's list
-      // centroid cc (via its coarse assignment) and its PQ centroid cp,
-      // summed left-to-right like the Spark kernel
-      val ddTerms = (1 to sub).map { i =>
-        val j = lo + i
-        s"((q.qv[$j] - cc.cv[$j]) - cp.cv[$i])*((q.qv[$j] - cc.cv[$j]) - cp.cv[$i])"
-      }.mkString(" + ")
-      Seq(
-        s"s$m AS MATERIALIZED (SELECT a.vec_id, list_value($svTerms) AS sv FROM ka2 a JOIN cc2 c USING (cid))",
-        s"c0_$m AS MATERIALIZED (${init(s"s$m", "sv", cb)})",
-        s"a0_$m AS MATERIALIZED (${assign(s"s$m", s"c0_$m", "sv", sub)})",
-        s"c1_$m AS MATERIALIZED (${means(s"a0_$m", "sv")})",
-        s"a1_$m AS MATERIALIZED (${assign(s"s$m", s"c1_$m", "sv", sub)})",
-        s"c2_$m AS MATERIALIZED (${means(s"a1_$m", "sv")})",
-        s"a2_$m AS MATERIALIZED (${assign(s"s$m", s"c2_$m", "sv", sub)})",
-        s"""d$m AS MATERIALIZED (SELECT q.qid, a.vec_id,
-           |  CAST(round(($ddTerms) * 1e9) AS BIGINT) AS dd
-           |  FROM a2_$m a
-           |  JOIN ka2 kv ON kv.vec_id = a.vec_id
-           |  JOIN cc2 cc ON cc.cid = kv.cid
-           |  JOIN c2_$m cp ON cp.cid = a.cid
-           |  CROSS JOIN q)""".stripMargin)
-    }
-    val adcJoins = (1 until subspaces)
-      .map(m => s"JOIN d$m ON d$m.qid = d0.qid AND d$m.vec_id = d0.vec_id")
-      .mkString(" ")
-    val adcSum = (0 until subspaces).map(m => s"d$m.dd").mkString(" + ")
-    (coarse ++ perSub).mkString("WITH ", ",\n", ",\n") +
-      s"""adc AS MATERIALIZED (SELECT d0.qid AS query_id, d0.vec_id AS neighbor_id, $adcSum AS adc
          |        FROM d0 $adcJoins WHERE d0.vec_id <> d0.qid),
          |r AS (SELECT query_id, neighbor_id,
          |             row_number() OVER (PARTITION BY query_id

@@ -118,7 +118,7 @@ final class ClusterModel(
       .filter { case (s, ls, _) => s > support && ls.exists(entityLabels.contains) }
       .map(_._3)
       .toSet
-    if (entityGroupsCache.size < 100000) entityGroupsCache.put(key, r)
+    if (entityGroupsCache.size < EquivCacheCap) entityGroupsCache.put(key, r)
     r
   }
 

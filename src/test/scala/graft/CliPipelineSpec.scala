@@ -65,18 +65,6 @@ class CliPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(sw.collect().map(_.getLong(1)).sum == 3L)
   }
 
-  test("ann query dispatch serves a persisted index, incl. rerank; missing --ids fails") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_cli_ann").toString + "/idx"
-    graft.operators.AnnIndex.build(emb, "vec_id", "embedding", idx)
-    val q = Cli.annQueryFrame(emb, idx, Map("ids" -> "0,1", "k" -> "3", "probe" -> "16"))
-    assert(q.columns.sameElements(Array("query_id", "neighbor_id")))
-    assert(q.groupBy("query_id").count().collect().forall(_.getLong(1) == 3L))
-    val qr = Cli.annQueryFrame(emb, idx, Map("ids" -> "0", "rerank" -> "20"))
-    assert(qr.count() == 5L)
-    intercept[IllegalArgumentException](Cli.annQueryFrame(emb, idx, Map.empty))
-  }
-
   test("unknown ops and methods fail loudly") {
     intercept[IllegalArgumentException](Cli.pipelineFrame("nope", docs(), Map.empty))
     intercept[IllegalArgumentException](

@@ -2,14 +2,12 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The large-batch ANN serving path (executor-side distance tables /
   * probe sets, forced via `spark.graft.ann.localDtMaxQueries = -1`)
   * must be BIT-EQUAL to the driver-side path across every serving
-  * lane: pqTopK, ivfAdcTopK, and AnnIndex.topK in both layouts,
-  * with and without exact re-rank. The two paths share the same
+  * lane: pqTopK and ivfAdcTopK, with and without exact re-rank. The two paths share the same
   * codegen kernels (graft_l2sq / graft_cosine accumulate in the same
   * order as the driver loops), the same integer-nano rounding, and the
   * same (adc asc, neighbor_id asc) tie-breaks — so results agree
@@ -29,12 +27,6 @@ class AnnDistributedDtSpec extends AnyFunSuite with SparkSpec {
     spark.conf.set(Conf, "-1")
     try body finally spark.conf.unset(Conf)
   }
-
-  private def tmpIdx(): String =
-    java.nio.file.Files.createTempDirectory("graft_anndist").toString + "/idx"
-
-  private def queriesOf(ids: Seq[Long]): DataFrame =
-    emb.filter(col("vec_id").isInCollection(ids))
 
   test("pqTopK: distributed dt path is bit-equal to the driver path, incl. rerank") {
     val local = pairs(Ann.pqTopK(emb, "vec_id", "embedding", 0L to 9L, k = 5))
@@ -62,50 +54,37 @@ class AnnDistributedDtSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("AnnIndex.topK plain layout: distributed path bit-equal, incl. rerank") {
-    val path = tmpIdx()
-    AnnIndex.build(emb, "vec_id", "embedding", path)
-    val local = pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 4))
-    val dist = distributed(pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 4)))
-    assert(dist == local)
-    val localR = pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 4, rerank = 50,
-      exact = Some(emb), exactIdCol = "vec_id", exactVecCol = "embedding"))
-    val distR = distributed(pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 4, rerank = 50,
-      exact = Some(emb), exactIdCol = "vec_id", exactVecCol = "embedding")))
-    assert(distR == localR)
-  }
-
-  test("AnnIndex.topK residual layout: distributed path bit-equal, incl. rerank") {
-    val path = tmpIdx()
-    AnnIndex.build(emb, "vec_id", "embedding", path, residual = true)
-    val local = pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 4))
-    val dist = distributed(pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 4)))
-    assert(dist == local)
-    val localR = pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 8, rerank = 100,
-      exact = Some(emb), exactIdCol = "vec_id", exactVecCol = "embedding"))
-    val distR = distributed(pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 8, rerank = 100,
-      exact = Some(emb), exactIdCol = "vec_id", exactVecCol = "embedding")))
-    assert(distR == localR)
+    // the name is kept from the removed persisted-index serving path;
+    // its plain layout (global codebook, non-residual codes) is the
+    // layout ivfAdcTopK builds inline, so the case now pins that layout
+    // at full probe, where every list is probed and the ranking must
+    // also reproduce pqTopK's exhaustive ADC scan
+    def full(rerank: Int): Set[(Long, Long)] = pairs(Ann.ivfAdcTopK(emb, "vec_id",
+      "embedding", 0L to 9L, k = 5, nLists = 16, nProbe = 16, rerank = rerank))
+    val local = full(0)
+    assert(distributed(full(0)) == local)
+    assert(local == pairs(Ann.pqTopK(emb, "vec_id", "embedding", 0L to 9L, k = 5)))
+    val localR = full(50)
+    assert(distributed(full(50)) == localR)
   }
 
   test("distributed path: empty batch is empty, ragged query dim fails loudly") {
-    val path = tmpIdx()
-    AnnIndex.build(emb, "vec_id", "embedding", path)
+    def ivfAdc(corpus: DataFrame, ids: Seq[Long]): DataFrame =
+      Ann.ivfAdcTopK(corpus, "vec_id", "embedding", ids, k = 5, nLists = 16, nProbe = 4)
     distributed {
-      assert(AnnIndex.topK(spark, path, queriesOf(Seq(-1L)),
-        "vec_id", "embedding", k = 5).count() == 0)
+      assert(ivfAdc(emb, Seq(-1L)).count() == 0)
+      // queries come from the corpus, so the ragged vector rides in as
+      // a corpus row. The literal-argmax coarse assignment
+      // (maxUnrolledLists = 0) and the PQ encoder both disqualify it
+      // (null cid/codes), so training skips it; the query frame's dim
+      // guard must not
       import spark.implicits._
-      val bad = Seq((0L, Seq(1.0, 2.0))).toDF("vec_id", "embedding")
-      val ex = intercept[Exception] {
-        AnnIndex.topK(spark, path, bad, "vec_id", "embedding", k = 5).collect()
-      }
+      val bad = Seq((100000L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
+      spark.conf.set("spark.graft.ann.maxUnrolledLists", "0")
+      val ex =
+        try intercept[Exception] {
+          ivfAdc(emb.select("vec_id", "embedding").union(bad), Seq(100000L)).collect()
+        } finally spark.conf.unset("spark.graft.ann.maxUnrolledLists")
       def messages(t: Throwable): String =
         if (t == null) "" else t.getMessage + " | " + messages(t.getCause)
       assert(messages(ex).contains("index expects 64"),
@@ -118,19 +97,12 @@ class AnnDistributedDtSpec extends AnyFunSuite with SparkSpec {
     // batch size the driver path runs (no probed-cid job needed), one
     // above it the distributed path runs — both bit-equal anyway, so
     // assert on results while exercising both sides of the boundary
-    val path = tmpIdx()
-    AnnIndex.build(emb, "vec_id", "embedding", path)
-    val expected = pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-      "vec_id", "embedding", k = 5, nProbe = 4))
+    def ivfAdc(): Set[(Long, Long)] = pairs(Ann.ivfAdcTopK(emb, "vec_id", "embedding",
+      0L to 9L, k = 5, nLists = 16, nProbe = 4))
+    val expected = ivfAdc()
     spark.conf.set(Conf, "10")
-    try {
-      assert(pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-        "vec_id", "embedding", k = 5, nProbe = 4)) == expected)
-    } finally spark.conf.unset(Conf)
+    try assert(ivfAdc() == expected) finally spark.conf.unset(Conf)
     spark.conf.set(Conf, "9")
-    try {
-      assert(pairs(AnnIndex.topK(spark, path, queriesOf(0L to 9L),
-        "vec_id", "embedding", k = 5, nProbe = 4)) == expected)
-    } finally spark.conf.unset(Conf)
+    try assert(ivfAdc() == expected) finally spark.conf.unset(Conf)
   }
 }

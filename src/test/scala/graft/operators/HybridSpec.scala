@@ -107,43 +107,6 @@ class HybridSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException] {
       Hybrid.retrieve(docs, emb, Seq(0L), k = 5, topN = 3)
     }
-    intercept[IllegalArgumentException] {
-      Hybrid.retrieveIndexed(docs, emb, "/nonexistent", Seq(0L),
-        k = 5, topN = 20, rerank = 10)
-    }
-  }
-
-  test("retrieveIndexed at full probe + corpus rerank is bit-equal to the exact composition") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val base = java.nio.file.Files.createTempDirectory("graft_hybidx").toString
-    AnnIndex.build(emb, "vec_id", "embedding", s"$base/idx", subspaces = 8)
-    // full probe makes the shortlist exhaustive and the corpus-sized
-    // exact rerank orders it by true cosine (sim desc, id asc) — the
-    // exact dense ranking — so the whole fused output must be
-    // bit-identical to retrieve()'s
-    val exact = Hybrid.retrieve(docs, emb, 0L to 9L, k = 5, topN = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val indexed = Hybrid.retrieveIndexed(docs, emb, s"$base/idx", 0L to 9L,
-      k = 5, topN = 20, nProbe = 16, rerank = emb.count().toInt)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(indexed == exact,
-      "exhaustive-index composition must reproduce the exact fusion bit-for-bit")
-  }
-
-  test("retrieveIndexed at the production config holds the fused recall gate vs exact fusion") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val base = java.nio.file.Files.createTempDirectory("graft_hybidx2").toString
-    AnnIndex.build(emb, "vec_id", "embedding", s"$base/idx", subspaces = 8)
-    val exact = Hybrid.retrieve(docs, emb, 0L to 9L, k = 5, topN = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val indexed = Hybrid.retrieveIndexed(docs, emb, s"$base/idx", 0L to 9L,
-      k = 5, topN = 20, nProbe = 8, rerank = 200)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(indexed.size == exact.size)
-    val overlap = indexed.intersect(exact).size.toDouble / exact.size
-    assert(overlap >= 0.8, s"fused overlap $overlap below the 0.8 gate")
   }
 
   test("maxShingleDf drops hot query shingles: candidates bounded, rare signal preserved") {
