@@ -100,12 +100,17 @@ object Ann {
       // needs two arguments, and no argmax is needed anyway
       corpus.withColumn("cid", lit(cents.head._1))
     else if (unrolled) {
-      // argmax over centroid dot products, unrolled per centroid
+      // argmax over centroid dot products, unrolled per centroid. A
+      // null cosine (dim-mismatched row) sorts below every score, so the
+      // winner's score is null only when no centroid qualifies: that row
+      // gets a null cid, as on the literal path. Two projections, so the
+      // argmax is planned once
       val scored = cents.map { case (cid, vec) =>
         val cArr = array(vec.map(lit): _*)
         struct(cosine(col("v"), cArr).as("s"), lit(cid).as("cid"))
       }
-      corpus.withColumn("cid", greatest(scored.toIndexedSeq: _*).getField("cid"))
+      corpus.withColumn("cid", greatest(scored.toIndexedSeq: _*))
+        .withColumn("cid", when(col("cid.s").isNotNull, col("cid.cid")))
     } else
       corpus.withColumn(
         "cid",

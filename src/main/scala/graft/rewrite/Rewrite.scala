@@ -17,9 +17,11 @@ import org.apache.spark.storage.StorageLevel
   * are canonicalized.
   *
   * The reference's ProcessPoolExecutor + barrier + OID-queue machinery
-  * (tree_rewriting/__init__.py:311-633) disappears into Spark stages:
-  * each operation is one shuffle-free Dataset map plus a boolean
-  * aggregation; the forest is checkpointed per epoch to break lineage.
+  * (tree_rewriting/__init__.py:311-633) disappears into Spark jobs. An
+  * epoch runs at most five, none of which shuffles: the reduce_all
+  * checkpoint, the fit's aggregate and top-K passes, the find_groups
+  * checkpoint (a per-tree map against the broadcast model), and one
+  * fused trial pass over the operations.
   */
 object Rewrite {
 
@@ -118,36 +120,29 @@ object Rewrite {
       releasePrevOp(); releasePrevOp = () => ()
 
       // 2. cluster the candidate subtrees
-      val result = timed("fit") { TreeClusterer.fitTrees(trees, cfg.tau, cfg.decay,
-        cfg.metricName, schemaOnly = cfg.schemaOnly)
+      val model = timed("fit") { TreeClusterer.fitTrees(trees, cfg.tau, cfg.decay,
+        cfg.metricName, schemaOnly = cfg.schemaOnly).model
       }
-      val model = result.model
       val modelB = spark.sparkContext.broadcast(model)
 
       // 3. find_groups (tree_rewriting/__init__.py:648-706): relabel
       // qualifying cluster members as GROUPs, frequent clusters first.
-      // Typed cogroup — the Kryo dataset has no named columns to join on.
+      // A candidate's cluster is a lookup in the broadcast model, so
+      // this is a per-tree map into the checkpoint — no shuffle.
       val rank: Map[String, Int] = model.clusters.values.toSeq
         .filter(_.support > minSupport)
         .sortBy(c => (-c.support, -c.avgEntities, -c.avgDepth, c.name))
         .zipWithIndex.map { case (c, i) => c.name -> i }.toMap
       val rankB = spark.sparkContext.broadcast(rank)
       // with no cluster above minSupport, findGroupsInTree is identity
-      // on every tree — skip the cogroup shuffle and checkpoint outright
+      // on every tree — skip the pass and checkpoint outright
       if (rank.nonEmpty) {
-        trees = trees.groupByKey(_._1)
-          .cogroup(result.assignments.groupByKey(_.treeId)) { case (tid, ts, as) =>
-            val assigns = as.map(a => a.key -> a.cluster).toSeq
-            ts.map { case (id, tree) =>
-              (id, findGroupsInTree(tree, id, assigns, rankB.value))
-            }
-          }
-        // materialize the cogroup output once for the op passes below
-        trees = timed("findGroups+ckpt") { ckptReleasing(trees) }
+        trees = timed("findGroups+ckpt") { ckptReleasing(trees.map { case (id, tree) =>
+          val assigns = TreeClusterer.treeAssignments(id, tree, modelB.value)
+            .map(a => a.key -> a.cluster).toSeq
+          (id, findGroupsInTree(tree, id, assigns, rankB.value))
+        }) }
       }
-      // the per-fit assignments cache is consumed (or unused) now —
-      // release it, or N epochs stack N caches in executor storage
-      result.assignments.unpersist()
 
       // 4. operations with early exit at the first op that changed
       // anything (tree_rewriting/__init__.py:203-218). Trials never

@@ -66,10 +66,16 @@ object Similarity {
     a.id == b.id || (a.isTyped && b.isTyped && a.label == b.label)
 
   /** Candidate predicate (similarity.py:278-290): height ≤ maxHeight,
-    * not an ENT, no duplicate entity labels.
+    * not an ENT, no duplicate entity labels — i.e. the `entCount` ENT
+    * nodes of the subtree carry `distinctEnts` distinct labels.
     */
+  def isCandidate(height: Int, isEnt: Boolean, entCount: Int, distinctEnts: Int,
+                  maxHeight: Int): Boolean =
+    height <= maxHeight && !isEnt && entCount == distinctEnts
+
   def isCandidate(t: ArchiTree, maxHeight: Int = 5): Boolean =
-    t.height <= maxHeight && !t.hasType(NodeType.Ent) && !t.hasDuplicateEntity
+    isCandidate(t.height, t.hasType(NodeType.Ent), t.entities.size, t.entityLabels.size,
+      maxHeight)
 
   /** Extract candidate-subtree features for one tree. Keys are the
     * (treeKey, preorder-path) of each candidate; ids fall back to a
@@ -143,8 +149,8 @@ object Similarity {
     def walk(info: NodeInfo, pathStr: String, depth: Int,
              ancestors: List[LevelFeature]): Unit = {
       val t = info.node
-      if (info.height <= maxHeight && !t.hasType(NodeType.Ent) &&
-        info.entCount == info.level.entLabels.size) {
+      if (isCandidate(info.height, t.hasType(NodeType.Ent), info.entCount,
+          info.level.entLabels.size, maxHeight)) {
         val levels = (info.level :: ancestors.take(MaxSimCtxDepth - 1)).toVector
         out += (s"$treeKey/$pathStr" -> SubtreeFeature(levels, info.height, depth))
       }

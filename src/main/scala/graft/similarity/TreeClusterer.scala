@@ -5,6 +5,7 @@ import graft.model.{Forest, TreeRow}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Serializable feature rows (Set → sorted Seq for the product encoder). */
 final case class LevelRow(id: String, label: String, isTyped: Boolean, ents: Seq[String]) {
@@ -20,16 +21,15 @@ final case class CandRow(
     levels: Seq[LevelRow]) {
   def toFeature: SubtreeFeature =
     SubtreeFeature(levels.map(_.toFeature).toVector, height, depth)
+  def structKey: StructKey =
+    StructKey(height, depth, levels.map(l => StructLevel(l.label, l.isTyped, l.ents)))
 }
 
 /** One clustered subtree: cluster name + membership weight. */
 final case class Assignment(key: String, treeId: Long, cluster: String, prob: Double)
 
-/** Joined (assignment, candidate) row for the executor-side model build. */
-final case class MemberRow(cluster: String, prob: Double, key: String, cand: CandRow)
-
-/** Identity-free canonical form of a subtree feature — exactly the key
-  * the fit() collapse groups on (level ids excluded, ent sets sorted).
+/** Identity-free canonical form of a subtree feature — the grain of the
+  * fit's one aggregate pass (level ids excluded, ent sets sorted).
   * Two subtrees with equal StructKeys score 1.0 and always co-cluster,
   * so "my StructKey is one of the cluster's" is an exact membership
   * test, and the set of distinct StructKeys per cluster is bounded by
@@ -59,11 +59,17 @@ final case class ClusterSummary(
     avgEntities: Double,
     avgDepth: Double) extends Serializable
 
+/** The fitted model. `membership` maps every clustered StructKey to its
+  * (cluster, prob) pairs — one pair, except in schema-only mode where a
+  * self label shared across template components joins each — so a
+  * candidate's assignment is a lookup, never a join.
+  */
 final class ClusterModel(
     val clusters: Map[String, ClusterSummary],
     val tau: Double,
     val decay: Double,
-    metricName: String) extends Serializable {
+    metricName: String,
+    val membership: Map[StructKey, Seq[(String, Double)]] = Map.empty) extends Serializable {
 
   @transient private lazy val metric = SeqMetrics.byName(metricName)
 
@@ -170,17 +176,23 @@ final class ClusterModel(
   * (similarity.py:200-368), per SURVEY §2.5:
   *
   *   1. candidate subtrees (height ≤ 5, non-ENT, no duplicate entities)
-  *      with precomputed ancestor features — one flatMap, no shuffle;
+  *      with precomputed ancestor features, aggregated map-side in ONE
+  *      pass to per-StructKey partials (multiplicity, min-key member)
+  *      merged on the driver;
   *   2. pair generation by BLOCKING on shared entity label (the
   *      reference's own shortcut proves disjoint pairs score 0), plus the
-  *      height/depth-gap prune (similarity.py:456-461) as a join filter;
+  *      height/depth-gap prune (similarity.py:456-461), over one
+  *      representative per structural collapse key;
   *   3. similarity scoring of surviving pairs only; keep ≥ tau;
-  *   4. clusters = connected components of the tau-graph via iterative
-  *      min-label propagation (O(log n) rounds);
+  *   4. clusters = connected components of the tau-graph;
   *   5. membership "probability" = mean incident-edge similarity
   *      (replaces HDBSCAN's soft membership), clusters named
-  *      `<modalTypedLabel>_<i>` like the reference (:341-368).
+  *      `<modalTypedLabel>_<i>` like the reference (:341-368);
+  *   6. a second small pass fetches the top-K member features of the
+  *      keys that can reach each cluster's top K.
   *
+  * A candidate's cluster and probability are a function of its
+  * StructKey, so the assignments are a lazy per-candidate lookup.
   * This reproduces the role (equivalence classes of similar subtrees) —
   * not HDBSCAN's exact labels; quality is validated by AMI in tests.
   */
@@ -282,7 +294,7 @@ object TreeClusterer {
       buildModel)
 
   private def fitImpl(
-      candsIn: Dataset[CandRow],
+      cands: Dataset[CandRow],
       schemaTemplate: () => ArchiTree,
       tau: Double,
       decay: Double,
@@ -294,151 +306,170 @@ object TreeClusterer {
       buildModel: Boolean = true,
   ): Result = {
     require(tau >= 0 && tau <= 1, "tau must be between 0 and 1")
-    val spark = candsIn.sparkSession
+    val spark = cands.sparkSession
     import spark.implicits._
 
-    // both member paths scan the candidate extraction exactly once (the
-    // instance path materializes it straight into the persisted withFeat
-    // frame), so caching it here would only duplicate that storage
-    val cands = candsIn
-
-    val (membersDf, releaseIntermediates) =
-      if (schemaOnly)
-        (schemaOnlyMembers(schemaTemplate(), cands, tau, decay, metricName, maxHeight,
-          minClusterSize), () => ())
-      else instanceMembers(cands, tau, decay, metricName, maxHeight)
-
-    // schema-only members scan the raw candidate extraction (no cache
-    // underneath), so re-deriving them per downstream job would re-walk
-    // every tree — persist. The instance path needs no cache here: its
-    // members frame is the persisted withFeat scan plus rep-sized
-    // broadcast joins, re-derivable per job for less than one full-width
-    // cache write per fit (the distributed tau-graph variant persists
-    // inside instanceMembers, where the recompute would be real work)
-    val members =
-      if (schemaOnly) membersDf.persist(StorageLevel.MEMORY_AND_DISK) else membersDf
-
-    // component stats for deterministic naming, ONE aggregation at the
-    // (comp, labelName, labelTyped) grain — bounded by comps × labels —
-    // from which sizes, min nodes, and modal typed labels all derive.
-    // When the model is wanted, the SAME pass also carries the model's
-    // per-cluster support/avgEntities/avgDepth sums and the distinct
-    // member StructKeys (collect_set at this grain ≡ the old
-    // distinct-then-collect featRows job): what used to be two more
-    // full member scans (statRows + featRows) folds into this one.
-    val structKeyCol = struct(
-      col("height"), col("depth"),
-      expr("transform(levels, l -> struct(l.label AS label, l.isTyped AS isTyped, l.ents AS ents))"))
-    val nameAggs =
-      if (!buildModel) Seq(count(lit(1)).as("n"), min("node").as("minNode"))
-      else Seq(count(lit(1)).as("n"), min("node").as("minNode"),
-        sum(size(col("levels").getItem(0).getField("ents"))).as("sumEnts"),
-        sum(col("depth")).as("sumDepth"),
-        collect_set(structKeyCol).as("feats"))
-    val nameStats = timed("nameStats") { members
-      .groupBy("comp", "labelName", "labelTyped")
-      .agg(nameAggs.head, nameAggs.tail: _*)
-      .collect()
+    // pass 1: ONE map-side aggregate at the StructKey grain, merged on
+    // the driver. Every later decision — tau-graph, components, naming,
+    // cluster stats — is a function of these partials: a member's
+    // cluster and probability depend only on its key.
+    val partials: Map[StructKey, KeyPartial] = timed("aggregate") {
+      mergePartials(cands.mapPartitions(it =>
+        mergePartials(it.map(KeyPartial(1, _))).valuesIterator).collect().iterator)
     }
-    val byComp = nameStats.groupBy(_.getString(0))
+    def mult(k: StructKey): Long = partials(k).mult
+
+    // (key, component, probability) per membership. A key has exactly
+    // one in instance mode; in schema-only mode a self label shared by
+    // template subtrees of different components joins each of them
+    val members: Seq[(StructKey, String, Double)] =
+      if (schemaOnly)
+        schemaOnlyMembers(schemaTemplate(), partials.keys, tau, decay, metricName, maxHeight,
+          minClusterSize)
+      else instanceMembers(spark, partials, tau, decay, metricName, maxHeight)
+
+    // deterministic naming: components by (size desc, min member key),
+    // suffixed onto the modal typed self-label name (most members, then
+    // the larger name)
+    val byComp: Map[String, Seq[(StructKey, Double)]] =
+      members.groupMap(_._2) { case (k, _, prob) => (k, prob) }
     val compStats = byComp.toSeq
-      .map { case (comp, rows) =>
-        (comp, rows.map(_.getLong(3)).sum, rows.map(_.getString(4)).min)
+      .map { case (comp, ms) =>
+        (comp, ms.map(m => mult(m._1)).sum, ms.map(m => partials(m._1).cand.key).min)
       }
       .filter(_._2 >= minClusterSize)
       .sortBy { case (comp, size, minNode) => (-size, minNode) }
-    val modal: Map[String, String] = byComp.flatMap { case (comp, rows) =>
-      val typed = rows.filter(_.getBoolean(2))
+    val modal: Map[String, String] = byComp.flatMap { case (comp, ms) =>
+      val typed = ms.map(_._1).filter(_.levels.head.isTyped)
       if (typed.isEmpty) None
-      else Some(comp -> typed.maxBy(r => (r.getLong(3), r.getString(1))).getString(1))
-    }.toMap
-
+      else Some(comp -> typed.groupMapReduce(k => partials(k).cand.labelName)(mult)(_ + _)
+        .maxBy { case (name, n) => (n, name) }._1)
+    }
     val naming: Map[String, String] = compStats.zipWithIndex.map { case ((comp, _, _), i) =>
       val name = modal.get(comp).map(m => s"${m}_$i").getOrElse(i.toString)
       comp -> name
     }.toMap
-    val namingDf = naming.toSeq.toDF("comp", "cluster")
+    val membership: Map[StructKey, Seq[(String, Double)]] = members
+      .collect { case (k, comp, prob) if naming.contains(comp) => (k, (naming(comp), prob)) }
+      .groupMap(_._1)(_._2)
 
-    val withCluster = members.join(broadcast(namingDf), Seq("comp"))
-    val assignments = withCluster
-      .select(col("node").as("key"), col("treeId"), col("cluster"), col("prob"))
-      .as[Assignment]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // --- broadcastable model, built executor-side ---
-    // the driver receives only (a) one stats row per cluster, (b) the
-    // distinct StructKeys per cluster (bounded by schema variety, the
-    // whole point of the identity-free key), and (c) the window-ranked
-    // top-`keepPerCluster` member features — O(clusters × K), never
-    // O(members). The members frame already carries every candidate
-    // column, so the model rows come straight from it — no second
-    // shuffle join back against cands. Callers that consume only the
-    // assignments (entity_labels) pass buildModel = false and skip all
-    // three jobs.
-    val summaries: Map[String, ClusterSummary] = if (!buildModel) {
-      // materialize the returned assignments BEFORE the backing frames
-      // are released — afterwards a recompute would rebuild the chain
-      timed("assignments") { assignments.count() }
-      if (schemaOnly) members.unpersist()
-      Map.empty
-    } else {
-      // lazy projection of the (cached-or-cheap) members frame — the
-      // top-K job below re-derives it rather than paying a third
-      // full-width materialization per fit
-      val memberRows = withCluster
-        .select(col("cluster"), col("prob"), col("node").as("key"),
-          struct(col("node").as("key"), col("treeId"), col("height"), col("depth"),
-            col("labelName"), col("labelTyped"), col("levels")).as("cand"))
-        .as[MemberRow]
-
-      val rankWin = org.apache.spark.sql.expressions.Window
-        .partitionBy("cluster").orderBy(col("prob").desc, col("key").asc)
-      val topRows = timed("topRows") { memberRows.toDF()
-        .withColumn("rn", row_number().over(rankWin))
-        .filter(col("rn") <= keepPerCluster)
-        .drop("rn")
-        .as[MemberRow]
-        .collect()
+    // --- broadcastable model: the driver holds every member key's
+    // multiplicity, so support / avgEntities / avgDepth / the distinct
+    // StructKeys take no Spark job (exact long sums, ONE double division
+    // each); only the top-K member features take one more small pass.
+    // Callers that consume only the assignments (entity_labels) pass
+    // buildModel = false and skip that pass.
+    val summaries: Map[String, ClusterSummary] =
+      if (!buildModel) Map.empty
+      else {
+        val top = timed("topK") { topMembers(cands, partials, byComp, naming, keepPerCluster) }
+        naming.map { case (comp, name) =>
+          val ks = byComp(comp).map(_._1)
+          val support = ks.map(mult).sum
+          val sumEnts = ks.map(k => mult(k) * k.levels.head.ents.size).sum
+          val sumDepth = ks.map(k => mult(k) * k.depth).sum
+          name -> ClusterSummary(
+            name, support.toInt, ks.toSet, top.getOrElse(comp, Vector.empty),
+            sumEnts.toDouble / support, sumDepth.toDouble / support)
+        }
       }
-      // materialize the returned assignments BEFORE the backing frames are
-      // released — afterwards a recompute would rebuild the whole chain
-      timed("assignments") { assignments.count() }
-      if (schemaOnly) members.unpersist()
 
-      // per-cluster support / avgEntities / avgDepth / distinct
-      // StructKeys — all derived driver-side from the extended
-      // nameStats rows (exact long sums, ONE double division each:
-      // bit-identical to the former per-cluster Spark avg()), so the
-      // old statRows + featRows member scans are gone
-      val membersByCluster = topRows.groupBy(_.cluster)
-      naming.map { case (comp, name) =>
-        val rows = byComp(comp)
-        val support = rows.map(_.getLong(3)).sum
-        val sumEnts = rows.map(_.getLong(5)).sum
-        val sumDepth = rows.map(_.getLong(6)).sum
-        val feats: Set[StructKey] = rows.iterator
-          .flatMap(_.getSeq[org.apache.spark.sql.Row](7))
-          .map { f =>
-            StructKey(f.getInt(0), f.getInt(1),
-              f.getSeq[org.apache.spark.sql.Row](2).map(l =>
-                StructLevel(l.getString(0), l.getBoolean(1), l.getSeq[String](2))))
-          }.toSet
-        val ms = membersByCluster.getOrElse(name, Array.empty[MemberRow])
-          .sortBy(m => (-m.prob, m.key))
-          .map(m => (m.cand.toFeature, m.prob)).toVector
-        name -> ClusterSummary(
-          name, support.toInt, feats, ms,
-          sumEnts.toDouble / support, sumDepth.toDouble / support)
-      }.toMap
+    Result(cands.flatMap(assign(_, membership)),
+      new ClusterModel(summaries, tau, decay, metricName, membership))
+  }
+
+  /** Map-side partial of the fit's aggregate pass: one StructKey's
+    * multiplicity and its minimum-key candidate. Public for the same
+    * generated-projection reason as [[RepRow]].
+    */
+  final case class KeyPartial(mult: Long, cand: CandRow)
+
+  /** Merge partials by StructKey: multiplicities add, the smaller
+    * candidate key wins (keys are ASCII, so String order is Spark's).
+    */
+  private def mergePartials(ps: Iterator[KeyPartial]): Map[StructKey, KeyPartial] = {
+    val acc = scala.collection.mutable.HashMap.empty[StructKey, KeyPartial]
+    ps.foreach { p =>
+      acc.updateWith(p.cand.structKey) {
+        case None    => Some(p)
+        case Some(q) =>
+          Some(KeyPartial(p.mult + q.mult, if (p.cand.key < q.cand.key) p.cand else q.cand))
+      }
+    }
+    acc.toMap
+  }
+
+  private def assign(
+      c: CandRow,
+      membership: Map[StructKey, Seq[(String, Double)]]): Iterator[Assignment] =
+    membership.getOrElse(c.structKey, Nil).iterator.map { case (cluster, prob) =>
+      Assignment(c.key, c.treeId, cluster, prob)
     }
 
-    releaseIntermediates()
-    Result(assignments, new ClusterModel(summaries, tau, decay, metricName))
+  /** The assignments of one tree's candidate subtrees under a fitted
+    * model — exactly that tree's rows of `Result.assignments`, computed
+    * in place so per-tree consumers (find_groups, entity labelling) need
+    * no join against the assignment set. `maxHeight` and
+    * `entityParentsOnly` must match the fit's.
+    */
+  private[graft] def treeAssignments(
+      treeId: Long,
+      tree: ArchiTree,
+      model: ClusterModel,
+      maxHeight: Int = 5,
+      entityParentsOnly: Boolean = false,
+  ): Iterator[Assignment] =
+    candidateRows(treeId, tree, maxHeight, entityParentsOnly).flatMap(assign(_, model.membership))
+
+  /** Top-`keep` member features per named component by (prob desc, key
+    * asc). Probability is constant per StructKey, so the driver knows
+    * which keys can reach a component's top K — those with fewer than K
+    * members of strictly higher probability — and one pass keeps only
+    * the K smallest-key candidates of those keys per partition.
+    */
+  private def topMembers(
+      cands: Dataset[CandRow],
+      partials: Map[StructKey, KeyPartial],
+      byComp: Map[String, Seq[(StructKey, Double)]],
+      naming: Map[String, String],
+      keep: Int,
+  ): Map[String, Vector[(SubtreeFeature, Double)]] = {
+    import cands.sparkSession.implicits._
+    val neededByComp: Map[String, Seq[(StructKey, Double)]] = naming.keys.map { comp =>
+      var ahead = 0L
+      comp -> byComp(comp).groupBy(_._2).toSeq.sortBy(-_._1).flatMap { case (_, tier) =>
+        val in = if (ahead < keep) tier else Nil
+        ahead += tier.map(m => partials(m._1).mult).sum
+        in
+      }
+    }.toMap
+    val needed: Set[StructKey] = neededByComp.valuesIterator.flatMap(_.map(_._1)).toSet
+    if (needed.isEmpty) return Map.empty
+    val fetched: Map[StructKey, Array[CandRow]] = cands.mapPartitions { it =>
+      val kept = scala.collection.mutable.HashMap.empty[StructKey, java.util.TreeMap[String, CandRow]]
+      it.foreach { c =>
+        val k = c.structKey
+        if (needed.contains(k)) {
+          val m = kept.getOrElseUpdate(k, new java.util.TreeMap[String, CandRow]())
+          m.put(c.key, c)
+          if (m.size > keep) m.pollLastEntry()
+        }
+      }
+      kept.valuesIterator.flatMap(_.values.asScala)
+    }.collect().groupBy(_.structKey)
+    neededByComp.map { case (comp, ks) =>
+      comp -> ks
+        .flatMap { case (k, prob) => fetched.getOrElse(k, Array.empty[CandRow]).map(c => (c, prob)) }
+        .sortBy { case (c, prob) => (-prob, c.key) }
+        .take(keep)
+        .map { case (c, prob) => (c.toFeature, prob) }
+        .toVector
+    }
   }
 
   /** schema_only mode (similarity.py:230,296-339): cluster the SCHEMA
     * template's subtrees driver-side — the template is bounded by schema
-    * variety, never data size — then map every instance candidate to its
+    * variety, never data size — then map every instance key to its
     * self-label's component. Membership probability is 1.0, as in the
     * reference. Components with fewer than minClusterSize schema
     * subtrees are noise (the reference's HDBSCAN drops them before the
@@ -446,15 +477,13 @@ object TreeClusterer {
     */
   private def schemaOnlyMembers(
       template: ArchiTree,
-      cands: Dataset[CandRow],
+      keys: Iterable[StructKey],
       tau: Double,
       decay: Double,
       metricName: String,
       maxHeight: Int,
       minClusterSize: Int,
-  ): DataFrame = {
-    val spark = cands.sparkSession
-    import spark.implicits._
+  ): Seq[(StructKey, String, Double)] = {
     val metric = SeqMetrics.byName(metricName)
     val schemaFeats = Similarity.treeFeatures(template, "schema", maxHeight)
       .toSeq.sortBy(_._1)
@@ -476,21 +505,17 @@ object TreeClusterer {
       val (ra, rb) = (find(i), find(j))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val labelComp: Seq[(String, String)] = schemaFeats.indices
+    val labelComps: Map[String, Seq[String]] = schemaFeats.indices
       .groupBy(find)
       .filter(_._2.size >= math.max(minClusterSize, 2))
       .toSeq
       .flatMap { case (root, members) =>
         members.map(i => schemaFeats(i)._2.self.label -> s"schema/$root")
       }.distinct
+      .groupMap(_._1)(_._2)
 
-    val compDf = labelComp.toDF("selfLabel", "comp")
-    cands.toDF()
-      .withColumn("selfLabel", col("levels").getItem(0).getField("label"))
-      .join(broadcast(compDf), Seq("selfLabel"))
-      .drop("selfLabel")
-      .withColumn("prob", lit(1.0))
-      .withColumnRenamed("key", "node")
+    keys.toSeq.flatMap(k =>
+      labelComps.getOrElse(k.levels.head.label, Nil).map(comp => (k, comp, 1.0)))
   }
 
   /** Above this many distinct structural representatives the tau-graph
@@ -510,103 +535,68 @@ object TreeClusterer {
   private def localTauGraphMaxReps(spark: SparkSession): Long =
     spark.conf.getOption(LocalTauGraphMaxRepsKey).map(_.toLong).getOrElse(2000L)
 
-  /** Instance-mode membership: representative collapse → blocking join →
+  /** Instance-mode membership: representative collapse → blocking →
     * tau-edges → connected components → incident-edge probabilities.
-    * Returns the members frame plus a release hook for the persisted
-    * intermediates (they back the frame until the caller's actions run).
     */
   private def instanceMembers(
-      cands: Dataset[CandRow],
+      spark: SparkSession,
+      partials: Map[StructKey, KeyPartial],
       tau: Double,
       decay: Double,
       metricName: String,
       maxHeight: Int,
-  ): (DataFrame, () => Unit) = {
-    val spark = cands.sparkSession
+  ): Seq[(StructKey, String, Double)] = {
     import spark.implicits._
 
     // --- collapse identical structural features ---
     // The similarity metric sees ONLY the ancestor label-sets (never
     // leaf values), so two subtrees with identical (levels, height,
     // depth) score exactly 1.0 and always co-cluster. Collapsing them to
-    // one representative (with a multiplicity) BEFORE the pair join is
+    // one representative (with a multiplicity) BEFORE pair scoring is
     // therefore result-preserving, and it is the 100×-scale keystone:
     // a forest of N structurally-identical trees otherwise degenerates
-    // the blocking join into N²/2 pairs (15k customer trees ⇒ 112M
-    // scored pairs, unbounded at 100 TB), while the distinct-structure
-    // count is bounded by schema variety, not data size.
-    // the feature key is a STRUCT (not a delimited string — unescaped
-    // corpus labels containing the delimiter would collide and wrongly
-    // collapse distinct structures); level ids are excluded so twins
-    // compare equal. UNTYPED labels are blanked: levelEquivalent only
-    // consults labels when BOTH sides are typed, and the fallback metric
-    // sees entity-label sets only — so an untyped label can never affect
-    // a similarity score, and keeping it in the key shatters the
-    // collapse whenever an op mints per-tree-unique UNDEF names
-    // (evaluateSubgroup's undefName rename turned 150k structurally
-    // identical trees into 24k distinct reps at the 10× canary,
-    // degenerating the blocking join). Entity-free subtrees are excluded
-    // up front: the metric scores them 0 even against themselves
-    // (Similarity shortcut), so they can never cluster — seeding their
-    // twins would manufacture clusters the metric forbids.
-    val featCol = struct(
-      col("height"), col("depth"),
-      expr("transform(levels, l -> struct(CASE WHEN l.isTyped THEN l.label ELSE '' END AS label, l.isTyped, l.ents))"))
-    val withFeat = cands
-      .filter(size(col("levels")(0)("ents")) > 0)
-      .withColumn("feat", featCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val repKeys = withFeat.groupBy("feat")
-      .agg(min(col("key")).as("key"), count(lit(1)).as("mult"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the blocking into N²/2 pairs, while the distinct-structure count
+    // is bounded by schema variety, not data size. UNTYPED labels are
+    // blanked: levelEquivalent only consults labels when BOTH sides are
+    // typed, and the fallback metric sees entity-label sets only — so
+    // an untyped label can never affect a similarity score, and keeping
+    // it in the key shatters the collapse whenever an op mints
+    // per-tree-unique UNDEF names (evaluateSubgroup's undefName rename
+    // turned 150k structurally identical trees into 24k distinct reps at
+    // the 10× canary). Entity-free subtrees are excluded up front: the
+    // metric scores them 0 even against themselves (Similarity
+    // shortcut), so they can never cluster — seeding their twins would
+    // manufacture clusters the metric forbids. The representative is
+    // the minimum-key member; its level ids are the ones scored.
+    val byRep: Seq[(RepRow, Seq[StructKey])] = partials.keys.toSeq
+      .filter(_.levels.head.ents.nonEmpty)
+      .groupBy(k => k.copy(levels = k.levels.map(l => if (l.isTyped) l else l.copy(label = ""))))
+      .valuesIterator.map { ks =>
+        val c = ks.map(partials(_).cand).minBy(_.key)
+        (RepRow(c.key, ks.map(partials(_).mult).sum, c.height, c.depth, c.levels), ks)
+      }.toSeq
+    val reps = byRep.map(_._1).toArray.sortBy(_.key)
+    graft.util.Spark.note("fit-profile", s"repCount=${reps.length}")
 
     // --- tau-graph: adaptive local/distributed (see LocalTauGraphMaxRepsKey) ---
-    val repCount = timed("collapse+count") { repKeys.count() }
-    graft.util.Spark.note("fit-profile", s"repCount=$repCount")
-    val small = repCount <= localTauGraphMaxReps(spark)
-    // the rep-sized frames (repKeys, labels, incident) are bounded by
-    // schema variety when the local path fired; hint the broadcast so
-    // the expansion below is map-side instead of shuffling the full
-    // candidate set once per join
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val reps = hinted(repKeys)
-      .join(withFeat.drop("feat"), "key")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (labels, incident, releaseGraph) =
-      if (small)
+    val (labels, incident) =
+      if (reps.length <= localTauGraphMaxReps(spark))
         timed("localTauGraph") { localTauGraph(reps, tau, decay, metricName, maxHeight) }
-      else
-        distributedTauGraph(reps, tau, decay, metricName, maxHeight)
+      else timed("distributedTauGraph") {
+        val (l, i, release) =
+          distributedTauGraph(reps.toSeq.toDF(), tau, decay, metricName, maxHeight)
+        try (l.as[(String, String)].collect().toMap, i.as[(String, Double)].collect().toMap)
+        finally release()
+      }
 
-    // --- expand representatives back to every original subtree ---
-    // withFeat already carries every candidate column, so the expansion
-    // joins the ONE full-size frame against three rep-sized ones — no
-    // re-join of the full candidate set against itself by key
-    val joined = withFeat
-      .join(hinted(repKeys.select(col("feat"), col("key").as("rep"))), "feat")
-      .join(hinted(labels.withColumnRenamed("node", "rep")), "rep")
-      .join(hinted(incident.withColumnRenamed("node", "rep")), "rep")
-      .drop("rep", "feat")
-      .withColumnRenamed("key", "node")
-    // local path: the chain above is the cached withFeat scan plus three
-    // broadcast joins — cheaper to re-derive per downstream job than to
-    // write a second full-width cache. Distributed path: labels/incident
-    // re-derivation would re-run the CC rounds and edge aggregations, so
-    // materialize once here.
-    val membersDf =
-      if (small) joined else joined.persist(StorageLevel.MEMORY_AND_DISK)
-
-    (membersDf, () => {
-      if (!small) membersDf.unpersist()
-      withFeat.unpersist()
-      repKeys.unpersist()
-      reps.unpersist()
-      releaseGraph()
-      ()
-    })
+    // --- every key of a representative shares its component and
+    // probability (no incident weight = not a member) ---
+    byRep.flatMap { case (rep, ks) =>
+      incident.get(rep.key).toSeq.flatMap(prob => ks.map(k => (k, labels(rep.key), prob)))
+    }
   }
 
-  /** Typed projection of a representative row for the local tau-graph.
+  /** Typed projection of a representative row for the tau-graph.
     * Public: Spark's generated SafeProjection cannot access a private
     * class and would fall back to interpreted deserialization (after a
     * logged compile failure) on every collect.
@@ -614,24 +604,21 @@ object TreeClusterer {
   final case class RepRow(
       key: String, mult: Long, height: Int, depth: Int, levels: Seq[LevelRow])
 
-  /** Driver-side tau-graph for a provably-small representative set: the
-    * SAME blocking (shared self-level entity label), height/depth-gap
-    * prune, min-key component labels and multiplicity-weighted incident
-    * probabilities as the distributed path — but one collect and zero
-    * shuffles instead of ~10 jobs plus the iterative CC rounds, which at
-    * low rep counts are pure scheduler latency.
+  /** Driver-side tau-graph for a provably-small, key-sorted
+    * representative set: the SAME blocking (shared self-level entity
+    * label), height/depth-gap prune, min-key component labels and
+    * multiplicity-weighted incident probabilities as the distributed
+    * path — but zero Spark jobs instead of ~10 plus the iterative CC
+    * rounds, which at low rep counts are pure scheduler latency.
+    * Returns (rep key → component key, rep key → probability).
     */
   private def localTauGraph(
-      reps: DataFrame,
+      rows: Array[RepRow],
       tau: Double,
       decay: Double,
       metricName: String,
       maxHeight: Int,
-  ): (DataFrame, DataFrame, () => Unit) = {
-    val spark = reps.sparkSession
-    import spark.implicits._
-    val rows = reps.select("key", "mult", "height", "depth", "levels")
-      .as[RepRow].collect().sortBy(_.key)
+  ): (Map[String, String], Map[String, Double]) = {
     val n = rows.length
     val feats = rows.map(r => SubtreeFeature(r.levels.map(_.toFeature).toVector, 0, 0))
     val metric = SeqMetrics.byName(metricName)
@@ -681,11 +668,11 @@ object TreeClusterer {
       }
     }
 
-    val labels = (0 until n).map(i => (rows(i).key, rows(find(i)).key)).toDF("node", "comp")
+    val labels = (0 until n).map(i => rows(i).key -> rows(find(i)).key).toMap
     val incident = (0 until n)
-      .collect { case i if den(i) > 0 => (rows(i).key, num(i) / den(i)) }
-      .toDF("node", "prob")
-    (labels, incident, () => ())
+      .collect { case i if den(i) > 0 => rows(i).key -> num(i) / den(i) }
+      .toMap
+    (labels, incident)
   }
 
   /** Distributed tau-graph: blocking join → UDF scoring → pointer-
@@ -803,45 +790,32 @@ object TreeClusterer {
       decay: Double = Similarity.Decay,
   ): Dataset[(String, String)] = {
     import trees.sparkSession.implicits._
-    if (metricName == null) {
-      val labelled = trees.flatMap { case (treeId, tree) =>
-        tree.positionedSubtrees.flatMap { case (path, t) =>
+    // each entity parent's label: its own rendering (null metric) or its
+    // cluster from the model's key map — assignments are the only
+    // consumed output, so the fit skips its top-K pass. One flatMap plus
+    // the oid aggregation: no join, no broadcast sized by the forest
+    val model = Option(metricName).map(m => fitTrees(trees, tau = tau, decay = decay,
+      metricName = m, entityParentsOnly = true, buildModel = false).model)
+    val labelled = trees.flatMap { case (treeId, tree) =>
+      val clusters = model.map(treeAssignments(treeId, tree, _, entityParentsOnly = true)
+        .toSeq.groupMap(_.key)(_.cluster))
+      tree.positionedSubtrees.flatMap { case (path, t) =>
+        val labels = clusters match {
+          case None     => Seq(t.label.render)
+          case Some(cs) => cs.getOrElse(s"$treeId/${path.mkString(".")}", Nil)
+        }
+        labels.flatMap { label =>
           t.childTrees.zipWithIndex.collect {
             case (c, i) if c.hasType(NodeType.Ent) =>
               val oid = if (c.oid.nonEmpty) c.oid else s"$treeId/${(path :+ i).mkString(".")}"
-              oid -> t.label.render
+              oid -> label
           }
         }
-      }.groupBy(col("_1").as("oid")).agg(max(col("_2")).as("label"))
-        .as[(String, String)]
-      return graft.util.Spark.checkpoint(labelled)
-    }
-
-    // assignments are the only consumed output — skip the three
-    // model-build jobs (stats, struct-keys, top-K) entirely
-    val result = fitTrees(trees, tau = tau, decay = decay, metricName = metricName,
-      entityParentsOnly = true, buildModel = false)
-    // (parent key, entity oid) pairs, joined against the assignments —
-    // no driver-side parent map, no broadcast sized by the forest
-    val parentChild = trees.flatMap { case (treeId, tree) =>
-      tree.positionedSubtrees.flatMap { case (path, t) =>
-        val key = s"$treeId/${path.mkString(".")}"
-        t.childTrees.zipWithIndex.collect {
-          case (c, i) if c.hasType(NodeType.Ent) =>
-            val oid = if (c.oid.nonEmpty) c.oid else s"$treeId/${(path :+ i).mkString(".")}"
-            key -> oid
-        }
       }
-    }.toDF("key", "oid")
-
-    val labelled = result.assignments.toDF().select(col("key"), col("cluster"))
-      .join(parentChild, "key")
-      .groupBy("oid").agg(max(col("cluster")).as("label"))
+    }.groupBy(col("_1").as("oid")).agg(max(col("_2")).as("label"))
       .as[(String, String)]
     // materialize before the caller releases the backing trees (the
     // result is data-sized, so the reliable-checkpoint policy applies)
-    val out = graft.util.Spark.checkpoint(labelled)
-    result.assignments.unpersist()
-    out
+    graft.util.Spark.checkpoint(labelled)
   }
 }

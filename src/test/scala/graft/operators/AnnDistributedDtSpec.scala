@@ -74,21 +74,24 @@ class AnnDistributedDtSpec extends AnyFunSuite with SparkSpec {
     distributed {
       assert(ivfAdc(emb, Seq(-1L)).count() == 0)
       // queries come from the corpus, so the ragged vector rides in as
-      // a corpus row. The literal-argmax coarse assignment
-      // (maxUnrolledLists = 0) and the PQ encoder both disqualify it
-      // (null cid/codes), so training skips it; the query frame's dim
-      // guard must not
+      // a corpus row. The coarse assignment — literal argmax below the
+      // maxUnrolledLists cut, unrolled greatest() at or above it — and
+      // the PQ encoder both disqualify it (null cid/codes), so training
+      // skips it; the query frame's dim guard must not
       import spark.implicits._
       val bad = Seq((100000L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
-      spark.conf.set("spark.graft.ann.maxUnrolledLists", "0")
-      val ex =
-        try intercept[Exception] {
-          ivfAdc(emb.select("vec_id", "embedding").union(bad), Seq(100000L)).collect()
-        } finally spark.conf.unset("spark.graft.ann.maxUnrolledLists")
       def messages(t: Throwable): String =
         if (t == null) "" else t.getMessage + " | " + messages(t.getCause)
-      assert(messages(ex).contains("index expects 64"),
-        s"want the dim-guard message, got: ${messages(ex)}")
+      // nLists = 16: 15 takes the literal path, 16 the unrolled one
+      for (maxUnrolled <- Seq("15", "16")) {
+        spark.conf.set("spark.graft.ann.maxUnrolledLists", maxUnrolled)
+        val ex =
+          try intercept[Exception] {
+            ivfAdc(emb.select("vec_id", "embedding").union(bad), Seq(100000L)).collect()
+          } finally spark.conf.unset("spark.graft.ann.maxUnrolledLists")
+        assert(messages(ex).contains("index expects 64"),
+          s"maxUnrolledLists=$maxUnrolled: want the dim-guard message, got: ${messages(ex)}")
+      }
     }
   }
 

@@ -2,7 +2,10 @@ package graft.rewrite
 
 import graft.SparkSpec
 import graft.core._
-import graft.model.{Forest, Group, Relation, RelationOrientation, Schema}
+import graft.model.{Forest, Group, Relation, RelationOrientation, Schema, TreeRow}
+import graft.similarity.TreeClusterer
+import graft.sources.{RelationalLoader, Testdata}
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Operation goldens ported from tests/simplification/tree_rewriting/…
@@ -243,5 +246,93 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
     assert(out(0).childTrees.head.label.name.contains("<->"))
     // COLL renamed from contained group
     assert(out(1).childTrees.head.label.name.startsWith("Terr"))
+  }
+
+  // --- the epoch loop on a customer-shaped forest ---
+
+  /** 24 customers over 25 nations and 5 regions, loaded typed like the
+    * sf corpus's customerDb: the rewrite runs six epochs to its fixpoint.
+    */
+  private def customerForest(): Dataset[TreeRow] = {
+    import spark.implicits._
+    val region = (0 until 5).map(i => (i, s"REGION$i")).toDF("r_regionkey", "r_name")
+    val nation = (0 until 25).map(i => (i, s"NATION_$i", i % 5))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+    val segments = Seq("BUILDING", "MACHINERY", "AUTOMOBILE", "FURNITURE", "HOUSEHOLD")
+    val customer = (0 until 24).map(i =>
+      (i.toLong, f"Customer#$i%09d", (i * 7) % 25, (i * 37 % 1000).toDouble / 10,
+        segments((i * 3) % 5)))
+      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
+    RelationalLoader.loadFrom(spark,
+      Map("region" -> region, "nation" -> nation, "customer" -> customer),
+      Testdata.customerDb).localCheckpoint(true)
+  }
+
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  test("rewrite epochs run at most five Spark jobs each") {
+    // one epoch: reduce_all checkpoint, the fit's aggregate and top-K
+    // passes, the find_groups checkpoint, the fused op trials. Every
+    // job counts — AQE query-stage and broadcast jobs included — and
+    // the entry (checkpoint + count) and exit (post-process, name
+    // collection, final checkpoint) get a fixed allowance
+    val forest = customerForest()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val result =
+      try {
+        val r = Rewrite.rewriteWithStats(forest, Rewrite.Config(tau = 0.7))
+        org.apache.spark.TestListenerBus.drain(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+    val epochs = result.epochsToConverge.getOrElse(fail("the customer forest must converge"))
+    assert(epochs >= 3, s"the budget needs a multi-epoch run, got $epochs")
+    info(s"${jobs.get} jobs over $epochs epochs")
+    val entryExit = 8
+    assert(jobs.get <= 5 * epochs + entryExit,
+      s"${jobs.get} jobs over $epochs epochs, budget ${5 * epochs} + $entryExit")
+  }
+
+  test("customer rewrite matches its pinned golden across partitions, modes and tau-graph paths") {
+    // golden: (treeId, tree) rows and epochsToConverge (-1 = cap hit)
+    // of the instance and schema-only rewrites, recorded from the
+    // join-based fit this one-pass fit replaced. Schema-only mode does
+    // not reach a fixpoint on this forest, so it runs under an 8 cap
+    val src = scala.io.Source.fromResource("graft/rewrite/customer_rewrite_golden.tsv")
+    val lines = try src.getLines().toVector finally src.close()
+    val epochs = lines.collect { case l if l.startsWith("#") =>
+      val Array(mode, n) = l.drop(1).split("\t"); mode -> n.toInt
+    }.toMap
+    val rows = lines.filterNot(_.startsWith("#")).map(_.split("\t", 3))
+      .groupMap(_(0))(a => (a(1).toLong, a(2)))
+    val runs = Seq(
+      ("instance", "1", "2000"), ("instance", "7", "2000"), ("instance", "7", "-1"),
+      ("schema", "1", "2000"), ("schema", "7", "2000"))
+    runs.foreach { case (mode, parts, maxReps) =>
+      withConf("spark.sql.shuffle.partitions" -> parts,
+        TreeClusterer.LocalTauGraphMaxRepsKey -> maxReps) {
+        val cfg = Rewrite.Config(tau = 0.7)
+        val r = Rewrite.rewriteWithStats(customerForest(),
+          if (mode == "schema") cfg.copy(schemaOnly = true, epochs = 8) else cfg)
+        val what = s"$mode, $parts shuffle partitions, localTauGraphMaxReps $maxReps"
+        assert(r.epochsToConverge.getOrElse(-1) == epochs(mode), what)
+        assert(r.forest.collect().map(t => (t.treeId, t.tree)).sortBy(_._1).toSeq == rows(mode),
+          what)
+      }
+    }
   }
 }
