@@ -16,9 +16,13 @@ object Child {
   * pointers and mutation-cache machinery (tree.py:213-236) are dropped —
   * Spark recomputes per-iteration columnar features instead.
   *
+  * In a Dataset it is a Spark user-defined type ([[ArchiTreeUDT]]), so a
+  * forest row holds the tree itself, not a serialized copy.
+  *
   * @param oid application-level identifier; duplicates allowed for the
   *            same logical entity (tree.py:290-305).
   */
+@org.apache.spark.sql.types.SQLUserDefinedType(udt = classOf[ArchiTreeUDT])
 final case class ArchiTree(
     label: Label,
     children: Vector[Child],

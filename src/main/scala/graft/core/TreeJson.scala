@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * format (architxt/tree.py:1277-1333):
   * `{oid, type, name, metadata, children: [childDict | leafString]}`.
   *
-  * This is the storage format of `Dataset[TreeRow]` (one JSON tree per row)
-  * and of the JSONL import/export (architxt/forest.py:25-64).
+  * Used only at the edges: the JSONL import/export
+  * (architxt/forest.py:25-64) and the LLM prompt and response text.
+  * Inside the engine a forest row holds the tree itself ([[ArchiTreeUDT]]).
   */
 object TreeJson {
   private val mapper = new ObjectMapper()

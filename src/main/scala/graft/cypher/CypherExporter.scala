@@ -26,7 +26,7 @@ object CypherExporter {
     val cb = forest.sparkSession.sparkContext.broadcast(collapsible)
 
     val statements = forest.flatMap(row =>
-      treeStatements(TreeJson.fromJson(row.tree), cb.value)).distinct()
+      treeStatements(row.tree, cb.value)).distinct()
 
     CypherExport(statements, Seq(
       "MATCH (n) REMOVE n._architxt_oid",

@@ -109,8 +109,7 @@ object CypherLoader {
         // a collision-safe-enough tree id here (unlike declared
         // relational pks, which the loader no longer trusts for identity)
         val oid = ArchiTree.deterministicOid("cypher", rootId)
-        TreeRow(java.lang.Long.parseUnsignedLong(oid.take(15), 16) & Long.MaxValue,
-          TreeJson.toJson(tree))
+        TreeRow(java.lang.Long.parseUnsignedLong(oid.take(15), 16) & Long.MaxValue, tree)
       }
     }
   }

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.core._
-import graft.model.{Forest, TreeRow}
+import graft.model.TreeRow
 import org.apache.spark.sql.Dataset
 
 /** Chat-completion client contract for the LLM-based operators.
@@ -139,7 +139,7 @@ object LlmRewrite {
     import forest.sparkSession.implicits._
     val counts: Seq[(String, Long)] = forest
       .flatMap { row =>
-        TreeJson.fromJson(row.tree).subtrees.collect {
+        row.tree.subtrees.collect {
           case t if t.hasType(NodeType.Group) || t.hasType(NodeType.Rel) =>
             normalize(t.label.name)
         }.filter(_.nonEmpty)
@@ -261,20 +261,23 @@ object LlmRewrite {
       val cfg = config
       current = current.mapPartitions { rows =>
         // batch by prompt budget, one completion per batch; each item's
-        // JSON (already in the row) is the prompt payload AND the token
-        // measure, so nothing is serialized twice
-        val queue = rows.map(r => (r.treeId, r.tree, client.countTokens(r.tree))).buffered
+        // JSON is the prompt payload AND the token measure, so it is
+        // serialized once
+        val queue = rows.map { r =>
+          val json = TreeJson.toJson(r.tree)
+          (r, json, client.countTokens(json))
+        }.buffered
         new Iterator[Seq[TreeRow]] {
           def hasNext: Boolean = queue.hasNext
           def next(): Seq[TreeRow] = {
-            val batch = Vector.newBuilder[(Long, String)]
+            val batch = Vector.newBuilder[(TreeRow, String)]
             var size = 0
             var n = 0
             while (queue.hasNext && (n == 0 || size + queue.head._3 <= cfg.maxTokens)) {
-              val (id, json, len) = queue.next()
+              val (row, json, len) = queue.next()
               size += len
               n += 1
-              batch += ((id, json))
+              batch += ((row, json))
             }
             val items = batch.result()
             val numbered = items.zipWithIndex
@@ -283,22 +286,20 @@ object LlmRewrite {
             val answers =
               try parseNumberedItems(client.complete(promptFor(vocabSorted, numbered)))
               catch { case scala.util.control.NonFatal(_) => Map.empty[Int, String] }
-            items.zipWithIndex.map { case ((id, json), i) =>
+            items.zipWithIndex.map { case ((row, _), i) =>
               // keyed by item number: a skipped answer falls back to the
-              // ORIGINAL row (its JSON reused verbatim), never to a
-              // neighboring tree's answer
+              // ORIGINAL row, never to a neighboring tree's answer
               answers.get(i + 1) match {
-                case None => TreeRow(id, json)
+                case None => row
                 case Some(raw) =>
-                  val orig = TreeJson.fromJson(json)
-                  val (out, changed) = parseTreeOutput(raw, orig, vocab, cfg.vocabSimilarity)
-                  TreeRow(id, if (changed) TreeJson.toJson(out) else json)
+                  val (out, changed) = parseTreeOutput(raw, row.tree, vocab, cfg.vocabSimilarity)
+                  if (changed) TreeRow(row.treeId, out) else row
               }
             }
           }
         }.flatten
       }
-      current = Forest.checkpoint(current)
+      current = graft.util.Spark.checkpoint(current)
     }
     current
   }

@@ -26,8 +26,6 @@ final class Snapshot(
     val clustering: Dataset[(String, String)]) {
   /** Derived on first use — the coverage/AMI/completeness metrics never
     * touch it, and deriving it costs a full nodes aggregation pass.
-    * Forcing it after the snapshot's parse cache is released recomputes
-    * from the source forest's lineage (correct, one extra parse).
     */
   lazy val schema: Schema = schemaThunk()
 }
@@ -50,23 +48,18 @@ final class Metrics(
 
   private def snapshot(forest: Dataset[TreeRow]): Snapshot = {
     import forest.sparkSession.implicits._
-    // one JSON parse feeds the nodes view, the oid set, the label
-    // counts, and the entity clustering (four consumers)
-    val trees = Forest.trees(forest)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val oids = timed("oids") { trees.flatMap { case (treeId, tree) =>
+    val oids = timed("oids") { forest.flatMap { case TreeRow(treeId, tree) =>
       tree.positionedSubtrees.collect {
         case (path, t) if t.hasType(NodeType.Ent) =>
           if (t.oid.nonEmpty) t.oid else s"$treeId/${path.mkString(".")}"
       }
     }.distinct().localCheckpoint(true) }
-    val labels = timed("labelCounts") { trees.flatMap { case (_, tree) =>
-      tree.subtrees.map(_.label.render)
+    val labels = timed("labelCounts") { forest.flatMap { row =>
+      row.tree.subtrees.map(_.label.render)
     }.groupByKey(identity).count().collect().toMap }
     val clustering = timed("entityLabels") {
-      TreeClusterer.entityLabelsFromTrees(trees, tau, metricName, decay)
+      TreeClusterer.entityLabels(forest, tau, metricName, decay)
     }
-    trees.unpersist()
     val schemaThunk = sourceSchema match {
       case Some(thunk) if forest eq source => thunk
       case _ => () => Schema.fromForest(Forest.toNodesDF(forest))

@@ -1,18 +1,21 @@
 package graft.model
 
 import graft.core._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.types.StringType
 
-/** One tree per row, serialized as the TreeJson dict format.
+/** One tree per row. `tree` is an [[ArchiTree]] stored through its Spark
+  * user-defined type ([[ArchiTreeUDT]], a pre-order struct of arrays).
   *
   * The Dataset[TreeRow] is the master representation of a forest
-  * (SURVEY §7.1): per-tree rewrites are pure `ArchiTree => ArchiTree`
-  * functions mapped over it (zero shuffle); cross-tree stages derive the
-  * columnar nodes DataFrame below, which is cheap to rebuild per iteration
-  * and never the master copy.
+  * (SURVEY §7.1) in every layer: per-tree rewrites are pure
+  * `ArchiTree => ArchiTree` functions mapped over it (zero shuffle), and
+  * it checkpoints and writes to parquet as native rows. Cross-tree
+  * stages derive the columnar nodes DataFrame below, which is cheap to
+  * rebuild per iteration and never the master copy. JSON appears only
+  * at the edges (JSONL files, LLM prompts).
   */
-final case class TreeRow(treeId: Long, tree: String)
+final case class TreeRow(treeId: Long, tree: ArchiTree)
 
 /** One row per tree node — the columnar bridge for clustering features,
   * schema derivation, dataset extraction, metrics and export.
@@ -47,14 +50,14 @@ object Forest {
   def fromTrees(spark: SparkSession, trees: Seq[ArchiTree]): Dataset[TreeRow] = {
     import spark.implicits._
     trees.zipWithIndex
-      .map { case (t, i) => TreeRow(i.toLong, TreeJson.toJson(t)) }
+      .map { case (t, i) => TreeRow(i.toLong, t) }
       .toDS()
   }
 
   /** Pure per-tree rewrite over the whole forest — no shuffle. */
   def mapTrees(forest: Dataset[TreeRow])(f: ArchiTree => ArchiTree): Dataset[TreeRow] = {
     import forest.sparkSession.implicits._
-    forest.map(row => TreeRow(row.treeId, TreeJson.toJson(f(TreeJson.fromJson(row.tree)))))
+    forest.map(row => TreeRow(row.treeId, f(row.tree)))
   }
 
   /** Demote GROUP/REL typing to plain labels (ENT leaves keep their
@@ -78,27 +81,10 @@ object Forest {
       strip(tree)
     }
 
-  def trees(forest: Dataset[TreeRow]): Dataset[(Long, ArchiTree)] = {
-    implicit val enc = org.apache.spark.sql.Encoders.kryo[(Long, ArchiTree)]
-    forest.map(row => (row.treeId, TreeJson.fromJson(row.tree)))
-  }
-
   /** Flatten a forest into one NodeRow per tree node (SURVEY §7.1). */
   def toNodesDF(forest: Dataset[TreeRow]): Dataset[NodeRow] = {
     import forest.sparkSession.implicits._
-    forest.flatMap(row => nodeRows(row.treeId, TreeJson.fromJson(row.tree)))
-  }
-
-  /** Fused per-tree rewrite + flatten: parse each tree ONCE, apply `f`,
-    * emit its NodeRows directly. `mapTrees(f)` followed by `toNodesDF`
-    * pays serialize + re-parse of the REWRITTEN tree — which is often
-    * the larger one (Tree.merge doubles every tree) — purely to cross
-    * the row boundary; when the caller only needs the columnar view,
-    * this single-pass shape skips that round trip entirely.
-    */
-  def mapTreesToNodes(forest: Dataset[TreeRow])(f: ArchiTree => ArchiTree): Dataset[NodeRow] = {
-    import forest.sparkSession.implicits._
-    forest.flatMap(row => nodeRows(row.treeId, f(TreeJson.fromJson(row.tree))))
+    forest.flatMap(row => nodeRows(row.treeId, row.tree))
   }
 
   /** Local flattening of one tree (pre-order ids). */
@@ -133,15 +119,20 @@ object Forest {
 
   /** Collect a (small) forest to the driver — tests and golden checks only. */
   def collectTrees(forest: Dataset[TreeRow]): Seq[ArchiTree] =
-    forest.collect().sortBy(_.treeId).map(r => TreeJson.fromJson(r.tree)).toSeq
+    forest.collect().sortBy(_.treeId).map(_.tree).toSeq
 
-  /** Break lineage between rewrite iterations (SURVEY §7.5.4). Uses the
-    * reliable checkpoint when a checkpoint dir is configured — on a real
-    * cluster an executor loss must not kill a 100-epoch lineage —
-    * and falls back to localCheckpoint in plain local runs.
+  /** Read a forest written as parquet (store snapshots, corpus caches).
+    * A directory whose `tree` column is a JSON string was written before
+    * trees were stored through their own type; it is refused by name
+    * rather than surfacing as a cast error deep inside a later job.
     */
-  def checkpoint(forest: Dataset[TreeRow]): Dataset[TreeRow] =
-    if (forest.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      forest.checkpoint(true)
-    else forest.localCheckpoint(true)
+  def readParquet(spark: SparkSession, path: String): Dataset[TreeRow] = {
+    import spark.implicits._
+    val df = spark.read.parquet(path)
+    if (df.schema.exists(f => f.name == "tree" && f.dataType == StringType))
+      throw new IllegalStateException(
+        s"forest directory $path predates the tree encoding (its `tree` column is a JSON " +
+          "string); rewrite it with this build")
+    df.as[TreeRow]
+  }
 }

@@ -250,8 +250,7 @@ final class ForestStore(
     requireValid(name)
     val p = resolve(name).getOrElse(
       throw new NoSuchElementException(s"no snapshot '$name' under $root or its parents"))
-    import spark.implicits._
-    spark.read.parquet(p.toString).as[TreeRow]
+    Forest.readParquet(spark, p.toString)
   }
 
   /** Load the HEAD snapshot, if one exists. */

@@ -222,8 +222,7 @@ final case class Schema(
     import forest.sparkSession.implicits._
     val self = this
     forest.flatMap { row =>
-      self.extractValidTree(TreeJson.fromJson(row.tree))
-        .map(t => TreeRow(row.treeId, TreeJson.toJson(t)))
+      self.extractValidTree(row.tree).map(t => TreeRow(row.treeId, t))
     }
   }
 }
@@ -388,7 +387,7 @@ object Schema {
     assemble(prodRows.toSeq, multi.toMap, order.toMap, keepUnlabelled, mergeLhs)
   }
 
-  /** Productions-only derivation over an already-parsed tree dataset,
+  /** Productions-only derivation straight from the forest's trees,
     * for the schema_only clustering template (similarity.py:296-339):
     * `toTree` consumes only `productions`, so the relation-orientation
     * machinery (a nodes self-join plus two extra aggregation jobs per
@@ -398,13 +397,13 @@ object Schema {
     * present.
     */
   def templateFromTrees(
-      trees: Dataset[(Long, ArchiTree)],
+      forest: Dataset[TreeRow],
       keepUnlabelled: Boolean = true,
       mergeLhs: Boolean = true,
   ): Schema = {
-    import trees.sparkSession.implicits._
-    val rows = trees.flatMap { case (_, tree) =>
-      tree.subtrees.flatMap(prodTupleOf).distinct
+    import forest.sparkSession.implicits._
+    val rows = forest.flatMap { row =>
+      row.tree.subtrees.flatMap(prodTupleOf).distinct
     }.distinct().collect().toSeq
     assemble(rows.map { case (t, n, r) => ProdRow(t, n, r) },
       Map.empty, Map.empty, keepUnlabelled, mergeLhs)

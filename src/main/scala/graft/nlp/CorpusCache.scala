@@ -38,7 +38,6 @@ object CorpusCache {
       key: String,
   )(parse: => Dataset[TreeRow]): Dataset[TreeRow] = {
     import org.apache.hadoop.fs.Path
-    import spark.implicits._
     val target = new Path(s"$cacheDir/$key")
     // Path(...).getFileSystem accepts raw local paths (spaces included),
     // unlike FileSystem.get(new URI(...))
@@ -61,6 +60,6 @@ object CorpusCache {
         if (fs.exists(nested)) fs.delete(nested, true)
       }
     }
-    spark.read.parquet(target.toString).as[TreeRow]
+    graft.model.Forest.readParquet(spark, target.toString)
   }
 }

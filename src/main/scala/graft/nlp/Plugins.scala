@@ -1,6 +1,6 @@
 package graft.nlp
 
-import graft.core.{ArchiTree, Child, Plain, TreeJson}
+import graft.core.{ArchiTree, Child, Plain}
 import graft.model.TreeRow
 import org.apache.spark.sql.Dataset
 
@@ -52,7 +52,7 @@ trait SentenceParser extends Serializable {
         val parsed = self.parseMany(batch.map(_._1.txt), language)
         batch.iterator.zip(parsed.iterator).flatMap { case ((sentence, idx), treeOpt) =>
           treeOpt.flatMap(t => NlpOps.processTree(sentence, t))
-            .map(t => TreeRow(idx, TreeJson.toJson(t)))
+            .map(t => TreeRow(idx, t))
         }
       }
     }.toDS()

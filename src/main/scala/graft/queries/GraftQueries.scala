@@ -28,10 +28,11 @@ object GraftQueries {
   // 11-column batches into the columnar cache (measured at sf0.1 orders:
   // 19 s vs 30 s build, 5 s vs 10 s per extraction scan). Local mode has
   // no executor loss; a cluster deployment would use reliable
-  // checkpointing (Forest.checkpoint honors a configured checkpoint dir).
+  // checkpointing (graft.util.Spark.checkpoint honors a configured
+  // checkpoint dir).
   private def nodes(spark: SparkSession, dir: String, cfgName: String, cfg: DbConfig): Dataset[NodeRow] =
     cache.getOrElseUpdate((dir, cfgName), {
-      // direct wide-row → NodeRow flatten (no TreeRow JSON round trip)
+      // direct wide-row → NodeRow flatten (no intermediate TreeRow forest)
       RelationalLoader.loadNodes(spark, dir, cfg).localCheckpoint(true)
     })
 
@@ -321,11 +322,9 @@ object GraftQueries {
     // §2.2 Tree.merge (tree.py:755-773): self-merge flattens the two
     // ROOTs into one, so every per-type count doubles while the tree
     // count holds — an arithmetic oracle over the loader identities.
-    // Fused parse→merge→flatten (mapTreesToNodes): the doubled tree is
-    // never re-serialized/re-parsed just to cross into the nodes view.
     "tree_merge_customer" -> ((s, d) =>
       ForestInspector.inspectTable(
-        Forest.mapTreesToNodes(customerTrees(s, d))(t => t.merge(t)))
+        Forest.toNodesDF(Forest.mapTrees(customerTrees(s, d))(t => t.merge(t))))
         .filter(org.apache.spark.sql.functions.col("stat").startsWith("total_"))),
 
     // §2.6 FD metrics over extracted datasets

@@ -3,8 +3,7 @@ package graft.rewrite
 import graft.core._
 import graft.model.{Forest, TreeRow}
 import graft.similarity.{ClusterModel, TreeClusterer}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
 /** The iterative rewrite driver — Spark re-expression of `rewrite()`
@@ -21,7 +20,9 @@ import org.apache.spark.storage.StorageLevel
   * epoch runs at most five, none of which shuffles: the reduce_all
   * checkpoint, the fit's aggregate and top-K passes, the find_groups
   * checkpoint (a per-tree map against the broadcast model), and one
-  * fused trial pass over the operations.
+  * fused trial pass over the operations. The forest stays a
+  * `Dataset[TreeRow]` throughout: each step maps the rows' trees, and
+  * the checkpoints hold them in their native row encoding.
   */
 object Rewrite {
 
@@ -76,28 +77,19 @@ object Rewrite {
   def rewriteWithStats(forest: Dataset[TreeRow], cfg: Config = Config()): RewriteResult = {
     val spark = forest.sparkSession
     import spark.implicits._
-    implicit val kryoEnc: org.apache.spark.sql.Encoder[(Long, ArchiTree)] =
-      org.apache.spark.sql.Encoders.kryo[(Long, ArchiTree)]
-    implicit val kryoChangedEnc: org.apache.spark.sql.Encoder[((Long, ArchiTree), Boolean)] =
-      org.apache.spark.sql.Encoders.kryo[((Long, ArchiTree), Boolean)]
 
-    // the epoch loop's master representation is the parsed Kryo tree
-    // dataset — ONE JSON parse on entry and one serialize on exit, not a
-    // codec round trip per step (the reference applies up to 7 ops ×
-    // 100 epochs; three JSON passes per epoch dominated the loop).
     // Each checkpoint supersedes the previous one: release the old
     // blocks as soon as the new checkpoint has materialized (GC +
     // ContextCleaner reclaim is too lazy — superseded epochs piled up
     // in storage and taxed every later job in the session)
-    var lastCkpt: Dataset[(Long, ArchiTree)] = null
-    def ckptReleasing(ds: Dataset[(Long, ArchiTree)]): Dataset[(Long, ArchiTree)] = {
-      val c = checkpointTrees(ds)
+    var lastCkpt: Dataset[TreeRow] = null
+    def ckptReleasing(ds: Dataset[TreeRow]): Dataset[TreeRow] = {
+      val c = graft.util.Spark.checkpoint(ds)
       if (lastCkpt != null) graft.util.Spark.release(lastCkpt)
       lastCkpt = c
       c
     }
-    var trees: Dataset[(Long, ArchiTree)] =
-      ckptReleasing(Forest.trees(forest))
+    var trees: Dataset[TreeRow] = ckptReleasing(forest)
     val total = trees.count()
     if (total == 0) return RewriteResult(forest, Some(0))
     val minSupport = cfg.minSupport.getOrElse(math.max((total / 10).toInt, 2))
@@ -115,12 +107,12 @@ object Rewrite {
     while (epoch < cfg.epochs && !converged) {
       // 1. reduce_all({ENT}) (tree_rewriting/__init__.py:196-201)
       trees = timed("reduceAll+ckpt") { ckptReleasing(
-        trees.map { case (id, t) => (id, t.reduceAll(Set(NodeType.Ent))) })
+        Forest.mapTrees(trees)(_.reduceAll(Set(NodeType.Ent))))
       }
       releasePrevOp(); releasePrevOp = () => ()
 
       // 2. cluster the candidate subtrees
-      val model = timed("fit") { TreeClusterer.fitTrees(trees, cfg.tau, cfg.decay,
+      val model = timed("fit") { TreeClusterer.fit(trees, cfg.tau, cfg.decay,
         cfg.metricName, schemaOnly = cfg.schemaOnly).model
       }
       val modelB = spark.sparkContext.broadcast(model)
@@ -137,10 +129,10 @@ object Rewrite {
       // with no cluster above minSupport, findGroupsInTree is identity
       // on every tree — skip the pass and checkpoint outright
       if (rank.nonEmpty) {
-        trees = timed("findGroups+ckpt") { ckptReleasing(trees.map { case (id, tree) =>
+        trees = timed("findGroups+ckpt") { ckptReleasing(trees.map { case TreeRow(id, tree) =>
           val assigns = TreeClusterer.treeAssignments(id, tree, modelB.value)
             .map(a => a.key -> a.cluster).toSeq
-          (id, findGroupsInTree(tree, id, assigns, rankB.value))
+          TreeRow(id, findGroupsInTree(tree, id, assigns, rankB.value))
         }) }
       }
 
@@ -160,7 +152,7 @@ object Rewrite {
       val firing: Int = timed("opTrials") {
         trees.mapPartitions { it =>
           var m = opsArr.length // = "no op fired" sentinel, and the bound
-          it.foreach { case (id, tree) =>
+          it.foreach { case TreeRow(id, tree) =>
             var i = 0
             var hit = false
             while (!hit && i < m) {
@@ -174,17 +166,16 @@ object Rewrite {
       if (firing < opsArr.length) {
         val op = opsArr(firing)
         // LAZY apply: the op output's one consumer is the next epoch's
-        // reduceAll checkpoint (or the exit serialization), so the op
-        // map fuses into that pass instead of paying its own eager
-        // persist + count — one full Kryo write+read cycle per firing
-        // epoch gone. Ops below `firing` are identity on every tree
-        // (proven by the trial pass), so applying only the firing op
-        // is the reference's early-exit application exactly. The
-        // epoch-hook path adds a second consumer per epoch — only
-        // there a (lazy) cache pays for itself.
+        // reduceAll checkpoint (or the exit chain), so the op map fuses
+        // into that pass instead of paying its own eager persist +
+        // count. Ops below `firing` are identity on every tree (proven
+        // by the trial pass), so applying only the firing op is the
+        // reference's early-exit application exactly. The epoch-hook
+        // path adds a second consumer per epoch — only there a (lazy)
+        // cache pays for itself.
         timed(s"op:${op.name} (lazy)") {
-          var mapped = trees.map { case (id, tree) =>
-            (id, op.fn(tree, modelB.value, minSupport, id.toString)._1)
+          var mapped = trees.map { case TreeRow(id, tree) =>
+            TreeRow(id, op.fn(tree, modelB.value, minSupport, id.toString)._1)
           }
           if (cfg.epochHook.isDefined) {
             val persisted = mapped.persist(StorageLevel.MEMORY_AND_DISK)
@@ -196,24 +187,15 @@ object Rewrite {
       }
 
       converged = firing == opsArr.length
-      cfg.epochHook.foreach { hook =>
-        hook(epoch, trees.map { case (id, t) => TreeRow(id, TreeJson.toJson(t)) })
-      }
+      cfg.epochHook.foreach(hook => hook(epoch, trees))
       epoch += 1
     }
 
     // post-process (tree_rewriting/__init__.py:227-259): naming-only
-    // relations + collections, no early exit. The WHOLE exit chain stays
-    // on the parsed Kryo trees: the old TreeRow-shaped exit serialized
-    // to JSON first and then paid a parse+serialize round trip in the
-    // post-process map plus a parse in EACH simplifyNames pass — three
-    // full-forest JSON codec passes whose only purpose was crossing the
-    // row boundary. Now the forest is serialized exactly once, at the
-    // very end.
-    var curTrees: Dataset[(Long, ArchiTree)] = trees.map { case (id, t) =>
+    // relations + collections, no early exit
+    var curTrees = Forest.mapTrees(trees) { t =>
       val (t1, _) = TreeOps.findRelations(t, namingOnly = true)
-      val (t2, _) = TreeOps.findCollections(t1, namingOnly = true)
-      (id, t2)
+      TreeOps.findCollections(t1, namingOnly = true)._1
     }
 
     // simplifyNames adds a second exit action (its group-name collect)
@@ -225,9 +207,8 @@ object Rewrite {
       else None
     sharedExit.foreach(c => curTrees = c)
     if (cfg.simplifyNames)
-      curTrees = timed("simplifyNames") { simplifyNamesTrees(curTrees) }
-    val out = timed("final ckpt") { Forest.checkpoint(
-      curTrees.map { case (id, t) => TreeRow(id, TreeJson.toJson(t)) }) }
+      curTrees = timed("simplifyNames") { simplifyNames(curTrees) }
+    val out = timed("final ckpt") { graft.util.Spark.checkpoint(curTrees) }
     sharedExit.foreach(_.unpersist(blocking = false))
     if (lastCkpt != null) graft.util.Spark.release(lastCkpt)
     releasePrevOp()
@@ -235,10 +216,6 @@ object Rewrite {
     // last pass fired nothing, it IS the natural fixpoint epoch
     RewriteResult(out, if (converged) Some(epoch - 1) else None)
   }
-
-  /** Per-epoch lineage break for the Kryo tree dataset. */
-  private def checkpointTrees(ds: Dataset[(Long, ArchiTree)]): Dataset[(Long, ArchiTree)] =
-    graft.util.Spark.checkpoint(ds)
 
   /** find_groups applied inside one tree: assignments ordered by cluster
     * rank (frequent first); conditions re-checked on the evolving tree.
@@ -304,30 +281,12 @@ object Rewrite {
   def simplifyNames(forest: Dataset[TreeRow]): Dataset[TreeRow] = {
     import forest.sparkSession.implicits._
     val groupNames = timed("simplify:groupNames") { forest.flatMap { row =>
-      TreeJson.fromJson(row.tree).subtrees.collect {
+      row.tree.subtrees.collect {
         case t if t.hasType(NodeType.Group) => t.label.name
       }
     }.distinct().collect().sorted }
     val renamesB = forest.sparkSession.sparkContext.broadcast(renameMap(groupNames))
     Forest.mapTrees(forest)(t => renameTree(renamesB.value, t))
-  }
-
-  /** [[simplifyNames]] over the parsed Kryo tree dataset — the rewrite
-    * exit path's variant: same name collection, same rename map, same
-    * per-tree transform, no JSON codec round trips.
-    */
-  private def simplifyNamesTrees(
-      trees: Dataset[(Long, ArchiTree)]): Dataset[(Long, ArchiTree)] = {
-    import trees.sparkSession.implicits._
-    implicit val kryoEnc: org.apache.spark.sql.Encoder[(Long, ArchiTree)] =
-      org.apache.spark.sql.Encoders.kryo[(Long, ArchiTree)]
-    val groupNames = timed("simplify:groupNames") { trees.flatMap { case (_, tree) =>
-      tree.subtrees.collect {
-        case t if t.hasType(NodeType.Group) => t.label.name
-      }
-    }.distinct().collect().sorted }
-    val renamesB = trees.sparkSession.sparkContext.broadcast(renameMap(groupNames))
-    trees.map { case (id, t) => (id, renameTree(renamesB.value, t)) }
   }
 
   private def renameMap(groupNames: Array[String]): Map[String, String] =
@@ -387,7 +346,7 @@ object Rewrite {
   def simpleRewrite(forest: Dataset[TreeRow]): Dataset[TreeRow] = {
     import forest.sparkSession.implicits._
     val keys = forest
-      .flatMap(row => TreeOps.simpleRewriteKey(TreeJson.fromJson(row.tree)))
+      .flatMap(row => TreeOps.simpleRewriteKey(row.tree))
       .distinct()
       .collect()
       .sortBy(_.mkString("\u0001"))

@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.core._
-import graft.model.{Forest, TreeRow}
+import graft.model.TreeRow
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -193,6 +193,8 @@ final class ClusterModel(
   *
   * A candidate's cluster and probability are a function of its
   * StructKey, so the assignments are a lazy per-candidate lookup.
+  * Every entry point (`candidates`, `fit`, `entityLabels`) takes the
+  * forest as `Dataset[TreeRow]` and walks each row's tree in place.
   * This reproduces the role (equivalence classes of similar subtrees) —
   * not HDBSCAN's exact labels; quality is validated by AMI in tests.
   */
@@ -209,20 +211,7 @@ object TreeClusterer {
       entityParentsOnly: Boolean = false,
   ): Dataset[CandRow] = {
     import forest.sparkSession.implicits._
-    forest.flatMap(row =>
-      candidateRows(row.treeId, TreeJson.fromJson(row.tree), maxHeight, entityParentsOnly))
-  }
-
-  /** Same extraction over an already-parsed tree dataset — the rewrite
-    * epoch loop keeps its forest as Kryo trees and skips the JSON codec.
-    */
-  def candidatesFromTrees(
-      trees: Dataset[(Long, ArchiTree)],
-      maxHeight: Int = 5,
-      entityParentsOnly: Boolean = false,
-  ): Dataset[CandRow] = {
-    import trees.sparkSession.implicits._
-    trees.flatMap { case (id, tree) => candidateRows(id, tree, maxHeight, entityParentsOnly) }
+    forest.flatMap(row => candidateRows(row.treeId, row.tree, maxHeight, entityParentsOnly))
   }
 
   private def candidateRows(
@@ -265,49 +254,11 @@ object TreeClusterer {
       entityParentsOnly: Boolean = false,
       schemaOnly: Boolean = false,
       buildModel: Boolean = true,
-  ): Result =
-    fitImpl(candidates(forest, maxHeight, entityParentsOnly),
-      () => graft.model.Schema.templateFromTrees(Forest.trees(forest)).toTree,
-      tau, decay, metricName, maxHeight, minClusterSize, keepPerCluster, schemaOnly,
-      buildModel)
-
-  /** fit() over an already-parsed Kryo tree dataset — the rewrite epoch
-    * loop's entry point; skips the JSON parse in candidate extraction.
-    */
-  def fitTrees(
-      trees: Dataset[(Long, ArchiTree)],
-      tau: Double = 0.7,
-      decay: Double = Similarity.Decay,
-      metricName: String = "jaro",
-      maxHeight: Int = 5,
-      minClusterSize: Int = 2,
-      keepPerCluster: Int = 20,
-      entityParentsOnly: Boolean = false,
-      schemaOnly: Boolean = false,
-      buildModel: Boolean = true,
-  ): Result =
-    // the schema-only template derives from the parsed trees directly —
-    // no JSON round trip (and no nodes self-join) per epoch
-    fitImpl(candidatesFromTrees(trees, maxHeight, entityParentsOnly),
-      () => graft.model.Schema.templateFromTrees(trees).toTree,
-      tau, decay, metricName, maxHeight, minClusterSize, keepPerCluster, schemaOnly,
-      buildModel)
-
-  private def fitImpl(
-      cands: Dataset[CandRow],
-      schemaTemplate: () => ArchiTree,
-      tau: Double,
-      decay: Double,
-      metricName: String,
-      maxHeight: Int,
-      minClusterSize: Int,
-      keepPerCluster: Int,
-      schemaOnly: Boolean,
-      buildModel: Boolean = true,
   ): Result = {
     require(tau >= 0 && tau <= 1, "tau must be between 0 and 1")
-    val spark = cands.sparkSession
+    val spark = forest.sparkSession
     import spark.implicits._
+    val cands = candidates(forest, maxHeight, entityParentsOnly)
 
     // pass 1: ONE map-side aggregate at the StructKey grain, merged on
     // the driver. Every later decision — tau-graph, components, naming,
@@ -324,8 +275,8 @@ object TreeClusterer {
     // template subtrees of different components joins each of them
     val members: Seq[(StructKey, String, Double)] =
       if (schemaOnly)
-        schemaOnlyMembers(schemaTemplate(), partials.keys, tau, decay, metricName, maxHeight,
-          minClusterSize)
+        schemaOnlyMembers(graft.model.Schema.templateFromTrees(forest).toTree, partials.keys,
+          tau, decay, metricName, maxHeight, minClusterSize)
       else instanceMembers(spark, partials, tau, decay, metricName, maxHeight)
 
     // deterministic naming: components by (size desc, min member key),
@@ -773,30 +724,14 @@ object TreeClusterer {
       metricName: String = "jaro",
       decay: Double = Similarity.Decay,
   ): Dataset[(String, String)] = {
-    val trees = Forest.trees(forest).persist(StorageLevel.MEMORY_AND_DISK)
-    val out = entityLabelsFromTrees(trees, tau, metricName, decay)
-    trees.unpersist()
-    out
-  }
-
-  /** entityLabels over an already-parsed (and caller-managed) tree
-    * dataset — callers holding the parsed forest (Metrics snapshots)
-    * avoid a fresh JSON parse per labelling.
-    */
-  def entityLabelsFromTrees(
-      trees: Dataset[(Long, ArchiTree)],
-      tau: Double,
-      metricName: String = "jaro",
-      decay: Double = Similarity.Decay,
-  ): Dataset[(String, String)] = {
-    import trees.sparkSession.implicits._
+    import forest.sparkSession.implicits._
     // each entity parent's label: its own rendering (null metric) or its
     // cluster from the model's key map — assignments are the only
     // consumed output, so the fit skips its top-K pass. One flatMap plus
     // the oid aggregation: no join, no broadcast sized by the forest
-    val model = Option(metricName).map(m => fitTrees(trees, tau = tau, decay = decay,
+    val model = Option(metricName).map(m => fit(forest, tau = tau, decay = decay,
       metricName = m, entityParentsOnly = true, buildModel = false).model)
-    val labelled = trees.flatMap { case (treeId, tree) =>
+    val labelled = forest.flatMap { case TreeRow(treeId, tree) =>
       val clusters = model.map(treeAssignments(treeId, tree, _, entityParentsOnly = true)
         .toSeq.groupMap(_.key)(_.cluster))
       tree.positionedSubtrees.flatMap { case (path, t) =>
@@ -814,8 +749,9 @@ object TreeClusterer {
       }
     }.groupBy(col("_1").as("oid")).agg(max(col("_2")).as("label"))
       .as[(String, String)]
-    // materialize before the caller releases the backing trees (the
-    // result is data-sized, so the reliable-checkpoint policy applies)
+    // materialize once: snapshot comparisons read the labels more than
+    // once, and each recomputation would refit (the result is
+    // data-sized, so the reliable-checkpoint policy applies)
     graft.util.Spark.checkpoint(labelled)
   }
 }

@@ -11,7 +11,7 @@ object Jsonl {
 
   def write(forest: Dataset[TreeRow], path: String): Unit = {
     import forest.sparkSession.implicits._
-    forest.map(_.tree).write.mode("overwrite").text(path)
+    forest.map(row => TreeJson.toJson(row.tree)).write.mode("overwrite").text(path)
   }
 
   /** Read a JSONL forest; tree ids are assigned by stable line index. */
@@ -19,13 +19,7 @@ object Jsonl {
     import spark.implicits._
     spark.read.textFile(path).rdd
       .zipWithIndex()
-      .map { case (line, idx) => TreeRow(idx, reencode(line)) }
+      .map { case (line, idx) => TreeRow(idx, TreeJson.fromJson(line)) }
       .toDS()
   }
-
-  /** Normalize foreign JSONL (whitespace, key order) through the codec so
-    * downstream code sees this repo's canonical serialization.
-    */
-  private def reencode(line: String): String =
-    TreeJson.toJson(TreeJson.fromJson(line))
 }

@@ -536,7 +536,7 @@ object DocumentLoader {
       it.flatMap { doc =>
         parse(doc).map { t =>
           idx += 1
-          TreeRow(RelationalLoader.treeId(DocForestSalt, pid, idx), TreeJson.toJson(t))
+          TreeRow(RelationalLoader.treeId(DocForestSalt, pid, idx), t)
         }
       }
     }
@@ -556,7 +556,7 @@ object DocumentLoader {
       it.flatMap { doc =>
         parse(doc).map { t =>
           idx += 1
-          TreeRow(RelationalLoader.treeId(DocForestSalt, pid, idx), TreeJson.toJson(t))
+          TreeRow(RelationalLoader.treeId(DocForestSalt, pid, idx), t)
         }
       }
     }

@@ -237,8 +237,8 @@ object RelationalLoader {
     * Ids are assignment-stable only within one materialization of the
     * load: they are positional, so callers that run multiple actions
     * over the same lazy forest must persist/checkpoint it first (the
-    * query registry eagerly localCheckpoints; `Forest.checkpoint` is
-    * the cluster-reliable variant). One tree per source ROW is the
+    * query registry eagerly localCheckpoints; `graft.util.Spark.checkpoint`
+    * is the cluster-reliable variant). One tree per source ROW is the
     * reference's identity contract — a content-derived id would merge
     * rows colliding on a non-unique declared pk.
     */
@@ -332,7 +332,7 @@ object RelationalLoader {
         val children = Vector(Child.Node(rel)) ++
           parseChildren(lp, get, cols, types, ns) ++ parseChildren(rp, get, cols, types, ns)
         val tree = ArchiTree(Plain("ROOT"), children)
-        TreeRow(treeId(salt, pid, i.toLong), TreeJson.toJson(tree))
+        TreeRow(treeId(salt, pid, i.toLong), tree)
       }
     }
     spark.createDataset(rdd)(org.apache.spark.sql.Encoders.product[TreeRow])
@@ -426,7 +426,7 @@ object RelationalLoader {
         val rootGroup = buildGroup(p, get, cols, types, ns)
         val children = Vector(Child.Node(rootGroup)) ++ relChildren(p, rootGroup, get, cols, types, ns)
         val tree = ArchiTree(Plain("ROOT"), children)
-        TreeRow(treeId(salt, pid, i.toLong), TreeJson.toJson(tree))
+        TreeRow(treeId(salt, pid, i.toLong), tree)
       }
     }
     spark.createDataset(rdd)(org.apache.spark.sql.Encoders.product[TreeRow])
@@ -601,10 +601,9 @@ object RelationalLoader {
   }
 
   /** Straight-to-node-rows load: flattens each assembled tree in the same
-    * map that builds it, skipping the TreeRow JSON round trip entirely —
-    * at sf0.1 the tpch forest is 600k trees × ~120 nodes, and the double
-    * codec (serialize at assembly + parse at toNodesDF) dominated the
-    * dataset-extraction wall time.
+    * map that builds it, with no intermediate TreeRow forest — at sf0.1
+    * the tpch forest is 600k trees × ~120 nodes, and dataset extraction
+    * needs only the node rows.
     */
   def loadNodes(spark: SparkSession, dir: String, cfg: DbConfig, sample: Int = 0): Dataset[graft.model.NodeRow] = {
     import spark.implicits._

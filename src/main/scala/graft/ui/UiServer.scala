@@ -174,8 +174,8 @@ object UiServer {
         val group = need("group")
         val limit = p.getOrElse("limit", "100").toInt
         import spark.implicits._
-        val rows = Forest.trees(forest())
-          .flatMap { case (_, t) => t.groupInstances(group) }
+        val rows = forest()
+          .flatMap(_.tree.groupInstances(group))
           .take(limit)
         val cols = rows.flatMap(_.keys).distinct.sorted
         val body = rows.map { r =>

@@ -14,10 +14,8 @@ class ForestStoreSpec extends AnyFunSuite with SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-store").toString + "/store"
 
-  private def canon(f: org.apache.spark.sql.Dataset[TreeRow]): Set[(Long, String)] = {
-    import f.sparkSession.implicits._
-    f.map(t => (t.treeId, t.tree)).collect().toSet
-  }
+  private def canon(f: org.apache.spark.sql.Dataset[TreeRow]): Set[TreeRow] =
+    f.collect().toSet
 
   private lazy val forest = {
     val f = RelationalLoader.load(spark, "/root/testdata/sf0.001", Testdata.customerDb)
@@ -250,5 +248,25 @@ class ForestStoreSpec extends AnyFunSuite with SparkSpec {
     assert(store.head.contains("epoch_0001"),
       "head must recover from local snapshots, not skip to a parent or None")
     assert(canon(store.loadHead().get) == canon(mutated))
+  }
+
+  test("stores and caches written with JSON-string trees fail loudly, naming the directory") {
+    import spark.implicits._
+    val store = new ForestStore(spark, tmp())
+    val snap = java.nio.file.Paths.get(store.root, "snapshots", "old").toString
+    val cacheDir = java.nio.file.Files.createTempDirectory("graft-cache").toString
+    val cached = s"$cacheDir/k"
+    Seq(snap, cached).foreach { dir =>
+      Seq((0L, """{"oid":null,"type":null,"name":"ROOT","metadata":{},"children":[]}"""))
+        .toDF("treeId", "tree").write.parquet(dir)
+    }
+    def refused(dir: String)(read: => Any): Unit = {
+      val e = intercept[IllegalStateException](read)
+      assert(e.getMessage.contains(dir) && e.getMessage.contains("predates the tree encoding"),
+        e.getMessage)
+    }
+    refused(snap)(store.load("old"))
+    refused(cached)(graft.nlp.CorpusCache.getOrParse(spark, cacheDir, "k")(
+      fail("a cached key must not be re-parsed")))
   }
 }

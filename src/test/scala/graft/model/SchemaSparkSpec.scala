@@ -33,7 +33,7 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
       t("(ROOT (COLL::c (GROUP::Q (ENT::x 3)) (GROUP::Q (ENT::x 4))))"))
     val forest = Forest.fromTrees(spark, trees)
     val full = Schema.fromForest(Forest.toNodesDF(forest))
-    val tmpl = Schema.templateFromTrees(Forest.trees(forest))
+    val tmpl = Schema.templateFromTrees(forest)
     assert(tmpl.productions.toSet == full.productions.toSet)
     assert(tmpl.groups == full.groups)
     // relations are intentionally absent (orientation not derived) but
@@ -41,13 +41,15 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
     assert(tmpl.toTree == full.toTree)
   }
 
-  test("mapTreesToNodes equals mapTrees + toNodesDF (fused self-merge flatten)") {
+  test("toNodesDF over a self-merged forest equals the local flatten") {
     val forest = RelationalLoader.load(spark, "/root/testdata/sf0.001", Testdata.customerDb)
-    val viaRoundTrip = Forest.toNodesDF(Forest.mapTrees(forest)(t => t.merge(t)))
+      .localCheckpoint(true)
+    val distributed = Forest.toNodesDF(Forest.mapTrees(forest)(t => t.merge(t)))
       .collect().toSet
-    val fused = Forest.mapTreesToNodes(forest)(t => t.merge(t)).collect().toSet
-    assert(fused == viaRoundTrip)
-    assert(fused.nonEmpty)
+    val local = forest.collect()
+      .flatMap(r => Forest.nodeRows(r.treeId, r.tree.merge(r.tree))).toSet
+    assert(distributed == local)
+    assert(distributed.nonEmpty)
   }
 
   test("extract_datasets goldens (test_schema.py one_group/duplicates/widening)") {

@@ -1,7 +1,7 @@
 package graft.nlp
 
 import graft.SparkSpec
-import graft.core.{ArchiTree, TreeJson}
+import graft.core.ArchiTree
 import graft.model.{Forest, TreeRow}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,6 +29,6 @@ class CorpusCacheSpec extends AnyFunSuite with SparkSpec {
     val second = CorpusCache.getOrParse(spark, dir, key)(parse()).collect()
     assert(parses == 1) // second call never invoked the parser
     assert(first.map(_.tree).toSeq == second.map(_.tree).toSeq)
-    assert(TreeJson.fromJson(first.head.tree) == tree)
+    assert(first.head.tree == tree)
   }
 }

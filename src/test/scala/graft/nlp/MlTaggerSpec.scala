@@ -58,6 +58,6 @@ class MlTaggerSpec extends AnyFunSuite with SparkSpec {
     val forest = new MlTagParser(model).parseBatch(sentences)
     val rows = forest.collect()
     assert(rows.length == 2)
-    assert(rows.forall(_.tree.contains("CUST")))
+    assert(rows.forall(r => TreeJson.toJson(r.tree).contains("CUST")))
   }
 }

@@ -241,4 +241,28 @@ class PlanGuardrailSpec extends AnyFunSuite with SparkSpec {
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
       "the partition-offset join should broadcast the offsets side")
   }
+
+  test("forest rows stay columnar: the tree column is the tree type, stored as a struct") {
+    import graft.core.{ArchiTree, ArchiTreeUDT}
+    import graft.model.{Forest, ForestStore}
+    val forest = Forest.fromTrees(spark, Seq(
+      "(ROOT (X (ENT::a 1) (ENT::b 2)))", "(ROOT (X (ENT::a 3) (ENT::b 4)))",
+      "(ROOT (X (ENT::a 5) (ENT::b 6)))").map(ArchiTree.fromString))
+    val out = graft.rewrite.Rewrite.rewriteWithStats(forest,
+      graft.rewrite.Rewrite.Config(tau = 0.7, epochs = 3)).forest
+    assert(out.schema("tree").dataType.isInstanceOf[ArchiTreeUDT], out.schema.treeString)
+
+    val store = new ForestStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-store").toString + "/store")
+    store.commit("s", out)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new org.apache.hadoop.fs.Path(store.root, "snapshots/s")
+    val file = dir.getFileSystem(conf).listStatus(dir).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val schema = try reader.getFileMetaData.getSchema finally reader.close()
+    val tree = schema.getType(schema.getFieldIndex("tree"))
+    assert(!tree.isPrimitive, s"stored tree column is not a struct: $tree")
+  }
 }

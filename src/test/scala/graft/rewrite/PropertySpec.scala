@@ -13,41 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PropertySpec extends AnyFunSuite {
 
-  /** Deterministic sampling (seed 42) — scalatestplus is not on the
-    * classpath, so properties run over a fixed sample instead of forAll.
-    */
-  private def samples[A](g: Gen[A], n: Int): Seq[A] =
-    Gen.listOfN(n, g).pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(42L))
-
-  private val labelGen: Gen[String] =
-    Gen.choose(1, 4).flatMap(n => Gen.stringOfN(n, Gen.alphaUpperChar))
-
-  private val schemaGen: Gen[Schema] = for {
-    entityPool <- Gen.choose(4, 10).flatMap(n => Gen.containerOfN[Set, String](n, labelGen))
-      .suchThat(_.size >= 4)
-    nGroups <- Gen.choose(1, 5)
-    groupNames <- Gen.containerOfN[Set, String](nGroups, labelGen).suchThat(_.nonEmpty)
-    groups <- Gen.sequence[Seq[Group], Group](groupNames.toSeq.map { name =>
-      Gen.choose(2, 5).flatMap(k =>
-        Gen.pick(math.min(k, entityPool.size), entityPool).map(es => Group(name, es.toSet)))
-    })
-    nRels <- Gen.choose(0, 4)
-    rels <-
-      if (groups.size < 2) Gen.const(Seq.empty[Relation])
-      else Gen.listOfN(nRels, for {
-        pair <- Gen.pick(2, groups)
-        o <- Gen.oneOf(RelationOrientation.Left, RelationOrientation.Right, RelationOrientation.Both)
-      } yield {
-        // canonical sorted name — FindRelations silently renames RELs to
-        // `min<->max` without raising its flag (reference quirk), so the
-        // flag⇔changed invariant only holds for canonical names
-        val Seq(a, b) = Seq(pair.head.name, pair(1).name).sorted
-        Relation(s"$a<->$b", pair.head.name, pair(1).name, o)
-      })
-  } yield Schema.fromDescription(
-    groups = groups.toSet,
-    relations = rels.distinctBy(_.name).filter(r => r.left != r.right).toSet,
-    collections = false)
+  import PropertySpec._
 
   test("property: generated schemas verify against the meta-grammar") {
     samples(schemaGen, 30).foreach { schema =>
@@ -85,4 +51,46 @@ class PropertySpec extends AnyFunSuite {
       }
     }
   }
+}
+
+/** The sampling helper and schema generator, shared with other property
+  * suites.
+  */
+object PropertySpec {
+
+  /** Deterministic sampling (seed 42) — scalatestplus is not on the
+    * classpath, so properties run over a fixed sample instead of forAll.
+    */
+  def samples[A](g: Gen[A], n: Int): Seq[A] =
+    Gen.listOfN(n, g).pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(42L))
+
+  val labelGen: Gen[String] =
+    Gen.choose(1, 4).flatMap(n => Gen.stringOfN(n, Gen.alphaUpperChar))
+
+  val schemaGen: Gen[Schema] = for {
+    entityPool <- Gen.choose(4, 10).flatMap(n => Gen.containerOfN[Set, String](n, labelGen))
+      .suchThat(_.size >= 4)
+    nGroups <- Gen.choose(1, 5)
+    groupNames <- Gen.containerOfN[Set, String](nGroups, labelGen).suchThat(_.nonEmpty)
+    groups <- Gen.sequence[Seq[Group], Group](groupNames.toSeq.map { name =>
+      Gen.choose(2, 5).flatMap(k =>
+        Gen.pick(math.min(k, entityPool.size), entityPool).map(es => Group(name, es.toSet)))
+    })
+    nRels <- Gen.choose(0, 4)
+    rels <-
+      if (groups.size < 2) Gen.const(Seq.empty[Relation])
+      else Gen.listOfN(nRels, for {
+        pair <- Gen.pick(2, groups)
+        o <- Gen.oneOf(RelationOrientation.Left, RelationOrientation.Right, RelationOrientation.Both)
+      } yield {
+        // canonical sorted name — FindRelations silently renames RELs to
+        // `min<->max` without raising its flag (reference quirk), so the
+        // flag⇔changed invariant only holds for canonical names
+        val Seq(a, b) = Seq(pair.head.name, pair(1).name).sorted
+        Relation(s"$a<->$b", pair.head.name, pair(1).name, o)
+      })
+  } yield Schema.fromDescription(
+    groups = groups.toSet,
+    relations = rels.distinctBy(_.name).filter(r => r.left != r.right).toSet,
+    collections = false)
 }

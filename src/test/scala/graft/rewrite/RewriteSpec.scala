@@ -330,7 +330,7 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
           if (mode == "schema") cfg.copy(schemaOnly = true, epochs = 8) else cfg)
         val what = s"$mode, $parts shuffle partitions, localTauGraphMaxReps $maxReps"
         assert(r.epochsToConverge.getOrElse(-1) == epochs(mode), what)
-        assert(r.forest.collect().map(t => (t.treeId, t.tree)).sortBy(_._1).toSeq == rows(mode),
+        assert(r.forest.collect().map(t => (t.treeId, TreeJson.toJson(t.tree))).sortBy(_._1).toSeq == rows(mode),
           what)
       }
     }

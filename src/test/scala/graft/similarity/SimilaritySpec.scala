@@ -151,10 +151,10 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("buildModel=false yields identical assignments and an empty model") {
     def tree(p: String, f: String, a: String) =
       SExpr.parse(s"(S (X (ENT::person $p) (ENT::fruit $f)) (Y (ENT::person $p) (ENT::animal $a)))")
-    val trees = Forest.trees(Forest.fromTrees(spark,
-      Seq(tree("Alice", "apple", "rabbit"), tree("Bob", "banana", "dog"), tree("Carol", "cherry", "cat"))))
-    val withModel = TreeClusterer.fitTrees(trees, tau = 0.7, metricName = "jaccard")
-    val without = TreeClusterer.fitTrees(trees, tau = 0.7, metricName = "jaccard",
+    val trees = Forest.fromTrees(spark,
+      Seq(tree("Alice", "apple", "rabbit"), tree("Bob", "banana", "dog"), tree("Carol", "cherry", "cat")))
+    val withModel = TreeClusterer.fit(trees, tau = 0.7, metricName = "jaccard")
+    val without = TreeClusterer.fit(trees, tau = 0.7, metricName = "jaccard",
       buildModel = false)
     assert(without.model.clusters.isEmpty)
     assert(withModel.model.clusters.nonEmpty)
