@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. A query that throws is recorded under "errors"
+  * prints, in order: the full JSON line, the per-lane map again as
+  * `"metric":"lanes"` parts of at most 2 KB each, and a short summary
+  * line, always last. A query that throws is recorded under "errors"
   * with -1 in "queries" so broken queries can never masquerade as fast
   * ones.
   *
@@ -84,8 +86,7 @@ object Bench {
     }
     val passTotals = perPass.map(_._2.collect { case (_, v, None) => v }.sum)
 
-    val qs = results.map { case (k, v, _) => graft.util.Json.quote(k) + ":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    val qs = results.map { case (k, v, _) => laneEntry(k, v) }.mkString("{", ",", "}")
     val errs = results.collect { case (k, _, Some(e)) =>
       graft.util.Json.quote(k) + ":" + graft.util.Json.quote(e)
     }.mkString("{", ",", "}")
@@ -112,11 +113,14 @@ object Bench {
     val copy = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "BENCH_LAST.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(copy), line + "\n")
     catch { case _: Throwable => () }
+    // the per-lane map again, split into lines that each fit a bounded
+    // stdout tail; printed BEFORE the summary so the summary stays last
+    laneParts(results.map { case (k, v, _) => (k, v) }).foreach(println)
     // FINAL short summary line (a few hundred bytes): drivers that only
     // keep a bounded stdout tail lost the (long) full line two rounds
     // running ("parsed": null) — this one always fits the tail whole.
     // It deliberately carries NO "queries" key (a truncated lane map
-    // would read as dropped lanes); the full per-lane map is the line
+    // would read as dropped lanes); the full per-lane map is in the lines
     // above and the file copy. Error NAMES only, so a pathological error
     // message cannot blow this line past the capture window either.
     val errNames = results.collect { case (k, _, Some(_)) => graft.util.Json.quote(k) }
@@ -125,5 +129,33 @@ object Bench {
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","protocol":"min-of-N-r14","passes":$passes,"n_queries":${results.size},"n_errors":${results.count(_._3.isDefined)},"error_names":$errNames,"control":$control,"controls":$controlsJson,"pass_totals":$passTotalsJson,"bench_file":${graft.util.Json.quote(copy)},"sf":${graft.util.Json.quote(sfDir)}}"""
     println(summary)
     spark.stop()
+  }
+
+  private def laneEntry(name: String, sec: Double): String =
+    graft.util.Json.quote(name) + ":" + f"$sec%.3f"
+
+  /** Longest lane-part line, in bytes: what a bounded stdout tail keeps whole. */
+  val LanePartBytes = 2048
+
+  /** The lane map as `{"metric":"lanes","part":i,"parts":n,"queries":{…}}`
+    * lines (i from 1 to n), each at most [[LanePartBytes]] bytes of UTF-8,
+    * every lane in exactly one part, in input order. A lane whose entry
+    * alone overflows the limit still gets a part of its own.
+    */
+  def laneParts(lanes: Seq[(String, Double)]): Seq[String] = {
+    def bytes(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+    def render(part: Int, parts: Int, entries: Seq[String]) =
+      s"""{"metric":"lanes","part":$part,"parts":$parts,"queries":${entries.mkString("{", ",", "}")}}"""
+    // pack against the widest header any part can have (part, parts <= lanes.size)
+    val widest = math.max(1, lanes.size)
+    val budget = LanePartBytes - bytes(render(widest, widest, Nil))
+    val chunks = lanes.map { case (k, v) => laneEntry(k, v) }
+      .foldLeft(Vector.empty[Vector[String]]) { (acc, e) =>
+        acc.lastOption match {
+          case Some(c) if bytes((c :+ e).mkString(",")) <= budget => acc.init :+ (c :+ e)
+          case _ => acc :+ Vector(e)
+        }
+      }
+    chunks.zipWithIndex.map { case (c, i) => render(i + 1, chunks.size, c) }
   }
 }

@@ -535,11 +535,6 @@ object Cli {
           Validation.Check.Distinctness(id, minPpm),
           Validation.Check.Satisfies(s"nonempty($text)", text,
             s"length($text) > 0", minPpm)))
-      case "zorder" =>
-        val cols = opts.getOrElse("by", s"n_chars,$id").split(",").toSeq
-        graft.sinks.ZOrder.cluster(docs, cols,
-          bits = opts.getOrElse("bits", "8").toInt,
-          numFiles = opts.getOrElse("files", "16").toInt)
       // per-stratum mixture accounting: uniform (cap to the smallest
       // stratum) or temperature p^(1/2^k) via --sqrt-apps
       case "mixture" =>
@@ -560,7 +555,7 @@ object Cli {
         }
       case other =>
         throw new IllegalArgumentException(
-          s"unknown pipeline op $other (profile|dedup|sample|pack|rank|quantiles|validate|zorder|mixture|shard)")
+          s"unknown pipeline op $other (profile|dedup|sample|pack|rank|quantiles|validate|mixture|shard)")
     }
   }
 

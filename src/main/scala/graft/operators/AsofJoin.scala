@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * shuffle a plain equi-join would pay, with no join at all, so the
   * plan survives any key cardinality and any left/right size ratio.
   *
-  * Semantics (pinned by [[AsofJoinSpec]] and the DuckDB `ASOF JOIN`
-  * oracle lane):
+  * Semantics (pinned by [[AsofJoinSpec]] and [[JoinPropertySpec]]):
   *   - backward inclusive: a right row at exactly the left timestamp
   *     matches (right side sorts before left at equal time);
   *   - unmatched left rows survive with null payload (left-outer);

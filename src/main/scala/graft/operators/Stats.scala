@@ -52,24 +52,6 @@ object Stats {
         (Seq(min(col(valueCol)).as("min_value"), max(col(valueCol)).as("max_value")) ++ pCols): _*)
   }
 
-  /** Per-key top-k: the k rows with the greatest `orderCol` per key,
-    * ties resolved by ascending `tieCol` (which must be unique per key,
-    * making every rank deterministic). One hash exchange on the key +
-    * a per-key sort — never a global sort; with AQE, skewed keys split
-    * at runtime. Emits the input row plus its 1-based `rank`.
-    */
-  def topKPerKey(
-      df: DataFrame,
-      keyCol: String,
-      orderCol: String,
-      tieCol: String,
-      k: Int,
-  ): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc, col(tieCol).asc)
-    df.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /** Sketch-based quantiles for when a sort is off the table: Spark's
     * `percentile_approx` (a mergeable partial aggregation — map-side
     * combine, one small shuffle, no per-group sort). `accuracy` trades

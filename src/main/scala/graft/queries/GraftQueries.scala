@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.metrics.{FdMetrics, ForestInspector}
 import graft.model.{Forest, NodeRow, Schema}
-import graft.operators.{Ann, Bm25, Decontaminate, Dedup, Events, Graph, Hybrid, LmScore, Mixture, Multimodal, Pii, RiffAvi, TextAnalysis, Tokenizer}
+import graft.operators.{Ann, Bm25, Decontaminate, Dedup, Hybrid, LmScore, Mixture, Multimodal, Pii, RiffAvi, TextAnalysis, Tokenizer}
 import graft.sources.{DbConfig, RelationalLoader, Testdata}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -354,7 +354,7 @@ object GraftQueries {
       ForestInspector.inspectTable(customerNodes(s, d))
         .filter(org.apache.spark.sql.functions.col("stat").startsWith("total_"))),
 
-    // Training-data pipeline operators over documents/embeddings/events
+    // Training-data pipeline operators over documents/embeddings
     "dedup_exact_documents" -> ((s, d) =>
       Dedup.exact(s.read.parquet(s"$d/documents.parquet"), "doc_id", "text")),
     // C4-style corpus-level line dedup: every non-blank line occurring
@@ -515,19 +515,6 @@ object GraftQueries {
         .orderBy("merge_rank").collect().map(_.getAs[String]("pair")).toSeq
       Tokenizer.encodeBpe(s.read.parquet(s"$d/documents.parquet"), merges)
     }),
-    // Fixed-iteration PageRank (crawl-centrality weighting) over the
-    // symmetrized part↔supplier graph, 8 rounds of integer micro-rank
-    // arithmetic: the loop-invariant edge relation is partitioned on the
-    // join key once; each round shuffles only the rank table. Integer
-    // division + integer sums make every round bit-reproducible, so the
-    // chained-CTE oracle replays all 8 rounds exactly.
-    "pagerank_partsupp" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val edges = Graph.partSupplierEdges(s.read.parquet(s"$d/lineitem.parquet"))
-      Graph.pageRankMicro(s, edges, iterations = 8)
-        .orderBy(col("rank_micro").desc, col("nid").asc)
-        .limit(20)
-    }),
     // CCNet-style bigram-LM surprisal filter: unigram/bigram corpus
     // counts + add-one smoothing, per-transition cost rounded to integer
     // tenth-milli-nats BEFORE summation (order-independent totals). The
@@ -535,39 +522,6 @@ object GraftQueries {
     // document; sums, counts, and keep-flags must match exactly.
     "lm_surprisal_documents" -> ((s, d) =>
       LmScore.bigramSurprisal(s, s.read.parquet(s"$d/documents.parquet"))),
-    // Behavioral-sequence export: one row per session with the ordered
-    // event-type path (sorted inside the aggregation on the unique
-    // (us, event_id) prefix — deterministic under any shuffle order).
-    // Same single-exchange window machinery as events_sessions.
-    "session_sequences_events" -> ((s, d) =>
-      graft.operators.Sessions.sessionSequences(graft.sources.EventTime.readBatch(s, d))),
-    // Point-in-time trailing-window user features (7-day activity at
-    // each event): one RANGE-frame window pass — value-defined frames,
-    // so same-microsecond ties are engine-independent; never a range
-    // self-join. Counts + integer cents only.
-    "events_rolling_users" -> ((s, d) =>
-      Events.rollingUserStats(graft.sources.EventTime.readBatch(s, d))),
-    // Sliding windows (2 h duration / 30 min slide): every event lands
-    // in exactly 4 epoch-aligned windows, so the oracle regenerates the
-    // window set per event with integer floor arithmetic. Same operator
-    // code runs the streaming lane below.
-    "events_sliding" -> ((s, d) =>
-      Events.slidingStats(graft.sources.EventTime.readBatch(s, d))),
-    // §2.8 the same sliding aggregation as a Structured Streaming query
-    // (readStream → watermark → overlapping windows → complete-mode
-    // memory sink, run to completion): state is bounded by
-    // duration/slide × type vocabulary — the batch SQL is the oracle.
-    "events_sliding_streaming" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ev = graft.sources.EventTime.readStreamEvents(s, d).withWatermark("ts", "2 hours")
-      val q = Events.slidingStats(ev)
-        .writeStream.format("memory").queryName("events_sliding_streaming_sink")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("events_sliding_streaming_sink")
-    }),
     // Fixed-SIZE reproducible sampling: the k=25 smallest portable
     // content hashes per language — exactly min(k, |stratum|) rows,
     // stable across runs and (mostly) across corpus versions.
@@ -747,31 +701,6 @@ object GraftQueries {
         total > 0 && overlap.toDouble / total >= 0.8))
         .toDF("opq_err_le_pq", "recall_ge_080")
     }),
-    // Bucketed-sink lane: both join sides are written bucketed+sorted on
-    // the order key (the shuffle pre-paid once at write time), then the
-    // recurring fact-dim join and its rollup run over the co-located
-    // tables — the plan-level zero-Exchange guarantee is pinned in
-    // BucketedStoreSpec; this lane pins the RESULTS against the plain
-    // relational oracle end-to-end through the write/catalog/read path.
-    "bucketed_join_orders" -> ((s, d) => {
-      import graft.sinks.BucketedStore
-      val base = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
-      BucketedStore.write(
-        s.read.parquet(s"$d/orders.parquet").select("o_orderkey", "o_totalprice"),
-        "graft_bs_orders", s"$base/orders", "o_orderkey", 8)
-      BucketedStore.write(
-        s.read.parquet(s"$d/lineitem.parquet")
-          .selectExpr("l_orderkey AS o_orderkey", "l_quantity"),
-        "graft_bs_lineitem", s"$base/lineitem", "o_orderkey", 8)
-      BucketedStore.read(s, "graft_bs_orders")
-        .join(BucketedStore.read(s, "graft_bs_lineitem"), "o_orderkey")
-        .groupBy("o_orderkey", "o_totalprice")
-        .agg(org.apache.spark.sql.functions.sum("l_quantity").as("sum_qty"))
-    }),
-    // Compaction lane: fragment the corpus into many small files, then
-    // compact to ~target-sized range-clustered files. The rewrite must
-    // be content-lossless — the oracle checks the compacted data, not
-    // the layout (the layout contract is pinned in CompactionSpec).
     // token-balanced training shards: assignment is a pure integer
     // function of the corpus prefix sums, so the oracle replays it with
     // a window scan; the returned summary is read BACK from the written
@@ -782,31 +711,6 @@ object GraftQueries {
       graft.sinks.ShardedStore.write(
         s.read.parquet(s"$d/documents.parquet"), "doc_id",
         TextAnalysis.tokenCountExpr(col("text")), nShards = 8, path = s"$base/out")
-    }),
-    "compact_documents" -> ((s, d) => {
-      import graft.sinks.Compaction
-      val base = java.nio.file.Files.createTempDirectory("graft_compact_q").toString
-      s.read.parquet(s"$d/documents.parquet").repartition(64)
-        .write.parquet(s"$base/frag")
-      Compaction.compact(s, s"$base/frag", s"$base/out", "doc_id")
-      Compaction.read(s, s"$base/out")
-        .selectExpr("doc_id", "lang", "n_chars", "md5(cast(text AS binary)) AS text_md5")
-    }),
-
-    // Partitioned-sink lane: the corpus written Hive-partitioned by
-    // language, then read back filtered to one language — the filter
-    // prunes to that language's directories at planning time (the plan
-    // pin lives in PartitionedStoreSpec); this lane pins the RESULTS
-    // through the write/catalog/read/prune path end-to-end.
-    "partitioned_read_documents" -> ((s, d) => {
-      import graft.sinks.PartitionedStore
-      val base = java.nio.file.Files.createTempDirectory("graft_partitioned").toString
-      PartitionedStore.write(
-        s.read.parquet(s"$d/documents.parquet"),
-        "graft_ps_documents", s"$base/documents", Seq("lang"), sortCols = Seq("doc_id"))
-      PartitionedStore.read(s, "graft_ps_documents")
-        .filter(org.apache.spark.sql.functions.col("lang") === "zh")
-        .select("doc_id", "lang", "n_chars")
     }),
 
     // §2.7 export_sql: the customer group table after cast-on-export,
@@ -1516,143 +1420,6 @@ object GraftQueries {
           col("height"), col("n_samples"), col("sum_luma"))
     }),
 
-    "events_hourly" -> ((s, d) => {
-      // ts unit/type varies across testdata generations — probe, don't
-      // assume (graft.sources.EventTime)
-      Events.hourlyStats(graft.sources.EventTime.readBatch(s, d)).drop("approx_users")
-    }),
-
-    // Markov transition edges: per-user (time, id)-ordered event pairs
-    // counted per (from, to) type.
-    "transitions_events" -> ((s, d) =>
-      Events.transitions(graft.sources.EventTime.readBatch(s, d))),
-
-    // Cohort retention: users bucketed by first-seen day, activity
-    // counted per (cohort, day offset) — integer day arithmetic on
-    // epoch micros, exact distinct counts.
-    "retention_events" -> ((s, d) =>
-      Events.retentionCohorts(graft.sources.EventTime.readBatch(s, d))),
-
-    // Ordered funnel (signup → view → purchase): greedy earliest-after
-    // matching per user, one conditional aggregation + user-keyed join
-    // per step — integer-exact epoch-micro chain the SQL oracle
-    // reproduces step for step.
-    "funnel_events" -> ((s, d) =>
-      Events.funnelSteps(
-        graft.sources.EventTime.readBatch(s, d),
-        steps = Seq("signup", "view", "purchase"))),
-
-    // Sketch surface gate (same contract shape as the IVF recall gate):
-    // HyperLogLog++ distinct-user estimates cannot match an exact count
-    // row-for-row by design, so the lane RETURNS the accuracy gate —
-    // the mergeable sketch (map-side partial, no distinct shuffle of
-    // raw values) must land within 5 % of the exact count, overall and
-    // for every event type — and the oracle pins the gate true.
-    "approx_users_events" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ev = graft.sources.EventTime.readBatch(s, d)
-      val perType = ev.groupBy("event_type")
-        .agg(
-          approx_count_distinct(col("user_id"), rsd = 0.02).as("approx"),
-          countDistinct(col("user_id")).as("exact"))
-        .withColumn("ok",
-          col("exact") > 0 &&
-            abs(col("approx") - col("exact")).cast("double") / col("exact") <= 0.05)
-      val overall = ev.agg(
-          approx_count_distinct(col("user_id"), rsd = 0.02).as("approx"),
-          countDistinct(col("user_id")).as("exact"))
-        .select((col("exact") > 0 &&
-          abs(col("approx") - col("exact")).cast("double") / col("exact") <= 0.05).as("ok"))
-      val allOk = perType.agg(min(col("ok")).as("a")).head.getBoolean(0) &&
-        overall.head.getBoolean(0)
-      Seq(allOk).toDF("within_5pct")
-    }),
-
-    // Temporal as-of join (feature lookup): each purchase event joined
-    // to the user's most recent view at or before it. Union-and-sweep
-    // formulation — one hash exchange + window pass, no join operator
-    // (plan pinned in AsofJoinSpec); the oracle is DuckDB's native
-    // `ASOF LEFT JOIN` with identical backward-inclusive semantics
-    // ((user_id, ts) is collision-free in this corpus, so the
-    // operator's greatest-right-id tie-break never has to fire).
-    "asof_join_events" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = graft.sources.EventTime.readBatch(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "ts", "user_id")
-      val views = ev.filter(col("event_type") === "view")
-        .select("event_id", "ts", "user_id")
-      graft.operators.AsofJoin
-        .backward(purchases, views, "user_id", "ts", "event_id", Seq("event_id"))
-        .selectExpr(
-          "event_id AS purchase_id", "user_id",
-          "right_event_id AS last_view_id",
-          "unix_micros(ts) - right_us AS view_gap_us")
-    }),
-
-    // Forward (look-ahead) as-of: each view joined to the user's NEXT
-    // purchase at or after it — conversion attribution. Same
-    // union-and-sweep machinery run over time in reverse; the oracle is
-    // DuckDB ASOF with the inequality flipped.
-    "asof_forward_events" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = graft.sources.EventTime.readBatch(s, d)
-      val views = ev.filter(col("event_type") === "view")
-        .select("event_id", "ts", "user_id")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "ts", "user_id")
-      graft.operators.AsofJoin
-        .forward(views, purchases, "user_id", "ts", "event_id", Seq("event_id"))
-        .selectExpr(
-          "event_id AS view_id", "user_id",
-          "right_event_id AS next_purchase_id",
-          "right_us - unix_micros(ts) AS purchase_gap_us")
-    }),
-
-    // Interval containment (incident attribution): how many views the
-    // user made in the 5 minutes up to each error. Bucketized range
-    // join — intervals exploded onto fixed time buckets, points bucket
-    // once, hash equi-join on (user, bucket) + exact filter — so the
-    // plan is never the BroadcastNestedLoopJoin a raw inequality join
-    // produces (pinned in RangeJoinSpec); empty windows survive with 0.
-    "range_join_events" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      val ev = graft.sources.EventTime.readBatch(s, d)
-      val windowUs = 300L * 1000000L
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("event_id").as("error_id"), col("user_id"),
-          expr("unix_micros(ts)").as("end_us"))
-        .withColumn("start_us", col("end_us") - windowUs)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("view_id"), col("user_id"),
-          expr("unix_micros(ts)").as("view_us"))
-      graft.operators.RangeJoin
-        .countPointsInIntervals(errors, views, "user_id", "error_id",
-          "start_us", "end_us", "view_us", "view_id", bucketUs = windowUs)
-        .selectExpr("error_id", "user_id", "n_points AS n_views")
-    }),
-
-    // Per-key top-k (per-user highlights): each user's 3 highest-value
-    // purchases. One hash exchange + per-key sort, never a global sort;
-    // the unique event_id tie-break makes every rank deterministic.
-    "top_events_per_user" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      graft.operators.Stats.topKPerKey(
-        graft.sources.EventTime.readBatch(s, d)
-          .filter(col("event_type") === "purchase")
-          .select("event_id", "user_id", "value"),
-        "user_id", "value", "event_id", k = 3)
-    }),
-
-    // Training-pipeline sessionization: gap-split each user's event run
-    // (8 h gap ≈ 4.8k sessions over 10k events at sf0.01) into
-    // per-session stats. Window-function lane: lag → boundary flag →
-    // running sum → aggregate, one exchange total; boundaries compare
-    // integer epoch micros, so the SQL oracle reproduces them exactly.
-    "events_sessions" -> ((s, d) =>
-      graft.operators.Sessions.sessionize(graft.sources.EventTime.readBatch(s, d))),
-
     // Sequence packing (pretraining chunk assignment): global token
     // prefix sum in doc_id order via the two-phase parallel scan
     // (range partition → per-partition running sum → partition-count-
@@ -1686,34 +1453,6 @@ object GraftQueries {
         docs, "doc_id", graft.operators.TextAnalysis.tokenCountExpr(col("text")), budget = 1000L)
     }),
 
-    // Snapshot maintenance (CDC refresh between crawls): a synthetic
-    // changeset — status-R updates for keys ≡0 (mod 7), deletes for
-    // keys ≡0 (mod 13) (deletes win on overlap by construction: the
-    // update set excludes them), status-N inserts re-keyed +1e9 from
-    // keys ≡0 (mod 11) — merged into the orders snapshot. The full
-    // next-snapshot table is the result, so the oracle re-derives every
-    // surviving row, not just counts.
-    "upsert_orders" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, lit}
-      val orders = s.read.parquet(s"$d/orders.parquet")
-      val updates = orders
-        .filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 13 =!= 0)
-        .withColumn("o_orderstatus", lit("R"))
-        .withColumn("deleted", lit(false))
-      val deletes = orders.filter(col("o_orderkey") % 13 === 0)
-        .withColumn("deleted", lit(true))
-      val inserts = orders.filter(col("o_orderkey") % 11 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + 1000000000L)
-        .withColumn("o_orderstatus", lit("N"))
-        .withColumn("deleted", lit(false))
-      graft.operators.Upsert.merge(
-          orders, updates.unionByName(deletes).unionByName(inserts),
-          Seq("o_orderkey"), Some("deleted"))
-        // timestamp→string on both sides (the Spark/DuckDB cast contract
-        // at the top of this file), native types elsewhere
-        .withColumn("o_orderdate", col("o_orderdate").cast("string"))
-    }),
-
     // Corpus length profile (cutoff calibration): exact nearest-rank
     // length percentiles per language. Integer-only rank arithmetic
     // ((n·p+99) div 100) over one window sort per language — the value
@@ -1724,17 +1463,6 @@ object GraftQueries {
           s.read.parquet(s"$d/documents.parquet"), "lang", "n_chars", Seq(50, 90, 99))
         .selectExpr("lang", "n_rows AS n_docs", "min_value AS min_chars",
           "max_value AS max_chars", "p50", "p90", "p99")),
-
-    // Percentile-threshold outlier detection: every event whose value
-    // strictly exceeds its type's exact nearest-rank p99. The threshold
-    // table (one row per event type) broadcasts back onto the facts —
-    // the fact side never shuffles for the flagging pass; integer cents
-    // keep the predicate engine-exact.
-    "anomalies_events" -> ((s, d) =>
-      graft.operators.Anomaly.outliersAbovePercentile(
-        graft.sources.EventTime.readBatch(s, d),
-        keyCol = "event_type", valueCol = "value", percent = 99,
-        keep = Seq("event_id", "user_id"))),
 
     // Count-min-sketch frequency gate (same contract shape as the HLL
     // gate): a fixed-size mergeable counter grid replaces the full
@@ -1748,68 +1476,6 @@ object GraftQueries {
     "cms_tokens_documents" -> ((s, d) =>
       graft.operators.Sketches.cmsTokenGate(
         s.read.parquet(s"$d/documents.parquet"), "text", topK = 25)),
-
-    // Z-order (Morton) clustering key over (n_chars, doc_id), 8 bits
-    // each: min-max integer bucketing then bit interleave — the value a
-    // lake layout sorts files by so parquet min/max footers prune BOTH
-    // columns' predicates (Delta/Iceberg OPTIMIZE ZORDER shape; file-
-    // narrowing effect pinned in ZOrderSpec). All-integer arithmetic ⇒
-    // bit-reproducible; the one collect is a 1-row min/max aggregate.
-    "zorder_documents" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, min, max}
-      val docs = s.read.parquet(s"$d/documents.parquet")
-      val r = docs.agg(min(col("n_chars")), max(col("n_chars")),
-        min(col("doc_id")), max(col("doc_id"))).head()
-      val buckets = Seq(
-        graft.sinks.ZOrder.minMaxBucket("n_chars", r.getLong(0), r.getLong(1), 8),
-        graft.sinks.ZOrder.minMaxBucket("doc_id", r.getLong(2), r.getLong(3), 8))
-      docs.select(col("doc_id"), graft.sinks.ZOrder.zValue(buckets, 8).as("z_value"))
-    }),
-
-    // SCD-2 dimension history from the event changelog: each user's
-    // event_type observations compressed to change-points, every version
-    // carrying [valid_from, valid_to) and an is_current flag — the
-    // point-in-time-correct dimension shape. One exchange on user_id
-    // (lag + lead share the same window order). Epoch-micro interval
-    // bounds keep the compare integer-exact; ties break on event_id on
-    // both sides.
-    "scd2_events" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, unix_micros}
-      val ev = graft.sources.EventTime.readBatch(s, d)
-      graft.operators.Scd.history(ev, "user_id", "ts", "event_id", Seq("event_type"))
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("valid_from")).as("valid_from_us"),
-          unix_micros(col("valid_to")).as("valid_to_us"),
-          col("is_current"))
-    }),
-
-    // Salted two-phase aggregation over the hottest possible key
-    // (event_type: ~6 values over the whole corpus). Phase 1 spreads
-    // each hot key over 16 deterministic salts (pmod(hash(event_id))),
-    // phase 2 merges ≤16 partials per key — no reducer ever holds a
-    // whole key. Integer cents make the two-phase merge bit-equal to
-    // the oracle's single GROUP BY.
-    "skew_salted_events" -> ((s, d) => {
-      val ev = graft.sources.EventTime.readBatch(s, d)
-      graft.operators.Skew.saltedStats(ev, "event_type", "value",
-        saltFrom = "event_id", nSalts = 16)
-    }),
-
-    // Salted JOIN over the same hot key: every event joined to its
-    // type's stats row through (event_type, salt) — the dimension
-    // replicates ×8, the fact side's hot types spread over 8 reducers
-    // instead of one straggler. Result ≡ the plain join (SQL oracle).
-    "skew_salted_join_events" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = graft.sources.EventTime.readBatch(s, d)
-      val dim = graft.operators.Skew.plainStats(ev, "event_type", "value")
-        .select(col("event_type"), col("n_rows").as("type_n_rows"))
-      graft.operators.Skew.saltedJoin(
-          ev.withColumn("value_cents",
-            org.apache.spark.sql.functions.expr("cast(round(value * 100) as bigint)")),
-          dim, keyCol = "event_type", saltFrom = "event_id", nSalts = 8)
-        .select("event_id", "event_type", "value_cents", "type_n_rows")
-    }),
 
     // Data-quality validation gate (Deequ-style constraint suite, VLDB'18
     // shape): the whole suite compiles into ONE aggregation pass (plus
@@ -1845,160 +1511,7 @@ object GraftQueries {
           docs, "lang", "doc_id", Map("en" -> 0.4, "zh" -> 0.9), defaultFraction = 0.75)
         .select(col("doc_id"), col("lang"))
     }),
-
-    // §2.8 Structured Streaming, oracle-checked: the SAME hourly transform
-    // driven through readStream + watermark, run to completion with an
-    // AvailableNow trigger into a memory sink. Complete output mode
-    // because the corpus is finite — in Append mode the final windows
-    // would stay in state forever awaiting a watermark advance that no
-    // future data will bring; an unbounded deployment uses Append (see
-    // EventStreamSpec).
-    "events_hourly_streaming" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ev = graft.sources.EventTime.readStreamEvents(s, d)
-      val q = graft.streaming.EventStream.hourlyStats(ev).drop("approx_users")
-        .writeStream.format("memory").queryName("events_hourly_streaming_sink")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("events_hourly_streaming_sink")
-    }),
-
-    // §2.8 custom keyed state, oracle-checked: mapGroupsWithState tracks
-    // each user's distinct event-type set (state bounded by the type
-    // vocabulary). The update stream's count is monotone and set union
-    // commutative, so max-per-user is batching-independent and equals
-    // the batch COUNT(DISTINCT) — the oracle.
-    // §2.8 stream-static enrichment: every streaming purchase joined to
-    // a batch-derived per-user profile. The dimension is broadcast, so
-    // each micro-batch plans a BroadcastHashJoin — no stream shuffle,
-    // no state store (pinned in EventStreamSpec); Append emits each
-    // enriched row exactly once, so the batch join SQL is the oracle.
-    "events_enriched_streaming" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
-      import org.apache.spark.sql.streaming.Trigger
-      val profile = graft.sources.EventTime.readBatch(s, d)
-        .groupBy("user_id")
-        .agg(
-          sum(expr("cast(round(value * 100) as bigint)")).as("lifetime_cents"),
-          count(lit(1)).as("n_user_events"))
-      val stream = graft.sources.EventTime.readStreamEvents(s, d)
-        .filter(col("event_type") === "purchase")
-        .select("event_id", "user_id")
-      val q = graft.streaming.EventStream.enrichWithDim(stream, profile, Seq("user_id"))
-        .writeStream.format("memory").queryName("events_enriched_sink")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("events_enriched_sink")
-    }),
-
-    // §2.8 stream-stream interval join: purchases × views within the 5
-    // minutes before, per user, as a streaming operator — both sides
-    // watermarked, the time-bounded condition lets state evict (bounded
-    // by rate×window, never stream length). Inner join ⇒ each pair
-    // emits exactly once ⇒ the batch inequality join is the oracle.
-    "events_attribution_streaming" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      import org.apache.spark.sql.streaming.Trigger
-      def side(t: String) = graft.sources.EventTime.readStreamEvents(s, d)
-        .filter(col("event_type") === t)
-        .select("event_id", "ts", "user_id")
-      val q = graft.streaming.EventStream
-        .intervalJoin(side("purchase"), side("view"), "user_id", windowSeconds = 300L)
-        .selectExpr("l.event_id AS purchase_id", "l.user_id AS user_id",
-          "r.event_id AS view_id")
-        .writeStream.format("memory").queryName("events_attribution_sink")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("events_attribution_sink")
-    }),
-
-    "events_user_types_streaming" -> ((s, d) => {
-      import org.apache.spark.sql.functions.max
-      import org.apache.spark.sql.streaming.Trigger
-      val ev = graft.sources.EventTime.readStreamEvents(s, d)
-      val q = graft.streaming.EventStream.userTypeProfile(ev)
-        .writeStream.format("memory").queryName("events_user_types_sink")
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("events_user_types_sink")
-        .groupBy("user_id").agg(max("n_types").as("n_types"))
-    }),
-
-    // §2.8 streaming gap sessionization, oracle-checked end-to-end: the
-    // flatMapGroupsWithState lane over the real corpus. With an
-    // AvailableNow run the emitted set is deterministic: every session
-    // closed by a later event of the same user (all data arrives in one
-    // micro-batch, so that is every session but each user's last), plus
-    // last sessions whose event-time timeout fires in the final no-data
-    // batch — exactly those with timeoutMs = (end_us+gap)/1000+1 below
-    // the final watermark maxMs - delayMs. Both conditions are integer
-    // arithmetic on epoch micros, so the SQL oracle reproduces the
-    // emitted set bit-exactly (see oracleSql).
-    "events_sessions_streaming" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ev = graft.sources.EventTime.readStreamEvents(s, d)
-      val q = graft.streaming.EventStream.userSessions(ev)
-        .writeStream.format("memory").queryName("events_sessions_streaming_sink")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("events_sessions_streaming_sink")
-    }),
-
-    // §2.8 streaming exact dedup, oracle-checked: ingest-time
-    // dropDuplicatesWithinWatermark over the documents corpus (constant
-    // event time — the corpus has no timestamp; state bounding is
-    // exercised with real times in DocStreamSpec). The kept doc_id per
-    // hash depends on arrival order, so the checked output is the
-    // deterministic distinct hash set.
-    "dedup_streaming_documents" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      // file stream sources need a directory or glob, not a bare file
-      val docs = s.readStream.schema(schema).parquet(s"$d/documents*.parquet")
-        .withColumn("ts", expr("timestamp '2026-01-01 00:00:00'"))
-      val q = graft.streaming.DocStream.dedupDocuments(docs, "text", "ts")
-        .select(col("content_hash"))
-        .writeStream.format("memory").queryName("dedup_streaming_documents_sink")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("dedup_streaming_documents_sink")
-    }),
   )
-
-  // Sessionization oracle constants (batch events_sessions AND streaming
-  // events_sessions_streaming), derived from the operators' own named
-  // defaults so a change to either default changes both sides together.
-  private val sessionGapUs: Long =
-    graft.operators.Sessions.DefaultGapSeconds * 1000000L
-  private val sessionWatermarkMs: Long =
-    graft.streaming.EventStream.DefaultSessionWatermarkMs
-
-  // shared by the batch and streaming sliding-window lanes: 2 h windows
-  // on a 30 min slide ⇒ each event joins j ∈ [0,4) windows whose start
-  // is its slide-floor minus j slides (epoch-aligned, like Spark's)
-  private val slidingOracle: String =
-    """WITH o AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
-      |w AS (SELECT ((us // 1800000000) - j) * 1800000000 AS start_us, event_type, value
-      |      FROM o CROSS JOIN UNNEST(range(4)) AS r(j))
-      |SELECT strftime(make_timestamp(start_us), '%Y-%m-%d %H:%M:%S') AS window_start,
-      |       event_type,
-      |       CAST(count(*) AS BIGINT) AS n_events,
-      |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-      |FROM w GROUP BY 1, 2""".stripMargin
 
   /** BPE training-replay CTE chain shared by the bpe_train and
     * bpe_encode oracles. Every CTE is MATERIALIZED: with default
@@ -2462,11 +1975,6 @@ object GraftQueries {
     "export_sql_customer" ->
       "SELECT DISTINCT c_acctbal, CAST(c_custkey AS BIGINT) AS c_custkey, c_mktsegment, c_name FROM customer",
 
-    "bucketed_join_orders" ->
-      """SELECT o.o_orderkey, o.o_totalprice, CAST(sum(l.l_quantity) AS DOUBLE) AS sum_qty
-        |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |GROUP BY o.o_orderkey, o.o_totalprice""".stripMargin,
-
     "read_document_props" ->
       "SELECT DISTINCT CAST(props::JSON->>'k' AS VARCHAR) AS k FROM events",
 
@@ -2820,86 +2328,6 @@ object GraftQueries {
         |WHERE f.j < g.n_frames AND t.k < g.width * g.height
         |GROUP BY g.doc_id, g.n_frames, g.width, g.height""".stripMargin,
 
-    "events_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |       event_type,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents,
-        |       min(value) AS min_value, max(value) AS max_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "approx_users_events" -> "SELECT true AS within_5pct",
-
-    // every event belongs to exactly windowDur/slide = 4 epoch-aligned
-    // sliding windows: starts = slide-floor(us) - j·slide, j ∈ [0, 4)
-    "events_sliding" -> slidingOracle,
-    "events_sliding_streaming" -> slidingOracle,
-
-    "transitions_events" ->
-      """WITH o AS (
-        |  SELECT event_type,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |                               ORDER BY epoch_us(ts), event_id) AS prev
-        |  FROM events)
-        |SELECT prev AS from_type, event_type AS to_type,
-        |       CAST(count(*) AS BIGINT) AS n_transitions
-        |FROM o WHERE prev IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-
-    // // is DuckDB's flooring integer division — same bucket arithmetic
-    // as the operator's pmod-based floorDiv
-    "retention_events" ->
-      """WITH u AS (
-        |  SELECT user_id, epoch_us(ts) // 86400000000 AS day
-        |  FROM events),
-        |c AS (
-        |  SELECT user_id, min(day) AS cohort_day FROM u GROUP BY 1)
-        |SELECT c.cohort_day, u.day - c.cohort_day AS day_offset,
-        |       CAST(count(DISTINCT u.user_id) AS BIGINT) AS n_users
-        |FROM u JOIN c USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "funnel_events" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(epoch_us(ts)) AS step1_us
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(epoch_us(e.ts)) AS step2_us
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'view' AND epoch_us(e.ts) > s1.step1_us
-        |  GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(epoch_us(e.ts)) AS step3_us
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.step2_us
-        |  GROUP BY 1)
-        |SELECT s1.user_id, s1.step1_us, s2.step2_us, s3.step3_us,
-        |       CAST(1 + (CASE WHEN s2.step2_us IS NULL THEN 0 ELSE 1 END)
-        |              + (CASE WHEN s3.step3_us IS NULL THEN 0 ELSE 1 END) AS INT)
-        |         AS steps_completed
-        |FROM s1
-        |LEFT JOIN s2 USING (user_id)
-        |LEFT JOIN s3 USING (user_id)""".stripMargin,
-
-    // DuckDB's native ASOF LEFT JOIN: greatest v.ts <= p.ts per key,
-    // left-outer nulls — exactly the operator's backward-inclusive
-    // contract ((user_id, ts) collision-free here, so neither engine's
-    // tie rule is exercised)
-    "asof_join_events" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |     v AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view')
-        |SELECT p.event_id AS purchase_id, p.user_id,
-        |       v.event_id AS last_view_id,
-        |       CAST(epoch_us(p.ts) - epoch_us(v.ts) AS BIGINT) AS view_gap_us
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin,
-
-    "partitioned_read_documents" ->
-      "SELECT doc_id, lang, n_chars FROM documents WHERE lang = 'zh'",
-
-    "compact_documents" ->
-      "SELECT doc_id, lang, n_chars, md5(text) AS text_md5 FROM documents",
-
     // shard = min(((excl + max(n,1) − 1) · 8) div T, 7) — the document's
     // last-token position over the corpus prefix sum, all-BIGINT
     "shard_export_documents" ->
@@ -2921,46 +2349,6 @@ object GraftQueries {
         |       CAST(row_number() OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS rank
         |FROM documents""".stripMargin,
 
-    // next snapshot = (target minus changed keys) ∪ surviving changes
-    "upsert_orders" ->
-      """WITH changes AS (
-        |  SELECT o_orderkey, o_custkey, 'R' AS o_orderstatus, o_totalprice,
-        |         o_orderdate, o_orderpriority, false AS deleted
-        |  FROM orders WHERE o_orderkey % 7 = 0 AND o_orderkey % 13 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |         o_orderdate, o_orderpriority, true
-        |  FROM orders WHERE o_orderkey % 13 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 1000000000, o_custkey, 'N', o_totalprice,
-        |         o_orderdate, o_orderpriority, false
-        |  FROM orders WHERE o_orderkey % 11 = 0)
-        |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |       CAST(o_orderdate AS VARCHAR) AS o_orderdate, o_orderpriority
-        |FROM orders
-        |WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changes)
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |       CAST(o_orderdate AS VARCHAR) AS o_orderdate, o_orderpriority
-        |FROM changes WHERE NOT deleted""".stripMargin,
-
-    // same nearest-rank p99 per type, same strict cents comparison
-    "anomalies_events" ->
-      """WITH c AS (SELECT event_id, user_id, event_type,
-        |                  CAST(round(value * 100) AS BIGINT) AS value_cents
-        |           FROM events),
-        |r AS (SELECT event_type, value_cents,
-        |             row_number() OVER (PARTITION BY event_type ORDER BY value_cents) AS rn,
-        |             count(*) OVER (PARTITION BY event_type) AS cnt
-        |      FROM c),
-        |t AS (SELECT event_type,
-        |             max(CASE WHEN rn = (cnt * 99 + 99) // 100 THEN value_cents END) AS threshold_cents
-        |      FROM r GROUP BY event_type)
-        |SELECT c.event_id, c.user_id, c.event_type, c.value_cents,
-        |       CAST(t.threshold_cents AS BIGINT) AS threshold_cents
-        |FROM c JOIN t USING (event_type)
-        |WHERE c.value_cents > t.threshold_cents""".stripMargin,
-
     // exact top-25 recomputed relationally; the sketch gates pinned
     // true — `overestimates` is a structural CMS invariant, but
     // `within_eps` is a fixed-seed canary (probabilistic bound that
@@ -2975,56 +2363,6 @@ object GraftQueries {
         |SELECT token, CAST(exact_count AS BIGINT) AS exact_count,
         |       true AS overestimates, true AS within_eps
         |FROM top""".stripMargin,
-
-    // same min-max bucketing, same bit interleave (terms generated by
-    // the same layout rule: bit k of column i lands at position k·2+i)
-    "zorder_documents" -> {
-      val zTerms = (0 until 8).flatMap(k => Seq(
-        s"(((b0 >> $k) & 1) << ${2 * k})",
-        s"(((b1 >> $k) & 1) << ${2 * k + 1})")).mkString(" | ")
-      s"""WITH r AS (SELECT min(n_chars) AS ln, max(n_chars) AS hn,
-         |                  min(doc_id) AS ld, max(doc_id) AS hd FROM documents),
-         |b AS (SELECT doc_id,
-         |             ((n_chars - ln) * 256) // (hn - ln + 1) AS b0,
-         |             ((doc_id - ld) * 256) // (hd - ld + 1) AS b1
-         |      FROM documents, r)
-         |SELECT doc_id, CAST($zTerms AS BIGINT) AS z_value FROM b""".stripMargin
-    },
-
-    // same change-point compression, same (ts, event_id) tie-break
-    "scd2_events" ->
-      """WITH o AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
-        |         row_number() OVER w AS rn,
-        |         lag(event_type) OVER w AS prev
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |c AS (SELECT user_id, event_type, us, event_id
-        |      FROM o WHERE rn = 1 OR prev IS DISTINCT FROM event_type)
-        |SELECT user_id, event_type,
-        |       CAST(us AS BIGINT) AS valid_from_us,
-        |       CAST(lead(us) OVER v AS BIGINT) AS valid_to_us,
-        |       lead(us) OVER v IS NULL AS is_current
-        |FROM c
-        |WINDOW v AS (PARTITION BY user_id ORDER BY us, event_id)""".stripMargin,
-
-    // the salted (key, salt) join must equal the plain key join exactly
-    "skew_salted_join_events" ->
-      """WITH dim AS (SELECT event_type, CAST(count(*) AS BIGINT) AS type_n_rows
-        |             FROM events GROUP BY event_type)
-        |SELECT e.event_id, e.event_type,
-        |       CAST(round(e.value * 100) AS BIGINT) AS value_cents,
-        |       dim.type_n_rows
-        |FROM events e JOIN dim USING (event_type)""".stripMargin,
-
-    // the salted two-phase plan must equal the plain GROUP BY exactly
-    "skew_salted_events" ->
-      """SELECT event_type,
-        |       CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents,
-        |       CAST(min(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS min_value_cents,
-        |       CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS max_value_cents
-        |FROM events GROUP BY event_type""".stripMargin,
 
     // same one-pass metrics, same truncating-integer ppm arithmetic;
     // passed recomputed independently from the oracle's own metric
@@ -3070,86 +2408,6 @@ object GraftQueries {
         |       max(CASE WHEN rn = (cnt * 90 + 99) // 100 THEN n_chars END) AS p90,
         |       max(CASE WHEN rn = (cnt * 99 + 99) // 100 THEN n_chars END) AS p99
         |FROM r GROUP BY lang""".stripMargin,
-
-    "top_events_per_user" ->
-      """SELECT event_id, user_id, value, CAST(rn AS INT) AS rank FROM (
-        |  SELECT event_id, user_id, value,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY value DESC, event_id) AS rn
-        |  FROM events WHERE event_type = 'purchase') t
-        |WHERE rn <= 3""".stripMargin,
-
-    "asof_forward_events" ->
-      """WITH v AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'),
-        |     p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-        |SELECT v.event_id AS view_id, v.user_id,
-        |       p.event_id AS next_purchase_id,
-        |       CAST(epoch_us(p.ts) - epoch_us(v.ts) AS BIGINT) AS purchase_gap_us
-        |FROM v ASOF LEFT JOIN p
-        |  ON v.user_id = p.user_id AND v.ts <= p.ts""".stripMargin,
-
-    // plain inequality left join + count — DuckDB's optimizer is free
-    // to pick any strategy; only the contained set matters
-    "range_join_events" ->
-      """WITH e AS (SELECT event_id AS error_id, user_id, epoch_us(ts) AS end_us
-        |           FROM events WHERE event_type = 'error'),
-        |     v AS (SELECT event_id AS view_id, user_id, epoch_us(ts) AS view_us
-        |           FROM events WHERE event_type = 'view')
-        |SELECT e.error_id, e.user_id,
-        |       CAST(count(v.view_id) AS BIGINT) AS n_views
-        |FROM e LEFT JOIN v
-        |  ON e.user_id = v.user_id
-        | AND v.view_us BETWEEN e.end_us - 300000000 AND e.end_us
-        |GROUP BY 1, 2""".stripMargin,
-
-    "events_sessions" ->
-      s"""WITH o AS (
-        |  SELECT user_id, event_id, value, epoch_us(ts) AS us,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
-        |           (PARTITION BY user_id ORDER BY ts, event_id) > $sessionGapUs
-        |         THEN 1 ELSE 0 END AS f
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, us, value,
-        |    CAST(sum(f) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-        |  FROM o)
-        |SELECT user_id, session_seq,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  min(us) AS start_us, max(us) AS end_us,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents,
-        |  max(us) - min(us) AS duration_us
-        |FROM s GROUP BY 1, 2""".stripMargin,
-
-    // same session assignment; the ordered type path via string_agg with
-    // the same unique (us, event_id) ordering the Spark side sorts on
-    "session_sequences_events" ->
-      s"""WITH o AS (
-         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
-         |           (PARTITION BY user_id ORDER BY ts, event_id) > $sessionGapUs
-         |         THEN 1 ELSE 0 END AS f
-         |  FROM events),
-         |s AS (
-         |  SELECT user_id, us, event_id, event_type,
-         |    CAST(sum(f) OVER (PARTITION BY user_id ORDER BY us, event_id
-         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-         |  FROM o)
-         |SELECT user_id, session_seq,
-         |  CAST(count(*) AS BIGINT) AS n_events,
-         |  min(us) AS start_us,
-         |  string_agg(event_type, '>' ORDER BY us, event_id) AS type_path
-         |FROM s GROUP BY 1, 2""".stripMargin,
-
-    // same RANGE frame over integer epoch micros (7 days = 604800000000 µs)
-    "events_rolling_users" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS us,
-        |  CAST(count(*) OVER w AS BIGINT) AS n_window,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER w AS BIGINT)
-        |    AS sum_value_cents_window
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |             RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)""".stripMargin,
 
     "sample_fixed_documents" -> {
       val h = duckHash("coalesce(lang, '') || ':' || CAST(doc_id AS VARCHAR)")
@@ -3256,24 +2514,6 @@ object GraftQueries {
         s"""SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
            |       CAST(sum(len(string_split(seq, ' '))) AS BIGINT) AS n_bpe_tokens
            |FROM e$k GROUP BY doc_id""".stripMargin
-    },
-
-    // replays all 8 integer-arithmetic PageRank rounds; `//` (DuckDB)
-    // and `div` (Spark) agree on positive operands
-    "pagerank_partsupp" -> {
-      val head =
-        """e0 AS (SELECT DISTINCT l_partkey * 2 AS a, l_suppkey * 2 + 1 AS b FROM lineitem),
-          |e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
-          |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY src),
-          |r0 AS (SELECT src AS nid, CAST(1000000 AS BIGINT) AS rank_micro FROM deg)""".stripMargin
-      val iters = (1 to 8).map { i =>
-        s"""r$i AS (SELECT e.dst AS nid,
-           |  CAST(150000 + (850 * sum(r.rank_micro // deg.d)) // 1000 AS BIGINT) AS rank_micro
-           |  FROM e JOIN r${i - 1} r ON r.nid = e.src JOIN deg ON deg.src = e.src
-           |  GROUP BY e.dst)""".stripMargin
-      }
-      (head +: iters).mkString("WITH ", ",\n", "\n") +
-        "SELECT nid, rank_micro FROM r8 ORDER BY rank_micro DESC, nid ASC LIMIT 20"
     },
 
     // retrains the bigram model relationally: same tokenization, same
@@ -3401,73 +2641,6 @@ object GraftQueries {
       s"""SELECT doc_id, lang FROM documents
          |WHERE ${duckHash("coalesce(lang, '') || ':' || CAST(doc_id AS VARCHAR)")} % 10000 <
          |  CASE lang WHEN 'en' THEN 4000 WHEN 'zh' THEN 9000 ELSE 7500 END""".stripMargin,
-
-    // the streaming lane computes the identical aggregation
-    "events_hourly_streaming" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |       event_type,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents,
-        |       min(value) AS min_value, max(value) AS max_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "events_user_types_streaming" ->
-      """SELECT user_id, CAST(count(DISTINCT event_type) AS INT) AS n_types
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    "events_attribution_streaming" ->
-      """SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-        |       v.event_id AS view_id
-        |FROM events p JOIN events v
-        |  ON p.user_id = v.user_id
-        | AND v.ts BETWEEN p.ts - INTERVAL 300 SECOND AND p.ts
-        |WHERE p.event_type = 'purchase' AND v.event_type = 'view'""".stripMargin,
-
-    "events_enriched_streaming" ->
-      """WITH p AS (
-        |  SELECT user_id,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS lifetime_cents,
-        |         CAST(count(*) AS BIGINT) AS n_user_events
-        |  FROM events GROUP BY user_id)
-        |SELECT e.event_id, e.user_id, p.lifetime_cents, p.n_user_events
-        |FROM events e JOIN p USING (user_id)
-        |WHERE e.event_type = 'purchase'""".stripMargin,
-
-    // batch sessionize, filtered to the sessions the Append stream must
-    // have emitted: closed-by-next-event (not the user's last) OR
-    // closed-by-timeout (timeout ms strictly below the final watermark,
-    // which Spark computes as floor(max_us/1000) - watermark_ms for the
-    // default delay; the timeout is set to floor((end+gap)/1000)+1).
-    // Gap/watermark are interpolated from EventStream's named defaults
-    // so the oracle cannot silently desynchronize from the operator.
-    "events_sessions_streaming" ->
-      s"""WITH o AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
-        |           (PARTITION BY user_id ORDER BY ts, event_id) > $sessionGapUs
-        |         THEN 1 ELSE 0 END AS f
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, us,
-        |    CAST(sum(f) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-        |  FROM o),
-        |g AS (
-        |  SELECT user_id, session_seq,
-        |    CAST(count(*) AS BIGINT) AS n_events,
-        |    min(us) AS start_us, max(us) AS end_us
-        |  FROM s GROUP BY 1, 2),
-        |g2 AS (
-        |  SELECT *, max(session_seq) OVER (PARTITION BY user_id) AS last_seq
-        |  FROM g),
-        |m AS (SELECT max(epoch_us(ts)) AS max_us FROM events)
-        |SELECT user_id, start_us, end_us, n_events
-        |FROM g2, m
-        |WHERE session_seq < last_seq
-        |   OR (end_us + $sessionGapUs) // 1000 + 1 < max_us // 1000 - $sessionWatermarkMs""".stripMargin,
-
-    "dedup_streaming_documents" ->
-      "SELECT DISTINCT md5(text) AS content_hash FROM documents",
   )
 
   /** Loader node-count identities (no nulls in this corpus): per tree the

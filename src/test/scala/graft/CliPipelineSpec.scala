@@ -33,14 +33,18 @@ class CliPipelineSpec extends AnyFunSuite with SparkSpec {
       Seq("n_tokens", "n_chars").forall(c => cols.exists(_.startsWith(c.take(4)))))
   }
 
-  test("validate and zorder dispatch with defaults and overrides") {
+  test("validate dispatches with defaults and overrides; zorder is not an op") {
     val v = Cli.pipelineFrame("validate", docs(), Map.empty)
     assert(v.count() == 3) // one verdict row per default check
     assert(v.columns.toSet == Set("check", "column", "metric_ppm", "threshold_ppm", "passed"))
     // doc_id is a key and texts are non-empty: everything passes at 1.0
     assert(v.collect().forall(_.getAs[Boolean]("passed")))
-    val z = Cli.pipelineFrame("zorder", docs(), Map("files" -> "2"))
-    assert(z.count() == 3 && z.columns.sameElements(docs().columns))
+    val e = intercept[IllegalArgumentException] {
+      Cli.pipelineFrame("zorder", docs(), Map("files" -> "2"))
+    }
+    val listed = e.getMessage.substring(e.getMessage.indexOf('(') + 1, e.getMessage.lastIndexOf(')'))
+    assert(listed.split('|').toSeq ==
+      Seq("profile", "dedup", "sample", "pack", "rank", "quantiles", "validate", "mixture", "shard"))
   }
 
   test("rank, pack, sample, and quantiles dispatch with defaults and overrides") {

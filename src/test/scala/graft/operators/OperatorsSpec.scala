@@ -458,20 +458,4 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
       .select(TextAnalysis.portableHash(col("s"))).head.getLong(0)
     assert(h == 419982666956583591L)
   }
-
-  test("events hourly stats: window bounds, counts, cent sums") {
-    import spark.implicits._
-    val ev = Seq(
-      ("2024-01-01 10:15:00", "click", 10L, 1.25),
-      ("2024-01-01 10:45:00", "click", 11L, 2.50),
-      ("2024-01-01 11:05:00", "click", 10L, 4.00),
-      ("2024-01-01 10:30:00", "view", 12L, 0.10))
-      .toDF("tss", "event_type", "user_id", "value")
-      .withColumn("ts", to_timestamp(col("tss")))
-    val out = Events.hourlyStats(ev).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    assert(out(("2024-01-01 10:00:00", "click")) == (2L, 375L))
-    assert(out(("2024-01-01 11:00:00", "click")) == (1L, 400L))
-    assert(out(("2024-01-01 10:00:00", "view")) == (1L, 10L))
-  }
 }

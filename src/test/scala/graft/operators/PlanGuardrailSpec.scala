@@ -171,37 +171,6 @@ class PlanGuardrailSpec extends AnyFunSuite with SparkSpec {
       s"extraction scan reads columns the group never uses: ${extractScans.head}")
   }
 
-  test("event rollups aggregate map-side before the exchange") {
-    // same type-probed ts normalization as the events_hourly registry entry
-    val p = plan(Events.hourlyStats(graft.sources.EventTime.readBatch(spark, dir)))
-    assertNoUnbounded("hourlyStats", p)
-    // approx_count_distinct keeps this an ObjectHashAggregate pair; either
-    // flavor proves the partial/final split survived
-    assert(p.contains("HashAggregate"), "hourly rollup lost its partial aggregation")
-  }
-
-  test("sessionization reuses the user partition for every downstream step") {
-    val p = plan(Sessions.sessionize(graft.sources.EventTime.readBatch(spark, dir)))
-    assertNoUnbounded("sessionize", p)
-    // lag, the running session counter, AND the per-session groupBy must
-    // all ride the one hash(user) exchange — hash(user) satisfies the
-    // (user, session) clustering, so a second exchange means a regression
-    val exchanges = "\\(\\d+\\) Exchange".r.findAllIn(p).length
-    assert(exchanges == 1, s"sessionize plans $exchanges exchanges, expected 1:\n$p")
-  }
-
-  test("session sequences and rolling user features ride one user exchange, no join") {
-    for ((name, df) <- Seq(
-        "sessionSequences" -> Sessions.sessionSequences(graft.sources.EventTime.readBatch(spark, dir)),
-        "rollingUserStats" -> Events.rollingUserStats(graft.sources.EventTime.readBatch(spark, dir)))) {
-      val p = plan(df)
-      assertNoUnbounded(name, p)
-      assert(!p.contains("Join"), s"$name must not join (a range self-join regression)")
-      val exchanges = "\\(\\d+\\) Exchange".r.findAllIn(p).length
-      assert(exchanges == 1, s"$name plans $exchanges exchanges, expected 1:\n$p")
-    }
-  }
-
   test("fixed-size sampling is one stratum exchange; tf-idf joins on keys only") {
     val fixed = plan(Sampling.fixedSizePerStratum(docs, "lang", "doc_id", 5))
     assertNoUnbounded("fixedSizePerStratum", fixed)

@@ -58,17 +58,6 @@ class StatsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("topKPerKey: greatest k per key, deterministic tie-break, rank attached") {
-    import spark.implicits._
-    val d = Seq(
-      ("a", 5L, 1L), ("a", 9L, 2L), ("a", 9L, 3L), ("a", 1L, 4L),
-      ("b", 2L, 5L)).toDF("g", "v", "id")
-    val out = Stats.topKPerKey(d, "g", "v", "id", k = 2).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    // a: the two 9s win, tie by id asc; b: its single row at rank 1
-    assert(out == Set(("a", 9L, 2L, 1), ("a", 9L, 3L, 2), ("b", 2L, 5L, 1)))
-  }
-
   test("the plan shuffles once: the aggregation reuses the window's partitioning") {
     val plan = Stats.nearestRankQuantiles(df(("a", 1L), ("b", 2L)), "g", "v", Seq(50))
       .queryExecution.executedPlan.toString
