@@ -87,15 +87,22 @@ object Forest {
     forest.flatMap(row => nodeRows(row.treeId, row.tree))
   }
 
-  /** Local flattening of one tree (pre-order ids). */
+  /** Local flattening of one tree (pre-order ids). Heights come back up
+    * the same walk (`ArchiTree.height` per node would re-walk every
+    * subtree), so each row is filled in once its children are done.
+    */
   def nodeRows(treeId: Long, tree: ArchiTree): Seq[NodeRow] = {
-    val buf = Vector.newBuilder[NodeRow]
-    var nextId = 0
-    def go(t: ArchiTree, parentId: Int, pos: Int, depth: Int): Unit = {
-      val id = nextId
-      nextId += 1
+    val buf = scala.collection.mutable.ArrayBuffer.empty[NodeRow]
+    def go(t: ArchiTree, parentId: Int, pos: Int, depth: Int): Int = {
+      val id = buf.size
+      buf += null
+      var childHeight = 0
+      t.children.zipWithIndex.foreach {
+        case (Child.Node(c), i) => childHeight = math.max(childHeight, go(c, id, i, depth + 1))
+        case _                  => childHeight = math.max(childHeight, 1)
+      }
       val isEnt = t.hasType(NodeType.Ent)
-      buf += NodeRow(
+      buf(id) = NodeRow(
         treeId = treeId,
         nodeId = id,
         parentId = parentId,
@@ -105,16 +112,13 @@ object Forest {
         value = if (isEnt) t.leaves.mkString(" ") else null,
         oid = t.oid,
         depth = depth,
-        height = t.height,
+        height = 1 + childHeight,
         nChildren = t.children.size,
       )
-      t.children.zipWithIndex.foreach {
-        case (Child.Node(c), i) => go(c, id, i, depth + 1)
-        case _                  =>
-      }
+      1 + childHeight
     }
     go(tree, -1, 0, 0)
-    buf.result()
+    buf.toVector
   }
 
   /** Collect a (small) forest to the driver — tests and golden checks only. */

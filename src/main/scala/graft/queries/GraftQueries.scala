@@ -32,7 +32,7 @@ object GraftQueries {
   // checkpoint dir).
   private def nodes(spark: SparkSession, dir: String, cfgName: String, cfg: DbConfig): Dataset[NodeRow] =
     cache.getOrElseUpdate((dir, cfgName), {
-      // direct wide-row → NodeRow flatten (no intermediate TreeRow forest)
+      // the node view of the loaded forest (one flatMap over its trees)
       RelationalLoader.loadNodes(spark, dir, cfg).localCheckpoint(true)
     })
 

@@ -65,10 +65,11 @@ final case class DbConfig(namespace: String, tables: Seq[TableDef]) {
   *
   * Spark-first re-expression: the reference's per-row recursive SELECTs
   * (an N+1 pattern, sql.py:266-304) become one left join per FK edge
-  * occurrence; Catalyst broadcasts the small dimension sides and the
-  * per-root-row tree assembly is a single shuffle-free `map` over the
-  * joined wide row. Scales to arbitrarily large fact tables: no
-  * driver-side iteration, no collect.
+  * occurrence; the root rows are spread once before the joins, Catalyst
+  * broadcasts the small dimension sides, and the per-root-row tree
+  * assembly is a single shuffle-free `map` over the joined wide row.
+  * Scales to arbitrarily large fact tables: no driver-side iteration, no
+  * collect.
   */
 object RelationalLoader {
 
@@ -216,16 +217,19 @@ object RelationalLoader {
       extra.foldLeft(rootForest)(_ union _)
     }
 
-    val forest = forests.reduceOption(_ union _).getOrElse(spark.emptyDataset[TreeRow])
-    // Tree ids are assigned ABOVE (positional per source partition), so
-    // redistributing the finished TreeRows changes no id and no
-    // downstream result — but without it a root table read as one
-    // parquet split (or one JDBC partition) pins EVERY per-tree map
-    // stage of every consumer (parse, rewrite epochs, candidate
-    // extraction, node flattens) to a single core. The shuffle moves
-    // only the serialized trees once; consumers checkpoint right after.
-    val para = spark.sparkContext.defaultParallelism
-    if (forest.rdd.getNumPartitions >= para) forest else forest.repartition(para)
+    forests.reduceOption(_ union _).getOrElse(spark.emptyDataset[TreeRow])
+  }
+
+  /** Spread root rows over at least the session's parallelism before the
+    * joins. A root table read as one parquet split (or one JDBC partition)
+    * would otherwise pin the tree assembly and every per-tree map stage of
+    * every consumer (parse, rewrite epochs, candidate extraction, node
+    * flattens) to a single core. The exchange moves only the pre-join
+    * root rows; broadcast dimension joins keep its layout.
+    */
+  private def spread(df: DataFrame): DataFrame = {
+    val para = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= para) df else df.repartition(para)
   }
 
   /** Globally-unique tree id: forest salt (6 bits), partition (22
@@ -234,6 +238,9 @@ object RelationalLoader {
     * field overflow would merge unrelated trees downstream, so out of
     * range fails the task instead.
     *
+    * Partition and row are positions of the joined root row after
+    * [[spread]], so a root read in fewer splits than the session's
+    * parallelism gets ids from the spread layout, not from its scan.
     * Ids are assignment-stable only within one materialization of the
     * load: they are positional, so callers that run multiple actions
     * over the same lazy forest must persist/checkpoint it first (the
@@ -297,7 +304,7 @@ object RelationalLoader {
     val rightPlan = go(cfg.table(rightFk.refTable))
 
     val limited = if (sample > 0) tables(root.name).limit(sample) else tables(root.name)
-    val assoc = limited.select(columns(root.name).map(c => col(c).as(s"assoc__$c")).toIndexedSeq: _*)
+    val assoc = spread(limited.select(columns(root.name).map(c => col(c).as(s"assoc__$c")).toIndexedSeq: _*))
     var wide = assoc.join(
       prefixed(tables(leftPlan.table.name), leftPlan.alias, columns),
       col(s"assoc__${leftFk.column}") === col(s"${leftPlan.alias}__${leftFk.refColumn}"), "left")
@@ -329,8 +336,9 @@ object RelationalLoader {
           oid(ns, assocName, pkData.toMap)
         }
         val rel = ArchiTree(Typed(NodeType.Rel, assocName), Vector(Child.Node(leftGroup), Child.Node(rightGroup)), relOid)
-        val children = Vector(Child.Node(rel)) ++
-          parseChildren(lp, get, cols, types, ns) ++ parseChildren(rp, get, cols, types, ns)
+        val children = Vector(Child.Node(rel), Child.Node(leftGroup)) ++
+          relChildren(lp, leftGroup, get, cols, types, ns) ++
+          (Child.Node(rightGroup) +: relChildren(rp, rightGroup, get, cols, types, ns))
         val tree = ArchiTree(Plain("ROOT"), children)
         TreeRow(treeId(salt, pid, i.toLong), tree)
       }
@@ -401,7 +409,7 @@ object RelationalLoader {
       tables: Map[String, DataFrame],
       columns: Map[String, Seq[String]],
   ): DataFrame = {
-    val base = prefixed(rootDf, plan.alias, columns)
+    val base = spread(prefixed(rootDf, plan.alias, columns))
     plan.fks.foldLeft(base) { case (df, (fk, child)) => attach(df, plan.alias, fk, child, tables, columns) }
   }
 
@@ -432,21 +440,10 @@ object RelationalLoader {
     spark.createDataset(rdd)(org.apache.spark.sql.Encoders.product[TreeRow])
   }
 
-  /** parse_table minus the leading group (sql.py:234-264). */
-  private def parseChildren(
-      occ: Occ,
-      get: String => String,
-      columns: Map[String, Seq[String]],
-      colTypes: Map[String, Map[String, String]],
-      ns: String,
-  ): Vector[Child] = {
-    val group = buildGroup(occ, get, columns, colTypes, ns)
-    Vector(Child.Node(group)) ++ relChildren(occ, group, get, columns, colTypes, ns)
-  }
-
-  /** The REL + recursive subtree children emitted after a group
-    * (_parse_relation, sql.py:266-304). A child row "exists" iff any of
-    * its PK columns survived the left join non-null.
+  /** The children parse_table emits after a group (sql.py:234-304): per
+    * FK, the REL over both groups, then the child's group and its own
+    * walk. A child row "exists" iff any of its PK columns survived the
+    * left join non-null.
     */
   private def relChildren(
       occ: Occ,
@@ -470,7 +467,8 @@ object RelationalLoader {
           Vector(Child.Node(group), Child.Node(childGroup)),
           oid(ns, relName, pkData.toMap),
           Map("source" -> occ.table.name, "target" -> child.table.name, "source_column" -> fk.column))
-        Vector(Child.Node(rel)) ++ parseChildren(child, get, columns, colTypes, ns)
+        Vector(Child.Node(rel), Child.Node(childGroup)) ++
+          relChildren(child, childGroup, get, columns, colTypes, ns)
       }
     }
 
@@ -600,220 +598,9 @@ object RelationalLoader {
     projected.select(observed.map(col).toIndexedSeq: _*).distinct()
   }
 
-  /** Straight-to-node-rows load: flattens each assembled tree in the same
-    * map that builds it, with no intermediate TreeRow forest — at sf0.1
-    * the tpch forest is 600k trees × ~120 nodes, and dataset extraction
-    * needs only the node rows.
+  /** The node view of [[load]]: one `NodeRow` per tree node, the
+    * flatten of the loaded forest (SURVEY §7.1).
     */
-  def loadNodes(spark: SparkSession, dir: String, cfg: DbConfig, sample: Int = 0): Dataset[graft.model.NodeRow] = {
-    import spark.implicits._
-    val raw: Map[String, DataFrame] =
-      cfg.tables.map(t => t.name -> spark.read.parquet(s"$dir/${t.name}.parquet")).toMap
-    val colTypes = raw.map { case (n, df) => n -> df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap }
-    val columns = raw.map { case (n, df) => n -> df.columns.toSeq }
-    // association roots take the tree-building path; everything here is
-    // the plain star walk
-    if (cfg.rootTables.exists(root => isAssociation(root, columns(root.name).size)))
-      return Forest.toNodesDF(load(spark, dir, cfg, sample))
-    val tables = raw.map { case (n, df) =>
-      n -> df.select(df.columns.map(c => col(c).cast("string").as(c)).toIndexedSeq: _*)
-    }
-    val forests = cfg.rootTables.zipWithIndex
-      .map { case (root, salt) =>
-        val plan = buildPlan(root, cfg)
-        val limited = if (sample > 0) tables(root.name).limit(sample) else tables(root.name)
-        // The dimension joins are broadcast, so the per-row node
-        // emission below inherits the ROOT SCAN's partitioning — and a
-        // root table small on disk (one parquet split) but wide in
-        // emitted nodes would run the whole flatten on one core. Stamp
-        // each root row's positional identity FIRST (partition << 33 |
-        // row-in-partition over the original scan layout — exactly the
-        // pair the pre-spread emission derived, so tree ids are
-        // BIT-IDENTICAL to the unspread path and to the tree-building
-        // path's assembler), then spread the rows to the session's
-        // parallelism for the emission. The exchange moves only the
-        // pre-join root rows — tiny next to the emitted nodes.
-        val para = spark.sparkContext.defaultParallelism
-        val base0 = prefixed(limited, plan.alias, columns)
-          .withColumn("__graft_mid", monotonically_increasing_id())
-        val base =
-          if (base0.rdd.getNumPartitions >= para) base0
-          else base0.repartition(para)
-        val wide = plan.fks.foldLeft(base) { case (df, (fk, child)) =>
-          attach(df, plan.alias, fk, child, tables, columns)
-        }
-        val ord = wide.schema.fieldNames.zipWithIndex.toMap
-        val cp = compilePlan(plan, columns, ord)
-        val ns = cfg.namespace
-        val midOrd = ord("__graft_mid")
-        val rdd = wide.rdd.mapPartitions { it =>
-          it.flatMap { row =>
-            val mid = row.getLong(midOrd)
-            emitNodeRows(cp, row, ns,
-              treeId(salt.toLong, (mid >> 33).toInt, mid & ((1L << 33) - 1)))
-          }
-        }
-        spark.createDataset(rdd)(org.apache.spark.sql.Encoders.product[graft.model.NodeRow])
-      }
-    forests.reduceOption(_ union _)
-      .getOrElse(spark.emptyDataset[graft.model.NodeRow])
-  }
-
-  /** Emission plan with wide-row ordinals and static strings resolved
-    * once per load — the per-row hot loop does only int-indexed row
-    * access: no string interpolation, no map lookups, no per-row sorts.
-    */
-  private final case class CGroup(
-      name: String,             // table name, spaces replaced
-      entNames: Array[String],  // non-FK column names (emission order)
-      entOrds: Array[Int],      // wide-row ordinal per entNames entry
-      pkKeys: Array[String],    // "<pk>=" fragments in sorted-key order
-      pkOrds: Array[Int])       // wide-row ordinal per pkKeys entry
-
-  private final case class CRel(
-      name: String,               // "<parent><->(child)"
-      keyFrags: Array[String],    // "left_<pk>=" / "right_<pk>=" sorted
-      keyOrds: Array[Int],
-      childExistOrds: Array[Int], // child pk ordinals (existence probe)
-      child: CPlan)
-
-  private final case class CPlan(group: CGroup, rels: Array[CRel])
-
-  private def compilePlan(occ: Occ, columns: Map[String, Seq[String]], ord: Map[String, Int]): CPlan = {
-    val t = occ.table
-    val fkCols = t.fks.map(_.column).toSet
-    val entCols = columns(t.name).filterNot(fkCols.contains)
-    // distinct before sort: the tree-building path builds pk data via
-    // .toMap (which dedupes repeated pk column names) — a duplicated pk
-    // entry in the config must not make this path's oid diverge
-    val pkSorted = t.pks.distinct.sorted
-    val group = CGroup(
-      t.name.replace(' ', '_'),
-      entCols.map(_.replace(' ', '_')).toArray,
-      entCols.map(c => ord(s"${occ.alias}__$c")).toArray,
-      pkSorted.map(c => s"$c=").toArray,
-      pkSorted.map(c => ord(s"${occ.alias}__$c")).toArray)
-    val rels = occ.fks.map { case (_, child) =>
-      val keys =
-        (t.pks.map(c => s"left_$c" -> ord(s"${occ.alias}__$c")) ++
-          child.table.pks.map(c => s"right_$c" -> ord(s"${child.alias}__$c")))
-          .toMap.toSeq.sortBy(_._1)
-      CRel(
-        s"${t.name.replace(' ', '_')}<->${child.table.name.replace(' ', '_')}",
-        keys.map(k => k._1 + "=").toArray,
-        keys.map(_._2).toArray,
-        child.table.pks.map(c => ord(s"${child.alias}__$c")).toArray,
-        compilePlan(child, columns, ord))
-    }.toArray
-    CPlan(group, rels)
-  }
-
-  /** Per-row group snapshot: indices into the compiled ent arrays for the
-    * non-null entities, their values, and the deterministic oid.
-    */
-  private final class GInfo(
-      val cg: CGroup, val entIdx: Array[Int], val entVals: Array[String],
-      val nEnts: Int, val oid: String) {
-    def height: Int = if (nEnts == 0) 1 else 3
-  }
-
-  private def groupInfo(row: org.apache.spark.sql.Row, cg: CGroup, ns: String): GInfo = {
-    val n = cg.entOrds.length
-    val idxs = new Array[Int](n)
-    val vals = new Array[String](n)
-    var k = 0
-    var i = 0
-    while (i < n) {
-      val o = cg.entOrds(i)
-      if (!row.isNullAt(o)) { idxs(k) = i; vals(k) = row.getString(o); k += 1 }
-      i += 1
-    }
-    val sb = new java.lang.StringBuilder
-    var j = 0
-    while (j < cg.pkOrds.length) {
-      if (j > 0) sb.append(';')
-      sb.append(cg.pkKeys(j))
-      val o = cg.pkOrds(j)
-      sb.append(if (row.isNullAt(o)) "null" else row.getString(o))
-      j += 1
-    }
-    new GInfo(cg, idxs, vals, k, ArchiTree.deterministicOid(ns, cg.name, sb.toString))
-  }
-
-  /** Emit the pre-order NodeRows of one root row straight from the wide
-    * join row — no intermediate tree objects, no per-node subtree walks.
-    * Must stay byte-identical to `Forest.nodeRows(treeId, tree)` over
-    * the tree `assemble` builds for the same wide row and tree id; a
-    * differential test pins that.
-    */
-  private def emitNodeRows(
-      plan: CPlan,
-      row: org.apache.spark.sql.Row,
-      ns: String,
-      treeId: Long,
-  ): Seq[graft.model.NodeRow] = {
-    import graft.model.NodeRow
-    val buf = Vector.newBuilder[NodeRow]
-    var nextId = 0
-
-    def emitGroup(treeId: Long, g: GInfo, parentId: Int, pos: Int, depth: Int): Unit = {
-      val id = nextId; nextId += 1
-      buf += NodeRow(treeId, id, parentId, pos, "GROUP", g.cg.name, null, g.oid, depth, g.height, g.nEnts)
-      var i = 0
-      while (i < g.nEnts) {
-        buf += NodeRow(treeId, nextId, id, i, "ENT", g.cg.entNames(g.entIdx(i)), g.entVals(i), "", depth + 1, 2, 1)
-        nextId += 1
-        i += 1
-      }
-    }
-
-    /** parse_table shape: the group, then per FK the REL (with both group
-      * copies) followed by the child's own walk.
-      */
-    def emit(treeId: Long, p: CPlan, g: GInfo, parentId: Int, posRef: Array[Int], depth: Int): Unit = {
-      emitGroup(treeId, g, parentId, posRef(0), depth); posRef(0) += 1
-      var r = 0
-      while (r < p.rels.length) {
-        val rel = p.rels(r)
-        var exists = false
-        var e = 0
-        while (!exists && e < rel.childExistOrds.length) {
-          exists = !row.isNullAt(rel.childExistOrds(e)); e += 1
-        }
-        if (exists) {
-          val cg = groupInfo(row, rel.child.group, ns)
-          val sb = new java.lang.StringBuilder
-          var j = 0
-          while (j < rel.keyOrds.length) {
-            if (j > 0) sb.append(';')
-            sb.append(rel.keyFrags(j))
-            val o = rel.keyOrds(j)
-            sb.append(if (row.isNullAt(o)) "null" else row.getString(o))
-            j += 1
-          }
-          val relOid = ArchiTree.deterministicOid(ns, rel.name, sb.toString)
-          val relId = nextId; nextId += 1
-          buf += NodeRow(treeId, relId, parentId, posRef(0), "REL", rel.name, null, relOid,
-            depth, 1 + math.max(g.height, cg.height), 2)
-          posRef(0) += 1
-          emitGroup(treeId, g, relId, 0, depth + 1)
-          emitGroup(treeId, cg, relId, 1, depth + 1)
-          emit(treeId, rel.child, cg, parentId, posRef, depth)
-        }
-        r += 1
-      }
-    }
-
-    val rootGroup = groupInfo(row, plan.group, ns)
-    // placeholder for ROOT: children count and height known only after the
-    // walk; emit ROOT first with a patch afterwards
-    val rootId = nextId; nextId += 1
-    val posRef = Array(0)
-    buf += NodeRow(treeId, rootId, -1, 0, null, "ROOT", null, "", 0, 0, 0)
-    emit(treeId, plan, rootGroup, rootId, posRef, 1)
-    val rows = buf.result()
-    val rootChildren = posRef(0)
-    val rootHeight = 1 + rows.iterator.filter(_.parentId == rootId).map(_.height).max
-    rows.updated(0, rows(0).copy(height = rootHeight, nChildren = rootChildren))
-  }
+  def loadNodes(spark: SparkSession, dir: String, cfg: DbConfig, sample: Int = 0): Dataset[graft.model.NodeRow] =
+    Forest.toNodesDF(load(spark, dir, cfg, sample))
 }

@@ -211,6 +211,26 @@ class PlanGuardrailSpec extends AnyFunSuite with SparkSpec {
       "the partition-offset join should broadcast the offsets side")
   }
 
+  test("the relational loader spreads root rows before the joins, never the finished trees") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val para = spark.sparkContext.defaultParallelism
+    for (sample <- Seq(0, 150)) {
+      val forest = graft.sources.RelationalLoader.load(
+        spark, dir, graft.sources.Testdata.customerDb, sample)
+      // a round-robin over tree rows sorts every partition by the trees'
+      // binary form first: the loader may shuffle root rows, not trees
+      val treeShuffles = helper.collect(forest.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "tree") => e
+      }
+      assert(treeShuffles.isEmpty,
+        s"sample=$sample: the loader shuffles finished trees:\n${forest.queryExecution.executedPlan}")
+      assert(forest.rdd.getNumPartitions >= para,
+        s"sample=$sample: forest has ${forest.rdd.getNumPartitions} partitions, want at least $para")
+    }
+  }
+
   test("forest rows stay columnar: the tree column is the tree type, stored as a struct") {
     import graft.core.{ArchiTree, ArchiTreeUDT}
     import graft.model.{Forest, ForestStore}

@@ -119,13 +119,16 @@ class RelationalLoaderSpec extends AnyFunSuite with SparkSpec {
     assert(custEnts == Set("c_custkey", "c_name", "c_acctbal", "c_mktsegment"))
   }
 
-  test("direct NodeRow emission is identical to the tree-building path") {
+  test("loadNodes equals the local flatten of load's trees") {
     for (cfg <- Seq(Testdata.customerDb, Testdata.ordersDb, Testdata.tpch)) {
-      val direct = RelationalLoader.loadNodes(spark, "/root/testdata/sf0.001", cfg)
+      val nodes = RelationalLoader.loadNodes(spark, "/root/testdata/sf0.001", cfg)
         .collect().toSet
-      val viaTrees = Forest.toNodesDF(
-        RelationalLoader.load(spark, "/root/testdata/sf0.001", cfg)).collect().toSet
-      assert(direct == viaTrees, s"divergence for ${cfg.rootTables.map(_.name)}")
+      val trees = RelationalLoader.load(spark, "/root/testdata/sf0.001", cfg).collect()
+      val local = trees.flatMap(r => Forest.nodeRows(r.treeId, r.tree)).toSet
+      assert(nodes == local, s"divergence for ${cfg.rootTables.map(_.name)}")
+      // pre-order node rows line up with subtrees; heights are NLTK's
+      for (r <- trees; (row, sub) <- Forest.nodeRows(r.treeId, r.tree).zip(r.tree.subtrees))
+        assert(row.height == sub.height && row.nChildren == sub.children.size, s"node ${row.nodeId}")
     }
   }
 
