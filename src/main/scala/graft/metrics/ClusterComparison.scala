@@ -37,12 +37,20 @@ object ClusterComparison {
   }
 
   /** Expected MI under the permutation model (hypergeometric), the exact
-    * sum sklearn computes in `expected_mutual_information`.
+    * sum sklearn computes in `expected_mutual_information`. A term
+    * depends on its margins only through their values, so the sum runs
+    * once per distinct (a, b) margin-value pair, weighted by how many
+    * clusters have each value: thousands of singleton clusters on one
+    * side cost one pass, not one per cluster.
     */
   def expectedMutualInfo(aCounts: Seq[Long], bCounts: Seq[Long], n: Long): Double = {
+    def histogram(counts: Seq[Long]): Seq[(Long, Long)] =
+      counts.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq.sorted
+    val bHist = histogram(bCounts)
     var emi = 0.0
     val logN = math.log(n.toDouble)
-    for (ai <- aCounts; bj <- bCounts) {
+    for ((ai, na) <- histogram(aCounts); (bj, nb) <- bHist) {
+      var pair = 0.0
       val lo = math.max(1L, ai + bj - n)
       val hi = math.min(ai, bj)
       var nij = lo
@@ -53,9 +61,10 @@ object ClusterComparison {
           logGamma(ai + 1.0) + logGamma(bj + 1.0) + logGamma(n - ai + 1.0) + logGamma(n - bj + 1.0) -
             logGamma(n + 1.0) - logGamma(nij + 1.0) - logGamma(ai - nij + 1.0) -
             logGamma(bj - nij + 1.0) - logGamma(n - ai - bj + nij + 1.0)
-        emi += term1 * term2 * math.exp(logTerm3)
+        pair += term1 * term2 * math.exp(logTerm3)
         nij += 1
       }
+      emi += na.toDouble * nb * pair
     }
     emi
   }

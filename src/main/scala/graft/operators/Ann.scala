@@ -59,11 +59,9 @@ object Ann {
     * single-literal `array_max(transform(…))` formulation. The unrolled
     * argmax is codegen'd, but its plan grows linearly with `nLists`:
     * past a few hundred it blows codegen's 64KB method limit (falling
-    * back to interpreted) and eventually planning itself. Session conf
-    * `spark.graft.ann.maxUnrolledLists` overrides.
+    * back to interpreted) and eventually planning itself.
     */
-  private val MaxUnrolledListsConf = "spark.graft.ann.maxUnrolledLists"
-  private val MaxUnrolledListsDefault = 64
+  private[operators] val MaxUnrolledLists = 64
 
   /** The centroid set as ONE literal column: array<struct<cid,cv>> in a
     * single `typedLit` — a constant-size plan node carrying the data,
@@ -180,9 +178,6 @@ object Ann {
       }
   }
 
-  private[operators] def maxUnrolled(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.get(MaxUnrolledListsConf, MaxUnrolledListsDefault.toString).toInt
-
   /** IVF index: assign every vector to its closest of `nLists` centroids
     * (k-means initialized from the lexicographically-first ids, `iters`
     * Lloyd rounds); queries probe the `nProbe` closest lists only.
@@ -206,11 +201,25 @@ object Ann {
       nLists: Int = 16,
       nProbe: Int = 4,
       iters: Int = 2,
+  ): DataFrame =
+    ivfTopK(emb, idCol, vecCol, queryIds, k, nLists, nProbe, iters,
+      unrolled = nLists <= MaxUnrolledLists)
+
+  /** [[ivfTopK]] with the argmax formulation picked by the caller, so a
+    * spec can run both at the same `nLists`.
+    */
+  private[operators] def ivfTopK(
+      emb: DataFrame,
+      idCol: String,
+      vecCol: String,
+      queryIds: Seq[Long],
+      k: Int,
+      nLists: Int,
+      nProbe: Int,
+      iters: Int,
+      unrolled: Boolean,
   ): DataFrame = {
-    val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val unrolled = nLists <= spark.conf
-      .get(MaxUnrolledListsConf, MaxUnrolledListsDefault.toString).toInt
+    graft.functions.GraftFunctions.register(emb.sparkSession)
     val corpus = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")).cache()
     val centroids = lloydCentroids(corpus, nLists, iters, unrolled)
     val assigned = assignToCentroids(corpus, centroids, unrolled).cache()
@@ -562,72 +571,57 @@ object Ann {
       element_at(element_at(col("dt"), m + 1), element_at(col("codes"), m + 1) + 1))
       .reduce(_ + _)
 
-  // ---- executor-side query preparation (large-batch serving path) -------
-
-  /** Session conf: largest query batch whose ADC distance tables and
-    * probe sets are computed DRIVER-side (the reference-shaped pattern:
-    * tens of queries, one broadcast). Above it — the 100 TB serving
-    * pattern where the query batch is itself a dataset — the same
-    * tables are computed as executor-side columns over the query frame
-    * and the probe restriction becomes an equi-join, so nothing on the
-    * driver grows with the batch. `-1` forces the distributed path
-    * (the equivalence specs pin bit-equality of the two).
+  /** The query vectors, sorted by id, collected to the driver: the
+    * state is O(|queryIds|·dim). A query whose length is not the
+    * trained `dim` fails loudly here, before a distance table could
+    * silently score a prefix of it or a probe could mis-rank.
     */
-  private val LocalDtMaxQueriesConf = "spark.graft.ann.localDtMaxQueries"
-  private val LocalDtMaxQueriesDefault = 1024
+  private def queryVectors(
+      corpus: DataFrame,
+      queryIds: Seq[Long],
+      dim: Int): Array[(Long, Seq[Double])] = {
+    val qRows = corpus.filter(col("id").isInCollection(queryIds))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
+    qRows.foreach { case (qid, qv) =>
+      require(qv.size == dim, s"query id=$qid has dim ${qv.size}, index expects $dim")
+    }
+    qRows
+  }
 
-  private[operators] def localDtMaxQueries(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.get(LocalDtMaxQueriesConf, LocalDtMaxQueriesDefault.toString).toInt
-
-  /** [[nanoDistanceTable]] as a COLUMN over a query-vector expression:
-    * dt[m][cid] = round(1e9 · l2sq(sub_m(v), c_m,cid)) via the codegen'd
-    * graft_l2sq kernel (same sequential accumulation as the driver
-    * loop, so the doubles agree bit-for-bit), Long.MaxValue at dropped
-    * codes. Plan size is O(model) — subspaces × codebook kernel calls —
-    * matching the driver table's shape, evaluated once per QUERY row.
+  /** Top-k per query of an ADC-scored (query_id, neighbor_id, adc)
+    * frame, shared by the exhaustive and IVF-probed scans. `rerank > 0`
+    * is the production ADC pattern: the compressed scan only SHORTLISTS
+    * (top `rerank` by integer ADC), then the k winners are re-ranked by
+    * exact similarity over full vectors, loaded for the
+    * |queries|·rerank candidates only (a broadcast-sized join), never
+    * for the corpus.
     */
-  private[operators] def dtColExpr(
-      model: Array[Array[(Int, Seq[Double])]],
-      subDim: Int,
-      vCol: Column): Column =
-    array(model.zipWithIndex.map { case (cb, m) =>
-      val byCid = cb.toMap
-      val sub = slice(vCol, m * subDim + 1, subDim)
-      array((0 to cb.map(_._1).max).map { c =>
-        byCid.get(c) match {
-          case Some(cv) =>
-            round(graft.functions.GraftFunctions.l2sq(
-              sub, typedLit(cv).cast("array<double>")) * 1e9).cast("long")
-          case None => lit(Long.MaxValue)
-        }
-      }: _*)
-    }: _*)
-
-  /** [[probeOrder]] as a column: the nProbe closest centroid cids by
-    * (cosine desc, cid desc) — the exact sort/slice ivfTopK's probe
-    * expression uses, over the single centroid literal.
-    */
-  private[operators] def probeColExpr(
-      centroids: Array[(Int, Seq[Double])],
-      nProbe: Int,
-      vCol: Column): Column =
-    slice(
-      reverse(array_sort(transform(
-        centroidsLit(centroids),
-        c => struct(cosine(vCol, c.getField("cv")).as("s"), c.getField("cid").as("cid"))))),
-      1, nProbe)("cid")
-
-  /** Loud in-plan dim guard for a distributed query frame: any vector
-    * whose length differs from the trained dim fails the job before a
-    * null cosine/l2sq could silently mis-probe (the distributed
-    * counterpart of the driver path's per-row `require`).
-    */
-  private[operators] def dimGuard(vCol: Column, idCol: Column, dim: Int): Column =
-    when(size(vCol) === lit(dim), vCol)
-      .otherwise(raise_error(concat(
-        lit("query id="), idCol.cast("string"),
-        lit(" has dim "), size(vCol).cast("string"),
-        lit(s", index expects $dim"))))
+  private def adcTopK(
+      scored: DataFrame,
+      corpus: DataFrame,
+      qRows: Array[(Long, Seq[Double])],
+      k: Int,
+      rerank: Int): DataFrame = {
+    val byAdc = Window.partitionBy("query_id").orderBy(col("adc").asc, col("neighbor_id").asc)
+    val shortlisted = scored
+      // a null ADC (row with a null code) must not outrank real scores
+      // — ascending sort puts nulls FIRST in Spark
+      .filter(col("adc").isNotNull)
+      .withColumn("rank", row_number().over(byAdc))
+      .filter(col("rank") <= math.max(k, rerank))
+      .select("query_id", "neighbor_id")
+    if (rerank <= 0) shortlisted
+    else {
+      val bySim = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
+      val qMapLit = typedLit(qRows.toMap)
+      corpus
+        .join(broadcast(shortlisted), col("id") === col("neighbor_id"))
+        .withColumn("sim", cosine(element_at(qMapLit, col("query_id")), col("v")))
+        .withColumn("rank", row_number().over(bySim))
+        .filter(col("rank") <= k)
+        .select("query_id", "neighbor_id")
+    }
+  }
 
   /** PQ-compressed exhaustive ANN (asymmetric distance computation):
     * encode every corpus vector as `subspaces` small codes — 4 bytes
@@ -667,98 +661,29 @@ object Ann {
     val dim = corpus.select(size(col("v"))).head.getInt(0)
     require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
     val subDim = dim / subspaces
+    val qRows = queryVectors(corpus, queryIds, dim)
     val model = pqTrain(corpus, subDim, subspaces, codebook, iters)
 
     val encoded = corpus.withColumn(
       "codes",
       array((0 until subspaces).map(m => pqCodeExpr(m, subDim, model(m))): _*)).cache()
 
-    val spark = corpus.sparkSession
-    val localMax = localDtMaxQueries(spark)
-    val useLocal = localMax >= 0 && queryIds.size <= localMax
-
-    val shortlistCap = math.max(k, rerank)
-    val w = Window.partitionBy("query_id").orderBy(col("adc").asc, col("neighbor_id").asc)
-    val w2 = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-
-    val result = if (useLocal) {
-      // query vectors to the driver (bounded by |queryIds|), then one
-      // integer nano-unit distance table per query — shipped back as ONE
-      // broadcast query table (qid, dt), so the ADC scan is a single
-      // corpus × queries plan branch at ANY batch size (a per-query
-      // union would grow the plan linearly in |queryIds|)
-      val qRows = corpus.filter(col("id").isInCollection(queryIds))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
-      if (qRows.isEmpty) {
-        // no queryIds present in the corpus: an empty result, like
-        // bruteForceTopK's join would produce
-        spark.range(0).select(col("id").as("query_id"), col("id").as("neighbor_id"))
-      } else {
-        val perQuery = qRows.toSeq.map { case (qid, qv) =>
-          (qid, nanoDistanceTable(qv, model, subspaces, subDim))
-        }
-        val qTable = {
-          import spark.implicits._
-          perQuery.toDF("query_id", "dt")
-        }
-        val scored = encoded
-          .crossJoin(broadcast(qTable))
-          .filter(col("id") =!= col("query_id"))
-          .select(col("query_id"), col("id").as("neighbor_id"),
-            adcColExpr(subspaces).as("adc"))
-          // a null ADC (row with a null code) must not outrank real scores
-          // — ascending sort puts nulls FIRST in Spark
-          .filter(col("adc").isNotNull)
-        val shortlisted = scored
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= shortlistCap)
-          .select("query_id", "neighbor_id")
-
-        // rerank > 0: the production ADC pattern — the compressed scan only
-        // SHORTLISTS (top `rerank` by integer ADC), then the k winners are
-        // re-ranked by exact similarity over full vectors, loaded for the
-        // |queries|·rerank candidates only (a broadcast-sized join), never
-        // for the corpus
-        if (rerank <= 0) shortlisted
-        else {
-          val qMapLit = typedLit(qRows.toMap)
-          corpus
-            .join(broadcast(shortlisted), col("id") === col("neighbor_id"))
-            .withColumn("sim", cosine(element_at(qMapLit, col("query_id")), col("v")))
-            .withColumn("rank", row_number().over(w2))
-            .filter(col("rank") <= k)
-            .select("query_id", "neighbor_id")
-        }
-      }
-    } else {
-      // LARGE-BATCH path: the distance tables are columns over the query
-      // frame — nothing on the driver grows with the batch. Bit-equal to
-      // the driver path (same kernels, same rounding, same tie-breaks),
-      // pinned by the equivalence spec.
-      val qFrame = corpus.filter(col("id").isInCollection(queryIds))
-        .select(col("id").as("query_id"),
-          dimGuard(col("v"), col("id"), dim).as("qv"))
-      val qTable = qFrame.select(col("query_id"),
-        dtColExpr(model, subDim, col("qv")).as("dt"))
-      val scored = encoded
-        .crossJoin(qTable)
-        .filter(col("id") =!= col("query_id"))
-        .select(col("query_id"), col("id").as("neighbor_id"),
-          adcColExpr(subspaces).as("adc"))
-        .filter(col("adc").isNotNull)
-      val shortlisted = scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= shortlistCap)
-        .select("query_id", "neighbor_id")
-      if (rerank <= 0) shortlisted
-      else corpus
-        .join(shortlisted, col("id") === col("neighbor_id"))
-        .join(qFrame, Seq("query_id"))
-        .withColumn("sim", cosine(col("qv"), col("v")))
-        .withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id")
+    // one integer nano-unit distance table per query, shipped back as
+    // ONE broadcast query table (qid, dt), so the ADC scan is a single
+    // corpus × queries plan branch at ANY batch size (a per-query union
+    // would grow the plan linearly in |queryIds|). A batch with no id in
+    // the corpus is an empty table and gives no rows
+    val qTable = {
+      import corpus.sparkSession.implicits._
+      qRows.toSeq.map { case (qid, qv) =>
+        (qid, nanoDistanceTable(qv, model, subspaces, subDim))
+      }.toDF("query_id", "dt")
     }
+    val scored = encoded
+      .crossJoin(broadcast(qTable))
+      .filter(col("id") =!= col("query_id"))
+      .select(col("query_id"), col("id").as("neighbor_id"), adcColExpr(subspaces).as("adc"))
+    val result = adcTopK(scored, corpus, qRows, k, rerank)
     val out = result.localCheckpoint(true)
     encoded.unpersist()
     corpus.unpersist()
@@ -768,8 +693,7 @@ object Ann {
   /** Driver-side probe selection, ordered exactly like ivfTopK's
     * slice(reverse(array_sort(scored))): cosine similarity descending
     * with Spark's double ordering (NaN above all), ties to the larger
-    * cid. The driver-side twin of [[probeColExpr]], so the local and
-    * distributed IVFADC paths probe the same lists for the same query.
+    * cid. The query's dim is the centroids' ([[queryVectors]]).
     */
   private[operators] def probeOrder(
       centroids: Array[(Int, Seq[Double])],
@@ -778,11 +702,6 @@ object Ann {
     def cmpD(a: Double, b: Double): Int =
       if (a == b) 0 else java.lang.Double.compare(a, b)
     centroids.toSeq.map { case (cid, cv) =>
-      // fail fast on a query/centroid dim mismatch — truncating would
-      // probe arbitrary lists while the assignment kernels disqualify
-      // mismatched entries (all centroids share the trained dim)
-      require(qv.size == cv.size,
-        s"query dim ${qv.size} != centroid dim ${cv.size} (cid=$cid)")
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
       val n = cv.size
@@ -834,13 +753,13 @@ object Ann {
       iters: Int = 2,
       rerank: Int = 0,
   ): DataFrame = {
-    val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.register(emb.sparkSession)
     val corpus = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")).cache()
     val dim = corpus.select(size(col("v"))).head.getInt(0)
     require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
     val subDim = dim / subspaces
-    val unrolled = nLists <= maxUnrolled(spark)
+    val unrolled = nLists <= MaxUnrolledLists
+    val qRows = queryVectors(corpus, queryIds, dim)
 
     val centroids = lloydCentroids(corpus, nLists, iters, unrolled)
     val model = pqTrain(corpus, subDim, subspaces, codebook, iters)
@@ -853,93 +772,28 @@ object Ann {
       .select("id", "cid", "codes")
       .cache()
 
-    val localMax = localDtMaxQueries(spark)
-    val useLocal = localMax >= 0 && queryIds.size <= localMax
-    val shortlistCap = math.max(k, rerank)
-    val w = Window.partitionBy("query_id").orderBy(col("adc").asc, col("neighbor_id").asc)
-    val w2 = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-
-    val result = if (useLocal) {
-      val qRows = corpus.filter(col("id").isInCollection(queryIds))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
-      if (qRows.isEmpty) {
-        spark.range(0).select(col("id").as("query_id"), col("id").as("neighbor_id"))
-      } else {
-        // ONE broadcast query table (qid, dt, probe set) — single
-        // corpus × queries plan branch at any batch size; the probed-list
-        // restriction is a per-pair `cid IN probe` predicate on the scan
-        val perQuery = qRows.toSeq.map { case (qid, qv) =>
-          (qid, nanoDistanceTable(qv, model, subspaces, subDim),
-            probeOrder(centroids, qv, nProbe))
-        }
-        val qTable = {
-          import spark.implicits._
-          perQuery.toDF("query_id", "dt", "probe")
-        }
-        // scan-level pruning first: the UNION of every query's probed lists
-        // as a plain `cid IN (...)` predicate — with a cid-partitioned
-        // stored index that is partition pruning, so the scan reads only
-        // the probed directories; the per-(row, query) membership check
-        // then runs on the surviving fraction
-        val allProbed = perQuery.flatMap(_._3).distinct
-        val scored = encoded
-          .filter(col("cid").isInCollection(allProbed))
-          .crossJoin(broadcast(qTable))
-          .filter(array_contains(col("probe"), col("cid")) && col("id") =!= col("query_id"))
-          .select(col("query_id"), col("id").as("neighbor_id"),
-            adcColExpr(subspaces).as("adc"))
-          // a null ADC (row with a null code) must not outrank real scores
-          // — ascending sort puts nulls FIRST in Spark
-          .filter(col("adc").isNotNull)
-        val shortlisted = scored
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= shortlistCap)
-          .select("query_id", "neighbor_id")
-        if (rerank <= 0) shortlisted
-        else {
-          val qMapLit = typedLit(qRows.toMap)
-          corpus
-            .join(broadcast(shortlisted), col("id") === col("neighbor_id"))
-            .withColumn("sim", cosine(element_at(qMapLit, col("query_id")), col("v")))
-            .withColumn("rank", row_number().over(w2))
-            .filter(col("rank") <= k)
-            .select("query_id", "neighbor_id")
-        }
-      }
-    } else {
-      // LARGE-BATCH path: distance tables and probe sets are columns
-      // over the query frame, the probe restriction is an equi-join on
-      // cid — driver state stays O(model) at any batch size. The only
-      // driver-sided piece left is the DISTINCT probed-cid set (bounded
-      // by nLists), collected for the scan-level pruning predicate.
-      val qFrame = corpus.filter(col("id").isInCollection(queryIds))
-        .select(col("id").as("query_id"),
-          dimGuard(col("v"), col("id"), dim).as("qv"))
-      val ql = qFrame.select(
-        col("query_id"),
-        dtColExpr(model, subDim, col("qv")).as("dt"),
-        explode(probeColExpr(centroids, nProbe, col("qv"))).as("cid"))
-      val allProbed = ql.select("cid").distinct().collect().map(_.getInt(0)).toSeq
-      val scored = encoded
-        .filter(col("cid").isInCollection(allProbed))
-        .join(ql, Seq("cid"))
-        .filter(col("id") =!= col("query_id"))
-        .select(col("query_id"), col("id").as("neighbor_id"),
-          adcColExpr(subspaces).as("adc"))
-        .filter(col("adc").isNotNull)
-      val shortlisted = scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= shortlistCap)
-        .select("query_id", "neighbor_id")
-      if (rerank <= 0) shortlisted
-      else corpus
-        .join(shortlisted, col("id") === col("neighbor_id"))
-        .join(qFrame, Seq("query_id"))
-        .withColumn("sim", cosine(col("qv"), col("v")))
-        .withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id")
+    // ONE broadcast query table (qid, dt, probe set) — single
+    // corpus × queries plan branch at any batch size; the probed-list
+    // restriction is a per-pair `cid IN probe` predicate on the scan
+    val perQuery = qRows.toSeq.map { case (qid, qv) =>
+      (qid, nanoDistanceTable(qv, model, subspaces, subDim), probeOrder(centroids, qv, nProbe))
     }
+    val qTable = {
+      import corpus.sparkSession.implicits._
+      perQuery.toDF("query_id", "dt", "probe")
+    }
+    // scan-level pruning first: the UNION of every query's probed lists
+    // as a plain `cid IN (...)` predicate — with a cid-partitioned
+    // stored index that is partition pruning, so the scan reads only
+    // the probed directories; the per-(row, query) membership check
+    // then runs on the surviving fraction
+    val allProbed = perQuery.flatMap(_._3).distinct
+    val scored = encoded
+      .filter(col("cid").isInCollection(allProbed))
+      .crossJoin(broadcast(qTable))
+      .filter(array_contains(col("probe"), col("cid")) && col("id") =!= col("query_id"))
+      .select(col("query_id"), col("id").as("neighbor_id"), adcColExpr(subspaces).as("adc"))
+    val result = adcTopK(scored, corpus, qRows, k, rerank)
     val out = result.localCheckpoint(true)
     encoded.unpersist()
     corpus.unpersist()

@@ -433,7 +433,7 @@ object Dedup {
   ): DataFrame = {
     val spark = df.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val unrolled = k <= Ann.maxUnrolled(spark)
+    val unrolled = k <= Ann.MaxUnrolledLists
     val corpus = df
       .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), transform(col(vecCol), _.cast("double")).as("v"))

@@ -2,9 +2,8 @@ package graft.similarity
 
 import graft.core._
 import graft.model.TreeRow
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
 /** Serializable feature rows (Set → sorted Seq for the product encoder). */
@@ -277,7 +276,7 @@ object TreeClusterer {
       if (schemaOnly)
         schemaOnlyMembers(graft.model.Schema.templateFromTrees(forest).toTree, partials.keys,
           tau, decay, metricName, maxHeight, minClusterSize)
-      else instanceMembers(spark, partials, tau, decay, metricName, maxHeight)
+      else instanceMembers(partials, tau, decay, metricName, maxHeight)
 
     // deterministic naming: components by (size desc, min member key),
     // suffixed onto the modal typed self-label name (most members, then
@@ -330,8 +329,10 @@ object TreeClusterer {
   }
 
   /** Map-side partial of the fit's aggregate pass: one StructKey's
-    * multiplicity and its minimum-key candidate. Public for the same
-    * generated-projection reason as [[RepRow]].
+    * multiplicity and its minimum-key candidate. Public: Spark's
+    * generated SafeProjection cannot access a private class and would
+    * fall back to interpreted deserialization (after a logged compile
+    * failure) on every collect.
     */
   final case class KeyPartial(mult: Long, cand: CandRow)
 
@@ -469,36 +470,16 @@ object TreeClusterer {
       labelComps.getOrElse(k.levels.head.label, Nil).map(comp => (k, comp, 1.0)))
   }
 
-  /** Above this many distinct structural representatives the tau-graph
-    * is built distributed; at or below it the pair scoring + components
-    * run driver-side in one pass. The rep count is bounded by schema
-    * VARIETY (never data size — that is what the structural collapse
-    * guarantees), so for most forests it is tiny and the distributed
-    * path's ~10 jobs + iterative CC rounds are pure scheduling latency.
-    * Same philosophy as Spark's own broadcast-join threshold: pick the
-    * local algorithm when the input provably fits, keep the distributed
-    * one as the unbounded-case path. The default (2000 reps) caps the
-    * worst case (every rep sharing one entity label) at ~2M scored
-    * pairs; tune — or set to -1 to force the distributed path — via the
-    * session conf.
-    */
-  val LocalTauGraphMaxRepsKey = "spark.graft.cluster.localTauGraphMaxReps"
-  private def localTauGraphMaxReps(spark: SparkSession): Long =
-    spark.conf.getOption(LocalTauGraphMaxRepsKey).map(_.toLong).getOrElse(2000L)
-
   /** Instance-mode membership: representative collapse → blocking →
     * tau-edges → connected components → incident-edge probabilities.
     */
   private def instanceMembers(
-      spark: SparkSession,
       partials: Map[StructKey, KeyPartial],
       tau: Double,
       decay: Double,
       metricName: String,
       maxHeight: Int,
   ): Seq[(StructKey, String, Double)] = {
-    import spark.implicits._
-
     // --- collapse identical structural features ---
     // The similarity metric sees ONLY the ancestor label-sets (never
     // leaf values), so two subtrees with identical (levels, height,
@@ -529,16 +510,8 @@ object TreeClusterer {
     val reps = byRep.map(_._1).toArray.sortBy(_.key)
     graft.util.Spark.note("fit-profile", s"repCount=${reps.length}")
 
-    // --- tau-graph: adaptive local/distributed (see LocalTauGraphMaxRepsKey) ---
     val (labels, incident) =
-      if (reps.length <= localTauGraphMaxReps(spark))
-        timed("localTauGraph") { localTauGraph(reps, tau, decay, metricName, maxHeight) }
-      else timed("distributedTauGraph") {
-        val (l, i, release) =
-          distributedTauGraph(reps.toSeq.toDF(), tau, decay, metricName, maxHeight)
-        try (l.as[(String, String)].collect().toMap, i.as[(String, Double)].collect().toMap)
-        finally release()
-      }
+      timed("localTauGraph") { localTauGraph(reps, tau, decay, metricName, maxHeight) }
 
     // --- every key of a representative shares its component and
     // probability (no incident weight = not a member) ---
@@ -547,20 +520,15 @@ object TreeClusterer {
     }
   }
 
-  /** Typed projection of a representative row for the tau-graph.
-    * Public: Spark's generated SafeProjection cannot access a private
-    * class and would fall back to interpreted deserialization (after a
-    * logged compile failure) on every collect.
-    */
-  final case class RepRow(
+  /** One structural representative of the tau-graph. */
+  private final case class RepRow(
       key: String, mult: Long, height: Int, depth: Int, levels: Seq[LevelRow])
 
-  /** Driver-side tau-graph for a provably-small, key-sorted
-    * representative set: the SAME blocking (shared self-level entity
-    * label), height/depth-gap prune, min-key component labels and
-    * multiplicity-weighted incident probabilities as the distributed
-    * path — but zero Spark jobs instead of ~10 plus the iterative CC
-    * rounds, which at low rep counts are pure scheduler latency.
+  /** Driver-side tau-graph over the key-sorted representative set,
+    * which is bounded by schema variety, not data size: blocking on a
+    * shared self-level entity label, the reference height/depth-gap
+    * prune (similarity.py:456-461), min-key component labels and
+    * multiplicity-weighted incident probabilities. No Spark job.
     * Returns (rep key → component key, rep key → probability).
     */
   private def localTauGraph(
@@ -574,16 +542,18 @@ object TreeClusterer {
     val feats = rows.map(r => SubtreeFeature(r.levels.map(_.toFeature).toVector, 0, 0))
     val metric = SeqMetrics.byName(metricName)
 
-    // blocking on the self level's entity labels; rows are key-sorted so
-    // index order IS the distributed path's `a.key < b.key` order
+    // blocking on the self level's entity labels; rows are key-sorted,
+    // so index order is key order
     val byEnt = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Int]]
     for (i <- 0 until n; e <- rows(i).levels.head.ents)
       byEnt.getOrElseUpdate(e, scala.collection.mutable.ArrayBuffer.empty) += i
 
     // union-find: roots always merge max-under-min, so every root stays
-    // the minimum index (= minimum key) of its component — the same
-    // label the distributed min-propagation CC produces
+    // the minimum index (= minimum key) of its component. Every
+    // representative is a node: a feature with multiplicity ≥ 2 is a
+    // complete sim-1.0 subgraph in the uncollapsed graph and survives
+    // as a component even with no cross-feature edge
     val parent = Array.tabulate(n)(identity)
     def find(i: Int): Int = {
       var r = i
@@ -593,9 +563,10 @@ object TreeClusterer {
       r
     }
 
-    // probability accumulators over the UNCOLLAPSED graph (same formula
-    // as the distributed path: (m_F−1 twins at sim 1.0) + cross edges
-    // weighted by the other side's multiplicity)
+    // mean incident kept-edge similarity over the UNCOLLAPSED graph: a
+    // node of feature F has (m_F − 1) implicit sim-1.0 edges to its
+    // structural twins, and its edge to a node of feature G exists once
+    // per twin of G — prob = ((m_F−1) + Σ_G m_G·sim_FG) / ((m_F−1) + Σ_G m_G)
     val num = Array.tabulate(n)(i => (rows(i).mult - 1).toDouble)
     val den = Array.tabulate(n)(i => (rows(i).mult - 1).toDouble)
     val seen = scala.collection.mutable.HashSet.empty[Long]
@@ -624,86 +595,6 @@ object TreeClusterer {
       .collect { case i if den(i) > 0 => rows(i).key -> num(i) / den(i) }
       .toMap
     (labels, incident)
-  }
-
-  /** Distributed tau-graph: blocking join → UDF scoring → pointer-
-    * jumping connected components → incident-edge aggregation. The
-    * unbounded-rep-count path; results match localTauGraph exactly.
-    */
-  private def distributedTauGraph(
-      reps: DataFrame,
-      tau: Double,
-      decay: Double,
-      metricName: String,
-      maxHeight: Int,
-  ): (DataFrame, DataFrame, () => Unit) = {
-    // --- blocking join on shared entity label (representatives only) ---
-    val byEnt = reps
-      .select(col("key"), col("height"), col("depth"), explode(col("levels")(0)("ents")).as("ent"))
-    val rawPairs = byEnt.as("a")
-      .join(byEnt.as("b"),
-        col("a.ent") === col("b.ent") && col("a.key") < col("b.key") &&
-          // reference prune (similarity.py:456-461): skip pairs whose
-          // min(|Δheight|, |Δdepth|) ≥ maxHeight
-          least(
-            abs(col("a.height") - col("b.height")),
-            abs(col("a.depth") - col("b.depth"))) < maxHeight)
-      .select(col("a.key").as("ka"), col("b.key").as("kb"))
-      .distinct()
-
-    val metric = metricName
-    val d = decay
-    val scoreUdf = udf { (la: Seq[org.apache.spark.sql.Row], lb: Seq[org.apache.spark.sql.Row]) =>
-      Similarity.similarity(rowsToFeature(la), rowsToFeature(lb), SeqMetrics.byName(metric), d)
-    }
-    val edges = rawPairs
-      .join(reps.select(col("key").as("ka"), col("levels").as("la")), "ka")
-      .join(reps.select(col("key").as("kb"), col("levels").as("lb")), "kb")
-      .withColumn("sim", scoreUdf(col("la"), col("lb")))
-      .filter(col("sim") >= tau)
-      .select("ka", "kb", "sim")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // --- connected components of the tau-graph (shared pointer-jumping
-    // CC — O(log diameter) rounds, fails loudly if unconverged) ---
-    // every representative is seeded: a feature with multiplicity ≥ 2
-    // is a complete sim-1.0 subgraph in the uncollapsed graph and must
-    // survive as a component even with no cross-feature edge
-    val labels = graft.util.Graph.connectedComponents(
-      reps.select(col("key").as("node")),
-      edges.select(col("ka").as("src"), col("kb").as("dst")))
-
-    // --- membership probability: mean incident kept-edge similarity ---
-    // computed over the UNCOLLAPSED graph: a node with feature F has
-    // (mult_F − 1) implicit sim-1.0 edges to its structural twins, and
-    // its edge to a node of feature G exists once per twin of G — so
-    // prob = ((m_F−1)·1 + Σ_G m_G·sim_FG) / ((m_F−1) + Σ_G m_G).
-    val multByKey = reps.select(col("key"), col("mult"))
-    val crossIncident = edges
-      .select(col("ka").as("node"), col("kb").as("other"), col("sim"))
-      .union(edges.select(col("kb").as("node"), col("ka").as("other"), col("sim")))
-      .join(multByKey.withColumnRenamed("key", "other").withColumnRenamed("mult", "mOther"), "other")
-      .groupBy("node")
-      .agg(sum(col("mOther") * col("sim")).as("xNum"), sum(col("mOther")).as("xDen"))
-    val incident = multByKey.withColumnRenamed("key", "node")
-      .join(crossIncident, Seq("node"), "left")
-      .withColumn("num", (col("mult") - 1).cast("double") + coalesce(col("xNum"), lit(0.0)))
-      .withColumn("den", (col("mult") - 1).cast("double") + coalesce(col("xDen"), lit(0.0)))
-      .filter(col("den") > 0)
-      .select(col("node"), (col("num") / col("den")).as("prob"))
-
-    (labels, incident, () => {
-      edges.unpersist()
-      labels.unpersist()
-      ()
-    })
-  }
-
-  private def rowsToFeature(levels: Seq[org.apache.spark.sql.Row]): SubtreeFeature = {
-    val ls = levels.map { r =>
-      LevelFeature(r.getString(0), r.getString(1), r.getBoolean(2), r.getSeq[String](3).toSet)
-    }.toVector
-    SubtreeFeature(ls, 0, 0)
   }
 
   /** entity_labels (similarity.py:514-553): cluster the entity PARENTS

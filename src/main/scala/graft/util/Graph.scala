@@ -3,15 +3,16 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed graph utilities shared by the loaders and the clusterer. */
+/** Distributed graph utilities shared by the Cypher loader and
+  * near-duplicate resolution.
+  */
 object Graph {
 
   /** Above this many nodes OR edges the component computation runs
     * distributed; at or below it, one collect + driver union-find
     * replaces the ~10 jobs plus iterative pointer-jumping rounds that
-    * are pure scheduler latency on a provably-small graph. Same
-    * adaptive philosophy as the clusterer's local tau-graph cutover:
-    * near-dup resolution and test-scale property graphs have graphs
+    * are pure scheduler latency on a provably-small graph.
+    * Near-dup resolution and test-scale property graphs have graphs
     * bounded by PAIRED items (a small fraction of any corpus), while
     * corpus-scale loads blow past the threshold and keep the unbounded
     * path. Tune — or set 0 to force the distributed path — via the

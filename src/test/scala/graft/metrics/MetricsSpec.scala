@@ -89,6 +89,46 @@ class MetricsSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(ami - 4.0 / 7.0) < 1e-9, s"got $ami")
   }
 
+  test("property: EMI over margin-value histograms equals the per-cluster-pair sum") {
+    import org.apache.commons.math3.special.Gamma.logGamma
+    // the per-(a, b)-cluster loop the histogram form replaced
+    def reference(aCounts: Seq[Long], bCounts: Seq[Long], n: Long): Double = {
+      var emi = 0.0
+      val logN = math.log(n.toDouble)
+      for (ai <- aCounts; bj <- bCounts) {
+        var nij = math.max(1L, ai + bj - n)
+        while (nij <= math.min(ai, bj)) {
+          val term1 = nij.toDouble / n
+          val term2 = math.log(nij.toDouble) + logN - math.log(ai.toDouble) - math.log(bj.toDouble)
+          val logTerm3 =
+            logGamma(ai + 1.0) + logGamma(bj + 1.0) + logGamma(n - ai + 1.0) + logGamma(n - bj + 1.0) -
+              logGamma(n + 1.0) - logGamma(nij + 1.0) - logGamma(ai - nij + 1.0) -
+              logGamma(bj - nij + 1.0) - logGamma(n - ai - bj + nij + 1.0)
+          emi += term1 * term2 * math.exp(logTerm3)
+          nij += 1
+        }
+      }
+      emi
+    }
+    val rnd = new scala.util.Random(11L)
+    (1 to 300).foreach { _ =>
+      // random tables over a few labels per side; every third case adds
+      // one-sided singletons, the shape a snapshot comparison produces
+      val n0 = 1 + rnd.nextInt(60)
+      val (na, nb) = (1 + rnd.nextInt(6), 1 + rnd.nextInt(6))
+      val cells = Seq.fill(n0)((s"a${rnd.nextInt(na)}", s"b${rnd.nextInt(nb)}"))
+      val singles = if (rnd.nextInt(3) == 0) rnd.nextInt(40) else 0
+      val a = cells.map(_._1) ++ (0 until singles).map(i => s"a${i % na}")
+      val b = cells.map(_._2) ++ (0 until singles).map(i => s"s$i")
+      val aCounts = a.groupBy(identity).values.map(_.size.toLong).toSeq
+      val bCounts = b.groupBy(identity).values.map(_.size.toLong).toSeq
+      val n = a.size.toLong
+      val got = ClusterComparison.expectedMutualInfo(aCounts, bCounts, n)
+      val want = reference(aCounts, bCounts, n)
+      assert(math.abs(got - want) <= 1e-9, s"margins $aCounts vs $bCounts: $got vs $want")
+    }
+  }
+
   test("completeness goldens") {
     assert(ClusterComparison.completeness(
       Seq("0", "0", "1", "1"), Seq("1", "1", "0", "0")) == 1.0)

@@ -261,14 +261,14 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
       Ann.ivfTopK(emb, "vec_id", "embedding", 0L to 9L, 5)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaExpr = run()
-    // threshold 0 forces the formulation a 10^3–10^5-list index uses:
+    // the same 16 lists in the formulation a 10^3–10^5-list index uses:
     // the centroid set in ONE typedLit and the argmax/probe as
     // array_max/array_sort over transform(...). Exact argmax with the
     // same (s, cid) tie-break on both paths → identical output, not
     // merely similar recall.
-    spark.conf.set("spark.graft.ann.maxUnrolledLists", "0")
-    try assert(run() == viaExpr, "literal-path IVF must match the unrolled path exactly")
-    finally spark.conf.unset("spark.graft.ann.maxUnrolledLists")
+    val viaLit = Ann.ivfTopK(emb, "vec_id", "embedding", 0L to 9L, 5, 16, 4, 2, unrolled = false)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(viaLit == viaExpr, "literal-path IVF must match the unrolled path exactly")
   }
 
   test("IVF literal-path assignment preserves rows with duplicate ids") {
@@ -333,10 +333,17 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     def collectSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pq = collectSet(Ann.pqTopK(emb, "vec_id", "embedding", 0L to 9L, 5))
-    val full = collectSet(Ann.ivfAdcTopK(emb, "vec_id", "embedding", 0L to 9L, 5,
-      nLists = 16, nProbe = 16))
-    assert(full == pq, "nProbe = nLists must equal the exhaustive ADC ranking")
+    // with and without re-rank; 16 lists take the unrolled coarse
+    // assignment, 65 the literal one
+    for (rerank <- Seq(0, 50)) {
+      val pq = collectSet(Ann.pqTopK(emb, "vec_id", "embedding", 0L to 9L, 5, rerank = rerank))
+      for (nLists <- Seq(16, 65)) {
+        val full = collectSet(Ann.ivfAdcTopK(emb, "vec_id", "embedding", 0L to 9L, 5,
+          nLists = nLists, nProbe = nLists, rerank = rerank))
+        assert(full == pq,
+          s"nProbe = nLists = $nLists, rerank $rerank must equal the exhaustive ADC ranking")
+      }
+    }
   }
 
   test("IVFADC: probed shortlist + exact re-rank recovers recall; deterministic; empty queries") {
@@ -352,6 +359,32 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(recall >= 0.8, s"IVFADC reranked recall $recall")
     assert(run() == first, "IVFADC must be deterministic")
     assert(Ann.ivfAdcTopK(emb, "vec_id", "embedding", Seq(-1L), 5).count() == 0)
+  }
+
+  test("ADC query batches: an empty batch is empty, a query of the wrong dim fails loudly") {
+    import spark.implicits._
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    // queries come from the corpus, so the wrong-dim vectors ride in as
+    // corpus rows; training disqualifies them, the query check must not
+    val bad = Seq((100000L, Seq.fill(2)(1.0f)), (100001L, Seq.fill(70)(1.0f)))
+      .toDF("vec_id", "embedding")
+    val corpus = emb.union(bad)
+    val ops: Seq[(String, Seq[Long] => org.apache.spark.sql.DataFrame)] = Seq(
+      "pqTopK" -> (ids => Ann.pqTopK(corpus, "vec_id", "embedding", ids, 5)),
+      // 16 lists take the unrolled coarse assignment, 65 the literal one
+      "ivfAdcTopK, 16 lists" -> (ids =>
+        Ann.ivfAdcTopK(corpus, "vec_id", "embedding", ids, 5, nLists = 16, nProbe = 4)),
+      "ivfAdcTopK, 65 lists" -> (ids =>
+        Ann.ivfAdcTopK(corpus, "vec_id", "embedding", ids, 5, nLists = 65, nProbe = 8)))
+    ops.foreach { case (name, op) =>
+      assert(op(Seq(-1L)).count() == 0, s"$name: an empty batch must give no rows")
+      for ((qid, qdim) <- Seq(100000L -> 2, 100001L -> 70)) {
+        val ex = intercept[IllegalArgumentException](op(Seq(qid)))
+        assert(ex.getMessage.contains(s"query id=$qid has dim $qdim, index expects 64"),
+          s"$name: want the query dim check, got: ${ex.getMessage}")
+      }
+    }
   }
 
   test("quality classifier: linear, deterministic, bounded; empty docs fail") {

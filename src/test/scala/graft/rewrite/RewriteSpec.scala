@@ -3,7 +3,6 @@ package graft.rewrite
 import graft.SparkSpec
 import graft.core._
 import graft.model.{Forest, Group, Relation, RelationOrientation, Schema, TreeRow}
-import graft.similarity.TreeClusterer
 import graft.sources.{RelationalLoader, Testdata}
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
@@ -307,7 +306,7 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
       s"${jobs.get} jobs over $epochs epochs, budget ${5 * epochs} + $entryExit")
   }
 
-  test("customer rewrite matches its pinned golden across partitions, modes and tau-graph paths") {
+  test("customer rewrite matches its pinned golden across partitions and modes") {
     // golden: (treeId, tree) rows and epochsToConverge (-1 = cap hit)
     // of the instance and schema-only rewrites, recorded from the
     // join-based fit this one-pass fit replaced. Schema-only mode does
@@ -319,16 +318,13 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
     }.toMap
     val rows = lines.filterNot(_.startsWith("#")).map(_.split("\t", 3))
       .groupMap(_(0))(a => (a(1).toLong, a(2)))
-    val runs = Seq(
-      ("instance", "1", "2000"), ("instance", "7", "2000"), ("instance", "7", "-1"),
-      ("schema", "1", "2000"), ("schema", "7", "2000"))
-    runs.foreach { case (mode, parts, maxReps) =>
-      withConf("spark.sql.shuffle.partitions" -> parts,
-        TreeClusterer.LocalTauGraphMaxRepsKey -> maxReps) {
+    val runs = Seq(("instance", "1"), ("instance", "7"), ("schema", "1"), ("schema", "7"))
+    runs.foreach { case (mode, parts) =>
+      withConf("spark.sql.shuffle.partitions" -> parts) {
         val cfg = Rewrite.Config(tau = 0.7)
         val r = Rewrite.rewriteWithStats(customerForest(),
           if (mode == "schema") cfg.copy(schemaOnly = true, epochs = 8) else cfg)
-        val what = s"$mode, $parts shuffle partitions, localTauGraphMaxReps $maxReps"
+        val what = s"$mode, $parts shuffle partitions"
         assert(r.epochsToConverge.getOrElse(-1) == epochs(mode), what)
         assert(r.forest.collect().map(t => (t.treeId, TreeJson.toJson(t.tree))).sortBy(_._1).toSeq == rows(mode),
           what)

@@ -2,7 +2,8 @@ package graft.similarity
 
 import graft.SparkSpec
 import graft.core._
-import graft.model.Forest
+import graft.model.{Forest, TreeRow}
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 class SimilaritySpec extends AnyFunSuite with SparkSpec {
@@ -286,63 +287,26 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(7L))
     forests.foreach { treeStrs =>
       val forest = Forest.fromTrees(spark, treeStrs.map(SExpr.parse))
-      def run(): Map[String, (String, Double)] =
-        TreeClusterer.fit(forest, tau = 0.6, metricName = "jaccard")
-          .assignments.collect().map(a => a.key -> (a.cluster, a.prob)).toMap
-      val local = run()
-      spark.conf.set(TreeClusterer.LocalTauGraphMaxRepsKey, "-1")
-      val dist =
-        try run()
-        finally spark.conf.unset(TreeClusterer.LocalTauGraphMaxRepsKey)
-      assert(local.keySet == dist.keySet,
-        s"keys diverge on forest ${treeStrs.mkString(" | ")}")
-      local.foreach { case (key, (cluster, prob)) =>
-        val (dc, dp) = dist(key)
-        assert(cluster == dc && math.abs(prob - dp) < 1e-9,
-          s"$key: ($cluster,$prob) vs ($dc,$dp) on forest ${treeStrs.mkString(" | ")}")
+      def run(f: Dataset[TreeRow]): (Map[String, (String, Double)], Map[String, ClusterSummary]) = {
+        val r = TreeClusterer.fit(f, tau = 0.6, metricName = "jaccard")
+        (r.assignments.collect().map(a => a.key -> (a.cluster, a.prob)).toMap, r.model.clusters)
       }
-    }
-  }
-
-  test("local and distributed tau-graph paths produce identical results") {
-    // varied structures: twins, a near-duplicate family sharing entity
-    // labels (cross-feature edges), a noise subtree, an untyped root —
-    // exercises blocking, gap prune, multiplicity seeding, and naming
-    val trees = Seq(
-      SExpr.parse("(S (X (ENT::person Alice) (ENT::fruit apple)) (Y (ENT::person Alice)))"),
-      SExpr.parse("(S (X (ENT::person Bob) (ENT::fruit banana)) (Y (ENT::person Bob)))"),
-      SExpr.parse("(S (X2 (ENT::person Carol) (ENT::fruit cherry) (ENT::animal cat)))"),
-      SExpr.parse("(S (X2 (ENT::person Dave) (ENT::fruit date) (ENT::animal dog)))"),
-      SExpr.parse("(S (Z (ENT::qq 1) (ENT::ww 2)))"),
-    )
-    val forest = Forest.fromTrees(spark, trees)
-    def run(): (Map[String, (String, Double)], Map[String, ClusterSummary]) = {
-      val r = TreeClusterer.fit(forest, tau = 0.6, metricName = "jaccard")
-      (r.assignments.collect().map(a => a.key -> (a.cluster, a.prob)).toMap, r.model.clusters)
-    }
-    val local = run()
-    spark.conf.set(TreeClusterer.LocalTauGraphMaxRepsKey, "-1") // force distributed
-    val dist =
-      try run()
-      finally spark.conf.unset(TreeClusterer.LocalTauGraphMaxRepsKey)
-    assert(local._1.nonEmpty)
-    assert(local._1.keySet == dist._1.keySet, "assignment keys diverge between tau-graph paths")
-    local._1.foreach { case (key, (cluster, prob)) =>
-      val (dc, dp) = dist._1(key)
-      assert(cluster == dc, s"cluster of $key diverges")
-      // probabilities may differ by summation order only
-      assert(math.abs(prob - dp) < 1e-9, s"prob of $key diverges: $prob vs $dp")
-    }
-    assert(local._2.keySet == dist._2.keySet, "cluster names diverge between tau-graph paths")
-    local._2.foreach { case (name, c) =>
-      val d = dist._2(name)
-      assert(c.support == d.support && c.memberFeats == d.memberFeats, s"summary of $name diverges")
-      assert(math.abs(c.avgEntities - d.avgEntities) < 1e-9 &&
-        math.abs(c.avgDepth - d.avgDepth) < 1e-9)
-      // the kept top-K members: same features in the same order
-      assert(c.members.nonEmpty)
-      assert(c.members.map(_._1) == d.members.map(_._1), s"members of $name diverge")
-      c.members.zip(d.members).foreach { case ((_, p), (_, dp)) => assert(math.abs(p - dp) < 1e-9) }
+      val reference = run(forest)
+      def atPartitions(n: Int) = {
+        val before = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+        try run(forest) finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      }
+      // the fit's aggregate merges partials in task order and the
+      // tau-graph is scored on the driver: neither the shuffle width
+      // nor how the trees are spread over partitions may change a
+      // cluster, a probability or a kept member
+      Seq(
+        "1 shuffle partition" -> atPartitions(1),
+        "7 shuffle partitions" -> atPartitions(7),
+        "repartitioned forest" -> run(forest.repartition(3))).foreach { case (what, got) =>
+        assert(got == reference, s"$what diverges on forest ${treeStrs.mkString(" | ")}")
+      }
     }
   }
 
