@@ -110,9 +110,11 @@ object Bench {
     // stdout tail-capture has truncated this (long) line before, losing
     // the parsed totals — persist a copy so the full timing map is
     // always recoverable from disk
-    val copy = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "BENCH_LAST.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(copy), line + "\n")
-    catch { case _: Throwable => () }
+    val copy = benchFile(only, sys.env.get("SPARK_GRAFT_BENCH_FILE"))
+    copy.foreach { f =>
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(f), line + "\n")
+      catch { case _: Throwable => () }
+    }
     // the per-lane map again, split into lines that each fit a bounded
     // stdout tail; printed BEFORE the summary so the summary stays last
     laneParts(results.map { case (k, v, _) => (k, v) }).foreach(println)
@@ -126,10 +128,17 @@ object Bench {
     val errNames = results.collect { case (k, _, Some(_)) => graft.util.Json.quote(k) }
       .mkString("[", ",", "]")
     val summary =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","protocol":"min-of-N-r14","passes":$passes,"n_queries":${results.size},"n_errors":${results.count(_._3.isDefined)},"error_names":$errNames,"control":$control,"controls":$controlsJson,"pass_totals":$passTotalsJson,"bench_file":${graft.util.Json.quote(copy)},"sf":${graft.util.Json.quote(sfDir)}}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","protocol":"min-of-N-r14","passes":$passes,"n_queries":${results.size},"n_errors":${results.count(_._3.isDefined)},"error_names":$errNames,"control":$control,"controls":$controlsJson,"pass_totals":$passTotalsJson,"bench_file":${copy.fold("null")(graft.util.Json.quote)},"sf":${graft.util.Json.quote(sfDir)}}"""
     println(summary)
     spark.stop()
   }
+
+  /** Where the full line is copied: the explicit `SPARK_GRAFT_BENCH_FILE`
+    * if set, else `BENCH_LAST.json` for a full-suite run, else nowhere —
+    * a subset run must not replace the full-suite artifact.
+    */
+  def benchFile(subset: Option[Set[String]], explicit: Option[String]): Option[String] =
+    explicit.orElse(if (subset.isEmpty) Some("BENCH_LAST.json") else None)
 
   private def laneEntry(name: String, sec: Double): String =
     graft.util.Json.quote(name) + ":" + f"$sec%.3f"

@@ -15,11 +15,12 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * Scale story: a root's walk can only reach its undirected connected
   * component, so the graph is partitioned into components with
-  * distributed min-id label propagation (same machinery as the
-  * clusterer's tau-graph), nodes and edges are cogrouped per component,
-  * and every component builds its trees inside one task. Nothing
-  * data-sized is collected to the driver; the unit of memory is the
-  * largest component, not the graph.
+  * [[graft.util.Graph.connectedComponents]], nodes and edges are
+  * cogrouped per component, and every component builds its trees
+  * inside one task; the unit of task memory is the largest component,
+  * not the graph. A graph of at most `spark.graft.graph.localCCMaxRows`
+  * (default 100,000) nodes and edges is collected to the driver for
+  * union-find; larger ones run distributed min-id label propagation.
   */
 object CypherLoader {
 

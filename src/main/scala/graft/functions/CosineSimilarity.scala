@@ -95,53 +95,25 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object GraftFunctions {
 
-  /** Arity-checked builder shared by runtime registration and
-    * [[GraftExtensions]] — without the check, extra SQL arguments would
-    * be silently dropped and a missing one would surface as a raw
+  /** Idempotent per-session registration so `call_function` and plain
+    * SQL can resolve the expressions by name. Every builder checks its
+    * arity: without the check, extra SQL arguments would be silently
+    * dropped and a missing one would surface as a raw
     * IndexOutOfBoundsException instead of an analysis error.
     */
-  private[functions] val cosineBuilder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, s"graft_cosine requires exactly 2 arguments, got ${args.length}")
-    CosineSimilarity(args(0), args(1))
-  }
-
-  private[functions] val l2sqBuilder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, s"graft_l2sq requires exactly 2 arguments, got ${args.length}")
-    L2Squared(args(0), args(1))
-  }
-
-  private[functions] val pqAssignBuilder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, s"graft_pq_assign requires exactly 2 arguments, got ${args.length}")
-    PqAssignCode(args(0), args(1))
-  }
-
-  private[functions] val cosineArgmaxBuilder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, s"graft_cosine_argmax requires exactly 2 arguments, got ${args.length}")
-    ArgmaxCosine(args(0), args(1))
-  }
-
-  private[functions] val matVecBuilder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, s"graft_matvec requires exactly 2 arguments, got ${args.length}")
-    MatVec(args(0), args(1))
-  }
-
-  /** Idempotent per-session registration so `call_function` can resolve
-    * the expression by name. On a cluster deployment the same builder is
-    * injected via `SparkSessionExtensions` ([[GraftExtensions]]) instead.
-    */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", UnicodeNormalize.builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2sq", l2sqBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_assign", pqAssignBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine_argmax", cosineArgmaxBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_matvec", matVecBuilder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    def binary(name: String)(make: (Expression, Expression) => Expression): Unit =
+      registry.createOrReplaceTempFunction(name, { (args: Seq[Expression]) =>
+        require(args.length == 2, s"$name requires exactly 2 arguments, got ${args.length}")
+        make(args(0), args(1))
+      }, "built-in")
+    registry.createOrReplaceTempFunction("graft_nfc", UnicodeNormalize.builder, "built-in")
+    binary("graft_cosine")(CosineSimilarity(_, _))
+    binary("graft_l2sq")(L2Squared(_, _))
+    binary("graft_pq_assign")(PqAssignCode(_, _))
+    binary("graft_cosine_argmax")(ArgmaxCosine(_, _))
+    binary("graft_matvec")(MatVec(_, _))
   }
 
   /** Cosine similarity column over two array<double> columns. The

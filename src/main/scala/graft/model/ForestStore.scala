@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import java.nio.charset.StandardCharsets
@@ -27,33 +27,10 @@ import java.nio.charset.StandardCharsets
   *
   * Scale: snapshots are whole-forest parquet writes — the same cost the
   * rewrite loop already pays per epoch for its lineage-breaking
-  * checkpoints, but durable and addressable. On a cluster the root
-  * lives on HDFS/object storage where rename is atomic — or, for
-  * S3-like stores whose "rename" is a non-atomic copy+delete, in
-  * commit-by-marker mode (`atomicRename = false`):
-  *
-  *   - a transaction writes its parquet straight into a fresh
-  *     `snapshots/<name>/v<k>/` version directory (no staging, no
-  *     publish rename anywhere in the protocol);
-  *   - `commit()` then PUTs an empty `_COMMITTED` marker into that
-  *     directory — the single-object write that IS the commit point
-  *     (object-store PUTs are atomic even where renames are not);
-  *   - readers only ever see version directories carrying the marker
-  *     and serve the highest committed version, so a crash at any
-  *     instant leaves either the old committed version visible or the
-  *     new one, never a torn directory. Superseded and unmarked
-  *     version relics are reclaimed by the explicit `sweepAside()`
-  *     maintenance call, same single-writer contract as aside/ relics.
-  *
-  * A marker-mode store still reads plain (un-versioned) snapshot
-  * directories written earlier in rename mode — they were published by
-  * an atomic rename, so existence is their commit marker. The two
-  * modes must not WRITE the same root concurrently.
+  * checkpoints, but durable and addressable. The protocol needs a
+  * filesystem whose directory rename is atomic (local disk, HDFS).
   */
-final class ForestStore(
-    spark: SparkSession,
-    val root: String,
-    val atomicRename: Boolean = true) {
+final class ForestStore(spark: SparkSession, val root: String) {
 
   private val rootPath = new Path(root)
   private def fs: FileSystem = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -78,24 +55,17 @@ final class ForestStore(
       name.matches("[A-Za-z0-9._-]+") && !name.forall(_ == '.'),
       s"invalid snapshot name '$name'")
 
-  private def writeText(p: Path, s: String): Unit =
-    if (!atomicRename) {
-      // rename-less store: a direct overwrite-create models the
-      // single-object PUT, which object stores make atomic per object
-      // even though their renames are not
-      val out = fs.create(p, true)
-      try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    } else {
-      // publish via tmp + overwriting atomic rename so a concurrent reader
-      // never sees a half-written pointer and a crash never leaves the
-      // pointer missing (FileSystem.rename cannot overwrite, which would
-      // force a non-atomic delete-then-rename)
-      val tmp = new Path(p.getParent, p.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      val fc = FileContext.getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, p, Options.Rename.OVERWRITE)
-    }
+  // publish via tmp + overwriting atomic rename so a concurrent reader
+  // never sees a half-written pointer and a crash never leaves the
+  // pointer missing (FileSystem.rename cannot overwrite, which would
+  // force a non-atomic delete-then-rename)
+  private def writeText(p: Path, s: String): Unit = {
+    val tmp = new Path(p.getParent, p.getName + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val fc = FileContext.getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
+    fc.rename(tmp, p, Options.Rename.OVERWRITE)
+  }
 
   private def readText(p: Path): Option[String] =
     if (!fs.exists(p)) None
@@ -105,49 +75,9 @@ final class ForestStore(
       finally in.close()
     }
 
-  /** The store this one was forked from, if any (same rename mode: the
-    * parent chain lives on the same storage technology).
-    */
+  /** The store this one was forked from, if any. */
   def parent: Option[ForestStore] =
-    readText(parentFile).map(new ForestStore(spark, _, atomicRename))
-
-  // ---- commit-by-marker mode internals -------------------------------
-
-  private def markerFile(dir: Path) = new Path(dir, "_COMMITTED")
-
-  private def versionDirs(name: String): Array[Path] =
-    Option(fs.globStatus(new Path(snapDir(name), "v*"))).getOrElse(Array.empty)
-      .map(_.getPath).filter(_.getName.matches("v[0-9]+"))
-
-  private def versionOf(p: Path): Long = p.getName.drop(1).toLong
-
-  /** The directory serving `name` in marker mode: the highest version
-    * carrying a `_COMMITTED` marker, else the legacy fallback. A
-    * directory holding only unmarked versions is an in-flight or
-    * crashed write — invisible.
-    */
-  private def committedVersionDir(name: String): Option[Path] = {
-    val committed = versionDirs(name).filter(p => fs.exists(markerFile(p)))
-    if (committed.nonEmpty) Some(committed.maxBy(versionOf)) else legacyDir(name)
-  }
-
-  /** A rename-mode snapshot read by a marker-mode store: plain parquet
-    * files directly in the name directory. Its atomic publish was its
-    * commit marker, so file presence — not a `_COMMITTED` marker — is
-    * the committed signal (keyed on files, not on the absence of
-    * version dirs, so the legacy data stays visible while a migrating
-    * write's first unmarked `v1` is in flight beside it).
-    */
-  private def legacyDir(name: String): Option[Path] =
-    if (fs.exists(snapDir(name)) &&
-        Option(fs.listStatus(snapDir(name))).getOrElse(Array.empty).exists(_.isFile))
-      Some(snapDir(name))
-    else None
-
-  private def nextVersionDir(name: String): Path = {
-    val next = versionDirs(name).map(versionOf).foldLeft(0L)(math.max) + 1
-    new Path(snapDir(name), s"v$next")
-  }
+    readText(parentFile).map(new ForestStore(spark, _))
 
   /** Name of the current snapshot. A missing HEAD file with committed
     * local snapshots (a store written before HEAD updates were atomic,
@@ -158,42 +88,25 @@ final class ForestStore(
   def head: Option[String] =
     readText(headFile).orElse(newestLocalSnapshot).orElse(parent.flatMap(_.head))
 
-  private def newestLocalSnapshot: Option[String] =
-    if (!atomicRename) {
-      // marker mode: only names with a committed version count, and the
-      // commit instant is the marker PUT — its mtime, not the data
-      // directory's (which moves with retried writes)
-      val stamped = Option(fs.globStatus(new Path(root, "snapshots/*")))
-        .getOrElse(Array.empty).map(_.getPath.getName)
-        .flatMap { n =>
-          committedVersionDir(n).map { d =>
-            val m = markerFile(d)
-            val stamp =
-              if (fs.exists(m)) fs.getFileStatus(m).getModificationTime
-              else fs.getFileStatus(d).getModificationTime // legacy dir
-            (n, stamp)
-          }
-        }
-      stamped.sortWith { (a, b) =>
-        a._2 < b._2 || (a._2 == b._2 && naturalCompare(a._1, b._1) < 0)
-      }.lastOption.map(_._1)
-    } else {
-      // aside/ entries count too: after a crashed re-commit the only copy
-      // of a name can live there (resolve() serves it), and skipping it
-      // would recover HEAD to an older snapshot or a fork parent's
-      val snaps = Option(fs.globStatus(new Path(root, "snapshots/*"))).getOrElse(Array.empty)
-      val snapNames = snaps.map(_.getPath.getName).toSet
-      val asides = Option(fs.globStatus(new Path(root, "aside/*"))).getOrElse(Array.empty)
-        .filterNot(s => snapNames.contains(s.getPath.getName))
-      (snaps ++ asides)
-        .sortWith { (a, b) =>
-          a.getModificationTime < b.getModificationTime ||
-          (a.getModificationTime == b.getModificationTime &&
-            naturalCompare(a.getPath.getName, b.getPath.getName) < 0)
-        }
-        .lastOption
-        .map(_.getPath.getName)
-    }
+  // aside/ entries count too: after a crashed re-commit the only copy
+  // of a name can live there (resolve() serves it), and skipping it
+  // would recover HEAD to an older snapshot or a fork parent's
+  private def newestLocalSnapshot: Option[String] = {
+    val snaps = glob("snapshots/*")
+    val snapNames = snaps.map(_.getPath.getName).toSet
+    val asides = glob("aside/*").filterNot(s => snapNames.contains(s.getPath.getName))
+    (snaps ++ asides)
+      .sortWith { (a, b) =>
+        a.getModificationTime < b.getModificationTime ||
+        (a.getModificationTime == b.getModificationTime &&
+          naturalCompare(a.getPath.getName, b.getPath.getName) < 0)
+      }
+      .lastOption
+      .map(_.getPath.getName)
+  }
+
+  private def glob(pattern: String): Array[FileStatus] =
+    Option(fs.globStatus(new Path(root, pattern))).getOrElse(Array.empty)
 
   /** Numeric-aware name ordering for the modification-time tiebreak:
     * unpadded sequences like epoch_9 / epoch_10 must recover to
@@ -225,19 +138,13 @@ final class ForestStore(
     * resolve() uses.
     */
   def list: Seq[String] = {
-    val names = Option(fs.globStatus(new Path(root, "snapshots/*"))).getOrElse(Array.empty)
-      .toSeq.map(_.getPath.getName)
-    val local =
-      if (!atomicRename) names.filter(n => committedVersionDir(n).isDefined).distinct.sorted
-      else (names ++ Option(fs.globStatus(new Path(root, "aside/*"))).getOrElse(Array.empty)
-        .toSeq.map(_.getPath.getName)).distinct.sorted
+    val local = (glob("snapshots/*") ++ glob("aside/*")).toSeq.map(_.getPath.getName).distinct.sorted
     local ++ parent.toSeq.flatMap(_.list.filterNot(local.contains))
   }
 
   private def resolve(name: String): Option[Path] = {
     val local =
-      if (!atomicRename) committedVersionDir(name)
-      else if (fs.exists(snapDir(name))) Some(snapDir(name))
+      if (fs.exists(snapDir(name))) Some(snapDir(name))
       // a crash between a re-commit's move-aside and its publish rename
       // leaves the committed data parked in aside/ — still loadable
       else if (fs.exists(asideDir(name))) Some(asideDir(name))
@@ -264,19 +171,10 @@ final class ForestStore(
   final class Tx private[ForestStore] (name: String) {
     private var open = true
     private var written = false
-    // marker mode: the fresh version directory this tx writes into,
-    // chosen at first write so retries overwrite the same one
-    private var pendingVersion: Option[Path] = None
 
     def write(forest: Dataset[TreeRow]): Tx = {
       require(open, s"transaction '$name' already closed")
-      val dest =
-        if (atomicRename) stageDir(name)
-        else {
-          if (pendingVersion.isEmpty) pendingVersion = Some(nextVersionDir(name))
-          pendingVersion.get
-        }
-      forest.write.mode("overwrite").parquet(dest.toString)
+      forest.write.mode("overwrite").parquet(stageDir(name).toString)
       written = true
       this
     }
@@ -286,21 +184,6 @@ final class ForestStore(
       // Tx state, not a filesystem probe: a stale staging dir left by a
       // crashed earlier run must never be published as this transaction's
       require(written, s"transaction '$name' committed before write")
-      if (!atomicRename) {
-        // commit-by-marker: the data already sits in its final versioned
-        // directory; PUTting the marker is the commit point. No rename
-        // is ever issued. Unmarked version dirs from crashed writers are
-        // invisible to readers and never published by this tx (it only
-        // marks the directory it wrote). Superseded versions stay on
-        // disk until sweepAside() — deleting them here would race a
-        // reader that just resolved the old version.
-        val dir = pendingVersion.get
-        val out = fs.create(markerFile(dir), true)
-        out.close()
-        writeText(headFile, name)
-        open = false
-        return
-      }
       fs.mkdirs(new Path(root, "snapshots"))
       // re-commit of an existing name: park the old snapshot in aside/
       // rather than deleting it, so no crash instant leaves the name
@@ -324,8 +207,7 @@ final class ForestStore(
     }
 
     def abort(): Unit = {
-      if (atomicRename) fs.delete(stageDir(name), true)
-      else pendingVersion.foreach(fs.delete(_, true)) // unmarked = invisible anyway
+      fs.delete(stageDir(name), true)
       open = false
     }
   }
@@ -336,44 +218,23 @@ final class ForestStore(
     */
   def begin(name: String): Tx = {
     requireValid(name)
-    if (atomicRename) fs.delete(stageDir(name), true)
-    // marker mode: no staging to clear — a crashed writer's unmarked
-    // version dir is invisible to readers, cannot be published by this
-    // tx (which marks only the dir it wrote), and is reclaimed by
-    // sweepAside()
+    fs.delete(stageDir(name), true)
     new Tx(name)
   }
 
-  /** Explicit maintenance: reclaim disk held by relics that readers can
-    * no longer reach. Rename mode: aside/ copies whose primary snapshot
-    * exists (left by a crash in a completed publish's final cleanup
-    * instant). Marker mode: unmarked version dirs (crashed writes) and
-    * committed versions superseded by a higher committed one. Shadowed
-    * relics are harmless — resolve() never serves them — they just cost
-    * disk. NOT run implicitly by begin()/commit(): an exists-then-check
-    * sweep racing another writer's in-flight commit of the same name
-    * could destroy that name's only copy (in marker mode, an unmarked
-    * dir may be mid-write and about to be marked), so call this from a
-    * single-writer maintenance context only.
+  /** Explicit maintenance: reclaim disk held by aside/ copies whose
+    * primary snapshot exists (left by a crash in a completed publish's
+    * final cleanup instant). Shadowed relics are harmless — resolve()
+    * never serves them — they just cost disk. NOT run implicitly by
+    * begin()/commit(): an exists-then-check sweep racing another
+    * writer's in-flight commit of the same name could destroy that
+    * name's only copy, so call this from a single-writer maintenance
+    * context only.
     */
   def sweepAside(): Unit =
-    if (atomicRename)
-      Option(fs.globStatus(new Path(root, "aside/*"))).getOrElse(Array.empty)
-        .map(_.getPath)
-        .filter(p => fs.exists(snapDir(p.getName)))
-        .foreach(p => fs.delete(p, true))
-    else
-      Option(fs.globStatus(new Path(root, "snapshots/*"))).getOrElse(Array.empty)
-        .map(_.getPath.getName).foreach { n =>
-          val vs = versionDirs(n)
-          val top = vs.filter(p => fs.exists(markerFile(p)))
-            .map(versionOf).foldLeft(-1L)(math.max)
-          // unmarked dirs are crash relics (nothing is in flight in a
-          // single-writer maintenance window); marked ones below the top
-          // committed version are superseded history
-          vs.filter(p => !fs.exists(markerFile(p)) || versionOf(p) < top)
-            .foreach(p => fs.delete(p, true))
-        }
+    glob("aside/*").map(_.getPath)
+      .filter(p => fs.exists(snapDir(p.getName)))
+      .foreach(p => fs.delete(p, true))
 
   /** One-shot commit: stage + publish + move HEAD. */
   def commit(name: String, forest: Dataset[TreeRow]): Unit =
@@ -393,7 +254,7 @@ final class ForestStore(
     * this one, and whose commits never touch it.
     */
   def fork(newRoot: String): ForestStore = {
-    val f = new ForestStore(spark, newRoot, atomicRename)
+    val f = new ForestStore(spark, newRoot)
     fs.mkdirs(new Path(newRoot))
     f.writeText(f.parentFile, root)
     f

@@ -1,13 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing for training-data pipelines: media
-  * (image/audio/video) travels as an opaque `binary` column plus a typed
-  * metadata struct; decode / feature-extraction / resize / frame-sample
-  * run per partition in bounded batches.
+  * (image/audio/video) travels as an opaque `binary` column; decode /
+  * feature-extraction / resize / frame-sample run per partition in
+  * bounded batches.
   *
   * Version pin: the batch stages consume `df.queryExecution.toRdd` —
   * `InternalRow` without a deserialization pass, the JVM analogue of
@@ -16,7 +15,7 @@ import org.apache.spark.sql.types._
   * 4.1.x (field layout also asserted by MultimodalSpec), re-check on
   * any Spark major upgrade.
   *
-  * All three media halves are REAL, dependency-free:
+  * One real, dependency-free codec per medium:
   * - IMAGE: [[Multimodal.ImageIoCodec]] decodes PNG/JPEG/BMP/GIF
   *   through the JDK's `javax.imageio` (header-only dimension probe,
   *   full decode, resize, deterministic gray-PNG fixture encoder).
@@ -27,49 +26,17 @@ import org.apache.spark.sql.types._
   *   convention: one image payload per `00dc` chunk) and each frame
   *   decodes through the image codec — [[videoFeatures]] /
   *   [[videoFrameSample]].
-  * Compressed codecs beyond these (MP3/AAC, H.264, …) genuinely are
-  * absent from this environment; [[StubCodec]] remains ONLY as the
-  * deterministic stand-in behind the historical `media_features`
-  * lane's metadata arithmetic. The Spark-side contract — schema, batch
-  * shape, partition processing, null/empty handling — is identical
-  * across all lanes, so an FFmpeg-backed codec drops in without
-  * touching the plumbing.
+  * Compressed codecs beyond these (MP3/AAC, H.264, …) need libraries
+  * the JDK does not ship. The Spark-side contract — batch shape,
+  * partition processing, null/empty handling — is one helper
+  * ([[perPayload]]) shared by the feature and resize stages, so an
+  * FFmpeg-backed codec drops in without touching the plumbing.
   */
 object Multimodal {
 
-  /** Typed metadata carried next to the opaque payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("mime", StringType),
-    StructField("n_bytes", LongType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)))
-
-  /** STUB decoder — deterministic fake in place of a real image/audio
-    * codec (??? in spirit: the real implementation needs libs absent
-    * from this container). Dimensions are pure functions of the payload
-    * so tests and oracles can reproduce them.
-    */
-  object StubCodec {
-    def width(bytes: Array[Byte]): Int = (bytes.length % 640) + 1
-    def height(bytes: Array[Byte]): Int = ((bytes.length * 7) % 480) + 1
-    def frames(bytes: Array[Byte]): Int = (bytes.length % 24) + 1
-
-    /** "Decode" to a fake row-major grayscale plane: byte i of the plane
-      * is payload(i mod n). Deterministic, size-bounded.
-      */
-    def decode(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      val out = new Array[Byte](math.min(w * h, 1 << 16))
-      var i = 0
-      while (i < out.length) { out(i) = bytes(i % math.max(bytes.length, 1)); i += 1 }
-      out
-    }
-  }
-
   /** REAL image codec for the image half of the multimodal surface —
     * `javax.imageio` ships in the JDK, so PNG/JPEG/BMP/GIF decode needs
-    * no external library (the audio/video half keeps [[StubCodec]]:
-    * those codecs genuinely are absent from this environment).
+    * no external library; video frames decode through it too.
     *
     * Scale notes: `ImageIO.setUseCache(false)` keeps header probes and
     * decodes on heap instead of spilling a temp file per image per
@@ -168,8 +135,7 @@ object Multimodal {
   /** REAL audio codec for the WAV half of the multimodal surface —
     * `javax.sound.sampled` ships in the JDK, so RIFF/WAVE PCM decode
     * needs no external library (compressed formats — MP3, AAC, Vorbis —
-    * genuinely are absent from this environment and stay with the
-    * video stub).
+    * need libraries the JDK does not ship).
     *
     * Scale notes: [[info]] parses ONLY the header through
     * `AudioSystem.getAudioFileFormat` — at 100 TB of media you must not
@@ -260,12 +226,29 @@ object Multimodal {
     }
   }
 
-  /** Real audio feature extraction (same partition-batch shape as
-    * [[extractFeatures]], real WAV codec): header format + exact
-    * integer amplitude sums per clip, `duration_ms` by integer
-    * arithmetic. Corrupt or non-WAV payloads degrade to a row with
-    * `ok = false` and zeroed features instead of failing the job — at
-    * corpus scale some fraction of scraped media is always broken.
+  /** Runs `f` on every (id, payload) of `df` over bounded per-partition
+    * batches — the Scala shape of a pandas-UDF/mapInPandas media stage:
+    * rows stream through in groups of `batchSize`, the boundary where a
+    * codec would amortize decoder initialization.
+    */
+  private def perPayload(df: DataFrame, idCol: String, binCol: String, batchSize: Int, outSchema: StructType)(
+      f: (Long, Array[Byte]) => Row): DataFrame = {
+    val idIdx = df.schema.fieldIndex(idCol)
+    val binIdx = df.schema.fieldIndex(binCol)
+    val rows = df.queryExecution.toRdd.mapPartitions { it =>
+      // extract fields BEFORE buffering: Spark reuses the InternalRow
+      // instance, so grouping raw rows would replicate the last row
+      it.map(r => (r.getLong(idIdx), r.getBinary(binIdx)))
+        .grouped(batchSize).flatMap(_.iterator.map(f.tupled))
+    }
+    df.sparkSession.createDataFrame(rows, outSchema)
+  }
+
+  /** Real audio feature extraction: header format + exact integer
+    * amplitude sums per clip, `duration_ms` by integer arithmetic.
+    * Corrupt or non-WAV payloads degrade to a row with `ok = false` and
+    * zeroed features instead of failing the job — at corpus scale some
+    * fraction of scraped media is always broken.
     */
   def audioFeatures(
       df: DataFrame,
@@ -273,7 +256,6 @@ object Multimodal {
       binCol: String,
       batchSize: Int = 64,
   ): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("ok", BooleanType),
@@ -283,29 +265,20 @@ object Multimodal {
       StructField("n_samples", LongType),
       StructField("sum_amplitude", LongType),
       StructField("duration_ms", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rows = df.queryExecution.toRdd.mapPartitions { it =>
-      val fields = it.map(r => (r.getLong(idIdx), r.getBinary(binIdx)))
-      fields.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { case (id, bytes) =>
-          WavCodec.sumSamples(bytes) match {
-            case Some((info, sum, n)) =>
-              Row(id, true, info.sampleRate, info.channels, info.nFrames, n, sum,
-                info.nFrames * 1000L / info.sampleRate)
-            case None => Row(id, false, 0, 0, 0L, 0L, 0L, 0L)
-          }
-        }
+    perPayload(df, idCol, binCol, batchSize, outSchema) { (id, bytes) =>
+      WavCodec.sumSamples(bytes) match {
+        case Some((info, sum, n)) =>
+          Row(id, true, info.sampleRate, info.channels, info.nFrames, n, sum,
+            info.nFrames * 1000L / info.sampleRate)
+        case None => Row(id, false, 0, 0, 0L, 0L, 0L, 0L)
       }
     }
-    spark.createDataFrame(rows, outSchema)
   }
 
-  /** Real image feature extraction (same partition-batch shape as
-    * [[extractFeatures]], real codec): header dims + exact luminance
-    * sums per image. Corrupt or non-image payloads degrade to a row
-    * with `ok = false` and zeroed features instead of failing the job —
-    * at corpus scale some fraction of scraped media is always broken.
+  /** Real image feature extraction: header dims + exact luminance sums
+    * per image. Corrupt or non-image payloads degrade to a row with
+    * `ok = false` and zeroed features instead of failing the job — at
+    * corpus scale some fraction of scraped media is always broken.
     */
   def imageFeatures(
       df: DataFrame,
@@ -313,7 +286,6 @@ object Multimodal {
       binCol: String,
       batchSize: Int = 64,
   ): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("ok", BooleanType),
@@ -321,56 +293,37 @@ object Multimodal {
       StructField("height", IntegerType),
       StructField("n_samples", LongType),
       StructField("sum_luma", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rows = df.queryExecution.toRdd.mapPartitions { it =>
-      val fields = it.map(r => (r.getLong(idIdx), r.getBinary(binIdx)))
-      fields.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { case (id, bytes) =>
-          ImageIoCodec.decode(bytes) match {
-            case Some(img) =>
-              val (sum, n) = ImageIoCodec.sumSamples(img)
-              Row(id, true, img.getWidth, img.getHeight, n, sum)
-            case None => Row(id, false, 0, 0, 0L, 0L)
-          }
-        }
+    perPayload(df, idCol, binCol, batchSize, outSchema) { (id, bytes) =>
+      ImageIoCodec.decode(bytes) match {
+        case Some(img) =>
+          val (sum, n) = ImageIoCodec.sumSamples(img)
+          Row(id, true, img.getWidth, img.getHeight, n, sum)
+        case None => Row(id, false, 0, 0, 0L, 0L)
       }
     }
-    spark.createDataFrame(rows, outSchema)
   }
 
   /** Real image resize → PNG bytes (null for undecodable payloads). */
   def imageResize(df: DataFrame, idCol: String, binCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("resized_png", BinaryType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rows = df.queryExecution.toRdd.mapPartitions { it =>
-      it.map { internal =>
-        val id = internal.getLong(idIdx)
-        ImageIoCodec.decode(internal.getBinary(binIdx)) match {
-          case Some(img) => Row(id, ImageIoCodec.resizePng(img, w, h))
-          case None      => Row(id, null)
-        }
-      }
+    perPayload(df, idCol, binCol, 64, outSchema) { (id, bytes) =>
+      Row(id, ImageIoCodec.decode(bytes).map(ImageIoCodec.resizePng(_, w, h)).orNull)
     }
-    spark.createDataFrame(rows, outSchema)
   }
 
-  /** REAL video feature extraction (same partition-batch shape as
-    * [[extractFeatures]], real codecs end to end): the RIFF/AVI
-    * container walk ([[RiffAvi.frames]]) yields the frame payloads,
-    * each decoded through the JDK image codec; features are the frame
-    * count, first-frame dimensions, and the exact integer luminance
-    * sum across every decodable frame. Corrupt containers degrade to
-    * `ok = false` rows; corrupt individual frames are skipped (counted
-    * in `n_frames` as container chunks, excluded from the sums) — at
-    * corpus scale some fraction of scraped media is always broken.
-    * This decodes EVERY frame (the fixtures are small); the 100 TB
-    * shape samples frames first via [[videoFrameSample]], which walks
-    * container structure only.
+  /** REAL video feature extraction, real codecs end to end: the
+    * RIFF/AVI container walk ([[RiffAvi.frames]]) yields the frame
+    * payloads, each decoded through the JDK image codec; features are
+    * the frame count, first-frame dimensions, and the exact integer
+    * luminance sum across every decodable frame. Corrupt containers
+    * degrade to `ok = false` rows; corrupt individual frames are skipped
+    * (counted in `n_frames` as container chunks, excluded from the
+    * sums) — at corpus scale some fraction of scraped media is always
+    * broken. This decodes EVERY frame (the fixtures are small); the
+    * 100 TB shape samples frames first via [[videoFrameSample]], which
+    * walks container structure only.
     */
   def videoFeatures(
       df: DataFrame,
@@ -378,7 +331,6 @@ object Multimodal {
       binCol: String,
       batchSize: Int = 16,
   ): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("ok", BooleanType),
@@ -387,33 +339,25 @@ object Multimodal {
       StructField("height", IntegerType),
       StructField("n_samples", LongType),
       StructField("sum_luma", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rows = df.queryExecution.toRdd.mapPartitions { it =>
-      val fields = it.map(r => (r.getLong(idIdx), r.getBinary(binIdx)))
-      fields.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { case (id, bytes) =>
-          RiffAvi.frames(bytes) match {
-            case None => Row(id, false, 0, 0, 0, 0L, 0L)
-            case Some(frameBytes) =>
-              var sum = 0L
-              var samples = 0L
-              var w = 0
-              var h = 0
-              frameBytes.foreach { fb =>
-                ImageIoCodec.decode(fb).foreach { img =>
-                  if (w == 0) { w = img.getWidth; h = img.getHeight }
-                  val (s, n) = ImageIoCodec.sumSamples(img)
-                  sum += s
-                  samples += n
-                }
-              }
-              Row(id, true, frameBytes.length, w, h, samples, sum)
+    perPayload(df, idCol, binCol, batchSize, outSchema) { (id, bytes) =>
+      RiffAvi.frames(bytes) match {
+        case None => Row(id, false, 0, 0, 0, 0L, 0L)
+        case Some(frameBytes) =>
+          var sum = 0L
+          var samples = 0L
+          var w = 0
+          var h = 0
+          frameBytes.foreach { fb =>
+            ImageIoCodec.decode(fb).foreach { img =>
+              if (w == 0) { w = img.getWidth; h = img.getHeight }
+              val (s, n) = ImageIoCodec.sumSamples(img)
+              sum += s
+              samples += n
+            }
           }
-        }
+          Row(id, true, frameBytes.length, w, h, samples, sum)
       }
     }
-    spark.createDataFrame(rows, outSchema)
   }
 
   /** Deterministic frame sampling over a REAL container: every k-th
@@ -443,91 +387,6 @@ object Multimodal {
             case (fb, i) if i % everyK == 0 => Row(id, i, fb)
           }
         }
-      }
-    }
-    spark.createDataFrame(rows, outSchema)
-  }
-
-  /** Attach the typed metadata struct to an opaque binary column —
-    * column-function only (codegen-friendly): n_bytes is exact; the
-    * dimensions use the stub's arithmetic.
-    */
-  def withMediaMeta(df: DataFrame, binCol: String, mime: String): DataFrame =
-    df.withColumn("media_meta", struct(
-      lit(mime).as("mime"),
-      length(col(binCol)).cast("long").as("n_bytes"),
-      (length(col(binCol)) % 640 + 1).cast("int").as("width"),
-      ((length(col(binCol)) * 7) % 480 + 1).cast("int").as("height"),
-      (length(col(binCol)) % 24 + 1).cast("int").as("n_frames")))
-
-  /** Feature extraction over bounded per-partition batches — the Scala
-    * shape of a pandas-UDF/mapInPandas media stage: rows stream through
-    * in groups of `batchSize` so a real codec could amortize model or
-    * decoder initialization per batch.
-    */
-  def extractFeatures(
-      df: DataFrame,
-      idCol: String,
-      binCol: String,
-      batchSize: Int = 64,
-  ): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("n_bytes", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("mean_byte", DoubleType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-
-    val rows = df.queryExecution.toRdd.mapPartitions { it =>
-      // extract fields BEFORE buffering: Spark reuses the InternalRow
-      // instance, so grouping raw rows would replicate the last row
-      val fields = it.map(r => (r.getLong(idIdx), r.getBinary(binIdx)))
-      fields.grouped(batchSize).flatMap { batch =>
-        // batch boundary = where a real decoder would initialize once
-        batch.iterator.map { case (id, bytes) =>
-          if (bytes == null || bytes.isEmpty)
-            Row(id, 0L, 0, 0, 0.0)
-          else {
-            val w = StubCodec.width(bytes)
-            val h = StubCodec.height(bytes)
-            val plane = StubCodec.decode(bytes, w, h)
-            var sum = 0L
-            plane.foreach(b => sum += (b & 0xff))
-            Row(id, bytes.length.toLong, w, h, sum.toDouble / plane.length)
-          }
-        }
-      }
-    }
-    spark.createDataFrame(rows, outSchema)
-  }
-
-  /** Deterministic frame sampling: every k-th frame index up to the
-    * stub's frame count — `explode` keeps it relational.
-    */
-  def sampleFrames(df: DataFrame, idCol: String, binCol: String, everyK: Int = 4): DataFrame =
-    df.select(
-      col(idCol).as("id"),
-      explode(sequence(lit(0), (length(col(binCol)) % 24) , lit(everyK))).as("frame_idx"))
-
-  /** Deterministic "resize": truncate/refill the fake plane to the target
-    * box — per-row, codegen-unfriendly by nature (binary transform), so
-    * it lives behind the same partition-batch shape.
-    */
-  def resize(df: DataFrame, idCol: String, binCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("resized", BinaryType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rows = df.queryExecution.toRdd.mapPartitions { it =>
-      it.map { internal =>
-        val bytes = internal.getBinary(binIdx)
-        val safe = if (bytes == null || bytes.isEmpty) Array[Byte](0) else bytes
-        Row(internal.getLong(idIdx), StubCodec.decode(safe, w, h).take(w * h))
       }
     }
     spark.createDataFrame(rows, outSchema)

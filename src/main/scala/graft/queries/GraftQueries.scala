@@ -1333,17 +1333,7 @@ object GraftQueries {
         .filter(org.apache.spark.sql.functions.col("stat").startsWith("total_"))
     }),
 
-    // Multimodal plumbing: documents' text bytes as an opaque binary
-    // payload through the stub decode + feature extraction (mean_byte
-    // dropped here: the fake-plane average has no SQL oracle)
-    "media_features_documents" -> ((s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text").cast("binary").as("media"))
-      Multimodal.extractFeatures(docs, "doc_id", "media").drop("mean_byte")
-    }),
-
-    // REAL image decode (JDK ImageIO — no stub): per document a
+    // REAL image decode (JDK ImageIO): per document a
     // deterministic 8-bit gray PNG is encoded (dims and pixels pure
     // functions of doc_id), then decoded back through the real codec
     // and feature-extracted. PNG gray is lossless, so width/height and
@@ -1366,7 +1356,7 @@ object GraftQueries {
           col("n_samples"), col("sum_luma"))
     }),
 
-    // REAL WAV decode (JDK javax.sound.sampled — no stub): per document
+    // REAL WAV decode (JDK javax.sound.sampled): per document
     // a deterministic PCM-16 WAV is encoded (rate/channels/frames and
     // every sample pure functions of doc_id), then decoded back through
     // the real codec and feature-extracted. WAV PCM is lossless, so the
@@ -1393,7 +1383,7 @@ object GraftQueries {
     }),
 
     // REAL video decode (RIFF/AVI container walk + per-frame JDK image
-    // decode — no stub): per document a deterministic AVI is encoded
+    // decode): per document a deterministic AVI is encoded
     // (frame count/dims and every pixel pure functions of doc_id and
     // the frame index, frames stored as lossless gray PNGs per the
     // container's one-image-per-00dc convention), then the container is
@@ -2261,13 +2251,6 @@ object GraftQueries {
       """SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
         |       CAST(n_clusters AS BIGINT) AS n_clusters
         |FROM (VALUES (3000, 1), (4500, 1), (6000, 1)) AS t(cluster_size, n_clusters)""".stripMargin,
-
-    "media_features_documents" ->
-      """SELECT doc_id AS id,
-        |       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |       CAST(octet_length(encode(text)) % 640 + 1 AS INTEGER) AS width,
-        |       CAST((octet_length(encode(text)) * 7) % 480 + 1 AS INTEGER) AS height
-        |FROM documents""".stripMargin,
 
     // the gray-PNG fixture is pure arithmetic in doc_id: dims from the
     // same formulas, luminance sum = sum over row-major pixel index k of

@@ -49,9 +49,7 @@ object Rewrite {
       decay: Double = 2.0,
       epochs: Int = 100,
       minSupport: Option[Int] = None,
-      metricName: String = "jaro",
       operations: Seq[Op] = defaultOperations,
-      simplifyNames: Boolean = true,
       // cluster the schema template instead of the instances
       // (similarity.py:230): cheaper on huge low-variety forests, may
       // differ from instance clustering
@@ -113,7 +111,7 @@ object Rewrite {
 
       // 2. cluster the candidate subtrees
       val model = timed("fit") { TreeClusterer.fit(trees, cfg.tau, cfg.decay,
-        cfg.metricName, schemaOnly = cfg.schemaOnly).model
+        "jaro", schemaOnly = cfg.schemaOnly).model
       }
       val modelB = spark.sparkContext.broadcast(model)
 
@@ -193,7 +191,7 @@ object Rewrite {
 
     // post-process (tree_rewriting/__init__.py:227-259): naming-only
     // relations + collections, no early exit
-    var curTrees = Forest.mapTrees(trees) { t =>
+    val postProcessed = Forest.mapTrees(trees) { t =>
       val (t1, _) = TreeOps.findRelations(t, namingOnly = true)
       TreeOps.findCollections(t1, namingOnly = true)._1
     }
@@ -202,14 +200,10 @@ object Rewrite {
     // on top of the final checkpoint — cache the post-processed exit
     // chain lazily so the (possibly still-pending lazy op plus)
     // post-process work runs once, not once per action
-    val sharedExit =
-      if (cfg.simplifyNames) Some(curTrees.persist(StorageLevel.MEMORY_AND_DISK))
-      else None
-    sharedExit.foreach(c => curTrees = c)
-    if (cfg.simplifyNames)
-      curTrees = timed("simplifyNames") { simplifyNames(curTrees) }
-    val out = timed("final ckpt") { graft.util.Spark.checkpoint(curTrees) }
-    sharedExit.foreach(_.unpersist(blocking = false))
+    val sharedExit = postProcessed.persist(StorageLevel.MEMORY_AND_DISK)
+    val named = timed("simplifyNames") { simplifyNames(sharedExit) }
+    val out = timed("final ckpt") { graft.util.Spark.checkpoint(named) }
+    sharedExit.unpersist(blocking = false)
     if (lastCkpt != null) graft.util.Spark.release(lastCkpt)
     releasePrevOp()
     // the loop exits with `epoch` one past the last pass run; when that

@@ -5,7 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** The chunked lane map `graft.Bench` prints for bounded stdout tails. */
+/** The chunked lane map `graft.Bench` prints for bounded stdout tails,
+  * and where it copies the full line.
+  */
 class BenchSpec extends AnyFunSuite {
 
   test("lane parts fit 2 KB each and parse back to the lane map, each lane once") {
@@ -27,5 +29,11 @@ class BenchSpec extends AnyFunSuite {
     val parsed = nodes.flatMap(_.get("queries").properties.asScala.map(e => e.getKey -> e.getValue.asDouble))
     assert(parsed.map(_._1).distinct.size == parsed.size, "a lane appears in two parts")
     assert(parsed.toMap == lanes.toMap)
+  }
+
+  test("a subset run writes no bench file unless one is named") {
+    assert(Bench.benchFile(None, None).contains("BENCH_LAST.json"))
+    assert(Bench.benchFile(Some(Set("ann_topk_brute")), None).isEmpty)
+    assert(Bench.benchFile(Some(Set("ann_topk_brute")), Some("/x/b.json")).contains("/x/b.json"))
   }
 }

@@ -50,4 +50,20 @@ class CosineSimilaritySpec extends AnyFunSuite with SparkSpec {
     val viaEval = m.invoke(interpreted, a, b).asInstanceOf[Double]
     assert(viaCodegen == viaEval)
   }
+
+  test("register makes the functions SQL-callable and arity-checked") {
+    GraftFunctions.register(spark)
+    val r = spark.sql("SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d))").head.getDouble(0)
+    assert(math.abs(r - 1.0) < 1e-12)
+    val arg = "array(1.0d, 0.0d)"
+    for {
+      name <- Seq("graft_cosine", "graft_l2sq", "graft_pq_assign", "graft_cosine_argmax", "graft_matvec")
+      n <- Seq(1, 3)
+    } {
+      val err = intercept[Exception] {
+        spark.sql(s"SELECT $name(${Seq.fill(n)(arg).mkString(", ")})").collect()
+      }
+      assert(err.getMessage.contains(s"$name requires exactly 2 arguments"), s"$name/$n: ${err.getMessage}")
+    }
+  }
 }

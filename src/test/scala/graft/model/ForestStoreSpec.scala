@@ -149,78 +149,6 @@ class ForestStoreSpec extends AnyFunSuite with SparkSpec {
       "sweepAside must reclaim aside relics whose primary snapshot exists")
   }
 
-  test("commit-by-marker mode runs the full protocol on a rename-less store") {
-    // local disk behind a scheme whose rename refuses every
-    // store-protocol move (staging/ and aside/) — the marker protocol
-    // must never need one
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.nonatomic.impl", classOf[NonAtomicFs].getName)
-    val store = new ForestStore(spark, "nonatomic://" + tmp(), atomicRename = false)
-
-    // the rename-based protocol trips the refusal as soon as it touches
-    // staging (Spark wraps the IOException in its job failure) — proving
-    // the simulated store really is rename-less where it counts
-    val renameStore = new ForestStore(spark, store.root, atomicRename = true)
-    intercept[Exception](renameStore.commit("epoch_0000", forest))
-
-    store.commit("epoch_0000", forest)
-    assert(store.head.contains("epoch_0000"))
-    assert(store.list == Seq("epoch_0000"))
-    assert(canon(store.loadHead().get) == canon(forest))
-
-    // re-commit publishes a higher version; the old one stays readable
-    // until swept, and the name serves the new data immediately
-    val v2 = Forest.mapTrees(forest)(t => t.copy(label = graft.core.Plain("V2")))
-    store.commit("epoch_0000", v2)
-    assert(canon(store.load("epoch_0000")) == canon(v2))
-
-    // an aborted tx leaves no published trace
-    val tx = store.begin("epoch_0001").write(v2)
-    tx.abort()
-    assert(store.list == Seq("epoch_0000"))
-
-    // a crashed writer = data landed, marker never PUT: invisible to
-    // resolve, list, and HEAD recovery
-    store.begin("epoch_0002").write(v2) // no commit
-    assert(store.list == Seq("epoch_0000"))
-    intercept[NoSuchElementException](store.load("epoch_0002"))
-    val root = java.nio.file.Paths.get(store.root.stripPrefix("nonatomic://"))
-    java.nio.file.Files.delete(root.resolve("HEAD"))
-    assert(store.head.contains("epoch_0000"),
-      "HEAD recovery must ignore unmarked version dirs")
-
-    // maintenance sweep reclaims the superseded version and the crashed
-    // relic; the current version keeps serving
-    store.sweepAside()
-    assert(canon(store.load("epoch_0000")) == canon(v2))
-    assert(!java.nio.file.Files.exists(root.resolve("snapshots/epoch_0000/v1")),
-      "sweep must reclaim superseded committed versions")
-    assert(!java.nio.file.Files.exists(root.resolve("snapshots/epoch_0002")) ||
-      java.nio.file.Files.list(root.resolve("snapshots/epoch_0002")).count() == 0,
-      "sweep must reclaim unmarked crash relics")
-
-    // forks inherit marker mode and never write into the parent
-    val fork = store.fork("nonatomic://" + tmp())
-    assert(canon(fork.loadHead().get) == canon(v2))
-    val v3 = Forest.mapTrees(forest)(t => t.copy(label = graft.core.Plain("V3")))
-    fork.commit("epoch_0001", v3)
-    assert(fork.list == Seq("epoch_0001", "epoch_0000"))
-    assert(store.list == Seq("epoch_0000"))
-  }
-
-  test("a marker-mode store reads snapshots committed earlier in rename mode") {
-    val dir = tmp()
-    new ForestStore(spark, dir).commit("epoch_0000", forest)
-    val markerStore = new ForestStore(spark, dir, atomicRename = false)
-    assert(markerStore.head.contains("epoch_0000"))
-    assert(canon(markerStore.load("epoch_0000")) == canon(forest),
-      "a plain directory published by an atomic rename needs no marker")
-    // and its next commit of that name versions on top of the legacy dir
-    val v2 = Forest.mapTrees(forest)(t => t.copy(label = graft.core.Plain("V2")))
-    markerStore.commit("epoch_0000", v2)
-    assert(canon(markerStore.load("epoch_0000")) == canon(v2))
-  }
-
   test("HEAD recovery orders unpadded numeric names naturally on mtime ties") {
     val store = new ForestStore(spark, tmp())
     store.commit("epoch_9", forest)

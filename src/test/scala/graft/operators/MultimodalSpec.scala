@@ -1,46 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class MultimodalSpec extends AnyFunSuite with SparkSpec {
-
-  private def media() = {
-    import spark.implicits._
-    Seq(
-      (1L, "hello world"),
-      (2L, ""),
-      (3L, "x" * 1000))
-      .toDF("id", "payload")
-      .withColumn("media", col("payload").cast("binary"))
-  }
-
-  test("withMediaMeta attaches the typed struct") {
-    val df = Multimodal.withMediaMeta(media(), "media", "image/fake")
-    val r = df.filter(col("id") === 1).select("media_meta.*").head
-    assert(r.getString(0) == "image/fake")
-    assert(r.getLong(1) == 11L)
-    assert(r.getInt(2) == 12) // 11 % 640 + 1
-    assert(r.getInt(3) == 78) // 77 % 480 + 1
-  }
-
-  test("extractFeatures: batched partition processing, stub decode, empty payloads") {
-    val out = Multimodal.extractFeatures(media(), "id", "media", batchSize = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2), r.getInt(3), r.getDouble(4)))).toMap
-    assert(out(1L)._1 == 11L)
-    assert(out(1L)._2 == 12)
-    assert(out(2L) == ((0L, 0, 0, 0.0))) // empty payload → zeros, no crash
-    // mean of the fake plane of "xxx…" is the byte value of 'x'
-    assert(out(3L)._4 == 'x'.toByte.toDouble)
-  }
-
-  test("sampleFrames explodes deterministic frame indices") {
-    val frames = Multimodal.sampleFrames(media(), "id", "media", everyK = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-    // id=1: 11 % 24 = 11 → indices 0,4,8
-    assert(frames.filter(_._1 == 1L).map(_._2).toSeq == Seq(0, 4, 8))
-  }
 
   test("ImageIoCodec: gray PNG round trip is bit-exact; header probe matches decode") {
     val w = 9; val h = 7
@@ -89,13 +52,6 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => r.getLong(0) -> Option(r.getAs[Array[Byte]](1))).toMap
     assert(Multimodal.ImageIoCodec.dimensions(out(1L).get).contains((8, 5)))
     assert(out(2L).isEmpty)
-  }
-
-  test("resize produces exactly w*h bytes") {
-    val out = Multimodal.resize(media(), "id", "media", 8, 4)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    assert(out.values.forall(_.length == 32))
-    assert(out(1L).take(11).toSeq == "hello world".getBytes("UTF-8").toSeq)
   }
 
   test("WavCodec: PCM-16 round trip is bit-exact; header probe matches decode") {
