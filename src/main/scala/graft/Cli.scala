@@ -59,18 +59,7 @@ object Cli {
     sys.exit(2)
   }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-cli")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession = graft.util.Spark.localSession(defaultCpus = 32)
 
   private def dbConfig(name: String): DbConfig = name match {
     case "customerDb" => Testdata.customerDb

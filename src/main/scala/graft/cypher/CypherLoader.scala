@@ -18,9 +18,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * [[graft.util.Graph.connectedComponents]], nodes and edges are
   * cogrouped per component, and every component builds its trees
   * inside one task; the unit of task memory is the largest component,
-  * not the graph. A graph of at most `spark.graft.graph.localCCMaxRows`
-  * (default 100,000) nodes and edges is collected to the driver for
-  * union-find; larger ones run distributed min-id label propagation.
+  * not the graph. A graph of at most `Graph.LocalCcMaxRows` (100,000)
+  * nodes and edges is collected to the driver for union-find; larger
+  * ones run distributed min-id label propagation.
   */
 object CypherLoader {
 

@@ -494,25 +494,34 @@ object Schema {
     * values = the ENT's space-joined leaves; duplicate entity labels in
     * one instance keep the last by child position; global
     * drop-duplicates.
+    *
+    * The deduplicated group-instance keyset — one (treeId, nodeId) pair
+    * per logical instance — is hash-broadcast into the ENT join when its
+    * MEASURED row count is at most [[BroadcastMaxGroupRows]]. It is
+    * usually orders of magnitude smaller than the ENT side it filters,
+    * and without the hint Catalyst sees only an unsized aggregate and
+    * falls back to shuffling + sorting every ENT row; the count reuses
+    * the persisted pruned projection, so it costs one cheap aggregate,
+    * not a rescan. A fact-table-sized root group degrades to a shuffled
+    * join automatically.
     */
-  /** @param broadcastGroups whether to hash-broadcast the deduplicated
-    *        group-instance keyset into the ENT join. The keyset is one
-    *        (treeId, nodeId) pair per logical instance — usually orders of
-    *        magnitude smaller than the ENT side it filters, and without
-    *        the hint Catalyst sees only an unsized aggregate and falls
-    *        back to shuffling + sorting every ENT row. Default `None` =
-    *        decide from the keyset's MEASURED row count against
-    *        `spark.graft.extract.broadcastMaxGroupRows` (the count reuses
-    *        the persisted pruned projection, so it costs one cheap
-    *        aggregate, not a rescan) — a fact-table-sized root group
-    *        degrades to a shuffled join automatically instead of relying
-    *        on every call site remembering to pass a flag. `Some(x)`
-    *        forces the choice when the caller knows better.
+  def extractDataset(nodes: Dataset[NodeRow], groupName: String): org.apache.spark.sql.DataFrame =
+    extractDataset(nodes, groupName, BroadcastMaxGroupRows)
+
+  /** Largest group keyset [[extractDataset]] broadcasts: ~32 bytes/row
+    * hashed, so the build side stays well under a gigabyte AND under
+    * Spark's 512M-row broadcast hard limit, while staying far above any
+    * realistic dimension keyset.
     */
-  def extractDataset(
+  val BroadcastMaxGroupRows = 20000000L
+
+  /** [[extractDataset]] under an explicit broadcast bound; 0 forces the
+    * shuffled join.
+    */
+  private[model] def extractDataset(
       nodes: Dataset[NodeRow],
       groupName: String,
-      broadcastGroups: Option[Boolean] = None,
+      broadcastMaxGroupRows: Long,
   ): org.apache.spark.sql.DataFrame = {
     // The extraction touches only ENT rows plus the target group's GROUP
     // rows, and only 8 of NodeRow's 11 columns — in particular none of
@@ -547,28 +556,17 @@ object Schema {
     val occurrences = pruned
       .filter(col("nodeType") === "GROUP" && col("name") === groupName)
       .select(col("treeId").as("gTree"), col("nodeId").as("gNode"), col("oid"))
-    val dedupedBase = occurrences
+    // the keyset is consumed twice (count + join), so it is persisted to
+    // keep the dedup shuffle from running twice
+    val deduped = occurrences
       .withColumn("k",
         when(col("oid").isNull || col("oid") === "",
           concat_ws(":", col("gTree"), col("gNode"))).otherwise(col("oid")))
       .groupBy(col("gTree"), col("k"))
       .agg(min(col("gNode")).as("gNode"))
       .select(col("gTree"), col("gNode"))
-    // auto-deciding consumes the keyset twice (count + join), so only
-    // then is it persisted to keep the dedup shuffle from running twice;
-    // a forced choice consumes it once and needs no cache
-    val deduped =
-      if (broadcastGroups.isEmpty)
-        dedupedBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else dedupedBase
-    val doBroadcast = broadcastGroups.getOrElse {
-      val maxRows = nodes.sparkSession.conf
-        .get("spark.graft.extract.broadcastMaxGroupRows", "20000000").toLong
-      // ~32 bytes/row hashed → the default caps the build side well under
-      // a gigabyte AND under Spark's 512M-row broadcast hard limit, while
-      // staying far above any realistic dimension keyset
-      timed("dedupCount") { deduped.count() } <= maxRows
-    }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val doBroadcast = timed("dedupCount") { deduped.count() } <= broadcastMaxGroupRows
     val groupsDf = if (doBroadcast) broadcast(deduped) else deduped
     val ents = pruned
       .filter(col("nodeType") === "ENT")

@@ -15,12 +15,9 @@ object Graph {
     * Near-dup resolution and test-scale property graphs have graphs
     * bounded by PAIRED items (a small fraction of any corpus), while
     * corpus-scale loads blow past the threshold and keep the unbounded
-    * path. Tune — or set 0 to force the distributed path — via the
-    * session conf. The default bounds driver memory at a few MB.
+    * path. The bound keeps driver memory at a few MB.
     */
-  val LocalCcMaxRowsKey = "spark.graft.graph.localCCMaxRows"
-  private def localCcMaxRows(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(LocalCcMaxRowsKey).map(_.toLong).getOrElse(100000L)
+  val LocalCcMaxRows = 100000L
 
   /** Undirected connected components. `nodes` has one column `node`;
     * `edges` has `src`/`dst` (one row per undirected edge, either
@@ -35,16 +32,21 @@ object Graph {
     * diameter), so the cap is a true backstop, and hitting it throws
     * rather than returning split components.
     */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 60): DataFrame = {
-    val spark = nodes.sparkSession
-    val threshold = localCcMaxRows(spark)
-    if (threshold <= 0) return distributedComponents(nodes, edges, maxIter)
+  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 60): DataFrame =
+    connectedComponents(nodes, edges, maxIter, LocalCcMaxRows)
+
+  /** [[connectedComponents]] under an explicit local-path bound; 0
+    * forces the distributed path.
+    */
+  private[util] def connectedComponents(
+      nodes: DataFrame, edges: DataFrame, maxIter: Int, localMaxRows: Long): DataFrame = {
+    if (localMaxRows <= 0) return distributedComponents(nodes, edges, maxIter)
     // both frames may carry expensive lineage (near-dup pair joins), so
     // cache before the size probe: the probe materializes the cache and
     // whichever path runs reads it instead of recomputing
     val n = nodes.select(col("node")).persist()
     val e = edges.select(col("src"), col("dst")).persist()
-    if (n.count() <= threshold && e.count() <= threshold) localComponents(n, e)
+    if (n.count() <= localMaxRows && e.count() <= localMaxRows) localComponents(n, e)
     else {
       // by return time the labels are localCheckpointed and bidir has
       // its own cache, so the probe caches can be released

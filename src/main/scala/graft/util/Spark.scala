@@ -1,9 +1,25 @@
 package graft.util
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Shared Spark-session helpers. */
 object Spark {
+
+  /** The session the mains run in: `local[n]` with one shuffle
+    * partition per core, UTC session time, no UI and WARN logging, where
+    * n is `SPARK_GRAFT_CPUS` or else `defaultCpus`.
+    */
+  def localSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   // phase timing to stderr when SPARK_GRAFT_PROFILE is set — dev aid only
   private val profile = sys.env.contains("SPARK_GRAFT_PROFILE")

@@ -99,17 +99,10 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
     val nodes = Forest.toNodesDF(
       RelationalLoader.load(spark, "/root/testdata/sf0.001", Testdata.customerDb))
     val default = Schema.extractDataset(nodes, "customer").collect().toSet
-    // threshold 0 → the auto path must pick the shuffled join; results
-    // must be identical either way
-    val key = "spark.graft.extract.broadcastMaxGroupRows"
-    spark.conf.set(key, "0")
-    try {
-      val shuffled = Schema.extractDataset(nodes, "customer").collect().toSet
-      assert(shuffled == default, "shuffled-join extraction must match the broadcast plan")
-    } finally spark.conf.unset(key)
-    // explicit overrides still win over the measurement
-    val forced = Schema.extractDataset(nodes, "customer", broadcastGroups = Some(false))
-      .collect().toSet
-    assert(forced == default)
+    // threshold 0 → the measured keyset is over the bound, so the
+    // extraction must pick the shuffled join; results must be identical
+    // either way
+    val shuffled = Schema.extractDataset(nodes, "customer", 0L).collect().toSet
+    assert(shuffled == default, "shuffled-join extraction must match the broadcast plan")
   }
 }

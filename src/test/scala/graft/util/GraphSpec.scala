@@ -35,14 +35,11 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       val ids = (0 until n).map(i => f"v$i%03d")
       val edges = Seq.fill(rnd.nextInt(2 * n))((ids(rnd.nextInt(n)), ids(rnd.nextInt(n))))
         .filter { case (a, b) => a != b }
-      def run(): Map[String, String] =
-        Graph.connectedComponents(ids.toDF("node"), edges.toDF("src", "dst"))
+      def run(localMaxRows: Long): Map[String, String] =
+        Graph.connectedComponents(ids.toDF("node"), edges.toDF("src", "dst"), 60, localMaxRows)
           .as[(String, String)].collect().toMap
-      val local = run()
-      spark.conf.set(Graph.LocalCcMaxRowsKey, "0") // force distributed
-      val dist =
-        try run()
-        finally spark.conf.unset(Graph.LocalCcMaxRowsKey)
+      val local = run(Graph.LocalCcMaxRows)
+      val dist = run(0L) // force distributed
       assert(local == dist, s"round $round: CC paths diverge (n=$n, e=${edges.size})")
     }
   }
