@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.collection.mutable
-
 /** A child of a tree node: either a string leaf or a subtree. */
 sealed trait Child extends Serializable
 object Child {

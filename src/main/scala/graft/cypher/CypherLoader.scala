@@ -2,7 +2,6 @@ package graft.cypher
 
 import graft.core._
 import graft.model.TreeRow
-import graft.sources.RelationalLoader
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Property-graph loader (reference database/loader/cypher.py:17-175):

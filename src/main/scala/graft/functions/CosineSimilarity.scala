@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -95,20 +96,25 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object GraftFunctions {
 
-  /** Idempotent per-session registration so `call_function` and plain
-    * SQL can resolve the expressions by name. Every builder checks its
-    * arity: without the check, extra SQL arguments would be silently
-    * dropped and a missing one would surface as a raw
+  /** Per-session registration so `call_function` and plain SQL can
+    * resolve the expressions by name. A name the session's registry
+    * already holds is left as it is, so the operators can call this on
+    * every use without replacing the builders each time. Every builder
+    * checks its arity: without the check, extra SQL arguments would be
+    * silently dropped and a missing one would surface as a raw
     * IndexOutOfBoundsException instead of an analysis error.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
+    def add(name: String)(builder: => Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     def binary(name: String)(make: (Expression, Expression) => Expression): Unit =
-      registry.createOrReplaceTempFunction(name, { (args: Seq[Expression]) =>
+      add(name) { (args: Seq[Expression]) =>
         require(args.length == 2, s"$name requires exactly 2 arguments, got ${args.length}")
         make(args(0), args(1))
-      }, "built-in")
-    registry.createOrReplaceTempFunction("graft_nfc", UnicodeNormalize.builder, "built-in")
+      }
+    add("graft_nfc")(UnicodeNormalize.builder)
     binary("graft_cosine")(CosineSimilarity(_, _))
     binary("graft_l2sq")(L2Squared(_, _))
     binary("graft_pq_assign")(PqAssignCode(_, _))

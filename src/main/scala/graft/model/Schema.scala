@@ -1,7 +1,7 @@
 package graft.model
 
 import graft.core._
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** A group (table candidate): name + entity set
@@ -391,20 +391,27 @@ object Schema {
     * for the schema_only clustering template (similarity.py:296-339):
     * `toTree` consumes only `productions`, so the relation-orientation
     * machinery (a nodes self-join plus two extra aggregation jobs per
-    * call) is skipped — one flatMap + distinct + collect, which is the
-    * per-epoch fixed cost of the schema-only rewrite lane. The returned
-    * schema carries an empty `relations` set; REL productions are still
+    * call) is skipped — one pass and no shuffle, which is the per-epoch
+    * fixed cost of the schema-only rewrite lane. The returned schema
+    * carries an empty `relations` set; REL productions are still
     * present.
     */
   def templateFromTrees(
       forest: Dataset[TreeRow],
       keepUnlabelled: Boolean = true,
       mergeLhs: Boolean = true,
-  ): Schema = {
-    import forest.sparkSession.implicits._
-    val rows = forest.flatMap { row =>
-      row.tree.subtrees.flatMap(prodTupleOf).distinct
-    }.distinct().collect().toSeq
+  ): Schema = templateOf(Trees(forest), keepUnlabelled, mergeLhs)
+
+  /** [[templateFromTrees]] over either [[Trees]] instance: each
+    * partition's distinct rows, then the first occurrence of each across
+    * partitions. Rows reach `assemble` in the forest's order, so the
+    * template is the same on both instances and at any partition count.
+    */
+  private[graft] def templateOf(
+      trees: Trees, keepUnlabelled: Boolean = true, mergeLhs: Boolean = true): Schema = {
+    import trees.spark.implicits._
+    val rows = trees.collectPartitions(_.flatMap(_.tree.subtrees.flatMap(prodTupleOf)).distinct)
+      .distinct
     assemble(rows.map { case (t, n, r) => ProdRow(t, n, r) },
       Map.empty, Map.empty, keepUnlabelled, mergeLhs)
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Global contiguous ranking — "sort the whole corpus and number every

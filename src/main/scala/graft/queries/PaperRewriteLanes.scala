@@ -211,7 +211,7 @@ object PaperRewriteLanes {
       s.createDataset(pairs).map { case (i, j) =>
         val x = featB.value(i.toInt)
         val y = featB.value(j.toInt)
-        val sim = Similarity.similarity(x, y, SeqMetrics.jaccard)
+        val sim = Similarity.similarity(x, y, SeqMetrics.jaccardSorted)
         val jaro = SeqMetrics.jaro(x.self.entLabels, y.self.entLabels)
         val lev = SeqMetrics.levenshtein(x.self.entLabels, y.self.entLabels)
         (i, j, math.round(sim * 1e9), math.round(jaro * 1e9),

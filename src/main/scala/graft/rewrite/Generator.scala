@@ -1,7 +1,7 @@
 package graft.rewrite
 
 import graft.core._
-import graft.model.{Group, Relation, Schema}
+import graft.model.Schema
 
 /** Synthetic instance generator (reference generator/__init__.py:11-104):
   * N group trees per schema group and N relation trees per relation,

@@ -1,10 +1,9 @@
 package graft.rewrite
 
 import graft.core._
-import graft.model.{Forest, TreeRow}
+import graft.model.{Forest, TreeRow, Trees}
 import graft.similarity.{ClusterModel, TreeClusterer}
 import org.apache.spark.sql.Dataset
-import org.apache.spark.storage.StorageLevel
 
 /** The iterative rewrite driver — Spark re-expression of `rewrite()`
   * (simplification/tree_rewriting/__init__.py:56-308).
@@ -15,19 +14,36 @@ import org.apache.spark.storage.StorageLevel
   * naming-only FindRelations/FindCollections, then group/relation names
   * are canonicalized.
   *
-  * The reference's ProcessPoolExecutor + barrier + OID-queue machinery
-  * (tree_rewriting/__init__.py:311-633) disappears into Spark jobs. An
-  * epoch runs at most five, none of which shuffles: the reduce_all
-  * checkpoint, the fit's aggregate and top-K passes, the find_groups
-  * checkpoint (a per-tree map against the broadcast model), and one
-  * fused trial pass over the operations. The forest stays a
-  * `Dataset[TreeRow]` throughout: each step maps the rows' trees, and
-  * the checkpoints hold them in their native row encoding.
+  * The reference runs the loop in one process over a worker pool
+  * (tree_rewriting/__init__.py:311-633). Here the loop is written once
+  * against [[Trees]] and runs on one of two instances, chosen by the
+  * entry count:
+  *
+  *   - at most [[LocalMaxTrees]] trees: the forest is collected once and
+  *     every epoch maps a driver `Vector` in `defaultParallelism` chunks
+  *     on the global execution context. The whole rewrite is three Spark
+  *     jobs: the entry count, the collect, and the checkpoint of the
+  *     result;
+  *   - above it: the forest stays a `Dataset[TreeRow]`, and an epoch runs
+  *     at most five jobs, none of which shuffles: the reduce_all
+  *     checkpoint, the fit's aggregate and top-K passes, the find_groups
+  *     checkpoint (a per-tree map against the broadcast model), and one
+  *     fused trial pass over the operations.
+  *
+  * Every step is a per-tree map or a per-partition pass whose result
+  * does not depend on where partitions split the forest, so both paths
+  * give the same rows and the same epoch count.
   */
 object Rewrite {
 
   @inline private def timed[A](label: String)(body: => A): A =
     graft.util.Spark.timed("rewrite-profile", label)(body)
+
+  /** Forests of at most this many trees are rewritten on the driver.
+    * Above it the Spark jobs' fixed cost is a small share of an epoch
+    * and the collected forest would start to weigh on driver memory.
+    */
+  val LocalMaxTrees = 20000L
 
   /** One rewrite operation: pure per-tree function that may consult the
     * broadcast cluster model.
@@ -57,7 +73,8 @@ object Rewrite {
       // called with (epoch, forest-after-epoch); None = zero cost. The
       // ForestStore transaction lane hangs per-epoch snapshot commits
       // here (the reference commits its ZODB transaction per rewrite
-      // step, tree_rewriting/__init__.py epoch loop)
+      // step, tree_rewriting/__init__.py epoch loop). The Dataset is a
+      // checkpoint that later epochs may release: read it in the call
       epochHook: Option[(Int, Dataset[TreeRow]) => Unit] = None)
 
   /** Convergence telemetry for one `rewrite` run: `epochsToConverge` is
@@ -72,25 +89,29 @@ object Rewrite {
   def rewrite(forest: Dataset[TreeRow], cfg: Config = Config()): Dataset[TreeRow] =
     rewriteWithStats(forest, cfg).forest
 
-  def rewriteWithStats(forest: Dataset[TreeRow], cfg: Config = Config()): RewriteResult = {
+  def rewriteWithStats(forest: Dataset[TreeRow], cfg: Config = Config()): RewriteResult =
+    rewriteWithStats(forest, cfg, LocalMaxTrees)
+
+  /** [[rewriteWithStats]] under an explicit driver-path bound; 0 forces
+    * the Dataset path.
+    */
+  private[rewrite] def rewriteWithStats(
+      forest: Dataset[TreeRow], cfg: Config, localMaxTrees: Long): RewriteResult = {
     val spark = forest.sparkSession
     import spark.implicits._
 
-    // Each checkpoint supersedes the previous one: release the old
-    // blocks as soon as the new checkpoint has materialized (GC +
-    // ContextCleaner reclaim is too lazy — superseded epochs piled up
-    // in storage and taxed every later job in the session)
-    var lastCkpt: Dataset[TreeRow] = null
-    def ckptReleasing(ds: Dataset[TreeRow]): Dataset[TreeRow] = {
-      val c = graft.util.Spark.checkpoint(ds)
-      if (lastCkpt != null) graft.util.Spark.release(lastCkpt)
-      lastCkpt = c
-      c
-    }
-    var trees: Dataset[TreeRow] = ckptReleasing(forest)
-    val total = trees.count()
+    // the count reads the caller's forest, as the collect or the entry
+    // checkpoint that follows does: callers pass a materialized forest
+    val total = graft.util.Spark.rowCount(forest)
     if (total == 0) return RewriteResult(forest, Some(0))
     val minSupport = cfg.minSupport.getOrElse(math.max((total / 10).toInt, 2))
+    // a Dataset-path checkpoint supersedes the previous one and releases
+    // its blocks as soon as it has materialized (GC + ContextCleaner
+    // reclaim is too lazy — superseded epochs piled up in storage and
+    // taxed every later job in the session)
+    var trees: Trees =
+      if (total <= localMaxTrees) Trees.local(spark, forest.collect().toVector)
+      else Trees(forest).materialize()
 
     // epoch counts like the reference: `trange(1, epoch)`
     // (tree_rewriting/__init__.py:127) runs epochs-1 iterations, so
@@ -98,40 +119,35 @@ object Rewrite {
     // parity, not an off-by-one
     var epoch = 1
     var converged = false
-    // deferred release of the op output backing the current `trees` —
-    // dropped only after the next checkpoint breaks the lineage
-    var releasePrevOp: () => Unit = () => ()
 
     while (epoch < cfg.epochs && !converged) {
       // 1. reduce_all({ENT}) (tree_rewriting/__init__.py:196-201)
-      trees = timed("reduceAll+ckpt") { ckptReleasing(
-        Forest.mapTrees(trees)(_.reduceAll(Set(NodeType.Ent))))
+      trees = timed("reduceAll+ckpt") {
+        trees.map(r => TreeRow(r.treeId, r.tree.reduceAll(Set(NodeType.Ent)))).materialize()
       }
-      releasePrevOp(); releasePrevOp = () => ()
 
       // 2. cluster the candidate subtrees
-      val model = timed("fit") { TreeClusterer.fit(trees, cfg.tau, cfg.decay,
-        "jaro", schemaOnly = cfg.schemaOnly).model
+      val model = timed("fit") { TreeClusterer.fitModel(trees, cfg.tau, cfg.decay,
+        "jaro", schemaOnly = cfg.schemaOnly)
       }
       val modelB = spark.sparkContext.broadcast(model)
 
       // 3. find_groups (tree_rewriting/__init__.py:648-706): relabel
       // qualifying cluster members as GROUPs, frequent clusters first.
       // A candidate's cluster is a lookup in the broadcast model, so
-      // this is a per-tree map into the checkpoint — no shuffle.
+      // this is a per-tree map — no shuffle.
       val rank: Map[String, Int] = model.clusters.values.toSeq
         .filter(_.support > minSupport)
         .sortBy(c => (-c.support, -c.avgEntities, -c.avgDepth, c.name))
         .zipWithIndex.map { case (c, i) => c.name -> i }.toMap
-      val rankB = spark.sparkContext.broadcast(rank)
       // with no cluster above minSupport, findGroupsInTree is identity
-      // on every tree — skip the pass and checkpoint outright
+      // on every tree — skip the pass
       if (rank.nonEmpty) {
-        trees = timed("findGroups+ckpt") { ckptReleasing(trees.map { case TreeRow(id, tree) =>
+        trees = timed("findGroups+ckpt") { trees.map { case TreeRow(id, tree) =>
           val assigns = TreeClusterer.treeAssignments(id, tree, modelB.value)
             .map(a => a.key -> a.cluster).toSeq
-          TreeRow(id, findGroupsInTree(tree, id, assigns, rankB.value))
-        }) }
+          TreeRow(id, findGroupsInTree(tree, id, assigns, rank))
+        }.materialize() }
       }
 
       // 4. operations with early exit at the first op that changed
@@ -148,7 +164,7 @@ object Rewrite {
       // each tree's first-changing index.
       val opsArr = cfg.operations.toArray
       val firing: Int = timed("opTrials") {
-        trees.mapPartitions { it =>
+        trees.collectPartitions { it =>
           var m = opsArr.length // = "no op fired" sentinel, and the bound
           it.foreach { case TreeRow(id, tree) =>
             var i = 0
@@ -159,53 +175,40 @@ object Rewrite {
             }
           }
           Iterator.single(m)
-        }.reduce(math.min)
+        }.min
       }
       if (firing < opsArr.length) {
         val op = opsArr(firing)
-        // LAZY apply: the op output's one consumer is the next epoch's
-        // reduceAll checkpoint (or the exit chain), so the op map fuses
-        // into that pass instead of paying its own eager persist +
-        // count. Ops below `firing` are identity on every tree (proven
-        // by the trial pass), so applying only the firing op is the
-        // reference's early-exit application exactly. The epoch-hook
-        // path adds a second consumer per epoch — only there a (lazy)
-        // cache pays for itself.
-        timed(s"op:${op.name} (lazy)") {
-          var mapped = trees.map { case TreeRow(id, tree) =>
-            TreeRow(id, op.fn(tree, modelB.value, minSupport, id.toString)._1)
-          }
-          if (cfg.epochHook.isDefined) {
-            val persisted = mapped.persist(StorageLevel.MEMORY_AND_DISK)
-            releasePrevOp = () => { persisted.unpersist(); () }
-            mapped = persisted
-          }
-          trees = mapped
-        }
+        // LAZY apply on the Dataset path: the op output's one consumer
+        // is the next epoch's reduceAll checkpoint (or the exit chain),
+        // so the op map fuses into that pass. Ops below `firing` are
+        // identity on every tree (proven by the trial pass), so applying
+        // only the firing op is the reference's early-exit application
+        // exactly.
+        trees = timed(s"op:${op.name} (lazy)") { trees.map { case TreeRow(id, tree) =>
+          TreeRow(id, op.fn(tree, modelB.value, minSupport, id.toString)._1)
+        } }
       }
 
       converged = firing == opsArr.length
-      cfg.epochHook.foreach(hook => hook(epoch, trees))
+      // the hook is a second consumer of the epoch's trees: materialize
+      // them so the op runs once
+      cfg.epochHook.foreach { hook =>
+        trees = trees.materialize()
+        hook(epoch, trees.toDataset)
+      }
       epoch += 1
     }
 
     // post-process (tree_rewriting/__init__.py:227-259): naming-only
-    // relations + collections, no early exit
-    val postProcessed = Forest.mapTrees(trees) { t =>
-      val (t1, _) = TreeOps.findRelations(t, namingOnly = true)
-      TreeOps.findCollections(t1, namingOnly = true)._1
-    }
-
-    // simplifyNames adds a second exit action (its group-name collect)
-    // on top of the final checkpoint — cache the post-processed exit
-    // chain lazily so the (possibly still-pending lazy op plus)
-    // post-process work runs once, not once per action
-    val sharedExit = postProcessed.persist(StorageLevel.MEMORY_AND_DISK)
-    val named = timed("simplifyNames") { simplifyNames(sharedExit) }
-    val out = timed("final ckpt") { graft.util.Spark.checkpoint(named) }
-    sharedExit.unpersist(blocking = false)
-    if (lastCkpt != null) graft.util.Spark.release(lastCkpt)
-    releasePrevOp()
+    // relations + collections, no early exit; simplifyNames reads the
+    // result twice (its group-name pass and its rename map)
+    val postProcessed = trees.map { r =>
+      val (t1, _) = TreeOps.findRelations(r.tree, namingOnly = true)
+      TreeRow(r.treeId, TreeOps.findCollections(t1, namingOnly = true)._1)
+    }.materialize()
+    val named = timed("simplifyNames") { simplifyNames(postProcessed) }
+    val out = timed("final ckpt") { named.materialize().toDataset }
     // the loop exits with `epoch` one past the last pass run; when that
     // last pass fired nothing, it IS the natural fixpoint epoch
     RewriteResult(out, if (converged) Some(epoch - 1) else None)
@@ -272,15 +275,18 @@ object Rewrite {
     * The reference indexes original labels in forest-iteration order;
     * here they are sorted for determinism.
     */
-  def simplifyNames(forest: Dataset[TreeRow]): Dataset[TreeRow] = {
-    import forest.sparkSession.implicits._
-    val groupNames = timed("simplify:groupNames") { forest.flatMap { row =>
-      row.tree.subtrees.collect {
+  def simplifyNames(forest: Dataset[TreeRow]): Dataset[TreeRow] =
+    simplifyNames(Trees(forest)).toDataset
+
+  private def simplifyNames(trees: Trees): Trees = {
+    import trees.spark.implicits._
+    val groupNames = timed("simplify:groupNames") { trees.collectPartitions { it =>
+      it.flatMap(_.tree.subtrees.collect {
         case t if t.hasType(NodeType.Group) => t.label.name
-      }
-    }.distinct().collect().sorted }
-    val renamesB = forest.sparkSession.sparkContext.broadcast(renameMap(groupNames))
-    Forest.mapTrees(forest)(t => renameTree(renamesB.value, t))
+      }).distinct
+    }.distinct.sorted.toArray }
+    val renames = renameMap(groupNames)
+    trees.map(r => TreeRow(r.treeId, renameTree(renames, r.tree)))
   }
 
   private def renameMap(groupNames: Array[String]): Map[String, String] =

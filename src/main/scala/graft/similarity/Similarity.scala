@@ -11,7 +11,14 @@ final case class LevelFeature(
     id: String,
     label: String,
     isTyped: Boolean,
-    entLabels: Set[String]) extends Serializable
+    entLabels: Set[String]) extends Serializable {
+
+  /** `entLabels` sorted, computed once per instance for the metrics.
+    * Not a constructor field: equality, hashing and the serialized form
+    * stay those of the four fields.
+    */
+  @transient lazy val sortedEnts: Array[String] = entLabels.toArray.sorted
+}
 
 /** Ancestor-context feature of one candidate subtree: level 0 is the
   * subtree itself, then its parents up to MAX_SIM_CTX_DEPTH levels.
@@ -41,7 +48,7 @@ object Similarity {
     // Subtrees with disjoint entities cannot be similar (:133) — note two
     // empty sets ARE disjoint in the reference, so entity-free subtrees
     // score 0 even against themselves here (the oid check comes second).
-    if ((x.self.entLabels & y.self.entLabels).isEmpty) return 0.0
+    if (SeqMetrics.disjoint(x.self.sortedEnts, y.self.sortedEnts)) return 0.0
     // Identical node or equal typed label → perfectly similar (:138)
     if (levelEquivalent(x.self, y.self)) return 1.0
 
@@ -53,7 +60,7 @@ object Similarity {
       val lx = x.levels(d); val ly = y.levels(d)
       val sim =
         if (levelEquivalent(lx, ly)) 1.0
-        else metric(lx.entLabels, ly.entLabels)
+        else metric(lx.sortedEnts, ly.sortedEnts)
       val w = math.pow(decay, -d)
       weightSum += w
       simSum += w * sim

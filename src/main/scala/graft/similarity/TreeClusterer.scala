@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.core._
-import graft.model.TreeRow
+import graft.model.{TreeRow, Trees}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -42,7 +42,8 @@ final case class StructKey(height: Int, depth: Int, levels: Seq[StructLevel]) {
 object StructKey {
   def of(f: SubtreeFeature): StructKey =
     StructKey(f.height, f.depth,
-      f.levels.map(l => StructLevel(l.label, l.isTyped, l.entLabels.toSeq.sorted)))
+      f.levels.map(l => StructLevel(l.label, l.isTyped,
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(l.sortedEnts))))
 }
 
 /** Broadcastable cluster summary for get_equiv_of scoring
@@ -254,18 +255,41 @@ object TreeClusterer {
       schemaOnly: Boolean = false,
       buildModel: Boolean = true,
   ): Result = {
+    import forest.sparkSession.implicits._
+    val model = fitModel(Trees(forest), tau, decay, metricName, maxHeight, minClusterSize,
+      keepPerCluster, entityParentsOnly, schemaOnly, buildModel)
+    val membership = model.membership
+    Result(candidates(forest, maxHeight, entityParentsOnly).flatMap(assign(_, membership)), model)
+  }
+
+  /** The fit's model over either [[Trees]] instance: two passes over the
+    * trees (the aggregate and the top-K fetch), everything else on the
+    * driver.
+    */
+  private[graft] def fitModel(
+      trees: Trees,
+      tau: Double,
+      decay: Double,
+      metricName: String,
+      maxHeight: Int = 5,
+      minClusterSize: Int = 2,
+      keepPerCluster: Int = 20,
+      entityParentsOnly: Boolean = false,
+      schemaOnly: Boolean = false,
+      buildModel: Boolean = true,
+  ): ClusterModel = {
     require(tau >= 0 && tau <= 1, "tau must be between 0 and 1")
-    val spark = forest.sparkSession
-    import spark.implicits._
-    val cands = candidates(forest, maxHeight, entityParentsOnly)
+    import trees.spark.implicits._
+    val cands: Iterator[TreeRow] => Iterator[CandRow] =
+      _.flatMap(r => candidateRows(r.treeId, r.tree, maxHeight, entityParentsOnly))
 
     // pass 1: ONE map-side aggregate at the StructKey grain, merged on
     // the driver. Every later decision — tau-graph, components, naming,
     // cluster stats — is a function of these partials: a member's
     // cluster and probability depend only on its key.
     val partials: Map[StructKey, KeyPartial] = timed("aggregate") {
-      mergePartials(cands.mapPartitions(it =>
-        mergePartials(it.map(KeyPartial(1, _))).valuesIterator).collect().iterator)
+      mergePartials(trees.collectPartitions(it =>
+        mergePartials(cands(it).map(KeyPartial(1, _))).valuesIterator).iterator)
     }
     def mult(k: StructKey): Long = partials(k).mult
 
@@ -274,7 +298,7 @@ object TreeClusterer {
     // template subtrees of different components joins each of them
     val members: Seq[(StructKey, String, Double)] =
       if (schemaOnly)
-        schemaOnlyMembers(graft.model.Schema.templateFromTrees(forest).toTree, partials.keys,
+        schemaOnlyMembers(graft.model.Schema.templateOf(trees).toTree, partials.keys,
           tau, decay, metricName, maxHeight, minClusterSize)
       else instanceMembers(partials, tau, decay, metricName, maxHeight)
 
@@ -312,7 +336,7 @@ object TreeClusterer {
     val summaries: Map[String, ClusterSummary] =
       if (!buildModel) Map.empty
       else {
-        val top = timed("topK") { topMembers(cands, partials, byComp, naming, keepPerCluster) }
+        val top = timed("topK") { topMembers(trees, cands, partials, byComp, naming, keepPerCluster) }
         naming.map { case (comp, name) =>
           val ks = byComp(comp).map(_._1)
           val support = ks.map(mult).sum
@@ -324,8 +348,7 @@ object TreeClusterer {
         }
       }
 
-    Result(cands.flatMap(assign(_, membership)),
-      new ClusterModel(summaries, tau, decay, metricName, membership))
+    new ClusterModel(summaries, tau, decay, metricName, membership)
   }
 
   /** Map-side partial of the fit's aggregate pass: one StructKey's
@@ -380,13 +403,14 @@ object TreeClusterer {
     * the K smallest-key candidates of those keys per partition.
     */
   private def topMembers(
-      cands: Dataset[CandRow],
+      trees: Trees,
+      cands: Iterator[TreeRow] => Iterator[CandRow],
       partials: Map[StructKey, KeyPartial],
       byComp: Map[String, Seq[(StructKey, Double)]],
       naming: Map[String, String],
       keep: Int,
   ): Map[String, Vector[(SubtreeFeature, Double)]] = {
-    import cands.sparkSession.implicits._
+    import trees.spark.implicits._
     val neededByComp: Map[String, Seq[(StructKey, Double)]] = naming.keys.map { comp =>
       var ahead = 0L
       comp -> byComp(comp).groupBy(_._2).toSeq.sortBy(-_._1).flatMap { case (_, tier) =>
@@ -397,9 +421,9 @@ object TreeClusterer {
     }.toMap
     val needed: Set[StructKey] = neededByComp.valuesIterator.flatMap(_.map(_._1)).toSet
     if (needed.isEmpty) return Map.empty
-    val fetched: Map[StructKey, Array[CandRow]] = cands.mapPartitions { it =>
+    val fetched: Map[StructKey, Seq[CandRow]] = trees.collectPartitions { it =>
       val kept = scala.collection.mutable.HashMap.empty[StructKey, java.util.TreeMap[String, CandRow]]
-      it.foreach { c =>
+      cands(it).foreach { c =>
         val k = c.structKey
         if (needed.contains(k)) {
           val m = kept.getOrElseUpdate(k, new java.util.TreeMap[String, CandRow]())
@@ -408,10 +432,10 @@ object TreeClusterer {
         }
       }
       kept.valuesIterator.flatMap(_.values.asScala)
-    }.collect().groupBy(_.structKey)
+    }.groupBy(_.structKey)
     neededByComp.map { case (comp, ks) =>
       comp -> ks
-        .flatMap { case (k, prob) => fetched.getOrElse(k, Array.empty[CandRow]).map(c => (c, prob)) }
+        .flatMap { case (k, prob) => fetched.getOrElse(k, Nil).map(c => (c, prob)) }
         .sortBy { case (c, prob) => (-prob, c.key) }
         .take(keep)
         .map { case (c, prob) => (c.toFeature, prob) }
@@ -620,8 +644,8 @@ object TreeClusterer {
     // cluster from the model's key map — assignments are the only
     // consumed output, so the fit skips its top-K pass. One flatMap plus
     // the oid aggregation: no join, no broadcast sized by the forest
-    val model = Option(metricName).map(m => fit(forest, tau = tau, decay = decay,
-      metricName = m, entityParentsOnly = true, buildModel = false).model)
+    val model = Option(metricName).map(m => fitModel(Trees(forest), tau, decay, m,
+      entityParentsOnly = true, buildModel = false))
     val labelled = forest.flatMap { case TreeRow(treeId, tree) =>
       val clusters = model.map(treeAssignments(treeId, tree, _, entityParentsOnly = true)
         .toSeq.groupMap(_.key)(_.cluster))

@@ -46,6 +46,12 @@ object Spark {
     if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(true)
     else ds.localCheckpoint(true)
 
+  /** Row count in one job with no shuffle: `Dataset.count` aggregates
+    * through an exchange, which adaptive execution runs as two jobs.
+    * Rows are counted in their internal form, never deserialized.
+    */
+  def rowCount(ds: Dataset[_]): Long = ds.queryExecution.toRdd.count()
+
   /** Release the block storage behind a [[checkpoint]]ed dataset NOW.
     * `Dataset.unpersist` only drops plan-level caches, so a finished
     * intermediate checkpoint otherwise holds its blocks until the RDD

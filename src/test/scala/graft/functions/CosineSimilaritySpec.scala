@@ -66,4 +66,18 @@ class CosineSimilaritySpec extends AnyFunSuite with SparkSpec {
       assert(err.getMessage.contains(s"$name requires exactly 2 arguments"), s"$name/$n: ${err.getMessage}")
     }
   }
+
+  test("a second register keeps the session's registered builders") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    GraftFunctions.register(spark)
+    val names = Seq("graft_nfc", "graft_cosine", "graft_l2sq", "graft_pq_assign",
+      "graft_cosine_argmax", "graft_matvec")
+    val before = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    assert(before.forall(_.isDefined))
+    GraftFunctions.register(spark)
+    names.zip(before).foreach { case (n, b) =>
+      assert(registry.lookupFunctionBuilder(FunctionIdentifier(n)).get eq b.get, n)
+    }
+  }
 }

@@ -50,7 +50,6 @@ class L2SquaredSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("graft_pq_assign matches the array_max(transform(...)) argmax it replaced, ties included") {
-    import spark.implicits._
     GraftFunctions.register(spark)
     // codebook with a deliberate duplicate vector (cids 2 and 5) so the
     // larger-cid tie-break is exercised, plus a mismatched-length entry

@@ -301,7 +301,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("PQ codebooks: one per subspace, codes within range, subDim slices") {
-    import spark.implicits._
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val corpus = emb.select(col("vec_id").as("id"),
       transform(col("embedding"), _.cast("double")).as("v"))

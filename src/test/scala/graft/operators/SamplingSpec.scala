@@ -6,7 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SamplingSpec extends AnyFunSuite with SparkSpec {
 
   test("stratified sampling is deterministic, honors per-stratum rates, prunes columns") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val docs = (0L until 2000L).map(i => (i, if (i % 2 == 0) "en" else "de", s"text $i"))
       .toDF("doc_id", "lang", "text")

@@ -306,6 +306,31 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
       s"${jobs.get} jobs over $epochs epochs, budget ${5 * epochs} + $entryExit")
   }
 
+  /** `body`'s result and the call sites of the Spark jobs it ran. */
+  private def jobsDuring[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.headOption.map(_.name).getOrElse("?"))
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (r, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a forest within LocalMaxTrees is rewritten in at most three Spark jobs") {
+    val forest = customerForest()
+    val (result, jobs) = jobsDuring(Rewrite.rewriteWithStats(forest, Rewrite.Config(tau = 0.7)))
+    assert(result.epochsToConverge.exists(_ >= 3), "the budget needs a multi-epoch run")
+    info(s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(jobs.size <= 3, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+  }
+
   test("customer rewrite matches its pinned golden across partitions and modes") {
     // golden: (treeId, tree) rows and epochsToConverge (-1 = cap hit)
     // of the instance and schema-only rewrites, recorded from the
@@ -329,6 +354,100 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
         assert(r.forest.collect().map(t => (t.treeId, TreeJson.toJson(t.tree))).sortBy(_._1).toSeq == rows(mode),
           what)
       }
+    }
+  }
+
+  // --- the Dataset path, forced with a driver-path bound of 0 ---
+
+  private def collected(r: Rewrite.RewriteResult): (Int, Seq[(Long, String)]) =
+    (r.epochsToConverge.getOrElse(-1),
+      r.forest.collect().map(t => (t.treeId, TreeJson.toJson(t.tree))).sortBy(_._1).toSeq)
+
+  test("Dataset-path rewrite epochs run at most five Spark jobs each") {
+    val forest = customerForest()
+    val (result, jobs) = jobsDuring(
+      Rewrite.rewriteWithStats(forest, Rewrite.Config(tau = 0.7), localMaxTrees = 0))
+    val epochs = result.epochsToConverge.getOrElse(fail("the customer forest must converge"))
+    assert(epochs >= 3, s"the budget needs a multi-epoch run, got $epochs")
+    info(s"${jobs.size} jobs over $epochs epochs")
+    val entryExit = 8
+    assert(jobs.size <= 5 * epochs + entryExit,
+      s"${jobs.size} jobs over $epochs epochs, budget ${5 * epochs} + $entryExit")
+  }
+
+  test("Dataset-path customer rewrite matches the pinned golden at 1 and 7 shuffle partitions") {
+    val src = scala.io.Source.fromResource("graft/rewrite/customer_rewrite_golden.tsv")
+    val lines = try src.getLines().toVector finally src.close()
+    val epochs = lines.collect { case l if l.startsWith("#") =>
+      val Array(mode, n) = l.drop(1).split("\t"); mode -> n.toInt
+    }.toMap
+    val rows = lines.filterNot(_.startsWith("#")).map(_.split("\t", 3))
+      .groupMap(_(0))(a => (a(1).toLong, a(2)))
+    for (mode <- Seq("instance", "schema"); parts <- Seq("1", "7"))
+      withConf("spark.sql.shuffle.partitions" -> parts) {
+        val cfg = Rewrite.Config(tau = 0.7)
+        val r = Rewrite.rewriteWithStats(customerForest(),
+          if (mode == "schema") cfg.copy(schemaOnly = true, epochs = 8) else cfg, localMaxTrees = 0)
+        assert(collected(r) == (epochs(mode), rows(mode)), s"$mode, $parts shuffle partitions")
+      }
+  }
+
+  /** A customer-shaped forest of random size and key layout. */
+  private def randomCustomerForest(rnd: scala.util.Random): Dataset[TreeRow] = {
+    import spark.implicits._
+    val (nRegion, nNation, nCust) = (2 + rnd.nextInt(4), 5 + rnd.nextInt(20), 8 + rnd.nextInt(40))
+    val region = (0 until nRegion).map(i => (i, s"REGION$i")).toDF("r_regionkey", "r_name")
+    val nation = (0 until nNation).map(i => (i, s"NATION_$i", rnd.nextInt(nRegion)))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+    val segments = Seq("BUILDING", "MACHINERY", "AUTOMOBILE")
+    val customer = (0 until nCust).map(i =>
+      (i.toLong, f"Customer#$i%09d", rnd.nextInt(nNation), rnd.nextInt(10000).toDouble / 10,
+        segments(rnd.nextInt(segments.size))))
+      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
+    RelationalLoader.loadFrom(spark,
+      Map("region" -> region, "nation" -> nation, "customer" -> customer),
+      Testdata.customerDb).localCheckpoint(true)
+  }
+
+  test("property: the driver and Dataset paths give the same rows and epoch count") {
+    import org.scalacheck.Gen
+    // random customer-shaped forests, typed as loaded and stripped of
+    // their typing, plus generated instances of random schemas with each
+    // group wrapped under an untyped node; both clustering modes
+    val rnd = new scala.util.Random(11)
+    val customers = (0 until 4).map { i =>
+      val f = randomCustomerForest(rnd)
+      if (i % 2 == 0) f else Forest.untypeStructure(f).localCheckpoint(true)
+    }
+    val generated = PropertySpec.samples(
+      PropertySpec.schemaGen.flatMap(s => Gen.choose(2, 4).map(s -> _)), 4)
+      .zipWithIndex.map { case ((schema, size), i) =>
+        val trees = Generator.genInstance(schema, size = size, generateCollections = i % 2 == 0)
+          .map(tr => ArchiTree(Plain("ROOT"), Vector(Child.Node(ArchiTree(Plain("S"), Vector(Child.Node(tr)))))))
+        Forest.untypeStructure(Forest.fromTrees(spark, trees)).localCheckpoint(true)
+      }
+    val epochs = (customers ++ generated).zipWithIndex.map { case (forest, i) =>
+      val cfg = Rewrite.Config(tau = 0.7, epochs = 8, schemaOnly = i % 3 == 2)
+      val local = collected(Rewrite.rewriteWithStats(forest, cfg))
+      val distributed = collected(Rewrite.rewriteWithStats(forest.repartition(3), cfg, localMaxTrees = 0))
+      assert(local == distributed, s"forest $i (schemaOnly = ${cfg.schemaOnly})")
+      local._1
+    }
+    info(s"epochs to converge (-1 = cap): ${epochs.mkString(", ")}")
+  }
+
+  test("epochHook fires once per epoch on both paths with that epoch's trees") {
+    val forest = customerForest()
+    Seq(Rewrite.LocalMaxTrees, 0L).foreach { bound =>
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[(Long, String)])]
+      val cfg = Rewrite.Config(tau = 0.7, epochHook = Some((epoch, f) =>
+        seen += epoch -> f.collect().map(t => (t.treeId, TreeJson.toJson(t.tree))).sortBy(_._1).toSeq))
+      val r = Rewrite.rewriteWithStats(forest, cfg, bound)
+      val epochs = r.epochsToConverge.getOrElse(fail("the customer forest must converge"))
+      assert(seen.map(_._1) == (1 to epochs), s"bound $bound")
+      // the fixpoint epoch changes nothing, so its trees are the ones
+      // post-processing starts from: every tree id, once
+      assert(seen.last._2.map(_._1) == collected(r)._2.map(_._1), s"bound $bound")
     }
   }
 }

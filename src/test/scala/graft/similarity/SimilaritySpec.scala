@@ -29,13 +29,127 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(SeqMetrics.jaro(Set("A"), Set("B")) == 0.0)
   }
 
+  /** The Set-based metrics and ancestor similarity that sorted both
+    * label sets on every call, kept as the reference for the sorted-array
+    * forms.
+    */
+  private object SetReference {
+    def jaccard(x: Set[String], y: Set[String]): Double =
+      if (x.isEmpty && y.isEmpty) 1.0
+      else (x & y).size.toDouble / (x | y).size.toDouble
+
+    def levenshtein(x: Set[String], y: Set[String]): Double = {
+      val a = x.toIndexedSeq.sorted
+      val b = y.toIndexedSeq.sorted
+      if (a.isEmpty && b.isEmpty) return 1.0
+      val dp = Array.ofDim[Int](b.size + 1)
+      for (i <- a.indices) {
+        var prev = 0
+        for (j <- b.indices) {
+          val tmp = dp(j + 1)
+          dp(j + 1) = if (a(i) == b(j)) prev + 1 else math.max(dp(j + 1), dp(j))
+          prev = tmp
+        }
+      }
+      2.0 * dp(b.size) / (a.size + b.size)
+    }
+
+    def jaro(x: Set[String], y: Set[String]): Double = {
+      val a = x.toIndexedSeq.sorted
+      val b = y.toIndexedSeq.sorted
+      if (a.isEmpty && b.isEmpty) return 1.0
+      if (a.isEmpty || b.isEmpty) return 0.0
+      val window = math.max(math.max(a.size, b.size) / 2 - 1, 0)
+      val aMatched = Array.fill(a.size)(false)
+      val bMatched = Array.fill(b.size)(false)
+      var matches = 0
+      for (i <- a.indices) {
+        var j = math.max(0, i - window)
+        var found = false
+        while (j <= math.min(b.size - 1, i + window) && !found) {
+          if (!bMatched(j) && a(i) == b(j)) {
+            aMatched(i) = true; bMatched(j) = true; matches += 1; found = true
+          }
+          j += 1
+        }
+      }
+      if (matches == 0) return 0.0
+      var transpositions = 0
+      var k = 0
+      for (i <- a.indices if aMatched(i)) {
+        while (!bMatched(k)) k += 1
+        if (a(i) != b(k)) transpositions += 1
+        k += 1
+      }
+      val m = matches.toDouble
+      val jaroSim = (m / a.size + m / b.size + (m - transpositions / 2) / m) / 3.0
+      if (jaroSim <= 0.7) jaroSim
+      else {
+        var prefix = 0
+        while (prefix < math.min(4, math.min(a.size, b.size)) && a(prefix) == b(prefix)) prefix += 1
+        jaroSim + prefix * 0.1 * (1 - jaroSim)
+      }
+    }
+
+    def similarity(x: SubtreeFeature, y: SubtreeFeature,
+                   metric: (Set[String], Set[String]) => Double, decay: Double): Double = {
+      if ((x.self.entLabels & y.self.entLabels).isEmpty) return 0.0
+      def equivalent(a: LevelFeature, b: LevelFeature) =
+        a.id == b.id || (a.isTyped && b.isTyped && a.label == b.label)
+      if (equivalent(x.self, y.self)) return 1.0
+      var weightSum = 0.0
+      var simSum = 0.0
+      for (d <- 0 until math.min(math.min(x.levels.size, y.levels.size), Similarity.MaxSimCtxDepth)) {
+        val (lx, ly) = (x.levels(d), y.levels(d))
+        val sim = if (equivalent(lx, ly)) 1.0 else metric(lx.entLabels, ly.entLabels)
+        val w = math.pow(decay, -d)
+        weightSum += w
+        simSum += w * sim
+      }
+      math.max(0.0, math.min(1.0, simSum / weightSum))
+    }
+  }
+
+  test("property: sorted-array metrics and similarity equal the Set reference exactly") {
+    import org.scalacheck.Gen
+    val labelGen = Gen.oneOf("a", "b", "c", "d", "e", "f", "g", "h", "B", "aa", "c_name", "n_name")
+    val setGen = Gen.choose(0, 8).flatMap(n => Gen.containerOfN[Set, String](n, labelGen))
+    val pairs = Gen.listOfN(3000, Gen.zip(setGen, setGen))
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(17L))
+    val metrics = Seq(
+      ("jaccard", SetReference.jaccard _, SeqMetrics.jaccard _),
+      ("levenshtein", SetReference.levenshtein _, SeqMetrics.levenshtein _),
+      ("jaro", SetReference.jaro _, SeqMetrics.jaro _))
+    for ((x, y) <- pairs; (name, reference, now) <- metrics) {
+      assert(now(x, y) == reference(x, y), s"$name on $x, $y")
+      assert(SeqMetrics.byName(name)(x.toArray.sorted, y.toArray.sorted) == reference(x, y),
+        s"$name on $x, $y")
+    }
+
+    // ancestor similarity over random level chains: ids collide now and
+    // then (the shared-ancestor shortcut), typed labels sometimes match
+    val levelGen = for {
+      id <- Gen.choose(0, 5).map(i => s"id$i")
+      label <- Gen.oneOf("X", "Y", "GROUP::G")
+      ents <- setGen
+    } yield LevelFeature(id, label, label.contains("::"), ents)
+    val featGen = Gen.choose(1, 5).flatMap(n => Gen.listOfN(n, levelGen))
+      .map(ls => SubtreeFeature(ls.toVector, 2, ls.size - 1))
+    val feats = Gen.listOfN(2000, Gen.zip(featGen, featGen))
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(23L))
+    for ((x, y) <- feats; (name, reference, _) <- metrics; decay <- Seq(2.0, 1.5)) {
+      assert(Similarity.similarity(x, y, SeqMetrics.byName(name), decay) ==
+        SetReference.similarity(x, y, reference, decay), s"$name on $x, $y")
+    }
+  }
+
   private def featuresOf(treeStr: String): Map[String, SubtreeFeature] =
     Similarity.treeFeatures(SExpr.parse(treeStr), "t").toMap
 
   test("similarity doctest: siblings under one root = 0.5555… with jaccard") {
     val fs = featuresOf(
       "(S (X (ENT::person Alice) (ENT::fruit apple)) (Y (ENT::person Bob) (ENT::animal rabbit)))")
-    val sim = Similarity.similarity(fs("t/0"), fs("t/1"), SeqMetrics.jaccard)
+    val sim = Similarity.similarity(fs("t/0"), fs("t/1"), SeqMetrics.jaccardSorted)
     assert(math.abs(sim - 0.5555555555555555) < 1e-12, s"got $sim")
   }
 
