@@ -73,14 +73,11 @@ object MetricsLog {
       s"$prefix.distinct_count" -> m.numDistinctType(t).toDouble,
       s"$prefix.ratio" -> m.ratioType(t))
 
-    val clusterCount = m.current.clustering.toDF("oid", "c")
-      .select("c").distinct().count()
-
     val base = Map(
       "nodes.count" -> m.numNodes.toDouble,
       "unlabeled.count" -> m.numUnlabeledNodes.toDouble,
       "unlabeled.ratio" -> m.ratioUnlabeledNodes,
-      "clustering.cluster_count" -> clusterCount.toDouble,
+      "clustering.cluster_count" -> m.current.clustering.values.toSet.size.toDouble,
       "clustering.ami" -> m.clusterAmi,
       "clustering.completeness" -> m.clusterCompleteness,
       "entities.coverage" -> m.coverage,

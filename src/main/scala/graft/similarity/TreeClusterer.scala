@@ -3,7 +3,7 @@ package graft.similarity
 import graft.core._
 import graft.model.{TreeRow, Trees}
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** Serializable feature rows (Set → sorted Seq for the product encoder). */
@@ -626,47 +626,72 @@ object TreeClusterer {
     * oid its parent's cluster name. `metricName = null` variant maps each
     * entity to its parent's label directly.
     *
-    * Returns a Dataset of (oid, label), one row per distinct entity oid
-    * — callers join rather than receive a driver-side map, so nothing
-    * here is sized by entity count. An oid duplicated under differently
-    * labelled parents (REL duplication does this) resolves to the max
-    * label for determinism (the reference's dict insertion made the
-    * winner ordering-dependent).
+    * Two Spark jobs: the fit's aggregate (the fit skips its top-K pass,
+    * since only the key map is read) and one pass that labels each
+    * partition's entities; the map is merged on the driver. An oid
+    * duplicated under differently labelled parents (REL duplication does
+    * this) resolves to the max label for determinism (the reference's
+    * dict insertion made the winner ordering-dependent).
     */
   def entityLabels(
       forest: Dataset[TreeRow],
       tau: Double,
       metricName: String = "jaro",
       decay: Double = Similarity.Decay,
-  ): Dataset[(String, String)] = {
+  ): Map[String, String] = {
     import forest.sparkSession.implicits._
-    // each entity parent's label: its own rendering (null metric) or its
-    // cluster from the model's key map — assignments are the only
-    // consumed output, so the fit skips its top-K pass. One flatMap plus
-    // the oid aggregation: no join, no broadcast sized by the forest
-    val model = Option(metricName).map(m => fitModel(Trees(forest), tau, decay, m,
-      entityParentsOnly = true, buildModel = false))
-    val labelled = forest.flatMap { case TreeRow(treeId, tree) =>
+    val trees = Trees(forest)
+    val model = entityParentModel(trees, tau, metricName, decay)
+    val labels = new EntityLabels
+    trees.collectPartitions { it =>
+      val part = new EntityLabels
+      it.foreach(r => part.addTree(r.treeId, r.tree, model))
+      part.labels.iterator
+    }.foreach { case (oid, label) => labels.add(oid, label) }
+    labels.labels.toMap
+  }
+
+  /** The model behind [[entityLabels]]: entity parents clustered under
+    * `metricName`, or None for the parent-label variant.
+    */
+  private[graft] def entityParentModel(
+      trees: Trees, tau: Double, metricName: String, decay: Double): Option[ClusterModel] =
+    Option(metricName).map(m =>
+      fitModel(trees, tau, decay, m, entityParentsOnly = true, buildModel = false))
+
+  /** Entity oid → label, the max label winning (Spark's string order:
+    * UTF-8 bytes) when an oid meets more than one.
+    */
+  private[graft] final class EntityLabels {
+    val labels = scala.collection.mutable.HashMap.empty[String, String]
+
+    def add(oid: String, label: String): Unit =
+      labels.updateWith(oid) {
+        case Some(cur) if UTF8String.fromString(cur).compareTo(UTF8String.fromString(label)) >= 0 =>
+          Some(cur)
+        case _ => Some(label)
+      }
+
+    /** Each ENT child of one tree's entity parents under its parent's
+      * label: the parent's own rendering without a model, else each
+      * cluster the parent is assigned to.
+      */
+    def addTree(treeId: Long, tree: ArchiTree, model: Option[ClusterModel]): Unit = {
       val clusters = model.map(treeAssignments(treeId, tree, _, entityParentsOnly = true)
         .toSeq.groupMap(_.key)(_.cluster))
-      tree.positionedSubtrees.flatMap { case (path, t) =>
-        val labels = clusters match {
+      tree.positionedSubtrees.foreach { case (path, t) =>
+        val parentLabels = clusters match {
           case None     => Seq(t.label.render)
           case Some(cs) => cs.getOrElse(s"$treeId/${path.mkString(".")}", Nil)
         }
-        labels.flatMap { label =>
-          t.childTrees.zipWithIndex.collect {
+        parentLabels.foreach { label =>
+          t.childTrees.zipWithIndex.foreach {
             case (c, i) if c.hasType(NodeType.Ent) =>
-              val oid = if (c.oid.nonEmpty) c.oid else s"$treeId/${(path :+ i).mkString(".")}"
-              oid -> label
+              add(if (c.oid.nonEmpty) c.oid else s"$treeId/${(path :+ i).mkString(".")}", label)
+            case _ =>
           }
         }
       }
-    }.groupBy(col("_1").as("oid")).agg(max(col("_2")).as("label"))
-      .as[(String, String)]
-    // materialize once: snapshot comparisons read the labels more than
-    // once, and each recomputation would refit (the result is
-    // data-sized, so the reliable-checkpoint policy applies)
-    graft.util.Spark.checkpoint(labelled)
+    }
   }
 }

@@ -1,8 +1,12 @@
 package graft.metrics
 
-import graft.SparkSpec
-import graft.core.SExpr
-import graft.model.Forest
+import graft.{SparkSpec, TestForests}
+import graft.core.{NodeType, SExpr}
+import graft.model.{Forest, TreeRow, Trees}
+import graft.rewrite.Rewrite
+import graft.similarity.TreeClusterer
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** FD metrics doctests (architxt/metrics.py:47-54,81-88,120-127), the
@@ -139,5 +143,107 @@ class MetricsSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(c - 2.0 / 3.0) < 1e-12, s"got $c")
     assert(math.abs(ClusterComparison.completeness(
       Seq("0", "0", "1", "1"), Seq("0", "1", "0", "1"))) < 1e-12)
+  }
+
+  // --- snapshot comparison: the driver-side Metrics against the
+  // join-based code it replaced, kept here as the reference ---
+
+  /** The replaced snapshot: distinct entity oids, label counts and the
+    * checkpointed (oid, max cluster) entity labelling, as Datasets.
+    */
+  private def referenceSnapshot(forest: Dataset[TreeRow]) = {
+    import spark.implicits._
+    val oids = forest.flatMap { case TreeRow(treeId, tree) =>
+      tree.positionedSubtrees.collect {
+        case (path, t) if t.hasType(NodeType.Ent) =>
+          if (t.oid.nonEmpty) t.oid else s"$treeId/${path.mkString(".")}"
+      }
+    }.distinct()
+    val labels = forest.flatMap(_.tree.subtrees.map(_.label.render))
+      .groupByKey(identity).count().collect().toMap
+    val model = TreeClusterer.fitModel(Trees(forest), 0.7, 2.0, "jaro",
+      entityParentsOnly = true, buildModel = false)
+    val clustering = forest.flatMap { case TreeRow(treeId, tree) =>
+      val clusters = TreeClusterer.treeAssignments(treeId, tree, model, entityParentsOnly = true)
+        .toSeq.groupMap(_.key)(_.cluster)
+      tree.positionedSubtrees.flatMap { case (path, t) =>
+        clusters.getOrElse(s"$treeId/${path.mkString(".")}", Nil).flatMap { label =>
+          t.childTrees.zipWithIndex.collect {
+            case (c, i) if c.hasType(NodeType.Ent) =>
+              (if (c.oid.nonEmpty) c.oid else s"$treeId/${(path :+ i).mkString(".")}") -> label
+          }
+        }
+      }
+    }.groupBy(col("_1").as("oid")).agg(max(col("_2")).as("label")).as[(String, String)]
+    (oids, labels, clustering)
+  }
+
+  private def referenceCoverage(a: Dataset[String], b: Dataset[String]): Double = {
+    val r = a.toDF("oid").withColumn("ina", lit(1))
+      .join(b.toDF("oid").withColumn("inb", lit(1)), Seq("oid"), "full_outer")
+      .agg(count(lit(1)).as("u"),
+        count(when(col("ina").isNotNull && col("inb").isNotNull, 1)).as("i"))
+      .head()
+    if (r.getLong(0) == 0) 1.0 else r.getLong(1).toDouble / r.getLong(0)
+  }
+
+  private def referenceContingency(
+      a: Dataset[(String, String)], b: Dataset[(String, String)]): Map[(String, String), Long] = {
+    val cells = a.toDF("oid", "a").join(b.toDF("oid", "b"), Seq("oid"), "full_outer")
+      .groupBy("a", "b").count().collect()
+    val matched = cells.iterator
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+    val singleA = cells.iterator.filter(r => !r.isNullAt(0) && r.isNullAt(1)).flatMap { r =>
+      (0L until r.getLong(2)).map(i => (r.getString(0), s"\u0000a:${r.getString(0)}:$i") -> 1L)
+    }
+    val singleB = cells.iterator.filter(r => r.isNullAt(0) && !r.isNullAt(1)).flatMap { r =>
+      (0L until r.getLong(2)).map(i => (s"\u0000b:${r.getString(1)}:$i", r.getString(1)) -> 1L)
+    }
+    (matched ++ singleA ++ singleB).toMap
+  }
+
+  test("snapshot comparison runs at most four Spark jobs") {
+    val a = TestForests.randomCustomer(spark, new scala.util.Random(5))
+    val b = Rewrite.rewrite(a, Rewrite.Config(tau = 0.7))
+    val (_, jobs) = jobsDuring {
+      val m = new Metrics(a)
+      m.update(b)
+      (m.coverage, m.clusterCompleteness, m.clusterAmi)
+    }
+    info(s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(jobs.size <= 4, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+  }
+
+  test("property: driver-side snapshots match the join-based comparison on random forest pairs") {
+    // typed and untyped customer-shaped forests against their rewrite,
+    // against each other (partly shared keys), and generated instances
+    val rnd = new scala.util.Random(23)
+    val pairs = (0 until 3).flatMap { i =>
+      val typed = TestForests.randomCustomer(spark, rnd)
+      val other = TestForests.randomCustomer(spark, rnd)
+      val untyped = Forest.untypeStructure(typed).localCheckpoint(true)
+      Seq(typed -> Rewrite.rewrite(typed, Rewrite.Config(tau = 0.7)),
+        untyped -> Rewrite.rewrite(untyped, Rewrite.Config(tau = 0.7, epochs = 4)),
+        typed -> other.repartition(1 + i))
+    }
+    pairs.zipWithIndex.foreach { case ((a, b), i) =>
+      val m = new Metrics(a, 0.7)
+      m.update(b)
+      val (aOids, aLabels, aClusters) = referenceSnapshot(a)
+      val (bOids, bLabels, bClusters) = referenceSnapshot(b)
+      val what = s"pair $i"
+      assert(m.origin.labelCounts == aLabels, what)
+      assert(m.current.labelCounts == bLabels, what)
+      assert(m.origin.clustering == aClusters.collect().toMap, what)
+      assert(m.current.clustering == bClusters.collect().toMap, what)
+      assert(m.current.entityOids.collect().toSet == bOids.collect().toSet, what)
+      val table = referenceContingency(aClusters, bClusters)
+      assert(math.abs(m.coverage - referenceCoverage(aOids, bOids)) <= 1e-12, what)
+      assert(math.abs(m.clusterCompleteness -
+        ClusterComparison.completenessFromContingency(table)) <= 1e-12, what)
+      assert(math.abs(m.clusterAmi -
+        ClusterComparison.adjustedMutualInfoFromContingency(table)) <= 1e-12, what)
+    }
   }
 }

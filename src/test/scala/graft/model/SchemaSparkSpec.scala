@@ -1,7 +1,8 @@
 package graft.model
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestForests}
 import graft.core._
+import graft.rewrite.PropertySpec
 import graft.sources.{RelationalLoader, Testdata}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,10 +20,55 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
       t("(S (GROUP::P (ENT::name Bob) (ENT::city NYC)) (GROUP::Q (ENT::x 1)))"),
       t("(ROOT (REL::r (GROUP::P (ENT::name Al)) (GROUP::Q (ENT::x 2))))"))
     val local = Schema.fromTrees(trees)
-    val dist = Schema.fromForest(Forest.toNodesDF(Forest.fromTrees(spark, trees)))
-    assert(dist.groups == local.groups)
-    assert(dist.relations == local.relations)
-    assert(dist.productions.toSet == local.productions.toSet)
+    val nodes = Forest.toNodesDF(Forest.fromTrees(spark, trees))
+    for (parts <- Seq("1", "7"); bound <- Seq(Schema.LocalMaxNodes, 0L))
+      withConf("spark.sql.shuffle.partitions" -> parts) {
+        val dist = Schema.fromForest(nodes, keepUnlabelled = true, mergeLhs = true, bound)
+        val what = s"$parts shuffle partitions, bound $bound"
+        assert(dist.groups == local.groups, what)
+        assert(dist.relations == local.relations, what)
+        assert(dist.productions == local.productions, what)
+      }
+  }
+
+  test("fromForest over a small node set runs at most two Spark jobs") {
+    val nodes = Forest.toNodesDF(TestForests.randomCustomer(spark, new scala.util.Random(3)))
+    val (schema, jobs) = jobsDuring(Schema.fromForest(nodes, keepUnlabelled = false))
+    info(s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(jobs.size <= 2, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(schema == Schema.fromForest(nodes, keepUnlabelled = false, mergeLhs = true, 0L))
+  }
+
+  test("property: the driver and Dataset derivations give equal schemas at 1 and 7 shuffle partitions") {
+    // customer-shaped forests typed as loaded and stripped of their
+    // typing, and generated instances of random schemas whose REL sides
+    // share members across pairs
+    val rnd = new scala.util.Random(17)
+    val customers = (0 until 3).flatMap { _ =>
+      val f = TestForests.randomCustomer(spark, rnd)
+      Seq(f, Forest.untypeStructure(f).localCheckpoint(true))
+    }
+    val generated = PropertySpec.samples(PropertySpec.schemaGen, 6).zipWithIndex.map { case (s, i) =>
+      TestForests.relInstance(spark, s, size = 2 + rnd.nextInt(4), members = 1 + rnd.nextInt(3),
+        collections = i % 2 == 1, rnd)
+    }
+    val orientations = for {
+      ((forest, i), parts) <- (customers ++ generated).zipWithIndex.zip(Iterator.continually(Seq("1", "7")).flatten)
+      keep <- Seq(true, false)
+    } yield withConf("spark.sql.shuffle.partitions" -> parts) {
+      val nodes = Forest.toNodesDF(forest.repartition(3))
+      val local = Schema.fromForest(nodes, keep, mergeLhs = i % 3 != 0, Schema.LocalMaxNodes)
+      val dist = Schema.fromForest(nodes, keep, mergeLhs = i % 3 != 0, 0L)
+      val what = s"forest $i, $parts shuffle partitions, keepUnlabelled = $keep"
+      assert(local.productions == dist.productions, what)
+      assert(local.groups == dist.groups, what)
+      assert(local.relations == dist.relations, what)
+      local.relations.toSeq.map(_.orientation)
+    }
+    val seen = orientations.flatten.toSet
+    info(s"orientations seen: ${seen.mkString(", ")}")
+    assert(seen.contains(RelationOrientation.Both) && seen.size >= 2,
+      "the sample must exercise multi-member sides on one side and on both")
   }
 
   test("templateFromTrees: productions match fromForest; template trees identical") {

@@ -1,6 +1,6 @@
 package graft.rewrite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestForests}
 import graft.core._
 import graft.model.{Forest, Group, Relation, RelationOrientation, Schema, TreeRow}
 import graft.sources.{RelationalLoader, Testdata}
@@ -267,16 +267,6 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
       Testdata.customerDb).localCheckpoint(true)
   }
 
-  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
-    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("rewrite epochs run at most five Spark jobs each") {
     // one epoch: reduce_all checkpoint, the fit's aggregate and top-K
     // passes, the find_groups checkpoint, the fused op trials. Every
@@ -304,23 +294,6 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
     val entryExit = 8
     assert(jobs.get <= 5 * epochs + entryExit,
       s"${jobs.get} jobs over $epochs epochs, budget ${5 * epochs} + $entryExit")
-  }
-
-  /** `body`'s result and the call sites of the Spark jobs it ran. */
-  private def jobsDuring[A](body: => A): (A, Seq[String]) = {
-    val sc = spark.sparkContext
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sites.add(e.stageInfos.headOption.map(_.name).getOrElse("?"))
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.TestListenerBus.drain(sc)
-      (r, sites.toArray(Array.empty[String]).toSeq)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a forest within LocalMaxTrees is rewritten in at most three Spark jobs") {
@@ -392,23 +365,6 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
       }
   }
 
-  /** A customer-shaped forest of random size and key layout. */
-  private def randomCustomerForest(rnd: scala.util.Random): Dataset[TreeRow] = {
-    import spark.implicits._
-    val (nRegion, nNation, nCust) = (2 + rnd.nextInt(4), 5 + rnd.nextInt(20), 8 + rnd.nextInt(40))
-    val region = (0 until nRegion).map(i => (i, s"REGION$i")).toDF("r_regionkey", "r_name")
-    val nation = (0 until nNation).map(i => (i, s"NATION_$i", rnd.nextInt(nRegion)))
-      .toDF("n_nationkey", "n_name", "n_regionkey")
-    val segments = Seq("BUILDING", "MACHINERY", "AUTOMOBILE")
-    val customer = (0 until nCust).map(i =>
-      (i.toLong, f"Customer#$i%09d", rnd.nextInt(nNation), rnd.nextInt(10000).toDouble / 10,
-        segments(rnd.nextInt(segments.size))))
-      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    RelationalLoader.loadFrom(spark,
-      Map("region" -> region, "nation" -> nation, "customer" -> customer),
-      Testdata.customerDb).localCheckpoint(true)
-  }
-
   test("property: the driver and Dataset paths give the same rows and epoch count") {
     import org.scalacheck.Gen
     // random customer-shaped forests, typed as loaded and stripped of
@@ -416,7 +372,7 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
     // group wrapped under an untyped node; both clustering modes
     val rnd = new scala.util.Random(11)
     val customers = (0 until 4).map { i =>
-      val f = randomCustomerForest(rnd)
+      val f = TestForests.randomCustomer(spark, rnd)
       if (i % 2 == 0) f else Forest.untypeStructure(f).localCheckpoint(true)
     }
     val generated = PropertySpec.samples(
