@@ -11,31 +11,25 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * Left child: the vector, `array<double>`. Right child: the centroid
   * set as `array<struct<cid:int, cv:array<double>>>` — in the IVF
   * operator it arrives as ONE `typedLit` literal, so the plan stays
-  * O(1) in `nLists`.
+  * O(1) in `nLists`. It is the one corpus-wide assignment of the IVF
+  * index and of semantic dedup; the driver trainer (operators/Ann.scala)
+  * assigns its sample with [[ArgmaxCosine.nearest]], the same kernel, so
+  * a model trained on the driver assigns the corpus exactly as it
+  * assigned the sample.
   *
-  * Replaces the large-`nLists` formulation `array_max(transform(cents,
-  * c -> struct(cosine(v, c.cv) as s, c.cid)))['cid']`
-  * (operators/Ann.scala): `transform` is CodegenFallback, so the
-  * corpus-wide assignment scan — THE 100 TB stage of the IVF index —
-  * paid interpreted lambda dispatch per row per centroid. Here the
+  * It replaced `array_max(transform(cents, c -> struct(cosine(v, c.cv)
+  * as s, c.cid)))['cid']`, whose `transform` is CodegenFallback: the
   * whole argmax (centroid loop and dot-product loop) is one generated
-  * primitive nest that whole-stage codegen inlines.
-  *
-  * Semantics match the formulation it replaces on the operator's
-  * contract (non-null double vectors, literal centroid set):
-  * - per-entry similarity is CosineSimilarity's sequential fold —
-  *   bit-identical to both prior formulations, so the
-  *   literal-vs-unrolled equivalence pin holds
+  * primitive nest that whole-stage codegen inlines. Semantics:
+  * - per-entry similarity is CosineSimilarity's sequential fold
   * - similarity comparison is Spark's double ordering (`x == y` first,
   *   then `Double.compare`): NaN — a zero-norm side — sorts ABOVE every
   *   number and -0.0 equals 0.0, exactly like the struct `array_max`
   * - ties resolve to the larger cid (struct lexicographic order)
   * - an entry whose vector length differs from the input is never
-  *   selected (its cosine was null, sorting below every real score);
-  *   if NO entry qualifies — or the set is empty — the result is null.
-  *   DELIBERATE divergence: the replaced `array_max` returned the max
-  *   cid in that degenerate all-null case — a meaningless assignment;
-  *   consumers (lloydCentroids, the ADC scans) filter null out instead
+  *   selected; if NO entry qualifies — or the set is empty — the
+  *   result is null, and consumers (the trainer, the ADC scans) leave
+  *   that row out
   * - null if either child is null or the vector has a null element
   */
 case class ArgmaxCosine(left: Expression, right: Expression)
@@ -48,57 +42,8 @@ case class ArgmaxCosine(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ArgmaxCosine =
     copy(left = newLeft, right = newRight)
 
-  /** Spark's SQL double ordering: equal first (so -0.0 == 0.0), then
-    * java.lang.Double.compare (so NaN is greater than everything).
-    */
-  @inline private def cmp(a: Double, b: Double): Int =
-    if (a == b) 0 else java.lang.Double.compare(a, b)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val cents = b.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) return null
-      i += 1
-    }
-    var bestS = 0.0
-    var bestCid = 0
-    var found = false
-    var j = 0
-    val m = cents.numElements()
-    while (j < m) {
-      if (!cents.isNullAt(j)) {
-        val entry = cents.getStruct(j, 2)
-        if (!entry.isNullAt(0) && !entry.isNullAt(1) && entry.getArray(1).numElements() == n) {
-          val cv = entry.getArray(1)
-          val cid = entry.getInt(0)
-          var dot = 0.0
-          var na = 0.0
-          var nb = 0.0
-          var i2 = 0
-          while (i2 < n) {
-            val x = v.getDouble(i2)
-            val y = cv.getDouble(i2)
-            dot += x * y
-            na += x * x
-            nb += y * y
-            i2 += 1
-          }
-          val s = dot / (math.sqrt(na) * math.sqrt(nb))
-          val c = if (found) cmp(s, bestS) else 1
-          if (c > 0 || (c == 0 && cid > bestCid)) {
-            found = true
-            bestS = s
-            bestCid = cid
-          }
-        }
-      }
-      j += 1
-    }
-    if (found) bestCid else null
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ArgmaxCosine.evalWith(a, b, ArgmaxCosine.nearest)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -158,4 +103,79 @@ case class ArgmaxCosine(left: Expression, right: Expression)
          |}
        """.stripMargin
     })
+}
+
+object ArgmaxCosine {
+
+  /** A centroid set or codebook on the driver: (cid, vector) entries. */
+  type Entries = Array[(Int, Array[Double])]
+
+  /** Spark's SQL double ordering: equal first (so -0.0 == 0.0), then
+    * java.lang.Double.compare (so NaN is greater than everything).
+    */
+  @inline private def cmp(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** The driver form of graft_cosine_argmax: the INDEX in `cents` of
+    * the entry the expression picks, or -1 where it gives null (a null
+    * vector, or no entry of the vector's length). Same fold, same
+    * ordering, same tie-break as the generated code.
+    */
+  def nearest(v: Array[Double], cents: Entries): Int = {
+    if (v == null) return -1
+    val n = v.length
+    var best = -1
+    var bestS = 0.0
+    var bestCid = 0
+    var j = 0
+    while (j < cents.length) {
+      val cid = cents(j)._1
+      val cv = cents(j)._2
+      if (cv != null && cv.length == n) {
+        var dot = 0.0
+        var na = 0.0
+        var nb = 0.0
+        var i = 0
+        while (i < n) {
+          val x = v(i)
+          val y = cv(i)
+          dot += x * y
+          na += x * x
+          nb += y * y
+          i += 1
+        }
+        val s = dot / (math.sqrt(na) * math.sqrt(nb))
+        val c = if (best < 0) 1 else cmp(s, bestS)
+        if (c > 0 || (c == 0 && cid > bestCid)) {
+          best = j
+          bestS = s
+          bestCid = cid
+        }
+      }
+      j += 1
+    }
+    best
+  }
+
+  /** Interpreted evaluation of an (input, entry set) assignment
+    * expression through its driver kernel: a vector with a null
+    * element gives null, and a null entry, cid or entry vector is an
+    * entry that never qualifies.
+    */
+  private[functions] def evalWith(a: Any, b: Any, kernel: (Array[Double], Entries) => Int): Any = {
+    val v = a.asInstanceOf[ArrayData]
+    val set = b.asInstanceOf[ArrayData]
+    var i = 0
+    while (i < v.numElements()) {
+      if (v.isNullAt(i)) return null
+      i += 1
+    }
+    val entries = Array.tabulate(set.numElements()) { j =>
+      val e = if (set.isNullAt(j)) null else set.getStruct(j, 2)
+      if (e == null || e.isNullAt(0) || e.isNullAt(1)) (0, null: Array[Double])
+      else (e.getInt(0), e.getArray(1).toDoubleArray())
+    }
+    val j = kernel(v.toDoubleArray(), entries)
+    if (j < 0) null else entries(j)._1
+  }
 }

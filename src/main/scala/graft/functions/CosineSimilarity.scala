@@ -62,9 +62,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     nullSafeCodeGen(ctx, ev, (a, b) => {
       // fresh local names: with non-nullable children nullSafeCodeGen
       // splices this block UNbraced into the shared method scope, so
-      // several instances in one projection (the unrolled IVF argmax is
-      // exactly that) would collide on fixed names and silently fall the
-      // whole projection back to interpreted eval
+      // several instances in one projection would collide on fixed
+      // names and silently fall the whole projection back to
+      // interpreted eval
       val n = ctx.freshName("n")
       val dot = ctx.freshName("dot")
       val na = ctx.freshName("na")

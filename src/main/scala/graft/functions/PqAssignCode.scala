@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Native product-quantization code assignment: the id of the codebook
@@ -12,31 +11,24 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * Left child: the sub-vector, `array<double>`. Right child: the
   * codebook as `array<struct<cid:int, cv:array<double>>>` — in the PQ
   * operator it arrives as ONE `typedLit` literal, so the plan stays
-  * O(1) in the codebook size.
+  * O(1) in the codebook size. It encodes the corpus; the driver trainer
+  * (operators/Ann.scala) encodes its sample with [[PqAssignCode.nearest]],
+  * the same kernel.
   *
-  * Replaces `array_max(transform(cbLit, c -> struct(-l2sq(sub, c.cv)
-  * as s, c.cid)))['cid']` (operators/Ann.scala): `transform` and the
-  * fold inside it are CodegenFallback, so the corpus-wide encode scan
-  * paid interpreted lambda dispatch per row per centroid. Here the
+  * It replaced `array_max(transform(cbLit, c -> struct(-l2sq(sub, cv)
+  * as s, c.cid)))['cid']`, whose `transform` is CodegenFallback: the
   * whole argmin — centroid loop and element loop — is one generated
-  * primitive nest that whole-stage codegen inlines.
-  *
-  * Semantics match the formulation it replaces on the operator's
-  * contract (non-null double vectors, literal codebook):
+  * primitive nest that whole-stage codegen inlines. Semantics:
   * - per-entry distance is the sequential left-to-right sum of
   *   `(x-y)^2` — bit-deterministic, replayable by a relational oracle
   * - argmin tie-break to the larger cid ≡ the struct argmax on
   *   `(-d, cid)` (d is a sum of squares, so `-d` can't be `-0.0` vs
   *   `0.0` ambiguous across entries: equal distances compare equal)
   * - a codebook entry whose vector length differs from the sub-vector
-  *   is never selected (the old `l2sq` returned null for it, sorting it
-  *   below every real score); if NO entry matches — or the codebook is
-  *   empty — the result is null. DELIBERATE divergence: the replaced
-  *   `array_max` returned the max cid in that degenerate all-null case —
-  *   a meaningless assignment; consumers (pqTrain, the ADC scans)
-  *   filter null out instead
+  *   is never selected; if NO entry matches — or the codebook is empty
+  *   — the result is null, and consumers (the trainer, the ADC scans)
+  *   leave that row out
   * - null if either child is null or the sub-vector has a null element
-  *   (null poisoned every fold in the old formulation)
   */
 case class PqAssignCode(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -48,44 +40,8 @@ case class PqAssignCode(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): PqAssignCode =
     copy(left = newLeft, right = newRight)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val sub = a.asInstanceOf[ArrayData]
-    val cb = b.asInstanceOf[ArrayData]
-    val n = sub.numElements()
-    var i = 0
-    while (i < n) {
-      if (sub.isNullAt(i)) return null
-      i += 1
-    }
-    var bestD = Double.PositiveInfinity
-    var bestCid = 0
-    var found = false
-    var j = 0
-    val m = cb.numElements()
-    while (j < m) {
-      if (!cb.isNullAt(j)) {
-        val entry = cb.getStruct(j, 2)
-        if (!entry.isNullAt(0) && !entry.isNullAt(1) && entry.getArray(1).numElements() == n) {
-          val cv = entry.getArray(1)
-          val cid = entry.getInt(0)
-          var d = 0.0
-          var i2 = 0
-          while (i2 < n) {
-            val diff = sub.getDouble(i2) - cv.getDouble(i2)
-            d += diff * diff
-            i2 += 1
-          }
-          if (!found || d < bestD || (d == bestD && cid > bestCid)) {
-            found = true
-            bestD = d
-            bestCid = cid
-          }
-        }
-      }
-      j += 1
-    }
-    if (found) bestCid else null
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ArgmaxCosine.evalWith(a, b, PqAssignCode.nearest)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -137,4 +93,41 @@ case class PqAssignCode(left: Expression, right: Expression)
          |}
        """.stripMargin
     })
+}
+
+object PqAssignCode {
+
+  /** The driver form of graft_pq_assign: the INDEX in `cb` of the entry
+    * the expression picks, or -1 where it gives null (a null sub-vector,
+    * or no entry of its length). Same sequential distance sum, same
+    * larger-cid tie-break as the generated code.
+    */
+  def nearest(sub: Array[Double], cb: ArgmaxCosine.Entries): Int = {
+    if (sub == null) return -1
+    val n = sub.length
+    var best = -1
+    var bestD = Double.PositiveInfinity
+    var bestCid = 0
+    var j = 0
+    while (j < cb.length) {
+      val cid = cb(j)._1
+      val cv = cb(j)._2
+      if (cv != null && cv.length == n) {
+        var d = 0.0
+        var i = 0
+        while (i < n) {
+          val diff = sub(i) - cv(i)
+          d += diff * diff
+          i += 1
+        }
+        if (best < 0 || d < bestD || (d == bestD && cid > bestCid)) {
+          best = j
+          bestD = d
+          bestCid = cid
+        }
+      }
+      j += 1
+    }
+    best
+  }
 }

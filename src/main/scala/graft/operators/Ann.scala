@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.{ArgmaxCosine, PqAssignCode}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,9 +10,21 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the brute-force path broadcasts the (small) query set and
   * never pairs corpus rows with each other — cost O(|queries|·N), the
-  * correct baseline and the oracle-checkable one. The IVF path clusters
-  * the corpus once (k-means over sampled centroids) and probes only the
-  * closest `nProbe` partitions per query — the 100 TB path.
+  * correct baseline and the oracle-checkable one. The indexes (IVF, PQ,
+  * IVFADC, OPQ) split the work in two:
+  * - the MODEL — IVF centroids, PQ codebooks, the OPQ rotation — is
+  *   bounded by its parameters, so ONE deterministic Lloyd trainer
+  *   ([[lloyd]]) fits it on the driver over the first [[TrainSample]]
+  *   vectors by id, fetched with one collect (the training-subset
+  *   protocol of Ge et al., CVPR 2013). Up to that many vectors the
+  *   sample IS the corpus, so the model is the full-corpus Lloyd model;
+  * - the CORPUS-WIDE work — assigning every vector to its list,
+  *   encoding it, scanning codes — stays distributed, as per-row
+  *   codegen'd expressions over the model embedded in one literal
+  *   (graft_cosine_argmax, graft_pq_assign). The trainer assigns its
+  *   sample with the same kernels ([[ArgmaxCosine.nearest]],
+  *   [[PqAssignCode.nearest]]), so training and serving agree bit for
+  *   bit.
   */
 object Ann {
 
@@ -26,7 +39,7 @@ object Ann {
 
   // array<float> -> array<double> as ONE codegen'd Cast — not
   // transform(_.cast(...)), whose lambda layer is CodegenFallback
-  private def asDouble(c: Column): Column = c.cast("array<double>")
+  private[operators] def asDouble(c: Column): Column = c.cast("array<double>")
 
   /** Exact top-k neighbors for each query id (query rows are taken from
     * the corpus itself). Self-matches excluded; ties broken by neighbor
@@ -54,14 +67,81 @@ object Ann {
       .select("query_id", "neighbor_id")
   }
 
-  /** How many centroids the IVF assignment/probe may express as ONE
-    * unrolled Catalyst expression before switching to the
-    * single-literal `array_max(transform(…))` formulation. The unrolled
-    * argmax is codegen'd, but its plan grows linearly with `nLists`:
-    * past a few hundred it blows codegen's 64KB method limit (falling
-    * back to interpreted) and eventually planning itself.
+  /** How many vectors the trainer fits a model on: the first
+    * `TrainSample` by id. Every shipped corpus is within it (500 vectors
+    * at sf0.01, 2,000 at sf0.1), so their models are full-corpus models.
     */
-  private[operators] val MaxUnrolledLists = 64
+  val TrainSample = 2048
+
+  /** The training sample: the first `n` (`id`, `v`) rows by id, in one
+    * collect — O(n·dim) on the driver, bounded by `n`, never by the
+    * corpus. A null vector, or one with a null element, is `null`: no
+    * entry qualifies for it, as the Spark expressions give null for it.
+    */
+  private[operators] def trainSample(corpus: DataFrame, n: Int): Array[Array[Double]] =
+    corpus.orderBy("id").limit(n).collect().map { r =>
+      val v = r.getSeq[Any](1)
+      if (v == null || v.contains(null)) null else v.map(_.asInstanceOf[Double]).toArray
+    }
+
+  /** The vector length of a sample: that of its first non-null vector. */
+  private def dimOf(xs: Array[Array[Double]]): Int = {
+    val first = xs.find(_ != null)
+    require(first.isDefined, "cannot train a model on an empty corpus")
+    first.get.length
+  }
+
+  /** The one deterministic Lloyd trainer, on the driver over sample
+    * `xs` (in id order). Init: the first `k` vectors, cid = position.
+    * Each of `iters` rounds assigns every vector with `nearest` (a
+    * driver kernel: the entry's index, -1 when none qualifies) and
+    * recomputes each cluster as [[lloydMeans]] of its members. A vector
+    * no entry qualifies for (ragged or null) is left out of the means;
+    * a cluster left with no members drops out; a round that assigns
+    * nothing keeps the previous model. Centroids come back by cid.
+    */
+  private[operators] def lloyd(
+      xs: Array[Array[Double]],
+      k: Int,
+      iters: Int,
+      nearest: (Array[Double], ArgmaxCosine.Entries) => Int): Array[(Int, Seq[Double])] = {
+    var cents: ArgmaxCosine.Entries =
+      xs.take(k).zipWithIndex.collect { case (x, i) if x != null => (i, x) }
+    (1 to iters).foreach { _ =>
+      val members = xs.flatMap { x =>
+        val j = nearest(x, cents)
+        if (j < 0) None else Some((cents(j)._1, x))
+      }
+      if (members.nonEmpty)
+        cents = lloydMeans(members.toSeq).map { case (cid, cv) => (cid, cv.toArray) }
+    }
+    cents.map { case (cid, cv) => (cid, cv.toSeq) }
+  }
+
+  /** Cluster means of (cid, member) pairs, by cid, in the fixed
+    * integer formulation every SQL replay of a Lloyd model repeats:
+    * each coordinate is rounded to nano-units with Spark's
+    * `round(x * 1e9)` (BigDecimal HALF_UP, so -k.5 rounds away from
+    * zero, as DuckDB's `round` does), summed exactly (no long
+    * overflow), then the mean is the one double expression
+    * sum / count / 1e9. Members of one cluster share its length.
+    */
+  private[operators] def lloydMeans(assigned: Seq[(Int, Array[Double])]): Array[(Int, Seq[Double])] =
+    assigned.groupBy(_._1).toArray.sortBy(_._1).map { case (cid, ms) =>
+      (cid, (0 until ms.head._2.length).map { i =>
+        ms.foldLeft(java.math.BigInteger.ZERO) { case (acc, (_, v)) =>
+          acc.add(java.math.BigDecimal.valueOf(v(i) * 1e9)
+            .setScale(0, java.math.RoundingMode.HALF_UP).toBigInteger)
+        }.doubleValue / ms.size / 1e9
+      })
+    }
+
+  /** IVF coarse quantizer: `nLists` centroids by cosine argmax. */
+  private[operators] def ivfCentroids(
+      xs: Array[Array[Double]],
+      nLists: Int,
+      iters: Int): Array[(Int, Seq[Double])] =
+    lloyd(xs, nLists, iters, ArgmaxCosine.nearest)
 
   /** The centroid set as ONE literal column: array<struct<cid,cv>> in a
     * single `typedLit` — a constant-size plan node carrying the data,
@@ -71,126 +151,37 @@ object Ann {
     typedLit(cents.toSeq).cast("array<struct<cid:int,cv:array<double>>>")
 
   /** (id, v, cid): closest centroid per corpus vector (columns `id`,
-    * `v`). Unrolled: one codegen'd greatest() argmax, plan size
-    * O(nLists). Large path: the native graft_cosine_argmax expression
+    * `v`), by the native graft_cosine_argmax expression
     * (functions/ArgmaxCosine.scala) over the centroid set embedded as a
-    * single literal — plan size O(1) in nLists AND fully codegen'd; the
-    * previous `array_max(transform(centroidsLit, …))` formulation was
-    * CodegenFallback at the `transform` layer, paying interpreted
-    * lambda dispatch per row × centroid in the corpus-wide assignment
-    * scan (THE 100 TB stage of the index). Same sequential cosine fold
-    * and the same (s, cid) larger-cid tie-break as greatest(), so the
-    * two paths stay bit-identical (pinned by the equivalence spec).
-    * Both paths are per-row map-side expressions: zero shuffle, no join,
-    * no row-identity key, deterministic under task retry, and a corpus
-    * with duplicate ids keeps every row with identical multiplicity.
-    * Package-private so PlanGuardrailSpec can pin the large path's
-    * physical shape directly (the public API checkpoints its result,
-    * hiding the plan).
+    * single literal — plan size O(1) in nLists and fully codegen'd. A
+    * per-row map-side expression: zero shuffle, no join, no row-identity
+    * key, deterministic under task retry, and a corpus with duplicate
+    * ids keeps every row with identical multiplicity. A row no centroid
+    * qualifies for gets a null cid. Package-private so
+    * PlanGuardrailSpec can pin its physical shape directly (the public
+    * API checkpoints its result, hiding the plan).
     */
   private[operators] def assignToCentroids(
       corpus: DataFrame,
-      cents: Array[(Int, Seq[Double])],
-      unrolled: Boolean): DataFrame = {
+      cents: Array[(Int, Seq[Double])]): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    if (cents.length == 1)
-      // degenerate but legal (k=1 = "one global cluster"): greatest()
-      // needs two arguments, and no argmax is needed anyway
-      corpus.withColumn("cid", lit(cents.head._1))
-    else if (unrolled) {
-      // argmax over centroid dot products, unrolled per centroid. A
-      // null cosine (dim-mismatched row) sorts below every score, so the
-      // winner's score is null only when no centroid qualifies: that row
-      // gets a null cid, as on the literal path. Two projections, so the
-      // argmax is planned once
-      val scored = cents.map { case (cid, vec) =>
-        val cArr = array(vec.map(lit): _*)
-        struct(cosine(col("v"), cArr).as("s"), lit(cid).as("cid"))
-      }
-      corpus.withColumn("cid", greatest(scored.toIndexedSeq: _*))
-        .withColumn("cid", when(col("cid.s").isNotNull, col("cid.cid")))
-    } else
-      corpus.withColumn(
-        "cid",
-        graft.functions.GraftFunctions.cosineArgmax(col("v"), centroidsLit(cents)))
-  }
-
-  /** Deterministic Lloyd iteration over an (`id`, `v`) corpus: init =
-    * the first `k` vectors by id (driver collect bounded by k·dim — the
-    * k-means model, not the data), then `iters` assign/recompute-mean
-    * rounds. A cluster that loses all members drops out (its cid simply
-    * stops appearing), matching the per-cid mean recomputation. Shared
-    * by the IVF index and semantic dedup so both train the identical
-    * model for identical inputs.
-    */
-  private[operators] def lloydCentroids(
-      corpus: DataFrame,
-      k: Int,
-      iters: Int,
-      unrolled: Boolean): Array[(Int, Seq[Double])] = {
-    var centroids: Array[(Int, Seq[Double])] = corpus
-      .orderBy("id").limit(k).collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1)) }
-    (1 to iters).foreach { _ =>
-      // a row the argmax disqualifies entirely (dim-mismatched vector
-      // against every centroid) carries cid = null — exclude it from
-      // the means instead of crashing the model collect
-      val assigned = assignToCentroids(corpus, centroids, unrolled)
-        .filter(col("cid").isNotNull)
-      // ORDER-INDEPENDENT integer means ([[nanoMeans]]): float avg
-      // exposed Spark's partial-agg summation order, a latent
-      // flaky-oracle risk for every SQL replay of this model
-      val means = nanoMeans(assigned, centroids.head._2.size)
-      if (means.nonEmpty) centroids = means
-    }
-    centroids
-  }
-
-  /** The shared order-independent integer centroid means: nano-quantized
-    * coordinate sums as longs, then the one fixed double expression
-    * sumNanos/count/1e9 — partial-aggregation order cannot shift the
-    * mean by an ulp, so every SQL replay of a Lloyd model is exact.
-    * Returns means in collect order (assignment and probing are
-    * order-independent).
-    */
-  private[operators] def nanoMeans(
-      assigned: DataFrame,
-      dim: Int): Array[(Int, Seq[Double])] = {
-    // TIERED sums: each member coordinate quantizes to a nano-unit
-    // integer as before, but the accumulator is decimal(20,0) → Spark
-    // sums it exactly in 128-bit (decimal(30,0)), so the ~1e9-members-
-    // per-cluster bound of a raw long sum is gone (capacity ~1e21
-    // members at unit scale). The value is bit-identical where a long
-    // would not overflow — both are exact integers and both convert to
-    // double by correct rounding — so every SQL replay (DuckDB sums to
-    // HUGEINT, also exact) is unchanged.
-    val sumCols = (0 until dim).map(i =>
-      sum(round(col("v").getItem(i) * 1e9).cast("decimal(20,0)")).as(s"d$i"))
-    val aggCols = sumCols :+ count(lit(1)).as("cnt")
-    assigned
-      .groupBy("cid")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-      .map { r =>
-        val cnt = r.getLong(dim + 1)
-        (r.getInt(0), (0 until dim).map(i =>
-          r.getDecimal(i + 1).toBigInteger.doubleValue / cnt / 1e9): Seq[Double])
-      }
+    corpus.withColumn(
+      "cid",
+      graft.functions.GraftFunctions.cosineArgmax(col("v"), centroidsLit(cents)))
   }
 
   /** IVF index: assign every vector to its closest of `nLists` centroids
-    * (k-means initialized from the lexicographically-first ids, `iters`
-    * Lloyd rounds); queries probe the `nProbe` closest lists only.
-    * Approximate — recall measured against bruteForceTopK in tests.
+    * ([[ivfCentroids]]: init from the first ids, `iters` Lloyd rounds on
+    * the training sample); queries probe the `nProbe` closest lists
+    * only. Approximate — recall measured against bruteForceTopK in
+    * tests.
     *
-    * Scale: at the `nLists` a 100 TB corpus needs (10³–10⁵) the argmax
-    * runs as `array_max(transform(…))` over the centroid set embedded in
-    * ONE literal — plan size O(1) in `nLists`, still a pure per-row
-    * map-side expression: no join, no shuffle, nothing non-deterministic
-    * under task retry. Small `nLists` keeps the unrolled
-    * whole-stage-codegen expression. Both paths are exact argmax with
-    * the same (sim, cid) tie-break, so the output is bit-identical
-    * either way.
+    * Scale: the corpus-wide assignment is graft_cosine_argmax over the
+    * centroid set in ONE literal — plan size O(1) in `nLists` at the
+    * 10³–10⁵ lists a large corpus needs, a pure per-row map-side
+    * expression: no join, no shuffle, nothing non-deterministic under
+    * task retry. The probe scores the (few) queries against the same
+    * literal.
     */
   def ivfTopK(
       emb: DataFrame,
@@ -201,45 +192,20 @@ object Ann {
       nLists: Int = 16,
       nProbe: Int = 4,
       iters: Int = 2,
-  ): DataFrame =
-    ivfTopK(emb, idCol, vecCol, queryIds, k, nLists, nProbe, iters,
-      unrolled = nLists <= MaxUnrolledLists)
-
-  /** [[ivfTopK]] with the argmax formulation picked by the caller, so a
-    * spec can run both at the same `nLists`.
-    */
-  private[operators] def ivfTopK(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryIds: Seq[Long],
-      k: Int,
-      nLists: Int,
-      nProbe: Int,
-      iters: Int,
-      unrolled: Boolean,
   ): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val corpus = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")).cache()
-    val centroids = lloydCentroids(corpus, nLists, iters, unrolled)
-    val assigned = assignToCentroids(corpus, centroids, unrolled).cache()
+    val centroids = ivfCentroids(trainSample(corpus, TrainSample), nLists, iters)
+    val assigned = assignToCentroids(corpus, centroids).cache()
     val queries = assigned
       .filter(col("id").isInCollection(queryIds))
       .select(col("id").as("query_id"), col("v").as("va"))
 
     // probe lists: nProbe closest centroids per query, descending by
-    // (similarity, cid). Same sort/slice in both formulations; only the
-    // scored-centroid array's construction differs (unrolled structs vs
-    // transform over the single centroid literal).
-    val scoredCentroids =
-      if (unrolled)
-        array(centroids.toIndexedSeq.map { case (cid, vec) =>
-          struct(cosine(col("va"), array(vec.map(lit): _*)).as("s"), lit(cid).as("cid"))
-        }: _*)
-      else
-        transform(
-          centroidsLit(centroids),
-          c => struct(cosine(col("va"), c.getField("cv")).as("s"), c.getField("cid").as("cid")))
+    // (similarity, cid)
+    val scoredCentroids = transform(
+      centroidsLit(centroids),
+      c => struct(cosine(col("va"), c.getField("cv")).as("s"), c.getField("cid").as("cid")))
     val probed = queries
       .withColumn("probe", slice(reverse(array_sort(scoredCentroids)), 1, nProbe))
       .select(col("query_id"), col("va"), explode(col("probe.cid")).as("cid"))
@@ -267,87 +233,42 @@ object Ann {
     * row's `m`-th sub-vector, ties to the larger code (the same struct
     * argmax convention as the IVF assignment, with negated distance).
     * A single literal carries the codebook, so the plan is O(1) in the
-    * codebook size — a pure map-side expression, zero shuffle.
-    *
-    * The argmin itself is the native codegen'd graft_pq_assign
-    * expression (functions/PqAssignCode.scala) — the previous
-    * `array_max(transform(cbLit, c -> struct(-l2sq(sub, cv), cid)))`
-    * formulation was CodegenFallback at the `transform` layer, paying
-    * interpreted lambda dispatch per row × centroid in the corpus-wide
-    * encode scan. Output is identical (same sequential-sum distances,
-    * same larger-cid tie-break), so the PQ oracles replay unchanged.
+    * codebook size — a pure map-side expression, zero shuffle. The
+    * argmin is the native codegen'd graft_pq_assign expression
+    * (functions/PqAssignCode.scala): same sequential-sum distances and
+    * larger-cid tie-break as the trainer's, so the PQ oracles replay it.
     */
   private[operators] def pqCodeExpr(
       m: Int,
       subDim: Int,
-      cb: Array[(Int, Seq[Double])]): Column = {
-    val cbLit = typedLit(cb.toSeq).cast("array<struct<cid:int,cv:array<double>>>")
-    val sub = slice(col("v"), m * subDim + 1, subDim)
-    graft.functions.GraftFunctions.pqAssign(sub, cbLit)
-  }
+      cb: Array[(Int, Seq[Double])]): Column =
+    graft.functions.GraftFunctions.pqAssign(slice(col("v"), m * subDim + 1, subDim), centroidsLit(cb))
 
-  /** Deterministic per-subspace Lloyd training of the PQ codebooks
-    * (Jégou/Douze/Schmid, "Product Quantization for Nearest Neighbor
-    * Search", TPAMI 2011 — public): split each vector into `subspaces`
-    * contiguous sub-vectors and k-means each subspace independently.
-    * Init mirrors [[lloydCentroids]]: the first `codebook` vectors by
-    * id, sliced. ALL subspaces train in the same Spark jobs — each
-    * iteration is one map-side code assignment plus ONE shuffle
-    * (`groupBy (m, code)` with partial aggregation), not a shuffle per
-    * subspace. Driver state is the model only: subspaces × codebook ×
-    * subDim doubles. A code that loses all members drops out, exactly
-    * like the IVF centroid behavior.
+  /** A product quantizer: vector length `dim`, `subDim` = dim /
+    * subspaces, and one codebook per subspace.
     */
-  private[operators] def pqTrain(
-      corpus: DataFrame,
-      subDim: Int,
+  private[operators] case class Pq(dim: Int, subDim: Int, codebooks: Array[Array[(Int, Seq[Double])]])
+
+  /** Per-subspace Lloyd training of the PQ codebooks
+    * (Jégou/Douze/Schmid, "Product Quantization for Nearest Neighbor
+    * Search", TPAMI 2011 — public) on sample `xs`: split each vector
+    * into `subspaces` contiguous sub-vectors (slices, so a short vector
+    * yields short sub-vectors that no code qualifies for) and run
+    * [[lloyd]] on each subspace with the L2 argmin. Init: the first
+    * `codebook` vectors by id, sliced.
+    */
+  private[operators] def trainPq(
+      xs: Array[Array[Double]],
       subspaces: Int,
       codebook: Int,
-      iters: Int): Array[Array[(Int, Seq[Double])]] = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val initRows = corpus.orderBy("id").limit(codebook).collect()
-    var codebooks: Array[Array[(Int, Seq[Double])]] = (0 until subspaces).map { m =>
-      initRows.zipWithIndex.map { case (r, i) =>
-        (i, r.getSeq[Double](1).slice(m * subDim, (m + 1) * subDim))
-      }.toArray
-    }.toArray
-    (1 to iters).foreach { _ =>
-      val coded = corpus.select(explode(array((0 until subspaces).map(m =>
-        struct(
-          lit(m).as("m"),
-          pqCodeExpr(m, subDim, codebooks(m)).as("code"),
-          slice(col("v"), m * subDim + 1, subDim).as("sv"))): _*)).as("x"))
-        .select(col("x.m").as("m"), col("x.code").as("code"), col("x.sv").as("sv"))
-        // null code = the argmin disqualified every entry (degenerate
-        // sub-vector) — exclude from the means, don't crash the collect
-        .filter(col("code").isNotNull)
-      // centroid means via ORDER-INDEPENDENT integer sums: each member
-      // coordinate quantizes to nano-units (round(x·1e9) as an exact
-      // integer) before the sum, so Spark's partial aggregation order
-      // cannot shift the mean by an ulp — float avg here was a latent
-      // flaky-oracle risk (a last-ulp centroid drift can flip the
-      // 1e9-rounded ADC integer near a .5 boundary, and partial-agg
-      // order varies run to run). The mean is then the one fixed
-      // expression sumNanos/count/1e9 replayed verbatim by the DuckDB
-      // oracle. The accumulator is decimal(20,0) — an exact 128-bit sum
-      // like DuckDB's HUGEINT, bit-identical to the former long sum
-      // wherever that didn't overflow, without its ~1e9-members-per-
-      // cluster capacity bound.
-      val sumCols = (0 until subDim).map(i =>
-        sum(round(col("sv").getItem(i) * 1e9).cast("decimal(20,0)")).as(s"d$i"))
-      val aggCols = sumCols :+ count(lit(1)).as("cnt")
-      val means = coded.groupBy("m", "code").agg(aggCols.head, aggCols.tail: _*).collect()
-      val next = Array.fill(subspaces)(
-        scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Double])])
-      means.foreach { r =>
-        val cnt = r.getLong(subDim + 2)
-        next(r.getInt(0)) += ((r.getInt(1),
-          (0 until subDim).map(i =>
-            r.getDecimal(i + 2).toBigInteger.doubleValue / cnt / 1e9)))
-      }
-      codebooks = next.map(_.sortBy(_._1).toArray)
-    }
-    codebooks
+      iters: Int): Pq = {
+    val dim = dimOf(xs)
+    require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
+    val subDim = dim / subspaces
+    Pq(dim, subDim, Array.tabulate(subspaces) { m =>
+      val slices = xs.map(x => if (x == null) null else x.slice(m * subDim, (m + 1) * subDim))
+      lloyd(slices, codebook, iters, PqAssignCode.nearest)
+    })
   }
 
   // ---- Optimized Product Quantization (OPQ) ------------------------------
@@ -360,17 +281,15 @@ object Ann {
     * data's correlation structure and the same 16-bit code budget loses
     * less information.
     *
-    * The rotation is a dim×dim MODEL, so it fits on a deterministic
-    * bounded sample (first `sampleN` vectors by id — the paper's
-    * training-subset protocol): driver state is O(sample·dim + dim²),
-    * bounded by parameters, never by the corpus; the sample's Lloyd
-    * replicates [[pqTrain]]'s exact deterministic protocol (first-k
-    * init, L2 argmin with larger-cid ties, integer-nano means) one
-    * level down. Corpus-wide work — applying R and training the final
-    * codebooks — stays distributed ([[graft.functions.MatVec]] is a
-    * codegen'd map-side kernel; [[pqTrain]] unchanged). The SVD is
-    * LAPACK via breeze (on Spark's own classpath), deterministic for
-    * identical input bits. `opqIters = 0` returns the identity, which
+    * The rotation is a dim×dim MODEL, so it fits on the training sample
+    * (the first [[TrainSample]] vectors by id — the paper's
+    * training-subset protocol), with [[trainPq]] as its inner PQ fit and
+    * its reconstruction: driver state is O(sample·dim + dim²), bounded
+    * by parameters, never by the corpus. Corpus-wide work — applying R
+    * and encoding — stays distributed ([[graft.functions.MatVec]] is a
+    * codegen'd map-side kernel). The SVD is LAPACK via breeze (on
+    * Spark's own classpath), deterministic for identical input bits.
+    * `opqIters = 0` returns the identity, which
     * [[graft.functions.MatVec]] applies bit-losslessly — anchoring
     * OPQ ≡ PQ equivalence in the spec.
     */
@@ -381,51 +300,11 @@ object Ann {
       subspaces: Int = 4,
       codebook: Int = 16,
       iters: Int = 2,
-      opqIters: Int = 3,
-      sampleN: Int = 2048): Array[Array[Double]] = {
-    val corpus = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val dim = corpus.select(size(col("v"))).head.getInt(0)
+      opqIters: Int = 3): Array[Array[Double]] = {
+    val X = trainSample(emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")), TrainSample)
+    val dim = dimOf(X)
     require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
-    val subDim = dim / subspaces
     val identity = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
-    if (opqIters <= 0) return identity
-
-    val X: Array[Array[Double]] = corpus.orderBy("id").limit(sampleN)
-      .collect().map(_.getSeq[Double](1).toArray)
-    require(X.nonEmpty, "cannot fit an OPQ rotation on an empty corpus")
-
-    // deterministic local PQ trainer over the (rotated) sample —
-    // pqTrain's exact protocol, driver-side
-    def trainLocal(xs: Array[Array[Double]]): Array[Array[(Int, Array[Double])]] =
-      (0 until subspaces).map { m =>
-        val slices = xs.map(_.slice(m * subDim, (m + 1) * subDim))
-        var cb: Array[(Int, Array[Double])] =
-          slices.take(codebook).zipWithIndex.map { case (s, i) => (i, s.clone()) }
-        (1 to iters).foreach { _ =>
-          def code(s: Array[Double]): Int = {
-            var best = -1; var bestD = Double.PositiveInfinity
-            cb.foreach { case (cid, cv) =>
-              var d = 0.0; var i = 0
-              while (i < subDim) { val t = s(i) - cv(i); d += t * t; i += 1 }
-              if (d < bestD || (d == bestD && cid > best)) { best = cid; bestD = d }
-            }
-            best
-          }
-          val sums = scala.collection.mutable.Map.empty[Int, (Array[Long], Long)]
-          slices.foreach { s =>
-            val c = code(s)
-            val (acc, _) = sums.getOrElseUpdate(c, (new Array[Long](subDim), 0L))
-            var i = 0
-            while (i < subDim) { acc(i) += math.round(s(i) * 1e9); i += 1 }
-            sums(c) = (acc, sums(c)._2 + 1)
-          }
-          cb = sums.toArray.sortBy(_._1).map { case (cid, (acc, cnt)) =>
-            (cid, acc.map(_.toDouble / cnt / 1e9))
-          }
-        }
-        cb
-      }.toArray
-
     var rot = identity
     (1 to opqIters).foreach { _ =>
       val xr = X.map { v =>
@@ -435,19 +314,14 @@ object Ann {
           s
         }
       }
-      val cbs = trainLocal(xr)
+      val pq = trainPq(xr, subspaces, codebook, iters)
+      val cbs = pq.codebooks.map(_.map { case (cid, cv) => (cid, cv.toArray) })
       // X̂ = reconstruction of the rotated sample from its codes
       val xh = xr.map { v =>
         val out = new Array[Double](dim)
-        (0 until subspaces).foreach { m =>
-          val s = v.slice(m * subDim, (m + 1) * subDim)
-          var best = -1; var bestD = Double.PositiveInfinity; var bestCv: Array[Double] = null
-          cbs(m).foreach { case (cid, cv) =>
-            var d = 0.0; var i = 0
-            while (i < subDim) { val t = s(i) - cv(i); d += t * t; i += 1 }
-            if (d < bestD || (d == bestD && cid > best)) { best = cid; bestD = d; bestCv = cv }
-          }
-          System.arraycopy(bestCv, 0, out, m * subDim, subDim)
+        cbs.indices.foreach { m =>
+          val best = PqAssignCode.nearest(v.slice(m * pq.subDim, (m + 1) * pq.subDim), cbs(m))
+          System.arraycopy(cbs(m)(best)._2, 0, out, m * pq.subDim, pq.subDim)
         }
         out
       }
@@ -490,10 +364,9 @@ object Ann {
       codebook: Int = 16,
       iters: Int = 2,
       opqIters: Int = 3,
-      sampleN: Int = 2048,
       rerank: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val rot = opqFit(emb, idCol, vecCol, subspaces, codebook, iters, opqIters, sampleN)
+    val rot = opqFit(emb, idCol, vecCol, subspaces, codebook, iters, opqIters)
     val rLit = typedLit(rot.map(_.toSeq).toSeq).cast("array<array<double>>")
     val rotated = emb
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
@@ -522,12 +395,10 @@ object Ann {
       base.withColumn("v", graft.functions.GraftFunctions.matVec(rLit, col("v")))
     }.cache()
     try {
-      val dim = corpus.select(size(col("v"))).head.getInt(0)
-      require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
-      val subDim = dim / subspaces
-      val model = pqTrain(corpus, subDim, subspaces, codebook, iters)
+      val pq = trainPq(trainSample(corpus, TrainSample), subspaces, codebook, iters)
+      val subDim = pq.subDim
       val errCol = (0 until subspaces).map { m =>
-        val cb = model(m)
+        val cb = pq.codebooks(m)
         val dense: Seq[Option[Seq[Double]]] =
           (0 to cb.map(_._1).max).map(c => cb.toMap.get(c).map(_.toSeq))
         val denseLit = typedLit(dense).cast("array<array<double>>")
@@ -658,11 +529,8 @@ object Ann {
   ): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val corpus = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")).cache()
-    val dim = corpus.select(size(col("v"))).head.getInt(0)
-    require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
-    val subDim = dim / subspaces
+    val Pq(dim, subDim, model) = trainPq(trainSample(corpus, TrainSample), subspaces, codebook, iters)
     val qRows = queryVectors(corpus, queryIds, dim)
-    val model = pqTrain(corpus, subDim, subspaces, codebook, iters)
 
     val encoded = corpus.withColumn(
       "codes",
@@ -713,6 +581,19 @@ object Ann {
     }.take(nProbe).map(_._2)
   }
 
+  /** IVFADC's two models — the coarse quantizer and the product
+    * quantizer — trained on ONE training sample, so one collect.
+    */
+  private[operators] def ivfAdcModels(
+      corpus: DataFrame,
+      nLists: Int,
+      subspaces: Int,
+      codebook: Int,
+      iters: Int): (Array[(Int, Seq[Double])], Pq) = {
+    val xs = trainSample(corpus, TrainSample)
+    (ivfCentroids(xs, nLists, iters), trainPq(xs, subspaces, codebook, iters))
+  }
+
   /** IVFADC — the production compressed-index layout (Jégou/Douze/
     * Schmid, TPAMI 2011, §IV): the IVF coarse quantizer partitions the
     * corpus into `nLists` inverted lists AND every vector is
@@ -755,18 +636,13 @@ object Ann {
   ): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val corpus = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")).cache()
-    val dim = corpus.select(size(col("v"))).head.getInt(0)
-    require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
-    val subDim = dim / subspaces
-    val unrolled = nLists <= MaxUnrolledLists
+    val (centroids, Pq(dim, subDim, model)) = ivfAdcModels(corpus, nLists, subspaces, codebook, iters)
     val qRows = queryVectors(corpus, queryIds, dim)
 
-    val centroids = lloydCentroids(corpus, nLists, iters, unrolled)
-    val model = pqTrain(corpus, subDim, subspaces, codebook, iters)
     // the stored index: (id, cid, codes) — at scale THIS is the table
     // that persists (cid-partitioned), raw vectors are only re-read by
     // the optional exact re-rank
-    val encoded = assignToCentroids(corpus, centroids, unrolled)
+    val encoded = assignToCentroids(corpus, centroids)
       .withColumn("codes",
         array((0 until subspaces).map(m => pqCodeExpr(m, subDim, model(m))): _*))
       .select("id", "cid", "codes")

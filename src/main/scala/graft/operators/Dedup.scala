@@ -332,9 +332,7 @@ object Dedup {
     // dropped up front rather than NPE-ing in the signature kernel.
     val vecs = df
       .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .select(
-        col(idCol).cast("long").as("id"),
-        transform(col(vecCol), _.cast("double")).as("v"))
+      .select(col(idCol).cast("long").as("id"), Ann.asDouble(col(vecCol)).as("v"))
       .filter(col("id").isNotNull)
       .cache()
 
@@ -402,20 +400,22 @@ object Dedup {
   }
 
   /** SemDeDup-style semantic deduplication: k-means-cluster the
-    * embedding space (the deterministic shared Lloyd model,
-    * [[Ann.lloydCentroids]]), then within each cluster drop every
-    * vector that has a smaller-id neighbor at cosine ≥ `threshold`.
-    * Output is the full verdict table — (vec_id, cid, kept) for every
-    * input row — so downstream keeps `kept` and the whole model
-    * (assignment AND pruning) is checkable.
+    * embedding space (the IVF coarse quantizer, [[Ann.ivfCentroids]],
+    * trained on the driver over the first [[Ann.TrainSample]] vectors by
+    * id), then within each cluster drop every vector that has a
+    * smaller-id neighbor at cosine ≥ `threshold`. Output is the full
+    * verdict table — (vec_id, cid, kept) for every input row — so
+    * downstream keeps `kept` and the whole model (assignment AND
+    * pruning) is checkable.
     *
-    * Scale: centroid assignment is a per-row map-side expression (plan
-    * size O(1) in k above the unrolled threshold — same machinery as
-    * the IVF index); the only quadratic step is the within-cluster
-    * pair join, bounded by cluster size — SemDeDup's own design knob:
-    * pick k so clusters stay small (the paper uses ~10⁴–10⁵ clusters
-    * at web scale, keeping clusters in the thousands). The pair join
-    * is a hash equi-join on cid, never an all-pairs blob.
+    * Scale: the corpus-wide centroid assignment is the IVF index's
+    * per-row codegen'd graft_cosine_argmax over one centroid literal
+    * (plan size O(1) in k); the only quadratic step is the
+    * within-cluster pair join, bounded by cluster size — SemDeDup's own
+    * design knob: pick k so clusters stay small (the paper uses
+    * ~10⁴–10⁵ clusters at web scale, keeping clusters in the
+    * thousands). The pair join is a hash equi-join on cid, never an
+    * all-pairs blob.
     *
     * Greedy min-id pruning (not connected components): a vector
     * survives iff no SMALLER-id same-cluster neighbor is within
@@ -431,15 +431,10 @@ object Dedup {
       iters: Int = 2,
       threshold: Double = 0.9,
   ): DataFrame = {
-    val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val unrolled = k <= Ann.MaxUnrolledLists
-    val corpus = df
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"), transform(col(vecCol), _.cast("double")).as("v"))
-      .cache()
-    val centroids = Ann.lloydCentroids(corpus, k, iters, unrolled)
-    val assigned = Ann.assignToCentroids(corpus, centroids, unrolled).cache()
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val corpus = semanticCorpus(df, idCol, vecCol).cache()
+    val centroids = Ann.ivfCentroids(Ann.trainSample(corpus, Ann.TrainSample), k, iters)
+    val assigned = Ann.assignToCentroids(corpus, centroids).cache()
 
     // same NaN guard as embeddingCosinePairs: a zero-norm vector's
     // cosine is NaN, which Spark orders above every double
@@ -465,6 +460,13 @@ object Dedup {
     corpus.unpersist()
     out
   }
+
+  /** semanticDedup's (id, v) corpus: rows with an id and a vector,
+    * widened to array<double> by one codegen'd cast.
+    */
+  private[operators] def semanticCorpus(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), Ann.asDouble(col(vecCol)).as("v"))
 
   /** Near-duplicate pairs by SimHash hamming distance ≤ maxDistance
     * (≤ 3 with the default 4 chunks, by pigeonhole). Banded on 15-bit

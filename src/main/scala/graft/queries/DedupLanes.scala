@@ -23,7 +23,7 @@ object DedupLanes {
         s.read.parquet(s"$d/documents.parquet"), "doc_id", "text", n = 3, threshold = 0.8))
 
   /** DuckDB replay of Dedup.semanticDedup's exact model: deterministic
-    * Lloyd (init = first 10 ids, 2 rounds) unrolled into chained CTEs —
+    * Lloyd (init = first 10 ids, 2 rounds) spelled out as chained CTEs —
     * assignment = argmax cosine with the larger-cid tie-break, means per
     * (cid, dim) via positionally-zipped unnests — then the greedy
     * min-id verdict at cosine ≥ 0.5. Clusters that lose all members
@@ -39,9 +39,10 @@ object DedupLanes {
          |                    $cents.cid DESC) AS rn
          |  FROM $from, $cents) t WHERE rn = 1""".stripMargin
     // per-cid dimension means of assignment CTE `a` as the next
-    // centroids — the ORDER-INDEPENDENT integer formulation
-    // lloydCentroids uses (nano-quantized sums, then sum/count/1e9),
-    // so Spark's partial-aggregation order can never drift the replay
+    // centroids — the trainer's integer formulation (Ann.lloydMeans:
+    // nano-quantized sums, then sum/count/1e9). The replay trains on
+    // the whole corpus, the trainer on its first Ann.TrainSample
+    // vectors by id: the same model up to that many vectors
     def means(a: String): String =
       s"""SELECT cid, list(mv ORDER BY pos) AS cv FROM (
          |  SELECT cid, pos,
@@ -284,8 +285,8 @@ object DedupLanes {
     // SemDeDup-style semantic dedup: deterministic k-means (init =
     // first 10 ids, 2 Lloyd rounds) + greedy min-id pruning at cosine
     // ≥ 0.5 within each cluster, full (vec_id, cid, kept) verdict
-    // table. The oracle replays the IDENTICAL model in SQL — unrolled
-    // Lloyd via chained CTEs — so every assignment and every verdict is
+    // table. The oracle replays the IDENTICAL model in SQL — each
+    // Lloyd round a chained CTE — so every assignment and every verdict is
     // cross-engine-checked. Double-precision safety measured on this
     // corpus: min argmax margin 1.2e-4, min |cos−τ| 1.1e-3 (sf0.1) —
     // 9+ orders above cross-engine summation-order noise.

@@ -74,12 +74,13 @@ object SearchLanes {
          |         row_number() OVER (PARTITION BY s.vec_id
          |           ORDER BY ${dist("s.sv", "c.cv")} ASC, c.cid DESC) AS rn
          |  FROM $from s, $cents c) t WHERE rn = 1""".stripMargin
-    // centroid means replay the Spark side's ORDER-INDEPENDENT integer
-    // formulation (operators/Ann.scala pqTrain): nano-quantized member
-    // coordinates summed as BIGINT, then the one fixed double expression
-    // sumNanos/count/1e9 — float avg would expose partial-aggregation
-    // summation order, where an ulp of centroid drift can flip the
-    // 1e9-rounded ADC integers
+    // centroid means replay the trainer's integer formulation
+    // (operators/Ann.scala lloydMeans): nano-quantized member
+    // coordinates summed exactly, then the one fixed double expression
+    // sumNanos/count/1e9 — an ulp of centroid drift could flip the
+    // 1e9-rounded ADC integers. The replay trains on the whole corpus,
+    // the trainer on its first Ann.TrainSample vectors by id: the same
+    // model up to that many vectors, which covers every shipped scale
     def means(a: String): String =
       s"""SELECT cid, list(mv ORDER BY pos) AS cv FROM (
          |  SELECT cid, pos,

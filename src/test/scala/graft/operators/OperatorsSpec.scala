@@ -255,22 +255,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(recall >= 0.8, s"recall $recall")
   }
 
-  test("IVF literal-array assignment (large-nLists path) equals the unrolled expression") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    def run(): Set[(Long, Long)] =
-      Ann.ivfTopK(emb, "vec_id", "embedding", 0L to 9L, 5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaExpr = run()
-    // the same 16 lists in the formulation a 10^3–10^5-list index uses:
-    // the centroid set in ONE typedLit and the argmax/probe as
-    // array_max/array_sort over transform(...). Exact argmax with the
-    // same (s, cid) tie-break on both paths → identical output, not
-    // merely similar recall.
-    val viaLit = Ann.ivfTopK(emb, "vec_id", "embedding", 0L to 9L, 5, 16, 4, 2, unrolled = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaLit == viaExpr, "literal-path IVF must match the unrolled path exactly")
-  }
-
   test("IVF literal-path assignment preserves rows with duplicate ids") {
     import spark.implicits._
     // two rows share id=7 with different vectors (unioned shards) —
@@ -280,13 +264,16 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     ).toDF("id", "v")
     val cents = Array((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)))
     graft.functions.GraftFunctions.register(spark)
-    def got(unrolled: Boolean): Seq[(Long, Int)] =
-      Ann.assignToCentroids(corpus, cents, unrolled)
-        .select("id", "cid").collect().map(r => (r.getLong(0), r.getInt(1)))
-        .toSeq.sorted
-    val viaLit = got(unrolled = false)
+    val viaLit = Ann.assignToCentroids(corpus, cents)
+      .select("id", "cid").collect().map(r => (r.getLong(0), r.getInt(1)))
+      .toSeq.sorted
     assert(viaLit.size == 3, s"literal path dropped a duplicate-id row: $viaLit")
-    assert(viaLit == got(unrolled = true), "paths disagree on a duplicate-id corpus")
+    val entries = cents.map { case (cid, cv) => (cid, cv.toArray) }
+    val viaKernel = corpus.collect().toSeq.map { r =>
+      val v = r.getSeq[Double](1).toArray
+      (r.getLong(0), entries(graft.functions.ArgmaxCosine.nearest(v, entries))._1)
+    }.sorted
+    assert(viaLit == viaKernel, "assignment disagrees with the kernel on a duplicate-id corpus")
   }
 
   test("PQ: codes are deterministic, bounded, and the top-k is stable across runs") {
@@ -304,7 +291,8 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val corpus = emb.select(col("vec_id").as("id"),
       transform(col("embedding"), _.cast("double")).as("v"))
-    val model = Ann.pqTrain(corpus, subDim = 16, subspaces = 4, codebook = 16, iters = 2)
+    val model = Ann.trainPq(Ann.trainSample(corpus, Ann.TrainSample),
+      subspaces = 4, codebook = 16, iters = 2).codebooks
     assert(model.length == 4)
     model.foreach { cb =>
       assert(cb.nonEmpty && cb.length <= 16, s"codebook size ${cb.length}")
@@ -332,8 +320,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     def collectSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // with and without re-rank; 16 lists take the unrolled coarse
-    // assignment, 65 the literal one
+    // with and without re-rank, at a few and at many coarse lists
     for (rerank <- Seq(0, 50)) {
       val pq = collectSet(Ann.pqTopK(emb, "vec_id", "embedding", 0L to 9L, 5, rerank = rerank))
       for (nLists <- Seq(16, 65)) {
@@ -371,7 +358,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     val corpus = emb.union(bad)
     val ops: Seq[(String, Seq[Long] => org.apache.spark.sql.DataFrame)] = Seq(
       "pqTopK" -> (ids => Ann.pqTopK(corpus, "vec_id", "embedding", ids, 5)),
-      // 16 lists take the unrolled coarse assignment, 65 the literal one
       "ivfAdcTopK, 16 lists" -> (ids =>
         Ann.ivfAdcTopK(corpus, "vec_id", "embedding", ids, 5, nLists = 16, nProbe = 4)),
       "ivfAdcTopK, 65 lists" -> (ids =>

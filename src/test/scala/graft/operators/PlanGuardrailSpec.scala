@@ -54,7 +54,7 @@ class PlanGuardrailSpec extends AnyFunSuite with SparkSpec {
     val corpus = embs.selectExpr(
       "vec_id as id", "cast(embedding as array<double>) as v")
     val cents = Array.tabulate(4)(i => (i, Seq.tabulate(8)(d => (i + d).toDouble)))
-    val assigned = Ann.assignToCentroids(corpus, cents, unrolled = false)
+    val assigned = Ann.assignToCentroids(corpus, cents)
     val p = plan(assigned)
     // the centroid set is embedded in one literal; assignment must stay
     // a map-side projection — a join or exchange here means the
@@ -72,6 +72,23 @@ class PlanGuardrailSpec extends AnyFunSuite with SparkSpec {
     }.flatten
     assert(fallbacks.isEmpty,
       s"IVF assignment contains CodegenFallback expressions: ${fallbacks.map(_.prettyName)}")
+  }
+
+  test("semanticDedup's assignment widens vectors by one cast and is fully codegen'd") {
+    graft.functions.GraftFunctions.register(spark)
+    val cents = Array.tabulate(4)(i => (i, Seq.tabulate(64)(d => (i + d).toDouble)))
+    val assigned = Ann.assignToCentroids(Dedup.semanticCorpus(embs, "vec_id", "embedding"), cents)
+    val p = plan(assigned)
+    assert(!p.contains("Join") && !p.contains("Exchange"), s"assignment must stay map-side: $p")
+    // a transform(_.cast(...)) widening is CodegenFallback in this
+    // corpus-wide scan; the single array cast is not
+    val fallbacks = assigned.queryExecution.executedPlan.collect { case sp =>
+      sp.expressions.flatMap(_.collect {
+        case e: org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback => e
+      })
+    }.flatten
+    assert(fallbacks.isEmpty,
+      s"semanticDedup assignment contains CodegenFallback expressions: ${fallbacks.map(_.prettyName)}")
   }
 
   test("PQ encode/scoring stages are map-side and fully codegen'd (no CodegenFallback)") {
