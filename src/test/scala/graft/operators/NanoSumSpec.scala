@@ -21,7 +21,7 @@ class NanoSumSpec extends AnyFunSuite {
     assert(cid == 0 && cv == Seq(9e8), s"want exact mean 9e8, got $cv")
   }
 
-  test("lloydMeans below the boundary matches the fixed sum/count/1e9 expression") {
+  test("lloydMeans below the boundary equals the fixed sum/count/1e9 expression") {
     val vals = Seq(0.1, 0.25, 0.4)
     val assigned = vals.map(v => (7, Array(v)))
     val means = Ann.lloydMeans(assigned)
