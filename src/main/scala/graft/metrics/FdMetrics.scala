@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Functional-dependency analytics (reference architxt/metrics.py:25-150)
-  * as pure DataFrame aggregations — each confidence is exactly two
-  * `groupBy().agg()` passes, fully codegen'd, no UDFs.
+  * as pure DataFrame aggregations, fully codegen'd, no UDFs; each call's
+  * confidences come from one grouped count of the rows.
   */
 object FdMetrics {
 
@@ -14,38 +14,43 @@ object FdMetrics {
     * Σ_x max_y count(X=x, Y=y) / N (metrics.py:25-62). Nulls group as
     * values (pandas dropna=False ≡ Spark groupBy null handling).
     */
-  def confidence(df: DataFrame, column: String): Double = {
-    val cols = df.columns.toSeq
-    if (cols.size == 1 || !cols.contains(column)) return 0.0
-    val n = df.count()
-    if (n == 0) return 0.0
-    val antecedents = cols.filterNot(_ == column)
-    val counts = df.groupBy(cols.map(col): _*).count()
-    val maxed = counts.groupBy(antecedents.map(col): _*).agg(max("count").as("m"))
-    val total = maxed.agg(sum("m")).head.getLong(0)
-    total.toDouble / n
-  }
+  def confidence(df: DataFrame, column: String): Double = confidences(df).getOrElse(column, 0.0)
 
   /** Max confidence over the attribute subset, each attribute as the
-    * consequent; short-circuits at 1.0 (metrics.py:65-95).
+    * consequent (metrics.py:65-95).
     */
-  def dependencyScore(df: DataFrame, attributes: Seq[String]): Double = {
-    val projected = df.select(attributes.map(col): _*)
-    var best = 0.0
-    val it = attributes.iterator
-    while (it.hasNext && best < 1.0) {
-      val c = confidence(projected, it.next())
-      if (c > best) best = c
+  def dependencyScore(df: DataFrame, attributes: Seq[String]): Double =
+    confidences(df.select(attributes.map(col): _*)).values.maxOption.getOrElse(0.0)
+
+  /** Every column's confidence from one query. The rows are grouped and
+    * counted once; each counted row then yields one key per column `i`:
+    * `i` with the row, column `i` replaced by a typed null, so within one
+    * `i` the keys group by exactly the antecedents. Per key, max and sum
+    * of the counts; per `i`, their sums are Σ max and N. The columns live
+    * inside structs, so none can collide with the query's own names. A
+    * frame of fewer than two columns, or with no rows, scores 0.0.
+    */
+  private def confidences(df: DataFrame): Map[String, Double] = {
+    val fields = df.schema.fields.toSeq
+    val zero = fields.map(_.name -> 0.0).toMap
+    if (fields.size < 2) return zero
+    val keys = fields.indices.map { i =>
+      struct(lit(i).as("i"), struct(fields.zipWithIndex.map { case (f, j) =>
+        (if (j == i) lit(null).cast(f.dataType) else col("r").getField(f.name)).as(f.name)
+      }: _*).as("x"))
     }
-    best
+    zero ++ df
+      .groupBy(struct(fields.map(f => col(f.name)): _*).as("r")).agg(count(lit(1)).as("cnt"))
+      .select(col("cnt"), explode(array(keys: _*)).as("k"))
+      .groupBy("k").agg(max("cnt").as("m"), sum("cnt").as("s"))
+      .groupBy(col("k.i")).agg(sum("m"), sum("s"))
+      .collect()
+      .map(r => fields(r.getInt(0)).name -> r.getLong(1).toDouble / r.getLong(2))
   }
 
   /** Fraction of rows duplicated on at least one attribute subset whose
-    * dependency score ≥ tau (metrics.py:105-150). Columns with more than
-    * `nullThreshold` null proportion are dropped first. The powerset is
-    * bounded by `maxAttributes` (reference is unbounded — group widths
-    * are small in practice); when truncated, the widest columns are
-    * dropped and a warning is logged.
+    * dependency score ≥ tau (metrics.py:105-150), over
+    * [[redundancyAttributes]].
     */
   def redundancyScore(
       df: DataFrame,
@@ -55,16 +60,7 @@ object FdMetrics {
   ): Double = {
     val n = df.count()
     if (n == 0) return 0.0
-
-    val nullProps = df
-      .select(df.columns.map(c => avg(col(c).isNull.cast("double")).as(c)).toIndexedSeq: _*)
-      .head
-    var attributes = df.columns.toSeq.filter(c => nullProps.getAs[Double](c) <= nullThreshold)
-    if (attributes.size > maxAttributes) {
-      System.err.println(
-        s"[graft] redundancyScore: ${attributes.size} attributes exceed cap $maxAttributes; truncating")
-      attributes = attributes.take(maxAttributes)
-    }
+    val attributes = redundancyAttributes(df, nullThreshold, maxAttributes)
     if (attributes.size < 2) return 0.0
 
     val withId = df.withColumn("__rid", monotonically_increasing_id()).cache()
@@ -91,19 +87,28 @@ object FdMetrics {
     } finally withId.unpersist()
   }
 
+  /** The columns with at most `nullThreshold` nulls, in frame order;
+    * past `maxAttributes` of them (the reference is unbounded), the first
+    * `maxAttributes` are kept and a warning is logged.
+    */
+  private[metrics] def redundancyAttributes(
+      df: DataFrame, nullThreshold: Double, maxAttributes: Int): Seq[String] = {
+    val nullProps = df
+      .select(df.columns.map(c => avg(col(c).isNull.cast("double")).as(c)).toIndexedSeq: _*)
+      .head()
+    val attributes = df.columns.toSeq.filter(c => nullProps.getAs[Double](c) <= nullThreshold)
+    if (attributes.size > maxAttributes) System.err.println(
+      s"[graft] redundancyScore: ${attributes.size} attributes exceed cap $maxAttributes; truncating")
+    attributes.take(maxAttributes)
+  }
+
   /** Per-consequent confidence table — the query-surface form:
-    * one row (consequent, confidence) per column. The input is cached for
-    * the duration: each consequent triggers two aggregations, and without
-    * the cache an expensive upstream (e.g. a dataset pivot) re-runs per
-    * column.
+    * one row (consequent, confidence) per column, in frame order.
     */
   def confidenceTable(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cached = df.persist()
-    try df.columns.toSeq
-      .map(c => c -> confidence(cached, c))
-      .toDF("consequent", "confidence")
-    finally cached.unpersist(blocking = false)
+    val conf = confidences(df)
+    df.columns.toSeq.map(c => c -> conf(c)).toDF("consequent", "confidence")
   }
 }

@@ -26,13 +26,12 @@ final case class SnapshotPart(
   * them and keeps, per snapshot, the oid set and the oid → cluster map;
   * coverage and the contingency table are set and map operations on
   * them, with no Spark job. That is one string per entity (twice, with
-  * its cluster name) per snapshot. It costs no more than the table the
-  * comparison builds anyway: an entity present in only one snapshot is a
-  * singleton cluster, one table entry of its own on the driver, and
-  * after a rewrite those are most of the entities (on the typed sf0.1
-  * customers 270,000 origin keys meet 190,740 current ones, of which
-  * 40,740 are shared: up to 379,260 singleton entries). The label counts
-  * (bounded by label variety) and the schema live on the driver too.
+  * its cluster name) per snapshot; after a rewrite most entities are
+  * present in only one snapshot (on the typed sf0.1 customers 270,000
+  * origin keys meet 190,740 current ones, of which 40,740 are shared),
+  * and the [[Contingency]] counts those per label rather than holding a
+  * table entry for each. The label counts (bounded by label variety) and
+  * the schema live on the driver too.
   */
 final class Snapshot(
     schemaThunk: () => Schema,
@@ -100,7 +99,7 @@ final class Metrics(
 
   val origin: Snapshot = snapshot(source)
   private var currentSnapshot: Snapshot = origin
-  private var contingencyCache: Option[Map[(String, String), Long]] = None
+  private var contingencyCache: Option[Contingency] = None
 
   /** Re-snapshot the current state. Snapshots are pure functions of an
     * immutable Dataset, so updating with the very reference that was
@@ -126,42 +125,33 @@ final class Metrics(
   }
 
   /** Contingency table between the two clusterings, aligned on entity
-    * oid (metrics.py:216-224). Entities present in only one snapshot are
-    * singleton clusters on the missing side — represented with synthetic
-    * per-entity labels (NUL-prefixed, cannot collide with real cluster
-    * names), numbered per label on the present side.
+    * oid (metrics.py:216-224). An entity present in only one snapshot is
+    * a singleton cluster on the missing side; it is counted per label on
+    * the present side.
     */
-  private def contingencyTable: Map[(String, String), Long] = {
+  private def contingencyTable: Contingency = {
     val (a, b) = (origin.clustering, currentSnapshot.clustering)
     val matched = a.iterator.flatMap { case (oid, ca) => b.get(oid).map(cb => (ca, cb)) }
       .toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
-    // per-label counts of entities missing on the other side; each such
-    // entity is its own singleton cluster there
     def missing(from: Map[String, String], other: Map[String, String]): Map[String, Long] =
       from.iterator.collect { case (oid, c) if !other.contains(oid) => c }
         .toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
-    val singleA = missing(a, b).iterator.flatMap { case (c, n) =>
-      (0L until n).map(i => (c, s"\u0000a:$c:$i") -> 1L)
-    }
-    val singleB = missing(b, a).iterator.flatMap { case (c, n) =>
-      (0L until n).map(i => (s"\u0000b:$c:$i", c) -> 1L)
-    }
-    matched ++ singleA ++ singleB
+    Contingency(matched, missing(a, b), missing(b, a))
   }
 
   // AMI and completeness share the table; build it once per snapshot pair
-  private def contingency(): Map[(String, String), Long] = {
+  private def contingency(): Contingency = {
     if (contingencyCache.isEmpty) contingencyCache = Some(contingencyTable)
     contingencyCache.get
   }
 
   /** AMI between origin and current entity clusterings (metrics.py:240-258). */
   def clusterAmi: Double =
-    ClusterComparison.adjustedMutualInfoFromContingency(contingency())
+    ClusterComparison.adjustedMutualInfo(contingency())
 
   /** Completeness between origin and current clusterings (metrics.py:260-277). */
   def clusterCompleteness: Double =
-    ClusterComparison.completenessFromContingency(contingency())
+    ClusterComparison.completeness(contingency())
 
   /** Mean redundancy over the current schema's group datasets
     * (metrics.py:279-302).

@@ -455,18 +455,10 @@ object Schema {
     * call) is skipped — one pass and no shuffle, which is the per-epoch
     * fixed cost of the schema-only rewrite lane. The returned schema
     * carries an empty `relations` set; REL productions are still
-    * present.
-    */
-  def templateFromTrees(
-      forest: Dataset[TreeRow],
-      keepUnlabelled: Boolean = true,
-      mergeLhs: Boolean = true,
-  ): Schema = templateOf(Trees(forest), keepUnlabelled, mergeLhs)
-
-  /** [[templateFromTrees]] over either [[Trees]] instance: each
-    * partition's distinct rows, then the first occurrence of each across
-    * partitions. Rows reach `assemble` in the forest's order, so the
-    * template is the same on both instances and at any partition count.
+    * present. Over either [[Trees]] instance: each partition's distinct
+    * rows, then the first occurrence of each across partitions. Rows
+    * reach `assemble` in the forest's order, so the template is the same
+    * on both instances and at any partition count.
     */
   private[graft] def templateOf(
       trees: Trees, keepUnlabelled: Boolean = true, mergeLhs: Boolean = true): Schema = {
@@ -480,7 +472,7 @@ object Schema {
   /** The shared production-extraction predicate: non-ROOT, non-lexical
     * (no leaf children), non-empty nodes yield one (lhsType, lhsName,
     * rhs-labels) row. Both local (`fromTrees`) and template
-    * (`templateFromTrees`) derivations go through here — the predicate
+    * (`templateOf`) derivations go through here — the predicate
     * must match `fromForest`'s relational filter exactly, so it lives in
     * one place. Tuple-shaped (not ProdRow) because the template path
     * ships it through a Dataset encoder.

@@ -375,10 +375,11 @@ object PaperSchemaLanes {
       inspectCountsCustomerOracle),
     // §2.6 Metrics snapshot machinery, oracle-checked via an algebraic
     // identity: comparing the customer forest against itself must yield
-    // coverage = AMI = completeness = 1.0 exactly. This drives the full
-    // distributed path — entity-oid join coverage, entity-parent
-    // clustering (entityLabels), and the exact-EMI contingency math —
-    // so a regression anywhere in it breaks an exact oracle.
+    // coverage = AMI = completeness = 1.0 exactly. This drives the whole
+    // snapshot comparison — the fused snapshot pass, coverage over the
+    // entity-oid sets, entity-parent clustering (TreeClusterer.EntityLabels),
+    // and the Contingency math with exact EMI — so a regression anywhere
+    // in it breaks an exact oracle.
     Lane("metrics_self_compare_customer", (s, d) => {
       import s.implicits._
       val m = customerMetrics(s, d)

@@ -275,10 +275,7 @@ object Rewrite {
     * The reference indexes original labels in forest-iteration order;
     * here they are sorted for determinism.
     */
-  def simplifyNames(forest: Dataset[TreeRow]): Dataset[TreeRow] =
-    simplifyNames(Trees(forest)).toDataset
-
-  private def simplifyNames(trees: Trees): Trees = {
+  private[rewrite] def simplifyNames(trees: Trees): Trees = {
     import trees.spark.implicits._
     val groupNames = timed("simplify:groupNames") { trees.collectPartitions { it =>
       it.flatMap(_.tree.subtrees.collect {

@@ -193,8 +193,8 @@ final class ClusterModel(
   *
   * A candidate's cluster and probability are a function of its
   * StructKey, so the assignments are a lazy per-candidate lookup.
-  * Every entry point (`candidates`, `fit`, `entityLabels`) takes the
-  * forest as `Dataset[TreeRow]` and walks each row's tree in place.
+  * The public entry points (`candidates`, `fit`) take the forest as
+  * `Dataset[TreeRow]` and walk each row's tree in place.
   * This reproduces the role (equivalence classes of similar subtrees) —
   * not HDBSCAN's exact labels; quality is validated by AMI in tests.
   */
@@ -621,38 +621,11 @@ object TreeClusterer {
     (labels, incident)
   }
 
-  /** entity_labels (similarity.py:514-553): cluster the entity PARENTS
-    * (non-ENT subtrees with an ENT child), then assign each child entity
-    * oid its parent's cluster name. `metricName = null` variant maps each
-    * entity to its parent's label directly.
-    *
-    * Two Spark jobs: the fit's aggregate (the fit skips its top-K pass,
-    * since only the key map is read) and one pass that labels each
-    * partition's entities; the map is merged on the driver. An oid
-    * duplicated under differently labelled parents (REL duplication does
-    * this) resolves to the max label for determinism (the reference's
-    * dict insertion made the winner ordering-dependent).
-    */
-  def entityLabels(
-      forest: Dataset[TreeRow],
-      tau: Double,
-      metricName: String = "jaro",
-      decay: Double = Similarity.Decay,
-  ): Map[String, String] = {
-    import forest.sparkSession.implicits._
-    val trees = Trees(forest)
-    val model = entityParentModel(trees, tau, metricName, decay)
-    val labels = new EntityLabels
-    trees.collectPartitions { it =>
-      val part = new EntityLabels
-      it.foreach(r => part.addTree(r.treeId, r.tree, model))
-      part.labels.iterator
-    }.foreach { case (oid, label) => labels.add(oid, label) }
-    labels.labels.toMap
-  }
-
-  /** The model behind [[entityLabels]]: entity parents clustered under
-    * `metricName`, or None for the parent-label variant.
+  /** The model behind entity_labels (similarity.py:514-553): entity
+    * parents (non-ENT subtrees with an ENT child) clustered under
+    * `metricName`, or None for the variant that labels each entity with
+    * its parent's own label. The fit skips its top-K pass, since only
+    * the key map is read; [[EntityLabels]] then labels the entities.
     */
   private[graft] def entityParentModel(
       trees: Trees, tau: Double, metricName: String, decay: Double): Option[ClusterModel] =
@@ -660,7 +633,10 @@ object TreeClusterer {
       fitModel(trees, tau, decay, m, entityParentsOnly = true, buildModel = false))
 
   /** Entity oid → label, the max label winning (Spark's string order:
-    * UTF-8 bytes) when an oid meets more than one.
+    * UTF-8 bytes) when an oid meets more than one. An oid duplicated
+    * under differently labelled parents (REL duplication does this) thus
+    * resolves the same way at any partitioning (the reference's dict
+    * insertion made the winner ordering-dependent).
     */
   private[graft] final class EntityLabels {
     val labels = scala.collection.mutable.HashMap.empty[String, String]

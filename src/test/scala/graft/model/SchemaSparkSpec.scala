@@ -79,7 +79,7 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
       t("(ROOT (COLL::c (GROUP::Q (ENT::x 3)) (GROUP::Q (ENT::x 4))))"))
     val forest = Forest.fromTrees(spark, trees)
     val full = Schema.fromForest(Forest.toNodesDF(forest))
-    val tmpl = Schema.templateFromTrees(forest)
+    val tmpl = Schema.templateOf(Trees(forest))
     assert(tmpl.productions.toSet == full.productions.toSet)
     assert(tmpl.groups == full.groups)
     // relations are intentionally absent (orientation not derived) but

@@ -2,7 +2,7 @@ package graft.rewrite
 
 import graft.{SparkSpec, TestForests}
 import graft.core._
-import graft.model.{Forest, Group, Relation, RelationOrientation, Schema, TreeRow}
+import graft.model.{Forest, Group, Relation, RelationOrientation, Schema, TreeRow, Trees}
 import graft.sources.{RelationalLoader, Testdata}
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
@@ -235,7 +235,7 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
     val forest = Forest.fromTrees(spark, Seq(
       t("(ROOT (REL::x (GROUP::Terr_1_5_2 (ENT::a 1)) (GROUP::Other_3 (ENT::b 2))))"),
       t("(ROOT (COLL::c (GROUP::Terr_7 (ENT::a 3)) (GROUP::Terr_7 (ENT::a 4))))")))
-    val out = Forest.collectTrees(Rewrite.simplifyNames(forest))
+    val out = Forest.collectTrees(Rewrite.simplifyNames(Trees(forest)).toDataset)
     // Terr_1_5_2 and Terr_7 share base "Terr" → first (sorted) keeps it
     assert(out(0).render.contains("GROUP::Terr ") || out(0).render.contains("GROUP::Terr_1"))
     val allRendered = out.map(_.render).mkString(" ")

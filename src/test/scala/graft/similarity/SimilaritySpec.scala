@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.SparkSpec
 import graft.core._
+import graft.metrics.Metrics
 import graft.model.{Forest, TreeRow}
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
@@ -279,7 +280,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("entityLabels with null metric maps entities to parent labels") {
     val forest = Forest.fromTrees(spark, Seq(
       SExpr.parse("(S (X (ENT::a 1)) (GROUP::G (ENT::b 2)))")))
-    val labels = TreeClusterer.entityLabels(forest, tau = 0.7, metricName = null)
+    val labels = new Metrics(forest, 0.7, metricName = null).origin.clustering
     assert(labels.values.toSet == Set("X", "GROUP::G"))
   }
 
@@ -287,7 +288,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     def tree(p: String, f: String) =
       SExpr.parse(s"(S (X (ENT::person $p) (ENT::fruit $f)))")
     val forest = Forest.fromTrees(spark, Seq(tree("Alice", "apple"), tree("Bob", "banana")))
-    val labels = TreeClusterer.entityLabels(forest, tau = 0.7, metricName = "jaccard")
+    val labels = new Metrics(forest, 0.7, metricName = "jaccard").origin.clustering
     // 4 entities (2 per tree), all labelled with the single X-cluster
     assert(labels.size == 4)
     assert(labels.values.toSet.size == 1)
