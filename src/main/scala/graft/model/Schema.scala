@@ -1,8 +1,10 @@
 package graft.model
 
 import graft.core._
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** A group (table candidate): name + entity set
   * (reference architxt/schema.py:36-43).
@@ -272,11 +274,12 @@ object Schema {
   ): Schema = fromForest(nodes, keepUnlabelled, mergeLhs, LocalMaxNodes)
 
   /** Node sets of at most this many rows derive their schema on the
-    * driver. On 4 cores the walk beat the self-join at every size
-    * measured, up to 2.8 million rows (7.0 s against 11.3 s), so the
-    * bound is set by driver memory: a collected node row takes about
-    * 240 bytes, so a million rows hold about 0.24 GB, the budget
-    * `Rewrite.LocalMaxTrees` gives a collected forest.
+    * driver; [[extractDataset]] and `SqlExporter.export` apply the bound
+    * to the node rows they read. On 4 cores the walk beat the self-join
+    * at every size measured, up to 2.8 million rows (7.0 s against
+    * 11.3 s), so the bound is set by driver memory: a collected node row
+    * takes about 240 bytes, so a million rows hold about 0.24 GB, the
+    * budget `Rewrite.LocalMaxTrees` gives a collected forest.
     */
   val LocalMaxNodes = 1000000L
 
@@ -555,18 +558,16 @@ object Schema {
     * one instance keep the last by child position; global
     * drop-duplicates.
     *
-    * The deduplicated group-instance keyset — one (treeId, nodeId) pair
-    * per logical instance — is hash-broadcast into the ENT join when its
-    * MEASURED row count is at most [[BroadcastMaxGroupRows]]. It is
-    * usually orders of magnitude smaller than the ENT side it filters,
-    * and without the hint Catalyst sees only an unsized aggregate and
-    * falls back to shuffling + sorting every ENT row; the count reuses
-    * the persisted pruned projection, so it costs one cheap aggregate,
-    * not a rescan. A fact-table-sized root group degrades to a shuffled
-    * join automatically.
+    * The rows the extraction reads (every ENT row plus the group's own
+    * GROUP rows, 8 columns) are checkpointed and counted in one job. At
+    * most [[LocalMaxNodes]] of them are collected and the dataset is
+    * built on the driver (`extractLocal`): two Spark jobs in all, and
+    * the result is a local DataFrame. Above it the extraction stays
+    * distributed (`extractDistributed`). Both paths give the same
+    * columns, in the same order, and the same rows.
     */
-  def extractDataset(nodes: Dataset[NodeRow], groupName: String): org.apache.spark.sql.DataFrame =
-    extractDataset(nodes, groupName, BroadcastMaxGroupRows)
+  def extractDataset(nodes: Dataset[NodeRow], groupName: String): DataFrame =
+    extractDataset(nodes, groupName, BroadcastMaxGroupRows, LocalMaxNodes)
 
   /** Largest group keyset [[extractDataset]] broadcasts: ~32 bytes/row
     * hashed, so the build side stays well under a gigabyte AND under
@@ -575,36 +576,87 @@ object Schema {
     */
   val BroadcastMaxGroupRows = 20000000L
 
-  /** [[extractDataset]] under an explicit broadcast bound; 0 forces the
+  /** [[extractDataset]] under explicit bounds: a `localMaxNodes` of 0
+    * forces the distributed path, and a `broadcastMaxGroupRows` of 0 its
     * shuffled join.
     */
   private[model] def extractDataset(
       nodes: Dataset[NodeRow],
       groupName: String,
       broadcastMaxGroupRows: Long,
-  ): org.apache.spark.sql.DataFrame = {
+      localMaxNodes: Long,
+  ): DataFrame = {
     // The extraction touches only ENT rows plus the target group's GROUP
     // rows, and only 8 of NodeRow's 11 columns — in particular none of
-    // the REL rows with their wide composite-key strings. Persist that
-    // pruned projection once: both branches below (occurrence dedup and
-    // the ENT join) consume it, so the node view's lineage — which may be
-    // a full loader flatten — runs exactly once, and what's cached is an
-    // order of magnitude narrower than the full node view.
-    @inline def timed[A](label: String)(body: => A): A =
-      graft.util.Spark.timed("extract-profile", label)(body)
-    // Eager checkpoint, NOT a columnar persist: the pruned projection is
-    // consumed by row-shaped scans only (dedup agg, ENT join), and
-    // re-encoding 8 columns into the compressed columnar cache measured
-    // ~4x the checkpoint's Tungsten-row store at the orders extraction
-    // (33.3 s vs 17.9 s to materialize on an identical flatten) for no
-    // downstream benefit. Spark.checkpoint honors a configured
-    // checkpoint dir on clusters, localCheckpoint otherwise.
-    val pruned = timed("pruned+ckpt") { graft.util.Spark.checkpoint(nodes
+    // the REL rows with their wide composite-key strings. Checkpoint that
+    // pruned projection once: the node view's lineage, which may be a
+    // full loader flatten, runs exactly once, and what's stored is an
+    // order of magnitude narrower than the full node view. A checkpoint,
+    // NOT a columnar persist: re-encoding 8 columns into the compressed
+    // columnar cache measured ~4x the checkpoint's Tungsten-row store at
+    // the orders extraction (33.3 s vs 17.9 s to materialize on an
+    // identical flatten) for no downstream benefit.
+    val (pruned, n) = graft.util.Spark.checkpointCounted(nodes
       .filter(col("nodeType") === "ENT" ||
         (col("nodeType") === "GROUP" && col("name") === groupName))
       .select(col("treeId"), col("nodeId"), col("parentId"), col("pos"),
-        col("nodeType"), col("name"), col("value"), col("oid"))) }
+        col("nodeType"), col("name"), col("value"), col("oid")))
+    if (n > localMaxNodes) extractDistributed(pruned, groupName, broadcastMaxGroupRows)
+    else
+      try extractLocal(pruned.sparkSession, pruned.collect())
+      finally graft.util.Spark.release(pruned)
+  }
 
+  /** The extraction on the driver, step for step the distributed one,
+    * over the pruned rows of [[extractDataset]] in its column order:
+    * keep the min nodeId per (treeId, oid), an occurrence with a null or
+    * empty oid keyed by its "treeId:nodeId" identity instead; take each
+    * kept instance's ENT children, the last by position per entity name;
+    * columns are the sorted names seen; rows are value-level distinct.
+    */
+  private def extractLocal(spark: SparkSession, rows: Array[Row]): DataFrame = {
+    val kept = scala.collection.mutable.HashMap.empty[(Long, String), Int]
+    rows.foreach { r =>
+      if (r.getString(4) == "GROUP") {
+        val (treeId, nodeId, oid) = (r.getLong(0), r.getInt(1), r.getString(7))
+        val key = if (oid == null || oid.isEmpty) s"$treeId:$nodeId" else oid
+        kept.updateWith((treeId, key))(g => Some(g.fold(nodeId)(math.min(_, nodeId))))
+      }
+    }
+    val instances = kept.iterator.map { case ((treeId, _), nodeId) => (treeId, nodeId) }.toSet
+    // instance -> entity name -> (pos, value) of its last ENT child so named
+    val cells = scala.collection.mutable.HashMap.empty[(Long, Int), Map[String, (Int, String)]]
+    rows.foreach { r =>
+      val parent = (r.getLong(0), r.getInt(2))
+      if (r.getString(4) == "ENT" && instances.contains(parent)) {
+        val (name, pos) = (r.getString(5), r.getInt(3))
+        cells.updateWith(parent) { m =>
+          val cur = m.getOrElse(Map.empty)
+          Some(if (cur.get(name).exists(_._1 > pos)) cur else cur.updated(name, (pos, r.getString(6))))
+        }
+      }
+    }
+    val cols = cells.valuesIterator.flatMap(_.keys).toSeq.distinct.sorted
+    val out = cells.toSeq.sortBy(_._1)
+      .map { case (_, m) => Row.fromSeq(cols.map(c => m.get(c).map(_._2).orNull)) }
+      .distinct
+    spark.createDataFrame(out.asJava, StructType(cols.map(StructField(_, StringType))))
+  }
+
+  /** The Dataset extraction over the checkpointed pruned rows. The
+    * deduplicated group-instance keyset — one (treeId, nodeId) pair per
+    * logical instance — is hash-broadcast into the ENT join when its
+    * MEASURED row count is at most `broadcastMaxGroupRows`. It is usually
+    * orders of magnitude smaller than the ENT side it filters, and
+    * without the hint Catalyst sees only an unsized aggregate and falls
+    * back to shuffling + sorting every ENT row. A fact-table-sized root
+    * group degrades to a shuffled join automatically.
+    */
+  private def extractDistributed(
+      pruned: DataFrame,
+      groupName: String,
+      broadcastMaxGroupRows: Long,
+  ): DataFrame = {
     // Within one tree, same-oid occurrences are copies of the same wide
     // row (the loader materializes a group once standalone plus once per
     // REL side), so deduping occurrences by (treeId, oid) BEFORE the
@@ -626,22 +678,20 @@ object Schema {
       .agg(min(col("gNode")).as("gNode"))
       .select(col("gTree"), col("gNode"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val doBroadcast = timed("dedupCount") { deduped.count() } <= broadcastMaxGroupRows
-    val groupsDf = if (doBroadcast) broadcast(deduped) else deduped
+    val groupsDf = if (deduped.count() <= broadcastMaxGroupRows) broadcast(deduped) else deduped
     val ents = pruned
       .filter(col("nodeType") === "ENT")
       .select(col("treeId"), col("parentId"), col("pos"), col("name").as("entName"), col("value"))
 
     // Materialize the (small) joined projection: both the pivot column
     // discovery and the pivot itself consume it, and without it each
-    // pass re-scans the pruned checkpoint + re-runs the join. Same
-    // checkpoint-over-columnar-cache choice as `pruned` above.
-    val joined = timed("join+ckpt") { graft.util.Spark.checkpoint(ents
+    // pass re-scans the pruned checkpoint + re-runs the join.
+    val joined = graft.util.Spark.checkpoint(ents
       .join(groupsDf, col("treeId") === col("gTree") && col("parentId") === col("gNode"))
-      .select(col("gTree"), col("gNode"), col("entName"), col("pos"), col("value"))) }
+      .select(col("gTree"), col("gNode"), col("entName"), col("pos"), col("value")))
     try {
-      val entCols: Seq[String] = timed("entCols") {
-        joined.select(col("entName")).distinct().collect().map(_.getString(0)).toSeq.sorted }
+      val entCols: Seq[String] =
+        joined.select(col("entName")).distinct().collect().map(_.getString(0)).toSeq.sorted
 
       val pivoted = joined
         .groupBy(col("gTree"), col("gNode"))
@@ -650,7 +700,7 @@ object Schema {
         .drop("gTree", "gNode")
 
       // materialize before releasing the intermediate caches
-      timed("pivot+dedup+ckpt") { pivoted.dropDuplicates().localCheckpoint(true) }
+      pivoted.dropDuplicates().localCheckpoint(true)
     } finally {
       deduped.unpersist(blocking = false)
       // pruned/joined are checkpointed, not plan-cached — release their

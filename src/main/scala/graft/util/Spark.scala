@@ -46,6 +46,18 @@ object Spark {
     if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(true)
     else ds.localCheckpoint(true)
 
+  /** A [[checkpoint]] of `ds` and its row count. Without a checkpoint
+    * dir this is one job: the count over a lazy local checkpoint
+    * materializes it, so a caller can pick a driver or Dataset path by
+    * size at the cost of the checkpoint alone.
+    */
+  def checkpointCounted[T](ds: Dataset[T]): (Dataset[T], Long) = {
+    val ck =
+      if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(true)
+      else ds.localCheckpoint(false)
+    (ck, rowCount(ck))
+  }
+
   /** Row count in one job with no shuffle: `Dataset.count` aggregates
     * through an exchange, which adaptive execution runs as two jobs.
     * Rows are counted in their internal form, never deserialized.

@@ -1,10 +1,11 @@
 package graft
 
 import graft.core._
-import graft.model.{Forest, Schema, TreeRow}
+import graft.model.{Forest, NodeRow, Schema, TreeRow}
 import graft.rewrite.Generator
 import graft.sources.{RelationalLoader, Testdata}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.DataType
 
 /** Random forests shared by the property tests. */
 object TestForests {
@@ -58,4 +59,49 @@ object TestForests {
       .map(t => ArchiTree(Plain("ROOT"), Vector(Child.Node(withOids(t)))))
     Forest.fromTrees(spark, trees).localCheckpoint(true)
   }
+
+  /** The smallest scale of the TPC-H-shaped test corpus (TESTDATA.md). */
+  val Sf0001 = "/root/testdata/sf0.001"
+
+  /** A hand-made node set with the edge cases of dataset extraction and
+    * SQL export: one oid in two trees and twice in one tree, a null and
+    * an empty oid, a repeated entity label within one instance, an
+    * instance with no ENT child, two groups (A, B) sharing the entity
+    * name `x`, null values, a BOTH relation `A<->B` and a RIGHT relation
+    * `B<->C` whose member c1 joins two B oids.
+    */
+  def edgeCaseNodes(spark: SparkSession): Dataset[NodeRow] = {
+    import spark.implicits._
+    def e(name: String, v: String): Child = Child.Node(ArchiTree.leafNode(s"ENT::$name", v))
+    def g(name: String, oid: String, kids: Child*): ArchiTree =
+      ArchiTree(Typed(NodeType.Group, name), kids.toVector, oid)
+    def rel(name: String, l: ArchiTree, r: ArchiTree): ArchiTree =
+      ArchiTree(Typed(NodeType.Rel, name), Vector(Child.Node(l), Child.Node(r)))
+    def root(ts: ArchiTree*): ArchiTree = ArchiTree(Plain("ROOT"), ts.map(t => Child.Node(t): Child).toVector)
+    val a1 = g("A", "a1", e("x", "1"), e("y", "true"), e("x", "2"))
+    val b1 = g("B", "b1", e("x", "7"), e("z", "2024-01-02"))
+    val b2 = g("B", "b2", e("x", "NULL"), e("z", "2024-01-03"))
+    val c1 = g("C", "c1", e("w", "1.5"))
+    val trees = Seq(
+      root(a1, b1),
+      root(g("A", "a1", e("x", "3"), e("y", "false")), g("A", "a1", e("x", "9")), c1),
+      root(g("A", "NULL", e("x", "4")), g("A", "", e("x", "5"), e("y", "NULL")),
+        g("A", "a3", Child.Node(g("B", "b3", e("z", "x"))))),
+      root(rel("A<->B", a1, b1), rel("A<->B", a1, b2), rel("A<->B", g("A", "a4", e("x", "6")), b1)),
+      root(rel("B<->C", b1, c1), rel("B<->C", b2, c1),
+        rel("B<->C", g("B", "b4", e("z", "2024-01-04")), g("C", "c2", e("w", "NULL")))))
+    trees.zipWithIndex
+      .flatMap { case (t, i) => Forest.nodeRows(i.toLong, t) }
+      .map(n => n.copy(
+        oid = if (n.oid == "NULL") null else n.oid,
+        value = if (n.value == "NULL") null else n.value))
+      .toDS()
+  }
+
+  /** A table as its tests compare it: (name, type) per column in order,
+    * and its rows as a multiset.
+    */
+  def tableOf(df: DataFrame): (Seq[(String, DataType)], Map[Row, Int]) =
+    (df.schema.fields.toSeq.map(f => (f.name, f.dataType)),
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap)
 }

@@ -4,6 +4,7 @@ import graft.{SparkSpec, TestForests}
 import graft.core._
 import graft.rewrite.PropertySpec
 import graft.sources.{RelationalLoader, Testdata}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed schema derivation + dataset extraction, checked against the
@@ -144,11 +145,53 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
   test("extraction auto-demotes the keyset broadcast above the size threshold") {
     val nodes = Forest.toNodesDF(
       RelationalLoader.load(spark, "/root/testdata/sf0.001", Testdata.customerDb))
-    val default = Schema.extractDataset(nodes, "customer").collect().toSet
-    // threshold 0 → the measured keyset is over the bound, so the
-    // extraction must pick the shuffled join; results must be identical
-    // either way
-    val shuffled = Schema.extractDataset(nodes, "customer", 0L).collect().toSet
+    // driver bound 0 → the Dataset path; broadcast threshold 0 → the
+    // measured keyset is over the bound, so the extraction must pick the
+    // shuffled join; results must be identical either way
+    val default = Schema.extractDataset(nodes, "customer", Schema.BroadcastMaxGroupRows, 0L)
+      .collect().toSet
+    val shuffled = Schema.extractDataset(nodes, "customer", 0L, 0L).collect().toSet
     assert(shuffled == default, "shuffled-join extraction must match the broadcast plan")
+  }
+
+  test("extractDataset over a small node set runs at most two Spark jobs") {
+    val nodes = Forest.toNodesDF(TestForests.randomCustomer(spark, new scala.util.Random(5)))
+    val (ds, jobs) = jobsDuring(Schema.extractDataset(nodes, "customer"))
+    info(s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(jobs.size <= 2, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(TestForests.tableOf(ds) ==
+      TestForests.tableOf(Schema.extractDataset(nodes, "customer", Schema.BroadcastMaxGroupRows, 0L)))
+  }
+
+  test("property: the driver and Dataset extractions give equal datasets at 1 and 7 shuffle partitions") {
+    val rnd = new scala.util.Random(23)
+    val random = (0 until 3).map(_ => Forest.toNodesDF(TestForests.randomCustomer(spark, rnd))) ++
+      PropertySpec.samples(PropertySpec.schemaGen, 2).map(s => Forest.toNodesDF(
+        TestForests.relInstance(spark, s, size = 3, members = 2, collections = false, rnd)))
+    val corpus = Seq(Testdata.customerDb, Testdata.ordersDb)
+      .map(cfg => RelationalLoader.loadNodes(spark, TestForests.Sf0001, cfg).localCheckpoint(true))
+    val edge = TestForests.edgeCaseNodes(spark)
+    for ((nodes, i) <- (random ++ corpus :+ edge).zipWithIndex; parts <- Seq("1", "7"))
+      withConf("spark.sql.shuffle.partitions" -> parts) {
+        val groups = nodes.filter(org.apache.spark.sql.functions.col("nodeType") === "GROUP")
+          .select("name").distinct().collect().map(_.getString(0)).sorted
+        for (g <- groups) {
+          val local = Schema.extractDataset(nodes, g, Schema.BroadcastMaxGroupRows, Schema.LocalMaxNodes)
+          val dist = Schema.extractDataset(nodes, g, Schema.BroadcastMaxGroupRows, 0L)
+          assert(TestForests.tableOf(local) == TestForests.tableOf(dist),
+            s"node set $i, group $g, $parts shuffle partitions")
+        }
+      }
+  }
+
+  test("edge cases: occurrence dedup, last entity by position, null and empty oids") {
+    val ds = Schema.extractDataset(TestForests.edgeCaseNodes(spark), "A")
+    assert(ds.columns.toSeq == Seq("x", "y"))
+    // a1 in tree 0 keeps its last x; a1 twice in tree 1 keeps the first
+    // occurrence; the null and empty oids are instances of their own; a3
+    // has no ENT child; a1 and a4 under A<->B repeat tree-level values
+    assert(TestForests.tableOf(ds)._2 == Map(
+      Row("2", "true") -> 1, Row("3", "false") -> 1, Row("4", null) -> 1, Row("5", null) -> 1,
+      Row("6", null) -> 1))
   }
 }

@@ -1,9 +1,11 @@
 package graft.sinks
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestForests}
 import graft.core._
-import graft.model.{Forest, Schema}
+import graft.model.{Forest, RelationOrientation, Schema}
+import graft.rewrite.PropertySpec
 import graft.sources.{RelationalLoader, Testdata}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 class SinksSpec extends AnyFunSuite with SparkSpec {
@@ -89,5 +91,86 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
     Jsonl.write(forest, dir)
     val back = Forest.collectTrees(Jsonl.read(spark, dir))
     assert(back.map(_.render).toSet == trees.map(_.render).toSet)
+  }
+
+  test("export_sql: a LEFT or RIGHT relation's FK is the min target oid per source") {
+    val nodes = RelationalLoader.loadNodes(spark, TestForests.Sf0001, Testdata.customerDb)
+      .localCheckpoint(true)
+    val schema = Schema.fromForest(nodes, keepUnlabelled = false)
+    assert(schema.relations.find(_.name == "customer<->nation").get.orientation == RelationOrientation.Right)
+    // nation oid -> the min customer oid over the REL instances joining them
+    // (the oids are hex, so String order is Spark's)
+    val rows = nodes.collect()
+    val rels = rows.filter(r => r.nodeType == "REL" && r.name == "customer<->nation")
+      .map(r => (r.treeId, r.nodeId)).toSet
+    val expected = rows.filter(r => r.nodeType == "GROUP" && rels((r.treeId, r.parentId)))
+      .groupBy(r => (r.treeId, r.parentId)).values
+      .map(ms => ms.find(_.name == "nation").get.oid -> ms.find(_.name == "customer").get.oid)
+      .groupMapReduce(_._1)(_._2)((a, b) => if (a < b) a else b)
+    assert(expected.size == 25)
+    for (bound <- Seq(Schema.LocalMaxNodes, 0L)) {
+      val ex = SqlExporter.export(nodes, schema, bound)
+      val got = ex.tables("nation").select("architxt_nationID", "architxt_customerID").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      ex.release()
+      assert(got == expected, s"bound $bound")
+    }
+  }
+
+  test("writeParquet over the sf0.001 orders nodes runs at most 8 Spark jobs") {
+    val nodes = RelationalLoader.loadNodes(spark, TestForests.Sf0001, Testdata.ordersDb).localCheckpoint(true)
+    val schema = Schema.fromForest(nodes, keepUnlabelled = false)
+    val dir = java.nio.file.Files.createTempDirectory("graft-sql").toString
+    val (ex, jobs) = jobsDuring(SqlExporter.writeParquet(nodes, schema, dir))
+    ex.release()
+    // the pruned rows' count and collect, the cast query's two (adaptive
+    // execution runs its shuffle as a job of its own), one write per table
+    info(s"${jobs.size} jobs for ${ex.tables.size} tables: ${jobs.mkString(", ")}")
+    assert(jobs.size <= 8, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(ex.tables.keySet.forall(t => new java.io.File(s"$dir/$t/_SUCCESS").exists))
+  }
+
+  test("property: the driver and Dataset exports give equal tables and DDL at 1 and 7 shuffle partitions") {
+    val rnd = new scala.util.Random(29)
+    val random = (0 until 3).map(_ => Forest.toNodesDF(TestForests.randomCustomer(spark, rnd))) ++
+      PropertySpec.samples(PropertySpec.schemaGen, 2).map(s => Forest.toNodesDF(
+        TestForests.relInstance(spark, s, size = 3, members = 2, collections = false, rnd)))
+    val corpus = Seq(Testdata.customerDb, Testdata.ordersDb)
+      .map(cfg => RelationalLoader.loadNodes(spark, TestForests.Sf0001, cfg).localCheckpoint(true))
+    val edge = TestForests.edgeCaseNodes(spark)
+    val orientations = for ((nodes, i) <- (random ++ corpus :+ edge).zipWithIndex; parts <- Seq("1", "7"))
+      yield withConf("spark.sql.shuffle.partitions" -> parts) {
+        val schema = Schema.fromForest(nodes, keepUnlabelled = false)
+        val local = SqlExporter.export(nodes, schema, Schema.LocalMaxNodes)
+        val dist = SqlExporter.export(nodes, schema, 0L)
+        val what = s"node set $i, $parts shuffle partitions"
+        assert(local.tables.keySet == dist.tables.keySet, what)
+        for (t <- local.tables.keys)
+          assert(TestForests.tableOf(local.tables(t)) == TestForests.tableOf(dist.tables(t)), s"$what, table $t")
+        assert(local.ddl == dist.ddl, what)
+        dist.release()
+        schema.relations.map(_.orientation)
+      }
+    val seen = orientations.flatten.toSet
+    assert(seen(RelationOrientation.Both) && seen.size >= 2,
+      "the sample must exercise junction tables and FK columns")
+  }
+
+  test("export_sql edge cases: null and empty oids, max values, BOTH junction, min FK") {
+    val nodes = TestForests.edgeCaseNodes(spark)
+    val schema = Schema.fromForest(nodes, keepUnlabelled = false)
+    assert(schema.relations.map(r => r.name -> r.orientation) ==
+      Set("A<->B" -> RelationOrientation.Both, "B<->C" -> RelationOrientation.Right))
+    val ex = SqlExporter.export(nodes, schema)
+    val a = TestForests.tableOf(ex.tables("A"))
+    assert(a._1.map(_._1) == Seq("architxt_AID", "x", "y"))
+    // per oid the max of every occurrence's values; a3 has no ENT child
+    assert(a._2 == Map(
+      Row("a1", 9L, true) -> 1, Row(null, 4L, null) -> 1, Row("", 5L, null) -> 1, Row("a4", 6L, null) -> 1))
+    assert(TestForests.tableOf(ex.tables("A<->B"))._2.keySet ==
+      Set(Row("a1", "b1"), Row("a1", "b2"), Row("a4", "b1")))
+    // RIGHT: C carries the FK to B, the min B oid c1 joins
+    assert(TestForests.tableOf(ex.tables("C"))._2 ==
+      Map(Row("c1", 1.5, "b1") -> 1, Row("c2", null, "b4") -> 1))
   }
 }
