@@ -2,6 +2,7 @@ package graft.metrics
 
 import graft.core._
 import graft.model.{Forest, NodeRow, Schema, TreeRow, Trees}
+import graft.rewrite.Rewrite
 import graft.similarity.TreeClusterer
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -20,9 +21,11 @@ final case class SnapshotPart(
   * label counts, and entity clustering of a forest at construction, then
   * scores the current state against it after rewriting.
   *
-  * Scale design: a snapshot is two Spark jobs, the entity-parent fit's
-  * aggregate and one fused pass that returns each partition's distinct
-  * entity oids, label counts and (oid, cluster) pairs. The driver merges
+  * Scale design: a snapshot reads its forest through `Trees.of`: a small
+  * one on the driver (no Spark job for a local relation), a larger one
+  * in two jobs after its count, the entity-parent fit's aggregate and
+  * one fused pass. Each part returns its distinct entity oids, label
+  * counts and (oid, cluster) pairs. The driver merges
   * them and keeps, per snapshot, the oid set and the oid → cluster map;
   * coverage and the contingency table are set and map operations on
   * them, with no Spark job. That is one string per entity (twice, with
@@ -58,19 +61,20 @@ final class Snapshot(
   *   forest (the query registry, the rewrite loop's epoch hook) thread
   *   it here so the snapshot's lazy schema does not pay a second full
   *   nodes derivation; snapshots of OTHER forests always derive fresh.
+  * @param localMaxTrees the snapshots' driver-path bound (0: Dataset path)
   */
-final class Metrics(
-    source: Dataset[TreeRow],
-    tau: Double = 0.7,
-    decay: Double = 2.0,
-    metricName: String = "jaro",
-    sourceSchema: Option[() => Schema] = None) {
+final class Metrics private[graft] (source: Dataset[TreeRow], tau: Double, decay: Double,
+    metricName: String, sourceSchema: Option[() => Schema], localMaxTrees: Long) {
+
+  def this(source: Dataset[TreeRow], tau: Double = 0.7, decay: Double = 2.0, metricName: String = "jaro",
+      sourceSchema: Option[() => Schema] = None) =
+    this(source, tau, decay, metricName, sourceSchema, Rewrite.LocalMaxTrees)
 
   private def snapshot(forest: Dataset[TreeRow]): Snapshot = {
     import forest.sparkSession.implicits._
-    val trees = Trees(forest)
+    val (trees, _) = Trees.of(forest, localMaxTrees)
     val model = TreeClusterer.entityParentModel(trees, tau, metricName, decay)
-    val parts = trees.collectPartitions { it =>
+    val parts = try trees.collectPartitions { it =>
       val oids = scala.collection.mutable.HashSet.empty[String]
       val labels = scala.collection.mutable.HashMap.empty[String, Long]
       val clusters = new TreeClusterer.EntityLabels
@@ -83,7 +87,7 @@ final class Metrics(
         clusters.addTree(treeId, tree, model)
       }
       Iterator(SnapshotPart(oids.toSeq, labels.toSeq, clusters.labels.toSeq))
-    }
+    } finally trees.release()
     val clustering = new TreeClusterer.EntityLabels
     parts.foreach(_.clusters.foreach { case (oid, c) => clustering.add(oid, c) })
     val schemaThunk = sourceSchema match {

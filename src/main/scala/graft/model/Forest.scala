@@ -81,10 +81,20 @@ object Forest {
       strip(tree)
     }
 
-  /** Flatten a forest into one NodeRow per tree node (SURVEY §7.1). */
-  def toNodesDF(forest: Dataset[TreeRow]): Dataset[NodeRow] = {
+  /** Flatten a forest into one NodeRow per tree node (SURVEY §7.1). A
+    * local relation of trees with at most `Schema.LocalMaxNodes` nodes
+    * flattens on the driver into a local relation, which the node-set
+    * stages read with no Spark job; any other forest flattens lazily.
+    */
+  def toNodesDF(forest: Dataset[TreeRow]): Dataset[NodeRow] = toNodesDF(forest, Schema.LocalMaxNodes)
+
+  private[graft] def toNodesDF(forest: Dataset[TreeRow], localMaxNodes: Long): Dataset[NodeRow] = {
     import forest.sparkSession.implicits._
-    forest.flatMap(row => nodeRows(row.treeId, row.tree))
+    val onDriver = Option.when(forest.isLocal) {
+      forest.collect().iterator.flatMap(row => nodeRows(row.treeId, row.tree))
+        .take(math.min(localMaxNodes, Int.MaxValue - 1L).toInt + 1).toVector
+    }.filter(_.size <= localMaxNodes)
+    onDriver.fold(forest.flatMap(row => nodeRows(row.treeId, row.tree)))(_.toDS())
   }
 
   /** Local flattening of one tree (pre-order ids). Heights come back up

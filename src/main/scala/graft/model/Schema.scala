@@ -1,6 +1,7 @@
 package graft.model
 
 import graft.core._
+import graft.util.Spark
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -258,14 +259,14 @@ object Schema {
   /** Derive the schema from a forest's nodes DataFrame — the Spark
     * re-expression of Schema.from_forest (schema.py:144-218).
     *
-    * The node rows are counted in one job. At most [[LocalMaxNodes]] of
-    * them are collected once and walked on the driver (`fromNodeRows`):
-    * two Spark jobs in all. Above it the derivation stays distributed: a
-    * nodes self-join gives each node its production row and, for
-    * 2-GROUP RELs, the relation sides, then three aggregations reach the
-    * driver (the production rows, the relation-side multiplicity flags
-    * and the side order). Both paths give equal schemas, productions in
-    * the same order: first occurrence by (treeId, nodeId).
+    * Through `Spark.placed`, at most [[LocalMaxNodes]] node rows are
+    * collected once and walked on the driver (`fromNodeRows`). Above it
+    * the derivation stays distributed: a nodes self-join gives each node
+    * its production row and, for 2-GROUP RELs, the relation sides, then
+    * three aggregations reach the driver (the production rows, the
+    * relation-side multiplicity flags and the side order). Both paths
+    * give equal schemas, productions in the same order: first occurrence
+    * by (treeId, nodeId).
     */
   def fromForest(
       nodes: Dataset[NodeRow],
@@ -286,15 +287,16 @@ object Schema {
   /** [[fromForest]] under an explicit driver-path bound; 0 forces the
     * distributed derivation.
     */
-  private[model] def fromForest(
+  private[graft] def fromForest(
       nodes: Dataset[NodeRow],
       keepUnlabelled: Boolean,
       mergeLhs: Boolean,
       localMaxNodes: Long,
-  ): Schema =
-    if (graft.util.Spark.rowCount(nodes) <= localMaxNodes)
-      fromNodeRows(nodes.collect().toSeq, keepUnlabelled, mergeLhs)
-    else fromNodesDataset(nodes, keepUnlabelled, mergeLhs)
+  ): Schema = Spark.placed(nodes, localMaxNodes) match {
+    case Spark.OnDriver(rows) => fromNodeRows(rows.toSeq, keepUnlabelled, mergeLhs)
+    case spread: Spark.InSpark[NodeRow] =>
+      try fromNodesDataset(spread.ds, keepUnlabelled, mergeLhs) finally spread.release()
+  }
 
   private def fromNodesDataset(
       nodes: Dataset[NodeRow],
@@ -304,22 +306,16 @@ object Schema {
     val spark = nodes.sparkSession
     import spark.implicits._
 
-    // three collect actions below consume the self-join+aggregate of
-    // the nodes input — cache the narrow node rows for the join's two
-    // scans (the schema-only rewrite lane passes a fresh per-epoch
-    // forest flatten), materialize the JOINED per-node production rows
-    // ONCE (bounded by node count, narrow), and release the input
-    // cache: without this each collect re-ran the self-join + the
-    // collect_list aggregation from scratch
-    val cached = nodes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val c = cached.select(
+    // three collect actions below consume the self-join+aggregate:
+    // materialize the JOINED per-node production rows ONCE, or each
+    // collect re-runs the self-join + collect_list from scratch
+    val c = nodes.select(
       col("treeId").as("cTreeId"), col("parentId").as("cParentId"), col("pos").as("cPos"),
       col("nodeType").as("cType"), col("name").as("cName"), col("oid").as("cOid"))
     val label = (t: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =>
       when(t.isNull, n).otherwise(concat(t, lit("::"), n))
 
-    val joined = graft.util.Spark.checkpoint(cached
+    val joined = Spark.checkpoint(nodes
       .join(c, col("treeId") === col("cTreeId") && col("nodeId") === col("cParentId"))
       .groupBy(col("treeId"), col("nodeId"), col("nodeType"), col("name"), col("nChildren"))
       .agg(sort_array(collect_list(struct(
@@ -329,7 +325,6 @@ object Schema {
       // non-lexical (no leaf children) and not the ROOT label
       .filter(size(col("kids")) === col("nChildren") &&
         !(col("nodeType").isNull && col("name") === "ROOT")))
-    cached.unpersist(blocking = false)
 
     // each distinct production row with its first occurrence, so the
     // rows reach `assemble` in the driver walk's order, not the shuffle's
@@ -387,7 +382,7 @@ object Schema {
       .map { case (r, l, rr) => r -> (l, rr) }
       .toMap
 
-    graft.util.Spark.release(joined)
+    Spark.release(joined)
     assemble(prodRows, multiFlags, sideOrder, keepUnlabelled, mergeLhs)
   }
 
@@ -559,12 +554,11 @@ object Schema {
     * drop-duplicates.
     *
     * The rows the extraction reads (every ENT row plus the group's own
-    * GROUP rows, 8 columns) are checkpointed and counted in one job. At
-    * most [[LocalMaxNodes]] of them are collected and the dataset is
-    * built on the driver (`extractLocal`): two Spark jobs in all, and
-    * the result is a local DataFrame. Above it the extraction stays
-    * distributed (`extractDistributed`). Both paths give the same
-    * columns, in the same order, and the same rows.
+    * GROUP rows, 8 columns) go through `Spark.placed`. At most
+    * [[LocalMaxNodes]] of them are collected and the dataset is built on
+    * the driver (`extractLocal`), a local DataFrame. Above it the
+    * extraction stays distributed (`extractDistributed`). Both paths give
+    * the same columns, in the same order, and the same rows.
     */
   def extractDataset(nodes: Dataset[NodeRow], groupName: String): DataFrame =
     extractDataset(nodes, groupName, BroadcastMaxGroupRows, LocalMaxNodes)
@@ -588,23 +582,19 @@ object Schema {
   ): DataFrame = {
     // The extraction touches only ENT rows plus the target group's GROUP
     // rows, and only 8 of NodeRow's 11 columns — in particular none of
-    // the REL rows with their wide composite-key strings. Checkpoint that
-    // pruned projection once: the node view's lineage, which may be a
-    // full loader flatten, runs exactly once, and what's stored is an
-    // order of magnitude narrower than the full node view. A checkpoint,
-    // NOT a columnar persist: re-encoding 8 columns into the compressed
-    // columnar cache measured ~4x the checkpoint's Tungsten-row store at
-    // the orders extraction (33.3 s vs 17.9 s to materialize on an
-    // identical flatten) for no downstream benefit.
-    val (pruned, n) = graft.util.Spark.checkpointCounted(nodes
+    // the REL rows with their wide composite-key strings. Placing that
+    // pruned projection checkpoints it: the node view's lineage runs
+    // once, and what's stored is far narrower than the node view (a
+    // columnar persist of it measured ~4x slower to materialize).
+    val pruned = nodes
       .filter(col("nodeType") === "ENT" ||
         (col("nodeType") === "GROUP" && col("name") === groupName))
       .select(col("treeId"), col("nodeId"), col("parentId"), col("pos"),
-        col("nodeType"), col("name"), col("value"), col("oid")))
-    if (n > localMaxNodes) extractDistributed(pruned, groupName, broadcastMaxGroupRows)
-    else
-      try extractLocal(pruned.sparkSession, pruned.collect())
-      finally graft.util.Spark.release(pruned)
+        col("nodeType"), col("name"), col("value"), col("oid"))
+    Spark.placed(pruned, localMaxNodes) match {
+      case Spark.OnDriver(rows) => extractLocal(nodes.sparkSession, rows)
+      case spread: Spark.InSpark[Row] => extractDistributed(spread, groupName, broadcastMaxGroupRows)
+    }
   }
 
   /** The extraction on the driver, step for step the distributed one,
@@ -653,10 +643,11 @@ object Schema {
     * group degrades to a shuffled join automatically.
     */
   private def extractDistributed(
-      pruned: DataFrame,
+      spread: Spark.InSpark[Row],
       groupName: String,
       broadcastMaxGroupRows: Long,
   ): DataFrame = {
+    val pruned = spread.ds
     // Within one tree, same-oid occurrences are copies of the same wide
     // row (the loader materializes a group once standalone plus once per
     // REL side), so deduping occurrences by (treeId, oid) BEFORE the
@@ -686,7 +677,7 @@ object Schema {
     // Materialize the (small) joined projection: both the pivot column
     // discovery and the pivot itself consume it, and without it each
     // pass re-scans the pruned checkpoint + re-runs the join.
-    val joined = graft.util.Spark.checkpoint(ents
+    val joined = Spark.checkpoint(ents
       .join(groupsDf, col("treeId") === col("gTree") && col("parentId") === col("gNode"))
       .select(col("gTree"), col("gNode"), col("entName"), col("pos"), col("value")))
     try {
@@ -707,8 +698,8 @@ object Schema {
       // block storage explicitly (leaving it to GC + ContextCleaner let
       // orphaned blocks accumulate across a long session and measurably
       // taxed every later query's storage eviction)
-      graft.util.Spark.release(joined)
-      graft.util.Spark.release(pruned)
+      Spark.release(joined)
+      spread.release()
     }
   }
 }

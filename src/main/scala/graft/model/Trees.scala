@@ -1,20 +1,24 @@
 package graft.model
 
+import graft.util.Spark
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-/** The operations the rewrite loop and the clusterer's fit run over a
-  * forest: map every tree, and run a function per partition and collect
-  * what it returns. `materialize` marks rows that later steps read more
-  * than once. Two instances:
+/** The operations the rewrite loop, the clusterer's fit and the metrics
+  * snapshot run over a forest: map every tree, and run a function per
+  * partition and collect what it returns. `materialize` marks rows that
+  * later steps read more than once. [[Trees.of]] picks one of two
+  * instances by size:
   *
-  *   - [[Trees.apply]] keeps the forest a `Dataset[TreeRow]`: `map` is a
-  *     lazy row map, `collectPartitions` one Spark job, and `materialize`
-  *     a checkpoint that releases the one it supersedes;
-  *   - [[Trees.local]] holds a small forest as a driver `Vector`, cut
+  *   - the Dataset instance: `map` is a lazy row map, `collectPartitions`
+  *     one Spark job, and `materialize` a checkpoint that releases the one
+  *     it supersedes;
+  *   - the driver instance holds a small forest as a driver `Vector`, cut
   *     into `defaultParallelism` chunks that run on the global execution
-  *     context: no Spark job, no encoder, no tree (de)serialization.
+  *     context: no Spark job, no encoder, no tree (de)serialization. Its
+  *     `toDataset` is a local relation, which the next stage reads with
+  *     no Spark job either.
   *
   * Both see the rows in the forest's order, so a computation whose
   * result does not depend on where the partition boundaries fall gives
@@ -32,10 +36,11 @@ private[graft] sealed trait Trees {
   /** The same rows, ready to be read more than once. */
   def materialize(): Trees
 
-  /** The rows as a Dataset: the held Dataset, or a checkpoint of the
-    * driver rows.
-    */
+  /** The rows as a Dataset: the held Dataset, or a local relation. */
   def toDataset: Dataset[TreeRow]
+
+  /** Free the checkpoint this instance's chain holds, if any. */
+  def release(): Unit
 }
 
 private[graft] object Trees {
@@ -44,12 +49,16 @@ private[graft] object Trees {
     * on the instances derived from it supersede each other: each new one
     * releases the previous, and the last one is the caller's.
     */
-  def apply(forest: Dataset[TreeRow]): Trees = new Distributed(forest, new Held)
+  def apply(forest: Dataset[TreeRow]): Trees = new Distributed(forest, new Held(null))
 
-  /** The driver instance over rows already collected. */
-  def local(spark: SparkSession, rows: Vector[TreeRow]): Trees = new Local(spark, rows)
+  /** `Spark.placed`'s pick and the row count; `materialize` supersedes a checkpoint made here. */
+  def of(forest: Dataset[TreeRow], localMaxTrees: Long): (Trees, Long) =
+    Spark.placed(forest, localMaxTrees) match {
+      case Spark.OnDriver(rows) => (new Local(forest.sparkSession, rows.toVector), rows.length.toLong)
+      case Spark.InSpark(ds, n, owned) => (new Distributed(ds, new Held(if (owned) ds else null)), n)
+    }
 
-  private final class Held { var ckpt: Dataset[TreeRow] = null }
+  private final class Held(var ckpt: Dataset[TreeRow])
 
   private final class Distributed(ds: Dataset[TreeRow], held: Held) extends Trees {
     val spark: SparkSession = ds.sparkSession
@@ -65,13 +74,15 @@ private[graft] object Trees {
     def materialize(): Trees =
       if (ds eq held.ckpt) this
       else {
-        val c = graft.util.Spark.checkpoint(ds)
-        if (held.ckpt != null) graft.util.Spark.release(held.ckpt)
+        val c = Spark.checkpoint(ds)
+        release()
         held.ckpt = c
         new Distributed(c, held)
       }
 
     def toDataset: Dataset[TreeRow] = ds
+
+    def release(): Unit = if (held.ckpt != null) Spark.release(held.ckpt)
   }
 
   private final class Local(val spark: SparkSession, rows: Vector[TreeRow]) extends Trees {
@@ -92,7 +103,9 @@ private[graft] object Trees {
 
     def toDataset: Dataset[TreeRow] = {
       import spark.implicits._
-      graft.util.Spark.checkpoint(rows.toDS())
+      rows.toDS()
     }
+
+    def release(): Unit = ()
   }
 }

@@ -16,14 +16,15 @@ import org.apache.spark.sql.Dataset
   *
   * The reference runs the loop in one process over a worker pool
   * (tree_rewriting/__init__.py:311-633). Here the loop is written once
-  * against [[Trees]] and runs on one of two instances, chosen by the
+  * against [[Trees]] and runs on the instance `Trees.of` picks by the
   * entry count:
   *
   *   - at most [[LocalMaxTrees]] trees: the forest is collected once and
   *     every epoch maps a driver `Vector` in `defaultParallelism` chunks
-  *     on the global execution context. The whole rewrite is three Spark
-  *     jobs: the entry count, the collect, and the checkpoint of the
-  *     result;
+  *     on the global execution context. The whole rewrite is at most two
+  *     Spark jobs, the count and the collect (none for a local relation),
+  *     and its result is a local relation that the next stage reads with
+  *     no job;
   *   - above it: the forest stays a `Dataset[TreeRow]`, and an epoch runs
   *     at most five jobs, none of which shuffles: the reduce_all
   *     checkpoint, the fit's aggregate and top-K passes, the find_groups
@@ -35,9 +36,6 @@ import org.apache.spark.sql.Dataset
   * give the same rows and the same epoch count.
   */
 object Rewrite {
-
-  @inline private def timed[A](label: String)(body: => A): A =
-    graft.util.Spark.timed("rewrite-profile", label)(body)
 
   /** Forests of at most this many trees are rewritten on the driver.
     * Above it the Spark jobs' fixed cost is a small share of an epoch
@@ -73,8 +71,8 @@ object Rewrite {
       // called with (epoch, forest-after-epoch); None = zero cost. The
       // ForestStore transaction lane hangs per-epoch snapshot commits
       // here (the reference commits its ZODB transaction per rewrite
-      // step, tree_rewriting/__init__.py epoch loop). The Dataset is a
-      // checkpoint that later epochs may release: read it in the call
+      // step, tree_rewriting/__init__.py epoch loop). The Dataset may be
+      // a checkpoint that later epochs release: read it in the call
       epochHook: Option[(Int, Dataset[TreeRow]) => Unit] = None)
 
   /** Convergence telemetry for one `rewrite` run: `epochsToConverge` is
@@ -95,23 +93,15 @@ object Rewrite {
   /** [[rewriteWithStats]] under an explicit driver-path bound; 0 forces
     * the Dataset path.
     */
-  private[rewrite] def rewriteWithStats(
+  private[graft] def rewriteWithStats(
       forest: Dataset[TreeRow], cfg: Config, localMaxTrees: Long): RewriteResult = {
     val spark = forest.sparkSession
     import spark.implicits._
 
-    // the count reads the caller's forest, as the collect or the entry
-    // checkpoint that follows does: callers pass a materialized forest
-    val total = graft.util.Spark.rowCount(forest)
+    val (entry, total) = Trees.of(forest, localMaxTrees)
     if (total == 0) return RewriteResult(forest, Some(0))
     val minSupport = cfg.minSupport.getOrElse(math.max((total / 10).toInt, 2))
-    // a Dataset-path checkpoint supersedes the previous one and releases
-    // its blocks as soon as it has materialized (GC + ContextCleaner
-    // reclaim is too lazy — superseded epochs piled up in storage and
-    // taxed every later job in the session)
-    var trees: Trees =
-      if (total <= localMaxTrees) Trees.local(spark, forest.collect().toVector)
-      else Trees(forest).materialize()
+    var trees = entry
 
     // epoch counts like the reference: `trange(1, epoch)`
     // (tree_rewriting/__init__.py:127) runs epochs-1 iterations, so
@@ -122,14 +112,10 @@ object Rewrite {
 
     while (epoch < cfg.epochs && !converged) {
       // 1. reduce_all({ENT}) (tree_rewriting/__init__.py:196-201)
-      trees = timed("reduceAll+ckpt") {
-        trees.map(r => TreeRow(r.treeId, r.tree.reduceAll(Set(NodeType.Ent)))).materialize()
-      }
+      trees = trees.map(r => TreeRow(r.treeId, r.tree.reduceAll(Set(NodeType.Ent)))).materialize()
 
       // 2. cluster the candidate subtrees
-      val model = timed("fit") { TreeClusterer.fitModel(trees, cfg.tau, cfg.decay,
-        "jaro", schemaOnly = cfg.schemaOnly)
-      }
+      val model = TreeClusterer.fitModel(trees, cfg.tau, cfg.decay, "jaro", schemaOnly = cfg.schemaOnly)
       val modelB = spark.sparkContext.broadcast(model)
 
       // 3. find_groups (tree_rewriting/__init__.py:648-706): relabel
@@ -143,11 +129,11 @@ object Rewrite {
       // with no cluster above minSupport, findGroupsInTree is identity
       // on every tree — skip the pass
       if (rank.nonEmpty) {
-        trees = timed("findGroups+ckpt") { trees.map { case TreeRow(id, tree) =>
+        trees = trees.map { case TreeRow(id, tree) =>
           val assigns = TreeClusterer.treeAssignments(id, tree, modelB.value)
             .map(a => a.key -> a.cluster).toSeq
           TreeRow(id, findGroupsInTree(tree, id, assigns, rank))
-        }.materialize() }
+        }.materialize()
       }
 
       // 4. operations with early exit at the first op that changed
@@ -163,20 +149,18 @@ object Rewrite {
       // global first-positive index is exactly the min over trees of
       // each tree's first-changing index.
       val opsArr = cfg.operations.toArray
-      val firing: Int = timed("opTrials") {
-        trees.collectPartitions { it =>
-          var m = opsArr.length // = "no op fired" sentinel, and the bound
-          it.foreach { case TreeRow(id, tree) =>
-            var i = 0
-            var hit = false
-            while (!hit && i < m) {
-              hit = opsArr(i).fn(tree, modelB.value, minSupport, id.toString)._2
-              if (hit) m = i else i += 1
-            }
+      val firing: Int = trees.collectPartitions { it =>
+        var m = opsArr.length // = "no op fired" sentinel, and the bound
+        it.foreach { case TreeRow(id, tree) =>
+          var i = 0
+          var hit = false
+          while (!hit && i < m) {
+            hit = opsArr(i).fn(tree, modelB.value, minSupport, id.toString)._2
+            if (hit) m = i else i += 1
           }
-          Iterator.single(m)
-        }.min
-      }
+        }
+        Iterator.single(m)
+      }.min
       if (firing < opsArr.length) {
         val op = opsArr(firing)
         // LAZY apply on the Dataset path: the op output's one consumer
@@ -185,9 +169,9 @@ object Rewrite {
         // identity on every tree (proven by the trial pass), so applying
         // only the firing op is the reference's early-exit application
         // exactly.
-        trees = timed(s"op:${op.name} (lazy)") { trees.map { case TreeRow(id, tree) =>
+        trees = trees.map { case TreeRow(id, tree) =>
           TreeRow(id, op.fn(tree, modelB.value, minSupport, id.toString)._1)
-        } }
+        }
       }
 
       converged = firing == opsArr.length
@@ -207,8 +191,7 @@ object Rewrite {
       val (t1, _) = TreeOps.findRelations(r.tree, namingOnly = true)
       TreeRow(r.treeId, TreeOps.findCollections(t1, namingOnly = true)._1)
     }.materialize()
-    val named = timed("simplifyNames") { simplifyNames(postProcessed) }
-    val out = timed("final ckpt") { named.materialize().toDataset }
+    val out = simplifyNames(postProcessed).materialize().toDataset
     // the loop exits with `epoch` one past the last pass run; when that
     // last pass fired nothing, it IS the natural fixpoint epoch
     RewriteResult(out, if (converged) Some(epoch - 1) else None)
@@ -277,11 +260,11 @@ object Rewrite {
     */
   private[rewrite] def simplifyNames(trees: Trees): Trees = {
     import trees.spark.implicits._
-    val groupNames = timed("simplify:groupNames") { trees.collectPartitions { it =>
+    val groupNames = trees.collectPartitions { it =>
       it.flatMap(_.tree.subtrees.collect {
         case t if t.hasType(NodeType.Group) => t.label.name
       }).distinct
-    }.distinct.sorted.toArray }
+    }.distinct.sorted.toArray
     val renames = renameMap(groupNames)
     trees.map(r => TreeRow(r.treeId, renameTree(renames, r.tree)))
   }

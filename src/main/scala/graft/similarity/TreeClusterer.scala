@@ -202,9 +202,6 @@ object TreeClusterer {
 
   final case class Result(assignments: Dataset[Assignment], model: ClusterModel)
 
-  @inline private def timed[A](label: String)(body: => A): A =
-    graft.util.Spark.timed("fit-profile", label)(body)
-
   def candidates(
       forest: Dataset[TreeRow],
       maxHeight: Int = 5,
@@ -287,10 +284,9 @@ object TreeClusterer {
     // the driver. Every later decision — tau-graph, components, naming,
     // cluster stats — is a function of these partials: a member's
     // cluster and probability depend only on its key.
-    val partials: Map[StructKey, KeyPartial] = timed("aggregate") {
+    val partials: Map[StructKey, KeyPartial] =
       mergePartials(trees.collectPartitions(it =>
         mergePartials(cands(it).map(KeyPartial(1, _))).valuesIterator).iterator)
-    }
     def mult(k: StructKey): Long = partials(k).mult
 
     // (key, component, probability) per membership. A key has exactly
@@ -336,7 +332,7 @@ object TreeClusterer {
     val summaries: Map[String, ClusterSummary] =
       if (!buildModel) Map.empty
       else {
-        val top = timed("topK") { topMembers(trees, cands, partials, byComp, naming, keepPerCluster) }
+        val top = topMembers(trees, cands, partials, byComp, naming, keepPerCluster)
         naming.map { case (comp, name) =>
           val ks = byComp(comp).map(_._1)
           val support = ks.map(mult).sum
@@ -532,10 +528,7 @@ object TreeClusterer {
         (RepRow(c.key, ks.map(partials(_).mult).sum, c.height, c.depth, c.levels), ks)
       }.toSeq
     val reps = byRep.map(_._1).toArray.sortBy(_.key)
-    graft.util.Spark.note("fit-profile", s"repCount=${reps.length}")
-
-    val (labels, incident) =
-      timed("localTauGraph") { localTauGraph(reps, tau, decay, metricName, maxHeight) }
+    val (labels, incident) = localTauGraph(reps, tau, decay, metricName, maxHeight)
 
     // --- every key of a representative shares its component and
     // probability (no incident weight = not a member) ---

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.model.{NodeRow, Relation, RelationOrientation, Schema}
+import graft.util.Spark
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -34,10 +35,10 @@ object SqlExporter {
 
   /** Export `schema`'s groups and relations from `nodes`. The rows the
     * export reads (ENT rows, the GROUP rows of its groups and relation
-    * sides, the REL rows of its relations; 7 columns) are checkpointed
-    * and counted in one job. At most [[Schema.LocalMaxNodes]] of them are
-    * collected and the tables are built on the driver (`exportLocal`) as
-    * local DataFrames; above it they are built in Spark
+    * sides, the REL rows of its relations; 7 columns) go through
+    * `Spark.placed`. At most [[Schema.LocalMaxNodes]] of them are collected
+    * and the tables are built on the driver (`exportLocal`) as local
+    * DataFrames; above it they are built in Spark
     * (`exportDistributed`). Both paths give the same tables, columns and
     * types, and run one cast-inference query for all tables.
     */
@@ -50,16 +51,15 @@ object SqlExporter {
   private[graft] def export(nodes: Dataset[NodeRow], schema: Schema, localMaxNodes: Long): Export = {
     val groupNames = schema.groups.map(_.name)
     val sideNames = schema.relations.flatMap(r => Set(r.left, r.right))
-    val (pruned, n) = graft.util.Spark.checkpointCounted(nodes
+    val pruned = nodes
       .filter(col("nodeType") === "ENT" ||
         (col("nodeType") === "GROUP" && col("name").isin((groupNames | sideNames).toSeq: _*)) ||
         (col("nodeType") === "REL" && col("name").isin(schema.relations.toSeq.map(_.name): _*)))
       .select(col("treeId"), col("nodeId"), col("parentId"), col("nodeType"), col("name"),
-        col("value"), col("oid")))
-    if (n > localMaxNodes) exportDistributed(pruned, schema)
-    else {
-      val rows = try pruned.collect() finally graft.util.Spark.release(pruned)
-      exportLocal(pruned.sparkSession, rows, schema)
+        col("value"), col("oid"))
+    Spark.placed(pruned, localMaxNodes) match {
+      case Spark.OnDriver(rows) => exportLocal(nodes.sparkSession, rows, schema)
+      case spread: Spark.InSpark[Row] => exportDistributed(spread, schema)
     }
   }
 
@@ -69,7 +69,8 @@ object SqlExporter {
     * its pivot + FK-join chain. `release()` unpersists them and the pruned
     * checkpoint.
     */
-  private def exportDistributed(pruned: DataFrame, schema: Schema): Export = {
+  private def exportDistributed(spread: Spark.InSpark[Row], schema: Schema): Export = {
+    val pruned = spread.ds
     val groupTables = scala.collection.mutable.Map.empty[String, DataFrame]
 
     // (group instance × child entity) rows for every exported group at
@@ -127,7 +128,7 @@ object SqlExporter {
     val casted = cached.map { case (name, df) => name -> applyCasts(name, df, isPk, casts) }
     Export(casted, ddlFor(schema, casted), () => {
       cached.values.foreach(_.unpersist())
-      graft.util.Spark.release(pruned)
+      spread.release()
     })
   }
 

@@ -1,6 +1,8 @@
 package graft.util
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Shared Spark-session helpers. */
 object Spark {
@@ -21,48 +23,49 @@ object Spark {
     spark
   }
 
-  // phase timing to stderr when SPARK_GRAFT_PROFILE is set — dev aid only
-  private val profile = sys.env.contains("SPARK_GRAFT_PROFILE")
-
-  /** One-line profile note (sizes, counts) when profiling is enabled. */
-  @inline def note(prefix: String, msg: => String): Unit =
-    if (profile) System.err.println(s"[$prefix] $msg")
-
-  /** Time `body` under `[prefix] label` when profiling is enabled. */
-  @inline def timed[A](prefix: String, label: String)(body: => A): A =
-    if (!profile) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[$prefix] $label%-24s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** Break lineage: reliable checkpoint when a checkpoint dir is
     * configured (an executor loss must not kill a long lineage on a real
-    * cluster), eager localCheckpoint otherwise.
+    * cluster), a localCheckpoint otherwise, lazy unless `eager`.
     */
-  def checkpoint[T](ds: Dataset[T]): Dataset[T] =
+  def checkpoint[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] =
     if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(true)
-    else ds.localCheckpoint(true)
+    else ds.localCheckpoint(eager)
 
-  /** A [[checkpoint]] of `ds` and its row count. Without a checkpoint
-    * dir this is one job: the count over a lazy local checkpoint
-    * materializes it, so a caller can pick a driver or Dataset path by
-    * size at the cost of the checkpoint alone.
+  /** A stage's input as [[placed]] gives it. */
+  sealed trait Placed[T]
+  final case class OnDriver[T](rows: Array[T]) extends Placed[T]
+
+  /** `release` frees `ds` if [[placed]] made it (`owned`), never a caller's checkpoint. */
+  final case class InSpark[T](ds: Dataset[T], count: Long, owned: Boolean) extends Placed[T] {
+    def release(): Unit = if (owned) Spark.release(ds)
+  }
+
+  /** The driver-or-Dataset decision of the forest and node-set stages:
+    * at most `localMax` rows come to the driver, more stay a Dataset that
+    * can be read more than once. A local relation is collected with no
+    * job (checkpointed above the bound, so a bound of 0 still reaches the
+    * Dataset path); a checkpoint is counted, then collected or read in
+    * place; anything else is checkpointed and counted in one job.
     */
-  def checkpointCounted[T](ds: Dataset[T]): (Dataset[T], Long) = {
-    val ck =
-      if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(true)
-      else ds.localCheckpoint(false)
-    (ck, rowCount(ck))
+  def placed[T](ds: Dataset[T], localMax: Long): Placed[T] = ds.queryExecution.analyzed match {
+    case lr: LocalRelation =>
+      if (lr.data.size <= localMax) OnDriver(ds.collect())
+      else InSpark(checkpoint(ds), lr.data.size.toLong, owned = true)
+    case plan =>
+      val (in, owned) = plan match {
+        case _: LogicalRDD => (ds, false)
+        case _ => (checkpoint(ds, eager = false), true)
+      }
+      val spread = InSpark(in, rowCount(in), owned)
+      if (spread.count > localMax) spread
+      else try OnDriver(in.collect()) finally spread.release()
   }
 
   /** Row count in one job with no shuffle: `Dataset.count` aggregates
     * through an exchange, which adaptive execution runs as two jobs.
     * Rows are counted in their internal form, never deserialized.
     */
-  def rowCount(ds: Dataset[_]): Long = ds.queryExecution.toRdd.count()
+  private def rowCount(ds: Dataset[_]): Long = ds.queryExecution.toRdd.count()
 
   /** Release the block storage behind a [[checkpoint]]ed dataset NOW.
     * `Dataset.unpersist` only drops plan-level caches, so a finished
@@ -74,7 +77,7 @@ object Spark {
     */
   def release(ds: Dataset[_]): Unit =
     ds.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
 }

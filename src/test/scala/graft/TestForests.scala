@@ -10,6 +10,25 @@ import org.apache.spark.sql.types.DataType
 /** Random forests shared by the property tests. */
 object TestForests {
 
+  /** 24 customers over 25 nations and 5 regions, loaded typed like the
+    * sf corpus's customerDb and checkpointed: the rewrite runs six epochs
+    * to its fixpoint.
+    */
+  def customers(spark: SparkSession): Dataset[TreeRow] = {
+    import spark.implicits._
+    val region = (0 until 5).map(i => (i, s"REGION$i")).toDF("r_regionkey", "r_name")
+    val nation = (0 until 25).map(i => (i, s"NATION_$i", i % 5))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+    val segments = Seq("BUILDING", "MACHINERY", "AUTOMOBILE", "FURNITURE", "HOUSEHOLD")
+    val customer = (0 until 24).map(i =>
+      (i.toLong, f"Customer#$i%09d", (i * 7) % 25, (i * 37 % 1000).toDouble / 10,
+        segments((i * 3) % 5)))
+      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
+    RelationalLoader.loadFrom(spark,
+      Map("region" -> region, "nation" -> nation, "customer" -> customer),
+      Testdata.customerDb).localCheckpoint(true)
+  }
+
   /** A customer-shaped forest of random size and key layout, loaded
     * typed like the sf corpus's customerDb.
     */

@@ -216,11 +216,13 @@ class MetricsSpec extends AnyFunSuite with SparkSpec {
     assert(jobs.size <= 4, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
   }
 
-  test("property: driver-side snapshots match the join-based comparison on random forest pairs") {
-    // typed and untyped customer-shaped forests against their rewrite,
-    // against each other (partly shared keys), and generated instances
+  /** Typed and untyped customer-shaped forests against their rewrite
+    * (a local relation) and against each other (partly shared keys, a
+    * lazy repartition).
+    */
+  private def randomPairs(): Seq[(Dataset[TreeRow], Dataset[TreeRow])] = {
     val rnd = new scala.util.Random(23)
-    val pairs = (0 until 3).flatMap { i =>
+    (0 until 3).flatMap { i =>
       val typed = TestForests.randomCustomer(spark, rnd)
       val other = TestForests.randomCustomer(spark, rnd)
       val untyped = Forest.untypeStructure(typed).localCheckpoint(true)
@@ -228,7 +230,10 @@ class MetricsSpec extends AnyFunSuite with SparkSpec {
         untyped -> Rewrite.rewrite(untyped, Rewrite.Config(tau = 0.7, epochs = 4)),
         typed -> other.repartition(1 + i))
     }
-    pairs.zipWithIndex.foreach { case ((a, b), i) =>
+  }
+
+  test("property: driver-side snapshots match the join-based comparison on random forest pairs") {
+    randomPairs().zipWithIndex.foreach { case ((a, b), i) =>
       val m = new Metrics(a, 0.7)
       m.update(b)
       val (aOids, aLabels, aClusters) = referenceSnapshot(a)
@@ -246,5 +251,22 @@ class MetricsSpec extends AnyFunSuite with SparkSpec {
       assert(math.abs(m.clusterAmi -
         ClusterComparison.adjustedMutualInfo(Contingency(table, Map.empty, Map.empty))) <= 1e-12, what)
     }
+  }
+
+  test("property: snapshots on the Dataset path and on the driver path agree at 1 and 7 shuffle partitions") {
+    for (((a, b), i) <- randomPairs().zipWithIndex; parts <- Seq("1", "7"))
+      withConf("spark.sql.shuffle.partitions" -> parts) {
+        val Seq(driver, spread) = Seq(Rewrite.LocalMaxTrees, 0L).map { bound =>
+          val m = new Metrics(a, 0.7, 2.0, "jaro", None, bound)
+          m.update(b)
+          m
+        }
+        val what = s"pair $i, $parts shuffle partitions"
+        assert(spread.origin.labelCounts == driver.origin.labelCounts, what)
+        assert(spread.current.labelCounts == driver.current.labelCounts, what)
+        assert(math.abs(spread.coverage - driver.coverage) <= 1e-12, what)
+        assert(math.abs(spread.clusterCompleteness - driver.clusterCompleteness) <= 1e-12, what)
+        assert(math.abs(spread.clusterAmi - driver.clusterAmi) <= 1e-12, what)
+      }
   }
 }

@@ -40,6 +40,29 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
     assert(schema == Schema.fromForest(nodes, keepUnlabelled = false, mergeLhs = true, 0L))
   }
 
+  test("toNodesDF flattens a local forest on the driver, up to the node bound") {
+    import spark.implicits._
+    val forest = TestForests.customers(spark)
+    val local = forest.collect().toSeq.toDS()
+    val spread = Forest.toNodesDF(forest).collect().toSeq
+    def tally(rows: Seq[NodeRow]) = rows.groupMapReduce(identity)(_ => 1)(_ + _)
+
+    val nodes = Forest.toNodesDF(local)
+    assert(nodes.isLocal)
+    assert(tally(nodes.collect().toSeq) == tally(spread))
+    val (schema, jobs) = jobsDuring(Schema.fromForest(nodes, keepUnlabelled = false))
+    assert(jobs.isEmpty, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(schema == Schema.fromForest(Forest.toNodesDF(forest), keepUnlabelled = false))
+
+    // at the bound the flatten stays on the driver; one row above it, and
+    // for a checkpointed forest, it is the lazy Spark flatten
+    assert(Forest.toNodesDF(local, spread.size.toLong).isLocal)
+    val lazyNodes = Forest.toNodesDF(local, spread.size - 1L)
+    assert(!lazyNodes.isLocal)
+    assert(tally(lazyNodes.collect().toSeq) == tally(spread))
+    assert(!Forest.toNodesDF(forest).isLocal)
+  }
+
   test("property: the driver and Dataset derivations give equal schemas at 1 and 7 shuffle partitions") {
     // customer-shaped forests typed as loaded and stripped of their
     // typing, and generated instances of random schemas whose REL sides

@@ -3,7 +3,6 @@ package graft.rewrite
 import graft.{SparkSpec, TestForests}
 import graft.core._
 import graft.model.{Forest, Group, Relation, RelationOrientation, Schema, TreeRow, Trees}
-import graft.sources.{RelationalLoader, Testdata}
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -249,23 +248,7 @@ class RewriteSpec extends AnyFunSuite with SparkSpec {
 
   // --- the epoch loop on a customer-shaped forest ---
 
-  /** 24 customers over 25 nations and 5 regions, loaded typed like the
-    * sf corpus's customerDb: the rewrite runs six epochs to its fixpoint.
-    */
-  private def customerForest(): Dataset[TreeRow] = {
-    import spark.implicits._
-    val region = (0 until 5).map(i => (i, s"REGION$i")).toDF("r_regionkey", "r_name")
-    val nation = (0 until 25).map(i => (i, s"NATION_$i", i % 5))
-      .toDF("n_nationkey", "n_name", "n_regionkey")
-    val segments = Seq("BUILDING", "MACHINERY", "AUTOMOBILE", "FURNITURE", "HOUSEHOLD")
-    val customer = (0 until 24).map(i =>
-      (i.toLong, f"Customer#$i%09d", (i * 7) % 25, (i * 37 % 1000).toDouble / 10,
-        segments((i * 3) % 5)))
-      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    RelationalLoader.loadFrom(spark,
-      Map("region" -> region, "nation" -> nation, "customer" -> customer),
-      Testdata.customerDb).localCheckpoint(true)
-  }
+  private def customerForest(): Dataset[TreeRow] = TestForests.customers(spark)
 
   test("rewrite epochs run at most five Spark jobs each") {
     // one epoch: reduce_all checkpoint, the fit's aggregate and top-K
