@@ -28,8 +28,6 @@ final case class ArchiTree(
     metadata: Map[String, String] = Map.empty,
 ) extends Serializable {
 
-  def isLeafOnly: Boolean = children.forall(_.isInstanceOf[Child.Leaf])
-
   def childTrees: Vector[ArchiTree] =
     children.collect { case Child.Node(t) => t }
 
@@ -103,9 +101,6 @@ final case class ArchiTree(
   /** Whether any direct child is an entity (tree.py has_entity_child). */
   def hasEntityChild: Boolean = childTrees.exists(_.hasType(NodeType.Ent))
 
-  /** Direct children that are entities. */
-  def childEntities: Vector[ArchiTree] = childTrees.filter(_.hasType(NodeType.Ent))
-
   /** Group instances within this tree: one row per GROUP::name node,
     * columns = entity names, values = space-joined entity leaves
     * (tree.py:622-667). Children rows first, then self — then dedup
@@ -166,13 +161,6 @@ final case class ArchiTree(
     }
     go(this)
   }
-
-  /** String-typed variant: skip labels name node TYPES ("ENT", …), matching
-    * has_type's set[str | NodeType] contract (tree.py:1388-1430 compares
-    * against `label.type.value`, not arbitrary label names).
-    */
-  def reduceAllByName(skipTypeNames: Set[String]): ArchiTree =
-    reduceAll(skipTypeNames.flatMap(NodeType.fromString))
 
   /** Replace the subtree at `path` (empty path = the whole tree). */
   def updated(path: Vector[Int], replacement: ArchiTree): ArchiTree =

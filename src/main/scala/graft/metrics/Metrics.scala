@@ -187,8 +187,6 @@ final class Metrics private[graft] (source: Dataset[TreeRow], tau: Double, decay
 
   def numProductions: Int = currentSnapshot.schema.productions.size
   def numProductionsOrigin: Int = origin.schema.productions.size
-  def ratioProductions: Double =
-    if (numProductionsOrigin == 0) 0 else numProductions.toDouble / numProductionsOrigin
   def groupOverlap: Double = currentSnapshot.schema.groupOverlap
   def groupBalanceScore: Double = currentSnapshot.schema.groupBalanceScore
 }

@@ -469,11 +469,11 @@ object Schema {
 
   /** The shared production-extraction predicate: non-ROOT, non-lexical
     * (no leaf children), non-empty nodes yield one (lhsType, lhsName,
-    * rhs-labels) row. Both local (`fromTrees`) and template
-    * (`templateOf`) derivations go through here — the predicate
-    * must match `fromForest`'s relational filter exactly, so it lives in
-    * one place. Tuple-shaped (not ProdRow) because the template path
-    * ships it through a Dataset encoder.
+    * rhs-labels) row. The template derivation (`templateOf`) goes
+    * through here; `fromTrees` flattens its trees and takes the node-row
+    * walk of `fromForest`, whose filter this predicate must match
+    * exactly. Tuple-shaped (not ProdRow) because the template path ships
+    * it through a Dataset encoder.
     */
   private def prodTupleOf(t: ArchiTree): Option[(String, String, Seq[String])] = {
     val isRoot = t.label == Plain("ROOT")

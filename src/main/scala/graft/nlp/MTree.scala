@@ -48,11 +48,6 @@ final class MTree(
     }
   }
 
-  def detach(): MTree = {
-    if (parent != null) parent.remove(this)
-    this
-  }
-
   def setChild(i: Int, c: Either[String, MTree]): Unit = {
     children(i).foreach(t => if (t.parent eq this) t.parent = null)
     c.foreach(_.parent = this)

@@ -125,7 +125,7 @@ object SqlExporter {
       val valueCols = df.columns.filterNot(isPk)
       Option.when(valueCols.nonEmpty)(cells(name, df, valueCols.toSeq))
     })
-    val casted = cached.map { case (name, df) => name -> applyCasts(name, df, isPk, casts) }
+    val casted = cached.map { case (name, df) => name -> applyCasts(name, df, casts) }
     Export(casted, ddlFor(schema, casted), () => {
       cached.values.foreach(_.unpersist())
       spread.release()
@@ -254,14 +254,17 @@ object SqlExporter {
     } yield Row(name, c, v)
     val casts = inferCasts(Option.when(distinctCells.nonEmpty)(spark.createDataFrame(distinctCells.asJava,
       StructType(Seq("table", "column", "value").map(StructField(_, StringType))))).toSeq)
-    val casted = frames.map { case (name, df) => name -> applyCasts(name, df, isPk, casts) }
+    val casted = frames.map { case (name, df) => name -> applyCasts(name, df, casts) }
     Export(casted, ddlFor(schema, casted))
   }
 
-  /** The candidate types of cast-on-export in the reference's precedence
-    * (boolean, int, float, datetime, date), each as the expression that
-    * casts a column by name. try_* variants everywhere: ANSI mode (Spark 4
-    * default) makes plain cast throw on malformed values.
+  /** The candidate types of cast-on-export (export/sql.py:262-300),
+    * lifted to column level: a column gets the first type, in the
+    * reference's precedence (boolean, int, float, datetime, date), that
+    * every non-null value satisfies by its string form, else stays
+    * string. Each is the expression that casts a column by name. try_*
+    * variants everywhere: ANSI mode (Spark 4 default) makes plain cast
+    * throw on malformed values.
     */
   private val Candidates: Seq[(String, String => Column)] = Seq(
     "boolean" -> (n => when(lower(col(n)).isin("true", "false"), lower(col(n)).cast("boolean"))),
@@ -299,24 +302,11 @@ object SqlExporter {
 
   /** `df` with each non-PK column of `table` cast as `casts` says. */
   private def applyCasts(
-      table: String, df: DataFrame, isPk: String => Boolean,
-      casts: Map[(String, String), String => Column]): DataFrame =
+      table: String, df: DataFrame, casts: Map[(String, String), String => Column]): DataFrame =
     df.select(df.columns.toIndexedSeq.map { name =>
       if (isPk(name)) col(name)
       else casts.get((table, name)).fold(col(name))(_(name)).as(name)
     }: _*)
-
-  /** Value re-casting (export/sql.py:262-300) lifted to column level: a
-    * column gets the strongest type every non-null value satisfies, in
-    * the reference's precedence (boolean, int, float, datetime, date),
-    * else stays string. Values are judged by their string form, in one
-    * aggregation pass.
-    */
-  def castOnExport(df: DataFrame, pkColumns: Set[String]): DataFrame = {
-    val valueCols = df.columns.filterNot(pkColumns.contains).toSeq
-    if (valueCols.isEmpty) df
-    else applyCasts("", df, pkColumns.contains, inferCasts(Seq(cells("", df, valueCols))))
-  }
 
   private def ddlFor(schema: Schema, tables: Map[String, DataFrame]): Seq[String] = {
     val relNames = schema.relations.map(_.name)

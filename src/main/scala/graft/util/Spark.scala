@@ -42,12 +42,14 @@ object Spark {
 
   /** The driver-or-Dataset decision of the forest and node-set stages:
     * at most `localMax` rows come to the driver, more stay a Dataset that
-    * can be read more than once. A local relation is collected with no
-    * job (checkpointed above the bound, so a bound of 0 still reaches the
+    * can be read more than once. The decision reads the optimized plan,
+    * where a filter or projection of a local relation is folded into a
+    * local relation. A local relation is collected with no job
+    * (checkpointed above the bound, so a bound of 0 still reaches the
     * Dataset path); a checkpoint is counted, then collected or read in
     * place; anything else is checkpointed and counted in one job.
     */
-  def placed[T](ds: Dataset[T], localMax: Long): Placed[T] = ds.queryExecution.analyzed match {
+  def placed[T](ds: Dataset[T], localMax: Long): Placed[T] = ds.queryExecution.optimizedPlan match {
     case lr: LocalRelation =>
       if (lr.data.size <= localMax) OnDriver(ds.collect())
       else InSpark(checkpoint(ds), lr.data.size.toLong, owned = true)

@@ -49,15 +49,18 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
     assert(ex.tables("A<->B").count() == 3)
   }
 
-  test("castOnExport picks the strongest uniform type per column") {
-    import spark.implicits._
-    val df = Seq(
-      ("1", "1.5", "true", "2024-01-02", "2024-01-02 10:00:00", "mixed1"),
-      ("2", "7.0", "false", "2024-02-03", "2024-02-03 11:30:00", "8"))
-      .toDF("i", "d", "b", "dt", "ts", "s")
-    val out = SqlExporter.castOnExport(df, Set.empty)
-    val types = out.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    assert(types == Map(
+  test("export_sql picks the strongest uniform type per column") {
+    def row(oid: String, values: (String, String)*) = ArchiTree(Plain("ROOT"), Vector(Child.Node(
+      ArchiTree(Typed(NodeType.Group, "T"),
+        values.map { case (e, v) => Child.Node(ArchiTree.leafNode(s"ENT::$e", v)): Child }.toVector, oid))))
+    val nodes = Forest.toNodesDF(Forest.fromTrees(spark, Seq(
+      row("r1", "i" -> "1", "d" -> "1.5", "b" -> "true", "dt" -> "2024-01-02",
+        "ts" -> "2024-01-02 10:00:00", "s" -> "mixed1"),
+      row("r2", "i" -> "2", "d" -> "7.0", "b" -> "false", "dt" -> "2024-02-03",
+        "ts" -> "2024-02-03 11:30:00", "s" -> "8"))))
+    val ex = SqlExporter.export(nodes, Schema.fromForest(nodes, keepUnlabelled = false))
+    val types = ex.tables("T").schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
+    assert(types == Map("architxt_TID" -> "string",
       "i" -> "bigint", "d" -> "double", "b" -> "boolean",
       "dt" -> "date", "ts" -> "timestamp", "s" -> "string"))
   }
