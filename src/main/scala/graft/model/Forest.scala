@@ -131,7 +131,9 @@ object Forest {
     buf.toVector
   }
 
-  /** Collect a (small) forest to the driver — tests and golden checks only. */
+  /** Collect a (small) forest to the driver, trees in id order: tests,
+    * golden checks and the CLI's one-tree forest report.
+    */
   def collectTrees(forest: Dataset[TreeRow]): Seq[ArchiTree] =
     forest.collect().sortBy(_.treeId).map(_.tree).toSeq
 

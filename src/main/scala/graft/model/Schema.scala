@@ -2,9 +2,10 @@ package graft.model
 
 import graft.core._
 import graft.util.Spark
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 /** A group (table candidate): name + entity set
@@ -39,11 +40,12 @@ final case class Production(lhs: String, rhs: Seq[String]) {
 /** The induced database schema — a CFG over typed labels plus the
   * group/relation views (reference architxt/schema.py:73-291).
   *
-  * Derivation (`fromForest`) walks the node rows on the driver, or for a
-  * large node set aggregates them in Spark; the resulting grammar is
-  * tiny, so assembly and verification happen driver-side. Verification
-  * re-expresses the ANTLR meta-grammar's semantic predicates
-  * (metagrammar.g4:1-129) as direct structural checks.
+  * Derivation (`fromForest`) runs one kernel per tree, over that tree's
+  * node rows, and merges the kernel's rows on the driver or, for a large
+  * node set, in Spark; the resulting grammar is tiny, so assembly and
+  * verification happen driver-side. Verification re-expresses the ANTLR
+  * meta-grammar's semantic predicates (metagrammar.g4:1-129) as direct
+  * structural checks.
   */
 final case class Schema(
     productions: Seq[Production],
@@ -231,10 +233,37 @@ final case class Schema(
   }
 }
 
+/** One node as the node-set stages (schema, extraction, SQL export) read
+  * it: a [[NodeRow]] without its depth and height.
+  */
+private[graft] final case class PrunedNode(
+    treeId: Long,
+    nodeId: Int,
+    parentId: Int,
+    pos: Int,
+    nodeType: String,
+    name: String,
+    value: String,
+    oid: String,
+    nChildren: Int,
+)
+
 object Schema {
 
-  /** Intermediate per-node production row used by both derivation paths. */
+  /** Intermediate per-node production row, as `assemble` reads it. */
   private final case class ProdRow(lhsType: String, lhsName: String, rhs: Seq[String])
+
+  /** What the schema kernel gives for one node: its production, and for
+    * a 2-GROUP REL its side names and member oids (empty otherwise).
+    */
+  private[model] final case class Prod(
+      treeId: Long,
+      nodeId: Int,
+      nodeType: String,
+      name: String,
+      rhs: Seq[String],
+      sides: Seq[String],
+      oids: Seq[String])
 
   /** Build a schema from an explicit description (schema.py:102-142):
     * group productions over sorted entities, relation productions
@@ -256,17 +285,46 @@ object Schema {
     Schema(base ++ collProds, groups, relations)
   }
 
+  /** `nodes`' rows that `keep` selects, as the node-set stages read them. */
+  private[graft] def pruned(nodes: Dataset[NodeRow], keep: Column): Dataset[PrunedNode] = {
+    val encoder = Encoders.product[PrunedNode]
+    nodes.filter(keep).select(encoder.schema.fieldNames.toSeq.map(col): _*).as(encoder)
+  }
+
+  /** Apply a per-tree kernel to a node set placed by `Spark.placed`
+    * under `localMax`. On the driver the collected rows are grouped by
+    * tree, trees in id order, and `onDriver` merges the kernel's output;
+    * in Spark the rows are grouped by `treeId`, and `inSpark` merges the
+    * output Dataset, then calls the function it is handed once nothing it
+    * returns still reads the placed rows. The kernel sees one tree's rows
+    * in no particular order.
+    */
+  private[graft] def perTree[T: Encoder, R](nodes: Dataset[PrunedNode], localMax: Long)(
+      kernel: Seq[PrunedNode] => Seq[T])(
+      onDriver: Seq[T] => R,
+      inSpark: (Dataset[T], () => Unit) => R): R =
+    Spark.placed(nodes, localMax) match {
+      case Spark.OnDriver(rows) =>
+        onDriver(rows.groupBy(_.treeId).toSeq.sortBy(_._1).flatMap { case (_, tree) =>
+          kernel(ArraySeq.unsafeWrapArray(tree))
+        })
+      case spread: Spark.InSpark[PrunedNode] =>
+        val out = spread.ds.groupByKey(_.treeId)(Encoders.scalaLong)
+          .flatMapGroups((_, tree) => kernel(tree.toSeq))
+        inSpark(out, () => spread.release())
+    }
+
   /** Derive the schema from a forest's nodes DataFrame — the Spark
     * re-expression of Schema.from_forest (schema.py:144-218).
     *
-    * Through `Spark.placed`, at most [[LocalMaxNodes]] node rows are
-    * collected once and walked on the driver (`fromNodeRows`). Above it
-    * the derivation stays distributed: a nodes self-join gives each node
-    * its production row and, for 2-GROUP RELs, the relation sides, then
-    * three aggregations reach the driver (the production rows, the
-    * relation-side multiplicity flags and the side order). Both paths
-    * give equal schemas, productions in the same order: first occurrence
-    * by (treeId, nodeId).
+    * A kernel walks one tree's nodes (`productions`); the merge takes
+    * each production row's first occurrence by (treeId, nodeId), each
+    * relation side's multiplicity flag and each relation's side order,
+    * and `assemble` builds the schema from them. Through [[perTree]], at
+    * most [[LocalMaxNodes]] node rows are collected once and merged on
+    * the driver; a larger node set runs the kernel in Spark and merges
+    * with three aggregations. Both give equal schemas, productions in the
+    * same order.
     */
   def fromForest(
       nodes: Dataset[NodeRow],
@@ -276,114 +334,60 @@ object Schema {
 
   /** Node sets of at most this many rows derive their schema on the
     * driver; [[extractDataset]] and `SqlExporter.export` apply the bound
-    * to the node rows they read. On 4 cores the walk beat the self-join
-    * at every size measured, up to 2.8 million rows (7.0 s against
-    * 11.3 s), so the bound is set by driver memory: a collected node row
-    * takes about 240 bytes, so a million rows hold about 0.24 GB, the
-    * budget `Rewrite.LocalMaxTrees` gives a collected forest.
+    * to the node rows they read. When it was set, on 4 cores, the driver
+    * walk beat the Dataset derivation of the time (a nodes self-join) at
+    * every size measured, up to 2.8 million rows (7.0 s against 11.3 s),
+    * so the bound is set by driver memory: a collected node row takes
+    * about 240 bytes, so a million rows hold about 0.24 GB, the budget
+    * `Rewrite.LocalMaxTrees` gives a collected forest.
     */
   val LocalMaxNodes = 1000000L
 
   /** [[fromForest]] under an explicit driver-path bound; 0 forces the
-    * distributed derivation.
+    * Dataset path.
     */
   private[graft] def fromForest(
       nodes: Dataset[NodeRow],
       keepUnlabelled: Boolean,
       mergeLhs: Boolean,
       localMaxNodes: Long,
-  ): Schema = Spark.placed(nodes, localMaxNodes) match {
-    case Spark.OnDriver(rows) => fromNodeRows(rows.toSeq, keepUnlabelled, mergeLhs)
-    case spread: Spark.InSpark[NodeRow] =>
-      try fromNodesDataset(spread.ds, keepUnlabelled, mergeLhs) finally spread.release()
-  }
-
-  private def fromNodesDataset(
-      nodes: Dataset[NodeRow],
-      keepUnlabelled: Boolean,
-      mergeLhs: Boolean,
   ): Schema = {
     val spark = nodes.sparkSession
     import spark.implicits._
-
-    // three collect actions below consume the self-join+aggregate:
-    // materialize the JOINED per-node production rows ONCE, or each
-    // collect re-runs the self-join + collect_list from scratch
-    val c = nodes.select(
-      col("treeId").as("cTreeId"), col("parentId").as("cParentId"), col("pos").as("cPos"),
-      col("nodeType").as("cType"), col("name").as("cName"), col("oid").as("cOid"))
-    val label = (t: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =>
-      when(t.isNull, n).otherwise(concat(t, lit("::"), n))
-
-    val joined = Spark.checkpoint(nodes
-      .join(c, col("treeId") === col("cTreeId") && col("nodeId") === col("cParentId"))
-      .groupBy(col("treeId"), col("nodeId"), col("nodeType"), col("name"), col("nChildren"))
-      .agg(sort_array(collect_list(struct(
-        col("cPos"),
-        label(col("cType"), col("cName")).as("lbl"),
-        col("cType"), col("cName"), col("cOid")))).as("kids"))
-      // non-lexical (no leaf children) and not the ROOT label
-      .filter(size(col("kids")) === col("nChildren") &&
-        !(col("nodeType").isNull && col("name") === "ROOT")))
-
-    // each distinct production row with its first occurrence, so the
-    // rows reach `assemble` in the driver walk's order, not the shuffle's
-    val prodRows: Seq[ProdRow] = joined
-      .groupBy(col("nodeType"), col("name"), col("kids.lbl").as("rhs"))
-      .agg(min(struct(col("treeId"), col("nodeId"))).as("first"))
-      .select(col("nodeType"), col("name"), col("rhs"), col("first.treeId"), col("first.nodeId"))
-      .as[(String, String, Seq[String], Long, Int)]
-      .collect()
-      .sortBy { case (_, _, _, treeId, nodeId) => (treeId, nodeId) }
-      .map { case (t, n, rhs, _, _) => ProdRow(t, n, rhs) }
-      .toSeq
-
-    // Relation orientation: sides of 2-GROUP RELs, member-oid pair
-    // multiplicity (schema.py:187-218,235-266).
-    val relNodes = joined.filter(
-      col("nodeType") === "REL" && size(col("kids")) === 2 &&
-        col("kids").getItem(0).getField("cType") === "GROUP" &&
-        col("kids").getItem(1).getField("cType") === "GROUP")
-      .select(
-        col("treeId"), col("nodeId"), col("name").as("relName"),
-        col("kids").getItem(0).getField("cName").as("leftLabel"),
-        col("kids").getItem(1).getField("cName").as("rightLabel"),
-        col("kids").getItem(0).getField("cOid").as("leftOid"),
-        col("kids").getItem(1).getField("cOid").as("rightOid"))
-      .withColumn("pairId",
-        when(col("leftOid") <= col("rightOid"), concat_ws("|", col("leftOid"), col("rightOid")))
-          .otherwise(concat_ws("|", col("rightOid"), col("leftOid"))))
-
-    val sides = relNodes.select(
-      col("relName"), col("leftLabel").as("side"), col("leftOid").as("memberOid"), col("pairId"))
-      .union(relNodes.select(
-        col("relName"), col("rightLabel").as("side"), col("rightOid").as("memberOid"), col("pairId")))
-
-    val multiFlags: Map[(String, String), Boolean] = sides
-      .groupBy(col("relName"), col("side"), col("memberOid"))
-      .agg(countDistinct(col("pairId")).as("pairs"))
-      .groupBy(col("relName"), col("side"))
-      .agg(max(col("pairs") > 1).as("multi"))
-      .as[(String, String, Boolean)]
-      .collect()
-      .map { case (r, s, m) => (r, s) -> m }
-      .toMap
-
-    // Deterministic left/right side order: the child order of the
-    // first REL occurrence by (treeId, nodeId). The reference uses dict
-    // insertion order (forest iteration order), which is equivalent for
-    // forests where instance child order is consistent.
-    val sideOrder: Map[String, (String, String)] = relNodes
-      .groupBy(col("relName"))
-      .agg(min(struct(col("treeId"), col("nodeId"), col("leftLabel"), col("rightLabel"))).as("first"))
-      .select(col("relName"), col("first.leftLabel"), col("first.rightLabel"))
-      .as[(String, String, String)]
-      .collect()
-      .map { case (r, l, rr) => r -> (l, rr) }
-      .toMap
-
-    Spark.release(joined)
-    assemble(prodRows, multiFlags, sideOrder, keepUnlabelled, mergeLhs)
+    // `as` keeps the plan a bare checkpoint or local relation, which
+    // `Spark.placed` reads in place
+    perTree(nodes.as[PrunedNode], localMaxNodes)(productions)(
+      merged(_, keepUnlabelled, mergeLhs),
+      (prods, release) => {
+        val held = Spark.checkpoint(prods)
+        try {
+          val prodRows = held
+            .groupBy(col("nodeType"), col("name"), col("rhs"))
+            .agg(min(struct(col("treeId"), col("nodeId"))).as("first"))
+            .select(col("nodeType"), col("name"), col("rhs"), col("first.treeId"), col("first.nodeId"))
+            .as[(String, String, Seq[String], Long, Int)].collect()
+            .sortBy { case (_, _, _, treeId, nodeId) => (treeId, nodeId) }
+            .map { case (t, n, rhs, _, _) => ProdRow(t, n, rhs) }.toSeq
+          val rels = held.filter(size(col("sides")) === 2)
+          val multi = Seq(0, 1)
+            .map(i => rels.select(col("name"), col("sides")(i).as("side"), col("oids")(i).as("oid"),
+              array_sort(col("oids")).as("pair")))
+            .reduce(_ union _)
+            .groupBy(col("name"), col("side"), col("oid")).agg((countDistinct(col("pair")) > 1).as("multi"))
+            .groupBy(col("name"), col("side")).agg(max(col("multi")))
+            .as[(String, String, Boolean)].collect()
+            .map { case (r, s, m) => (r, s) -> m }.toMap
+          val order = rels
+            .groupBy(col("name")).agg(min(struct(col("treeId"), col("nodeId"), col("sides"))).as("first"))
+            .select(col("name"), col("first.sides"))
+            .as[(String, Seq[String])].collect()
+            .map { case (r, s) => r -> (s(0), s(1)) }.toMap
+          assemble(prodRows, multi, order, keepUnlabelled, mergeLhs)
+        } finally {
+          Spark.release(held)
+          release()
+        }
+      })
   }
 
   /** Local derivation for plain in-memory forests (tests, driver loops):
@@ -394,94 +398,69 @@ object Schema {
       trees: Seq[ArchiTree],
       keepUnlabelled: Boolean = true,
       mergeLhs: Boolean = true,
-  ): Schema = fromNodeRows(
-    trees.iterator.zipWithIndex.flatMap { case (t, i) => Forest.nodeRows(i.toLong, t) }.toSeq,
+  ): Schema = merged(
+    trees.zipWithIndex.flatMap { case (t, i) => productions(prune(Forest.nodeRows(i.toLong, t))) },
     keepUnlabelled, mergeLhs)
 
-  /** The driver derivation, in the distributed one's terms: nodes are
-    * walked by (treeId, nodeId); a node whose children are all nodes
-    * (none a leaf) and that is not the ROOT label yields a production
-    * row, and a 2-GROUP REL also records its side order (first
-    * occurrence) and, per side member oid, whether it joins more than one
-    * distinct member pair.
+  private def prune(rows: Seq[NodeRow]): Seq[PrunedNode] = rows.map(n =>
+    PrunedNode(n.treeId, n.nodeId, n.parentId, n.pos, n.nodeType, n.name, n.value, n.oid, n.nChildren))
+
+  /** The schema kernel over one tree's nodes, in nodeId order: a node
+    * that is not the ROOT label and whose children are all nodes (none a
+    * leaf) gives its production; a REL with two GROUP children also gives
+    * their names and oids.
     */
-  private def fromNodeRows(
-      nodes: Seq[NodeRow],
-      keepUnlabelled: Boolean,
-      mergeLhs: Boolean,
-  ): Schema = {
-    val ordered = nodes.sortBy(n => (n.treeId, n.nodeId))
-    val kids = scala.collection.mutable.HashMap.empty[(Long, Int), Vector[NodeRow]]
-    ordered.foreach { n =>
-      if (n.parentId >= 0)
-        kids.updateWith((n.treeId, n.parentId))(cs => Some(cs.getOrElse(Vector.empty) :+ n))
-    }
-    def label(n: NodeRow): String = if (n.nodeType == null) n.name else s"${n.nodeType}::${n.name}"
-
-    val prodRows = scala.collection.mutable.LinkedHashSet.empty[ProdRow]
-    val pairOf = scala.collection.mutable.Map.empty[(String, String, String), Set[String]]
-    val multi = scala.collection.mutable.Map.empty[(String, String), Boolean]
-    val order = scala.collection.mutable.Map.empty[String, (String, String)]
-
-    ordered.foreach { n =>
-      val cs = kids.getOrElse((n.treeId, n.nodeId), Vector.empty).sortBy(_.pos)
-      if (cs.nonEmpty && cs.size == n.nChildren && !(n.nodeType == null && n.name == "ROOT")) {
-        prodRows += ProdRow(n.nodeType, n.name, cs.map(label))
-        if (n.nodeType == "REL" && cs.size == 2 && cs.forall(_.nodeType == "GROUP")) {
-          val Vector(l, r) = cs
-          val pair = Set(l.oid, r.oid)
-          order.getOrElseUpdate(n.name, (l.name, r.name))
-          cs.foreach { side =>
-            val key = (n.name, side.name)
-            multi.getOrElseUpdate(key, false)
-            pairOf.get((n.name, side.name, side.oid)) match {
-              case Some(seen) if seen != pair => multi(key) = true
-              case None                       => pairOf((n.name, side.name, side.oid)) = pair
-              case _                          =>
-            }
-          }
-        }
+  private def productions(tree: Seq[PrunedNode]): Seq[Prod] = {
+    val kids = tree.groupBy(_.parentId)
+    def label(n: PrunedNode): String = if (n.nodeType == null) n.name else s"${n.nodeType}::${n.name}"
+    tree.filter(n => kids.contains(n.nodeId)).sortBy(_.nodeId).flatMap { n =>
+      val cs = kids(n.nodeId).sortBy(_.pos)
+      Option.when(cs.size == n.nChildren && !(n.nodeType == null && n.name == "ROOT")) {
+        val rel = n.nodeType == "REL" && cs.size == 2 && cs.forall(_.nodeType == "GROUP")
+        Prod(n.treeId, n.nodeId, n.nodeType, n.name, cs.map(label),
+          if (rel) cs.map(_.name) else Nil, if (rel) cs.map(_.oid) else Nil)
       }
     }
-    assemble(prodRows.toSeq, multi.toMap, order.toMap, keepUnlabelled, mergeLhs)
+  }
+
+  /** The schema merge on the driver, over the kernel's output in
+    * (treeId, nodeId) order: each production row's first occurrence; a
+    * relation side is multi when one of its member oids joins more than
+    * one distinct member pair; a relation's side order is its first
+    * occurrence's.
+    */
+  private def merged(prods: Seq[Prod], keepUnlabelled: Boolean, mergeLhs: Boolean): Schema = {
+    val rels = prods.filter(_.sides.nonEmpty)
+    val firstPair = scala.collection.mutable.HashMap.empty[(String, String, String), Set[String]]
+    val multi = scala.collection.mutable.HashMap.empty[(String, String), Boolean]
+    for (p <- rels; pair = p.oids.toSet; (side, oid) <- p.sides.zip(p.oids)) {
+      val first = firstPair.getOrElseUpdate((p.name, side, oid), pair)
+      multi((p.name, side)) = multi.getOrElse((p.name, side), false) || first != pair
+    }
+    val order = rels.groupMapReduce(_.name)(p => (p.sides(0), p.sides(1)))((first, _) => first)
+    assemble(prods.map(p => ProdRow(p.nodeType, p.name, p.rhs)).distinct, multi.toMap, order, keepUnlabelled, mergeLhs)
   }
 
   /** Productions-only derivation straight from the forest's trees,
     * for the schema_only clustering template (similarity.py:296-339):
-    * `toTree` consumes only `productions`, so the relation-orientation
-    * machinery (a nodes self-join plus two extra aggregation jobs per
-    * call) is skipped — one pass and no shuffle, which is the per-epoch
-    * fixed cost of the schema-only rewrite lane. The returned schema
-    * carries an empty `relations` set; REL productions are still
-    * present. Over either [[Trees]] instance: each partition's distinct
-    * rows, then the first occurrence of each across partitions. Rows
-    * reach `assemble` in the forest's order, so the template is the same
-    * on both instances and at any partition count.
+    * `toTree` consumes only `productions`, so the relation orientation
+    * is skipped — one pass and no shuffle, which is the per-epoch fixed
+    * cost of the schema-only rewrite lane. The returned schema carries an
+    * empty `relations` set; REL productions are still present. Over
+    * either [[Trees]] instance: the schema kernel over each tree's node
+    * rows, each partition's distinct production rows, then the first
+    * occurrence of each across partitions. Rows reach `assemble` in the
+    * forest's order, so the template is the same on both instances and at
+    * any partition count.
     */
   private[graft] def templateOf(
       trees: Trees, keepUnlabelled: Boolean = true, mergeLhs: Boolean = true): Schema = {
     import trees.spark.implicits._
-    val rows = trees.collectPartitions(_.flatMap(_.tree.subtrees.flatMap(prodTupleOf)).distinct)
-      .distinct
+    val rows = trees.collectPartitions(_.flatMap(r => productions(prune(Forest.nodeRows(r.treeId, r.tree))))
+      .map(p => (p.nodeType, p.name, p.rhs)).distinct).distinct
     assemble(rows.map { case (t, n, r) => ProdRow(t, n, r) },
       Map.empty, Map.empty, keepUnlabelled, mergeLhs)
   }
-
-  /** The shared production-extraction predicate: non-ROOT, non-lexical
-    * (no leaf children), non-empty nodes yield one (lhsType, lhsName,
-    * rhs-labels) row. The template derivation (`templateOf`) goes
-    * through here; `fromTrees` flattens its trees and takes the node-row
-    * walk of `fromForest`, whose filter this predicate must match
-    * exactly. Tuple-shaped (not ProdRow) because the template path ships
-    * it through a Dataset encoder.
-    */
-  private def prodTupleOf(t: ArchiTree): Option[(String, String, Seq[String])] = {
-    val isRoot = t.label == Plain("ROOT")
-    val lexical = t.children.exists(_.isInstanceOf[Child.Leaf])
-    Option.when(!isRoot && !lexical && t.children.nonEmpty)(
-      (t.label.nodeType.map(_.value).orNull, t.label.name, t.childTrees.map(_.label.render)))
-  }
-
   private def assemble(
       prodRows: Seq[ProdRow],
       multiFlags: Map[(String, String), Boolean],
@@ -553,153 +532,58 @@ object Schema {
     * one instance keep the last by child position; global
     * drop-duplicates.
     *
-    * The rows the extraction reads (every ENT row plus the group's own
-    * GROUP rows, 8 columns) go through `Spark.placed`. At most
-    * [[LocalMaxNodes]] of them are collected and the dataset is built on
-    * the driver (`extractLocal`), a local DataFrame. Above it the
-    * extraction stays distributed (`extractDistributed`). Both paths give
-    * the same columns, in the same order, and the same rows.
+    * A kernel reads one tree's ENT rows and the group's GROUP rows
+    * (`instances`) and gives each kept instance's entity values; the
+    * merge takes the sorted union of entity names as columns and keeps
+    * the distinct rows. Through [[perTree]], at most [[LocalMaxNodes]]
+    * of those rows are collected and merged on the driver into a local
+    * DataFrame; a larger set runs the kernel in Spark, and the result is
+    * checkpointed. Both give the same columns, in the same order, and
+    * the same rows.
     */
   def extractDataset(nodes: Dataset[NodeRow], groupName: String): DataFrame =
-    extractDataset(nodes, groupName, BroadcastMaxGroupRows, LocalMaxNodes)
+    extractDataset(nodes, groupName, LocalMaxNodes)
 
-  /** Largest group keyset [[extractDataset]] broadcasts: ~32 bytes/row
-    * hashed, so the build side stays well under a gigabyte AND under
-    * Spark's 512M-row broadcast hard limit, while staying far above any
-    * realistic dimension keyset.
+  /** [[extractDataset]] under an explicit driver-path bound; 0 forces
+    * the Dataset path.
     */
-  val BroadcastMaxGroupRows = 20000000L
-
-  /** [[extractDataset]] under explicit bounds: a `localMaxNodes` of 0
-    * forces the distributed path, and a `broadcastMaxGroupRows` of 0 its
-    * shuffled join.
-    */
-  private[model] def extractDataset(
-      nodes: Dataset[NodeRow],
-      groupName: String,
-      broadcastMaxGroupRows: Long,
-      localMaxNodes: Long,
-  ): DataFrame = {
-    // The extraction touches only ENT rows plus the target group's GROUP
-    // rows, and only 8 of NodeRow's 11 columns — in particular none of
-    // the REL rows with their wide composite-key strings. Placing that
-    // pruned projection checkpoints it: the node view's lineage runs
-    // once, and what's stored is far narrower than the node view (a
-    // columnar persist of it measured ~4x slower to materialize).
-    val pruned = nodes
-      .filter(col("nodeType") === "ENT" ||
-        (col("nodeType") === "GROUP" && col("name") === groupName))
-      .select(col("treeId"), col("nodeId"), col("parentId"), col("pos"),
-        col("nodeType"), col("name"), col("value"), col("oid"))
-    Spark.placed(pruned, localMaxNodes) match {
-      case Spark.OnDriver(rows) => extractLocal(nodes.sparkSession, rows)
-      case spread: Spark.InSpark[Row] => extractDistributed(spread, groupName, broadcastMaxGroupRows)
-    }
-  }
-
-  /** The extraction on the driver, step for step the distributed one,
-    * over the pruned rows of [[extractDataset]] in its column order:
-    * keep the min nodeId per (treeId, oid), an occurrence with a null or
-    * empty oid keyed by its "treeId:nodeId" identity instead; take each
-    * kept instance's ENT children, the last by position per entity name;
-    * columns are the sorted names seen; rows are value-level distinct.
-    */
-  private def extractLocal(spark: SparkSession, rows: Array[Row]): DataFrame = {
-    val kept = scala.collection.mutable.HashMap.empty[(Long, String), Int]
-    rows.foreach { r =>
-      if (r.getString(4) == "GROUP") {
-        val (treeId, nodeId, oid) = (r.getLong(0), r.getInt(1), r.getString(7))
-        val key = if (oid == null || oid.isEmpty) s"$treeId:$nodeId" else oid
-        kept.updateWith((treeId, key))(g => Some(g.fold(nodeId)(math.min(_, nodeId))))
-      }
-    }
-    val instances = kept.iterator.map { case ((treeId, _), nodeId) => (treeId, nodeId) }.toSet
-    // instance -> entity name -> (pos, value) of its last ENT child so named
-    val cells = scala.collection.mutable.HashMap.empty[(Long, Int), Map[String, (Int, String)]]
-    rows.foreach { r =>
-      val parent = (r.getLong(0), r.getInt(2))
-      if (r.getString(4) == "ENT" && instances.contains(parent)) {
-        val (name, pos) = (r.getString(5), r.getInt(3))
-        cells.updateWith(parent) { m =>
-          val cur = m.getOrElse(Map.empty)
-          Some(if (cur.get(name).exists(_._1 > pos)) cur else cur.updated(name, (pos, r.getString(6))))
+  private[model] def extractDataset(nodes: Dataset[NodeRow], groupName: String, localMaxNodes: Long): DataFrame = {
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    val rows = pruned(nodes, col("nodeType") === "ENT" || (col("nodeType") === "GROUP" && col("name") === groupName))
+    perTree(rows, localMaxNodes)(instances(groupName))(
+      cells => {
+        val cols = cells.flatMap(_.keys).distinct.sorted
+        val out = cells.map(m => Row.fromSeq(cols.map(m.getOrElse(_, null)))).distinct
+        spark.createDataFrame(out.asJava, StructType(cols.map(StructField(_, StringType))))
+      },
+      (cells, release) => {
+        val held = Spark.checkpoint(cells)
+        try {
+          val cols = held.select(explode(map_keys(col("value")))).distinct().as[String].collect().sorted
+          // a map cannot be grouped, so the columns are selected first
+          held.select(cols.toSeq.map(c => col("value")(c).as(c)): _*).dropDuplicates().localCheckpoint(true)
+        } finally {
+          Spark.release(held)
+          release()
         }
-      }
-    }
-    val cols = cells.valuesIterator.flatMap(_.keys).toSeq.distinct.sorted
-    val out = cells.toSeq.sortBy(_._1)
-      .map { case (_, m) => Row.fromSeq(cols.map(c => m.get(c).map(_._2).orNull)) }
-      .distinct
-    spark.createDataFrame(out.asJava, StructType(cols.map(StructField(_, StringType))))
+      })
   }
 
-  /** The Dataset extraction over the checkpointed pruned rows. The
-    * deduplicated group-instance keyset — one (treeId, nodeId) pair per
-    * logical instance — is hash-broadcast into the ENT join when its
-    * MEASURED row count is at most `broadcastMaxGroupRows`. It is usually
-    * orders of magnitude smaller than the ENT side it filters, and
-    * without the hint Catalyst sees only an unsized aggregate and falls
-    * back to shuffling + sorting every ENT row. A fact-table-sized root
-    * group degrades to a shuffled join automatically.
+  /** The extraction kernel over one tree's ENT rows and `groupName`'s
+    * GROUP rows. Occurrences of one oid are copies of one row (the loader
+    * materializes a group once standalone plus once per REL side), so
+    * the min nodeId per oid is kept; an occurrence with a null or empty
+    * oid is an instance of its own. The dedup is per tree only: two trees
+    * may share an oid yet carry different values, and the reference keeps
+    * both. Each kept instance with an ENT child gives its last ENT child
+    * by position per entity name, instances in nodeId order.
     */
-  private def extractDistributed(
-      spread: Spark.InSpark[Row],
-      groupName: String,
-      broadcastMaxGroupRows: Long,
-  ): DataFrame = {
-    val pruned = spread.ds
-    // Within one tree, same-oid occurrences are copies of the same wide
-    // row (the loader materializes a group once standalone plus once per
-    // REL side), so deduping occurrences by (treeId, oid) BEFORE the
-    // pivot shrinks it by the occurrence factor; the final value-level
-    // dropDuplicates (reference semantics) still runs. The dedup is NOT
-    // global: two trees may share an oid (a non-unique declared pk) yet
-    // carry different values — the reference keeps both instances.
-    // Occurrences with no oid keep their (treeId, nodeId) identity.
-    val occurrences = pruned
-      .filter(col("nodeType") === "GROUP" && col("name") === groupName)
-      .select(col("treeId").as("gTree"), col("nodeId").as("gNode"), col("oid"))
-    // the keyset is consumed twice (count + join), so it is persisted to
-    // keep the dedup shuffle from running twice
-    val deduped = occurrences
-      .withColumn("k",
-        when(col("oid").isNull || col("oid") === "",
-          concat_ws(":", col("gTree"), col("gNode"))).otherwise(col("oid")))
-      .groupBy(col("gTree"), col("k"))
-      .agg(min(col("gNode")).as("gNode"))
-      .select(col("gTree"), col("gNode"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val groupsDf = if (deduped.count() <= broadcastMaxGroupRows) broadcast(deduped) else deduped
-    val ents = pruned
-      .filter(col("nodeType") === "ENT")
-      .select(col("treeId"), col("parentId"), col("pos"), col("name").as("entName"), col("value"))
-
-    // Materialize the (small) joined projection: both the pivot column
-    // discovery and the pivot itself consume it, and without it each
-    // pass re-scans the pruned checkpoint + re-runs the join.
-    val joined = Spark.checkpoint(ents
-      .join(groupsDf, col("treeId") === col("gTree") && col("parentId") === col("gNode"))
-      .select(col("gTree"), col("gNode"), col("entName"), col("pos"), col("value")))
-    try {
-      val entCols: Seq[String] =
-        joined.select(col("entName")).distinct().collect().map(_.getString(0)).toSeq.sorted
-
-      val pivoted = joined
-        .groupBy(col("gTree"), col("gNode"))
-        .pivot("entName", entCols)
-        .agg(max(struct(col("pos"), col("value"))).getField("value"))
-        .drop("gTree", "gNode")
-
-      // materialize before releasing the intermediate caches
-      pivoted.dropDuplicates().localCheckpoint(true)
-    } finally {
-      deduped.unpersist(blocking = false)
-      // pruned/joined are checkpointed, not plan-cached — release their
-      // block storage explicitly (leaving it to GC + ContextCleaner let
-      // orphaned blocks accumulate across a long session and measurably
-      // taxed every later query's storage eviction)
-      Spark.release(joined)
-      spread.release()
-    }
+  private def instances(groupName: String)(tree: Seq[PrunedNode]): Seq[Map[String, String]] = {
+    val kept = tree.filter(n => n.nodeType == "GROUP" && n.name == groupName)
+      .groupMapReduce(n => Option(n.oid).filter(_.nonEmpty).toLeft(n.nodeId))(_.nodeId)(math.min)
+      .values.toSet
+    val ents = tree.filter(e => e.nodeType == "ENT" && kept(e.parentId)).groupBy(_.parentId)
+    kept.toSeq.sorted.flatMap(id => ents.get(id).map(_.sortBy(_.pos).map(e => e.name -> e.value).toMap))
   }
 }

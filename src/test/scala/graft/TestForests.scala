@@ -5,6 +5,7 @@ import graft.model.{Forest, NodeRow, Schema, TreeRow}
 import graft.rewrite.Generator
 import graft.sources.{RelationalLoader, Testdata}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, spark_partition_id}
 import org.apache.spark.sql.types.DataType
 
 /** Random forests shared by the property tests. */
@@ -115,6 +116,18 @@ object TestForests {
         oid = if (n.oid == "NULL") null else n.oid,
         value = if (n.value == "NULL") null else n.value))
       .toDS()
+  }
+
+  /** [[edgeCaseNodes]] hash-partitioned by node id, so that each tree's
+    * rows span several partitions: a stage that assumed one tree's rows
+    * arrive together would split its trees.
+    */
+  def scatteredEdgeCaseNodes(spark: SparkSession): Dataset[NodeRow] = {
+    val nodes = edgeCaseNodes(spark).repartition(3, col("nodeId"))
+    val spans = nodes.select(col("treeId"), spark_partition_id().as("part")).distinct()
+      .groupBy("treeId").count().filter(col("count") > 1).count()
+    require(spans > 0, "no tree spans two partitions")
+    nodes
   }
 
   /** A table as its tests compare it: (name, type) per column in order,

@@ -76,14 +76,16 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
       TestForests.relInstance(spark, s, size = 2 + rnd.nextInt(4), members = 1 + rnd.nextInt(3),
         collections = i % 2 == 1, rnd)
     }
+    // and the edge-case node set with each tree's rows spread over partitions
+    val nodeSets = (customers ++ generated).map(f => Forest.toNodesDF(f.repartition(3))) :+
+      TestForests.scatteredEdgeCaseNodes(spark)
     val orientations = for {
-      ((forest, i), parts) <- (customers ++ generated).zipWithIndex.zip(Iterator.continually(Seq("1", "7")).flatten)
+      ((nodes, i), parts) <- nodeSets.zipWithIndex.zip(Iterator.continually(Seq("1", "7")).flatten)
       keep <- Seq(true, false)
     } yield withConf("spark.sql.shuffle.partitions" -> parts) {
-      val nodes = Forest.toNodesDF(forest.repartition(3))
       val local = Schema.fromForest(nodes, keep, mergeLhs = i % 3 != 0, Schema.LocalMaxNodes)
       val dist = Schema.fromForest(nodes, keep, mergeLhs = i % 3 != 0, 0L)
-      val what = s"forest $i, $parts shuffle partitions, keepUnlabelled = $keep"
+      val what = s"node set $i, $parts shuffle partitions, keepUnlabelled = $keep"
       assert(local.productions == dist.productions, what)
       assert(local.groups == dist.groups, what)
       assert(local.relations == dist.relations, what)
@@ -165,25 +167,13 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
     assert(got == expected)
   }
 
-  test("extraction auto-demotes the keyset broadcast above the size threshold") {
-    val nodes = Forest.toNodesDF(
-      RelationalLoader.load(spark, "/root/testdata/sf0.001", Testdata.customerDb))
-    // driver bound 0 → the Dataset path; broadcast threshold 0 → the
-    // measured keyset is over the bound, so the extraction must pick the
-    // shuffled join; results must be identical either way
-    val default = Schema.extractDataset(nodes, "customer", Schema.BroadcastMaxGroupRows, 0L)
-      .collect().toSet
-    val shuffled = Schema.extractDataset(nodes, "customer", 0L, 0L).collect().toSet
-    assert(shuffled == default, "shuffled-join extraction must match the broadcast plan")
-  }
-
   test("extractDataset over a small node set runs at most two Spark jobs") {
     val nodes = Forest.toNodesDF(TestForests.randomCustomer(spark, new scala.util.Random(5)))
     val (ds, jobs) = jobsDuring(Schema.extractDataset(nodes, "customer"))
     info(s"${jobs.size} jobs: ${jobs.mkString(", ")}")
     assert(jobs.size <= 2, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
     assert(TestForests.tableOf(ds) ==
-      TestForests.tableOf(Schema.extractDataset(nodes, "customer", Schema.BroadcastMaxGroupRows, 0L)))
+      TestForests.tableOf(Schema.extractDataset(nodes, "customer", 0L)))
   }
 
   test("property: the driver and Dataset extractions give equal datasets at 1 and 7 shuffle partitions") {
@@ -193,14 +183,14 @@ class SchemaSparkSpec extends AnyFunSuite with SparkSpec {
         TestForests.relInstance(spark, s, size = 3, members = 2, collections = false, rnd)))
     val corpus = Seq(Testdata.customerDb, Testdata.ordersDb)
       .map(cfg => RelationalLoader.loadNodes(spark, TestForests.Sf0001, cfg).localCheckpoint(true))
-    val edge = TestForests.edgeCaseNodes(spark)
-    for ((nodes, i) <- (random ++ corpus :+ edge).zipWithIndex; parts <- Seq("1", "7"))
+    val edge = Seq(TestForests.edgeCaseNodes(spark), TestForests.scatteredEdgeCaseNodes(spark))
+    for ((nodes, i) <- (random ++ corpus ++ edge).zipWithIndex; parts <- Seq("1", "7"))
       withConf("spark.sql.shuffle.partitions" -> parts) {
         val groups = nodes.filter(org.apache.spark.sql.functions.col("nodeType") === "GROUP")
           .select("name").distinct().collect().map(_.getString(0)).sorted
         for (g <- groups) {
-          val local = Schema.extractDataset(nodes, g, Schema.BroadcastMaxGroupRows, Schema.LocalMaxNodes)
-          val dist = Schema.extractDataset(nodes, g, Schema.BroadcastMaxGroupRows, 0L)
+          val local = Schema.extractDataset(nodes, g, Schema.LocalMaxNodes)
+          val dist = Schema.extractDataset(nodes, g, 0L)
           assert(TestForests.tableOf(local) == TestForests.tableOf(dist),
             s"node set $i, group $g, $parts shuffle partitions")
         }

@@ -140,8 +140,8 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
         TestForests.relInstance(spark, s, size = 3, members = 2, collections = false, rnd)))
     val corpus = Seq(Testdata.customerDb, Testdata.ordersDb)
       .map(cfg => RelationalLoader.loadNodes(spark, TestForests.Sf0001, cfg).localCheckpoint(true))
-    val edge = TestForests.edgeCaseNodes(spark)
-    val orientations = for ((nodes, i) <- (random ++ corpus :+ edge).zipWithIndex; parts <- Seq("1", "7"))
+    val edge = Seq(TestForests.edgeCaseNodes(spark), TestForests.scatteredEdgeCaseNodes(spark))
+    val orientations = for ((nodes, i) <- (random ++ corpus ++ edge).zipWithIndex; parts <- Seq("1", "7"))
       yield withConf("spark.sql.shuffle.partitions" -> parts) {
         val schema = Schema.fromForest(nodes, keepUnlabelled = false)
         val local = SqlExporter.export(nodes, schema, Schema.LocalMaxNodes)
